@@ -18,12 +18,14 @@ Scale design — why groupBy/max_by and not a window:
   (ParallelLoader.java:156-167), done by Tungsten's hash aggregate.
 
 An explicit two-phase salted variant is provided for completeness and for plans where
-a window is genuinely required (e.g. top-N per key with N>1); bench compares them.
+a window is genuinely required (e.g. top-N per key with N>1); the
+``cdc_lww_salted`` query runs it, and the tests check both against a
+window-function reference.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pocket_etl_spark.schema import LSN_COL, OP_COL, OP_RANK
@@ -81,41 +83,3 @@ def lww_dedupe_salted(
         .select(*key_cols, "_w.*")
     )
     return lww_dedupe(phase1, key_cols, lsn_col=lsn_col, op_col=op_col)
-
-
-def lww_dedupe_window(
-    df: DataFrame,
-    key_cols: list[str],
-    lsn_col: str = LSN_COL,
-    op_col: str = OP_COL,
-) -> DataFrame:
-    """Window-function formulation (row_number = 1). Same result; shuffles whole keys
-    to single reducers, so it is the NON-scale path — used as a correctness
-    cross-check in tests and as the bench's skew counter-example."""
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col(lsn_col).desc(), OP_RANK_EXPR(op_col).desc()
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    )
-
-
-def detect_hot_keys(
-    df: DataFrame, key_cols: list[str], threshold_fraction: float = 0.05, max_keys: int = 32
-) -> list[tuple]:
-    """Per-batch hot-key histogram: keys holding more than ``threshold_fraction`` of
-    the batch. Used for lineage/metrics and to pick salting for window-shaped plans.
-    One aggregate pass; cheap relative to the merge itself."""
-    total = df.count()
-    if total == 0:
-        return []
-    cutoff = max(1, int(total * threshold_fraction))
-    rows = (
-        df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > cutoff)
-        .orderBy(F.col("_n").desc())
-        .limit(max_keys)
-        .collect()
-    )
-    return [tuple(r[k] for k in key_cols) for r in rows]

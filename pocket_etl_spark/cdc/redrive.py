@@ -141,8 +141,9 @@ def redrive(
     # a non-deterministic fix() could pass the guard on one evaluation while
     # producing an invalid row on the merge's — which split_invalid would then
     # drop under a committed watermark (DLQ selections are small by nature).
-    persisted = events.persist()
-    events = persisted
+    # A local checkpoint truncates the lineage, so fix() runs exactly once —
+    # unlike persist(), whose evicted blocks would recompute it.
+    events = events.localCheckpoint()
     last = table.last_batch_id(query_id)
     if "_dlq_batch_id" in events.columns:
         ids = events.agg(
@@ -171,22 +172,19 @@ def redrive(
     else:
         batch_id = last + 1
     kept = events.drop("_dlq_batch_id", "_dlq_error")
-    try:
-        if dlq_path_out is None:
-            still_bad = kept.filter(~valid_condition(kept, table)).count()
-            if still_bad:
-                raise ValueError(
-                    f"redrive: {still_bad} rows are still invalid after fix and no "
-                    "dlq_path_out is configured to route them — re-applying would "
-                    "silently drop them. Pass dlq_path_out or repair them in fix()."
-                )
-        return apply_batch(
-            kept,
-            table,
-            batch_id=batch_id,
-            query_id=query_id,
-            dlq_path=dlq_path_out,
-            **apply_kwargs,
-        )
-    finally:
-        persisted.unpersist()
+    if dlq_path_out is None:
+        still_bad = kept.filter(~valid_condition(kept, table)).count()
+        if still_bad:
+            raise ValueError(
+                f"redrive: {still_bad} rows are still invalid after fix and no "
+                "dlq_path_out is configured to route them — re-applying would "
+                "silently drop them. Pass dlq_path_out or repair them in fix()."
+            )
+    return apply_batch(
+        kept,
+        table,
+        batch_id=batch_id,
+        query_id=query_id,
+        dlq_path=dlq_path_out,
+        **apply_kwargs,
+    )

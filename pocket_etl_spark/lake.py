@@ -55,16 +55,6 @@ from pocket_etl_spark.cdc.dedupe import OP_RANK_EXPR, lww_dedupe
 from pocket_etl_spark.cdc.evolution import conform_to, unify_schemas
 from pocket_etl_spark.schema import KEY_COLS, LSN_COL, OP_COL, TABLE_SCHEMA
 
-_DEBUG_TIMING = os.environ.get("SPARK_ETL_TIMING", "") not in ("", "0")
-
-
-def _tick(label: str, t0: float) -> float:
-    t1 = time.time()
-    if _DEBUG_TIMING:
-        print(f"TIMING {label}={t1 - t0:.2f}s", flush=True)
-    return t1
-
-
 _POINTER = "_latest"
 _MANIFESTS = "_manifests"
 _DATA = "data"
@@ -91,25 +81,14 @@ class ParquetLakeTable:
         op_col: str = OP_COL,
         schema: T.StructType | None = None,
         num_buckets: int = 16,
-        argmax_strategy: str = "shuffle",
-        files_per_bucket: int | str = "auto",
         stamps: bool = True,
     ) -> None:
-        if argmax_strategy not in ("broadcast", "shuffle", "sortagg"):
-            raise ValueError(f"unknown argmax_strategy {argmax_strategy!r}")
         self.spark = spark
         self.path = path
         self.key_cols = list(key_cols or KEY_COLS)
         self.lsn_col = lsn_col
         self.op_col = op_col
         self.num_buckets = num_buckets
-        self.argmax_strategy = argmax_strategy
-        # Write parallelism above the touched-bucket count: a batch touching
-        # few buckets (worst case: one hot bucket) would otherwise serialize
-        # the whole rewrite on len(touched) writer tasks. "auto" splits each
-        # bucket into enough file slices to keep every core writing when
-        # touched < parallelism (capped at 8 slices to bound file counts).
-        self.files_per_bucket = files_per_bucket
         # Change-feed stamps: per-row _version costs one long through the
         # merge's union, winner join, and write (~3-4% of replay wall, measured
         # in BENCH/BASELINE.md §stamp-cost). Tables nobody tails can turn it
@@ -298,7 +277,6 @@ class ParquetLakeTable:
         updates: DataFrame,
         batch_id: int | None = None,
         query_id: str = "default",
-        deduped: bool = False,
         touched_buckets: list[int] | None = None,
     ) -> MergeResult:
         """Keyed LWW MERGE of a change batch into the table.
@@ -310,12 +288,12 @@ class ParquetLakeTable:
             (idempotent MERGE guard — replay can never regress state);
           - a winning D removes the row; I/U upsert it.
 
-        Physical plan (one pass, two shuffles): batch LWW-dedupe is NOT run
-        separately — the union-argmax below subsumes it (argmax is associative),
-        so the whole merge is a single hash-aggregate over (current ∪ batch) plus
-        the bucket repartition for the write. ``deduped`` is kept for callers that
-        already paid for a dedupe and want to skip nothing — it only documents
-        intent now.
+        Physical plan (one pass): batch LWW-dedupe is NOT run separately — the
+        union-argmax below subsumes it (argmax is associative). The winner per
+        key is a packed-ord HashAggregate over (current ∪ batch), its rows are
+        recovered by a shuffled-hash join on (key, ord), exact-duplicate ties
+        collapse with ``dropDuplicates``, and the touched buckets are rewritten
+        in core-parallel file slices.
         """
         cur_version = self.current_version()
         man = self._manifest(cur_version)
@@ -346,14 +324,12 @@ class ParquetLakeTable:
         # Bucket pruning: only buckets containing updated keys participate.
         # Callers that already computed the batch's bucket set (apply_batch folds
         # it into its single stats pass) hand it in and skip this probe scan.
-        _t0 = time.time()
         if touched_buckets is not None:
             touched = sorted(touched_buckets)
         else:
             touched = sorted(
                 r[0] for r in winners.select("_bucket").distinct().collect()
             )
-            _t0 = _tick("merge.bucket_probe", _t0)
         if not touched:
             # Still advance the watermark so the empty batch is fenced on replay.
             new_man = dict(man)
@@ -411,53 +387,25 @@ class ParquetLakeTable:
             "_ord",
             F.col(self.lsn_col) * 8 + OP_RANK_EXPR(self.op_col) * 2 + F.col("_src"),
         )
-        if self.argmax_strategy in ("shuffle", "broadcast"):
-            # Recover winning rows with a join on (key, ord). Strategy choice:
-            # - "shuffle" (default): shuffled hash join — both the tiny winner
-            #   set and the payload hash-partition on the key; fully parallel,
-            #   zero driver-side work, so throughput scales with cores
-            #   (broadcast was measured to cost ~6-10 s/batch of serial driver
-            #   collect+rebroadcast, flattening N→4N scaling).
-            # - "broadcast": best absolute latency when the winner set is small
-            #   and parallelism is high; driver materializes the winner set.
-            # Both require (lsn, op) unique per key within a batch (WAL/binlog
-            # contract); otherwise use "sortagg".
-            winner_ords = keyed.groupBy(*self.key_cols).agg(F.max("_ord").alias("_ord"))
-            right = (
-                F.broadcast(winner_ords)
-                if self.argmax_strategy == "broadcast"
-                else winner_ords.hint("shuffle_hash")
-            )
-            # Exact-duplicate guard: at-least-once delivery can put the SAME
-            # event (key, lsn, op) in one batch twice; both rows tie at the max
-            # _ord and the join would emit both, breaking the one-row-per-key
-            # snapshot invariant (and the dupes would survive every later merge
-            # as identical _src=0 rows). Collapse ties on (key, _ord) — the join
-            # output is already hash-partitioned on exactly those columns, so
-            # this is a partition-local aggregate, no extra exchange.
-            merged = (
-                keyed.join(right, on=[*self.key_cols, "_ord"], how="inner")
-                .dropDuplicates([*self.key_cols, "_ord"])
-                .select(*data_cols, self.op_col, *stamp_cols)
-            )
-        else:
-            # One-pass fallback: max_by over the packed ordering. SortAggregate
-            # (struct buffer), but never materializes a winner set on the driver.
-            merged = (
-                keyed.groupBy(*self.key_cols)
-                .agg(
-                    F.max_by(
-                        F.struct(
-                            *[c for c in data_cols if c not in self.key_cols],
-                            self.op_col,
-                            *stamp_cols,
-                        ),
-                        F.col("_ord"),
-                    ).alias("_w")
-                )
-                .select(*self.key_cols, "_w.*")
-            )
-        merged = merged.withColumn("_deleted", F.col(self.op_col) == "D")
+        # Recover winning rows with a shuffled hash join on (key, ord): both the
+        # tiny winner set and the payload hash-partition on the key, so the
+        # join is fully parallel with zero driver-side work (a broadcast winner
+        # set was measured to cost ~6-10 s/batch of serial driver collect +
+        # rebroadcast, flattening N→4N scaling).
+        winner_ords = keyed.groupBy(*self.key_cols).agg(F.max("_ord").alias("_ord"))
+        # Exact-duplicate guard: at-least-once delivery can put the SAME event
+        # (key, lsn, op) in one batch twice; both rows tie at the max _ord and
+        # the join would emit both, breaking the one-row-per-key snapshot
+        # invariant (and the dupes would survive every later merge as identical
+        # _src=0 rows). Collapse ties on (key, _ord) — the join output is
+        # already hash-partitioned on exactly those columns, so this is a
+        # partition-local aggregate, no extra exchange.
+        merged = (
+            keyed.join(winner_ords.hint("shuffle_hash"), on=[*self.key_cols, "_ord"])
+            .dropDuplicates([*self.key_cols, "_ord"])
+            .select(*data_cols, self.op_col, *stamp_cols)
+            .withColumn("_deleted", F.col(self.op_col) == "D")
+        )
         if self.stamps:
             merged = merged.withColumn(
                 "_version", F.coalesce(F.col("_version"), F.lit(new_version))
@@ -468,14 +416,12 @@ class ParquetLakeTable:
         # parallelism = touched buckets x file slices: when a batch touches
         # fewer buckets than there are cores (the hot-bucket case), each bucket
         # splits into ``slices`` files so the rewrite stays core-parallel
-        # instead of serializing on one task per bucket.
+        # instead of serializing on one task per bucket (capped at 8 slices to
+        # bound file counts).
         rel_dir = os.path.join(_DATA, f"v{new_version:012d}")
         out_dir = os.path.join(self.path, rel_dir)
-        if self.files_per_bucket == "auto":
-            par = self.spark.sparkContext.defaultParallelism
-            slices = max(1, min(8, par // max(len(touched), 1)))
-        else:
-            slices = max(1, int(self.files_per_bucket))
+        par = self.spark.sparkContext.defaultParallelism
+        slices = max(1, min(8, par // len(touched)))
         if slices > 1:
             writer = (
                 merged.withColumn(
@@ -486,9 +432,8 @@ class ParquetLakeTable:
                 .drop("_slice")
             )
         else:
-            writer = merged.repartition(max(len(touched), 1), "_bucket")
+            writer = merged.repartition(len(touched), "_bucket")
         writer.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-        _t0 = _tick("merge.agg_write", _t0)
 
         # New manifest: rewritten buckets point at the new snapshot dir; untouched
         # buckets carry forward by reference. A touched bucket that lost all rows
@@ -1012,16 +957,14 @@ class IcebergLakeTable:
         updates: DataFrame,
         batch_id: int | None = None,
         query_id: str = "default",
-        deduped: bool = False,
     ) -> MergeResult:
         if batch_id is not None and batch_id <= self.last_batch_id(query_id):
             # same MergeResult shape as the parquet backend's fenced return:
             # version = the CURRENT committed version, not a sentinel.
             return MergeResult(False, self.current_version(), batch_id, [], {"fenced": True})
-        if not deduped:
-            updates = lww_dedupe(
-                updates, self.key_cols, lsn_col=self.lsn_col, op_col=self.op_col
-            )
+        updates = lww_dedupe(
+            updates, self.key_cols, lsn_col=self.lsn_col, op_col=self.op_col
+        )
         new_version = self.current_version() + 1
         if not self.spark.catalog.tableExists(self.table):
             # first batch bootstraps the table: the deduped batch IS the merge

@@ -171,20 +171,17 @@ def test_exact_duplicate_events_keep_one_row_per_key(spark, tmp_table_path):
         {"lsn": 10, "op": "I", "repo": "r", "path": "p", "commit": "c1", "lang": "py", "content": "v1"},
         {"lsn": 5, "op": "I", "repo": "r", "path": "q", "commit": "c0", "lang": "py", "content": "w0"},
     ]
-    for strategy in ("shuffle", "broadcast", "sortagg"):
-        table = ParquetLakeTable(
-            spark, f"{tmp_table_path}_{strategy}", num_buckets=2, argmax_strategy=strategy
-        )
-        table.merge(spark.createDataFrame(dup, schema), batch_id=0)
-        got = table.read()
-        assert got.count() == 2, strategy
-        assert got.groupBy("repo", "path").count().filter("count > 1").count() == 0, strategy
-        # the duplicated key's row must not multiply on the NEXT merge either
-        more = [{"lsn": 20, "op": "U", "repo": "r", "path": "q", "commit": "c2", "lang": "py", "content": "w2"}]
-        table.merge(spark.createDataFrame(more, schema), batch_id=1)
-        got = table.read()
-        assert got.count() == 2, strategy
-        assert got.groupBy("repo", "path").count().filter("count > 1").count() == 0, strategy
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=2)
+    table.merge(spark.createDataFrame(dup, schema), batch_id=0)
+    got = table.read()
+    assert got.count() == 2
+    assert got.groupBy("repo", "path").count().filter("count > 1").count() == 0
+    # the duplicated key's row must not multiply on the NEXT merge either
+    more = [{"lsn": 20, "op": "U", "repo": "r", "path": "q", "commit": "c2", "lang": "py", "content": "w2"}]
+    table.merge(spark.createDataFrame(more, schema), batch_id=1)
+    got = table.read()
+    assert got.count() == 2
+    assert got.groupBy("repo", "path").count().filter("count > 1").count() == 0
 
 
 def test_merge_into_sql_shape():
@@ -205,12 +202,10 @@ def test_merge_into_sql_shape():
 
 
 def test_hot_bucket_write_splits_into_file_slices(spark, tmp_table_path):
-    """With one touched bucket, files_per_bucket > 1 must fan the rewrite out
-    across several writer tasks (multiple part files in the bucket dir) while
-    the merged state stays correct — the hot-bucket write-parallelism fix."""
-    table = ParquetLakeTable(
-        spark, tmp_table_path, num_buckets=1, files_per_bucket=4
-    )
+    """With one touched bucket, the merge must fan the rewrite out across
+    several writer tasks (multiple part files in the bucket dir) while the
+    merged state stays correct — the hot-bucket write-parallelism fix."""
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=1)
     ev = _events(spark, n=2000, keys=400).drop("ts", "extras")
     res = table.merge(ev, batch_id=0)
     assert res.touched_buckets == [0]
@@ -308,7 +303,7 @@ def test_compaction_preserves_state_and_change_feed(spark, tmp_table_path):
     """compact() rewrites multi-file buckets into one file per bucket without
     changing any row: snapshot identical, and read_changes across the
     compaction emits nothing (pointer moved, per-row stamps did not)."""
-    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=1, files_per_bucket=4)
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=1)
     ev = _events(spark, n=1000, keys=100).drop("ts", "extras")
     table.merge(ev, batch_id=0)
     v1 = table.current_version()

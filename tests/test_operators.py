@@ -3,15 +3,26 @@ multimodal mapInPandas plumbing."""
 
 import pandas as pd
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from pocket_etl_spark.cdc.dedupe import (
-    detect_hot_keys,
-    lww_dedupe,
-    lww_dedupe_salted,
-    lww_dedupe_window,
-)
+from pocket_etl_spark.cdc.apply import apply_batch
+from pocket_etl_spark.cdc.dedupe import OP_RANK_EXPR, lww_dedupe, lww_dedupe_salted
 from pocket_etl_spark.datagen import gen_change_events
+from pocket_etl_spark.lake import ParquetLakeTable
+from pocket_etl_spark.schema import LSN_COL, OP_COL
+
+
+def lww_dedupe_window(df, key_cols, lsn_col=LSN_COL, op_col=OP_COL):
+    """Window-function formulation (row_number = 1): the textbook LWW
+    reference the scale-path dedupes are checked against. It shuffles whole
+    keys to single reducers, so it is not a production path."""
+    w = Window.partitionBy(*key_cols).orderBy(
+        F.col(lsn_col).desc(), OP_RANK_EXPR(op_col).desc()
+    )
+    return (
+        df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+    )
 
 
 def _sorted_pdf(df):
@@ -31,9 +42,11 @@ def test_dedupe_variants_agree(spark):
     pd.testing.assert_frame_equal(a, c)
 
 
-def test_hot_key_detection(spark):
+def test_hot_key_detection(spark, tmp_table_path):
+    """apply_batch's lineage stats name exactly the injected hot key."""
     events = gen_change_events(spark, 3000, 200, seed=13, hot_key_fraction=0.5)
-    hot = detect_hot_keys(events, ["repo", "path"], threshold_fraction=0.2)
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
+    hot = apply_batch(events, table, batch_id=0, lineage=True).hot_keys
     assert len(hot) == 1  # exactly the injected hot key
     repo, path = hot[0]
     assert repo == "org/repo-00000"

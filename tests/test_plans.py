@@ -115,7 +115,7 @@ def test_hot_bucket_merge_write_has_slice_repartition(spark, tmp_path):
     from pocket_etl_spark.datagen import gen_change_events
     from pocket_etl_spark.lake import ParquetLakeTable
 
-    table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=1, files_per_bucket=4)
+    table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=1)
     ev = gen_change_events(spark, 500, 50, seed=3).drop("ts", "extras")
     res = table.merge(ev, batch_id=0)
     # physical evidence: >1 part file in the single touched bucket

@@ -89,22 +89,16 @@ def worker(cores: int, hot: float) -> None:
         # table JIT-compiles the whole merge pipeline (codegen, parquet writers,
         # shuffle path) before the timer starts — a fixed single-JVM cost that a
         # long-running cluster tail pays once, not per batch.
-        warm = ParquetLakeTable(
-            spark, os.path.join(d, "warm"), num_buckets=32,
-            argmax_strategy=os.environ.get("SCALING_ARGMAX", "shuffle"),
-        )
+        warm = ParquetLakeTable(spark, os.path.join(d, "warm"), num_buckets=32)
         apply_batch(events.filter("lsn <= 200000"), warm, batch_id=0, lineage=False)
 
         # num_buckets constant across parallelism levels → identical output layout,
         # so the two runs do byte-for-byte the same logical work.
-        strategy = os.environ.get("SCALING_ARGMAX", "shuffle")
         repeats = int(os.environ.get("SCALING_REPEATS", "2"))
         step = N_EVENTS // N_BATCHES
         walls = []
         for r in range(repeats):
-            table = ParquetLakeTable(
-                spark, os.path.join(d, f"t{r}"), num_buckets=32, argmax_strategy=strategy
-            )
+            table = ParquetLakeTable(spark, os.path.join(d, f"t{r}"), num_buckets=32)
             t0 = time.time()
             for i in range(N_BATCHES):
                 lo, hi = i * step + 1, (i + 1) * step
@@ -159,13 +153,9 @@ def _run_cell(pyzip: str, cores: int, hot: float) -> dict:
 
 
 def _config() -> dict:
-    # The argmax strategy is part of the pooling key (ADVICE r4): two merge
-    # code paths (shuffle vs sortagg) are two different engines to benchmark,
-    # so their walls must never pool into one headline.
     return {
         "events": N_EVENTS, "keys": N_KEYS, "batches": N_BATCHES,
         "scaling_n": SCALING_N, "seed": SEED,
-        "argmax": os.environ.get("SCALING_ARGMAX", "shuffle"),
     }
 
 
