@@ -49,9 +49,6 @@ HEADLINE = [
 
 CDC_EVENTS = int(os.environ.get("BENCH_CDC_EVENTS", "4000000"))
 CDC_KEYS = int(os.environ.get("BENCH_CDC_KEYS", "200000"))
-# change-feed stamps on the replay table (1 = deployment default). 0 isolates
-# the stamp cost for the BENCH/BASELINE.md §stamp-cost breakdown.
-CDC_STAMPS = os.environ.get("BENCH_CDC_STAMPS", "1") not in ("0", "false")
 
 TABLES = [
     "lineitem", "orders", "customer", "supplier", "nation", "region",
@@ -108,18 +105,14 @@ def run_cdc_replay(spark) -> tuple[float, float]:
         wal = os.path.join(d, "wal")
         gen_change_events(spark, CDC_EVENTS, CDC_KEYS, seed=42, content_repeat=2).write.parquet(wal)
         events = spark.read.parquet(wal)
-        warm = ParquetLakeTable(
-            spark, os.path.join(d, "warm"), num_buckets=32, stamps=CDC_STAMPS
-        )
+        warm = ParquetLakeTable(spark, os.path.join(d, "warm"), num_buckets=32)
         apply_batch(events.filter("lsn <= 100000"), warm, batch_id=0, lineage=False)
 
         n_batches = 4
         step = CDC_EVENTS // n_batches
         walls = []
         for r in range(BENCH_REPEATS):
-            table = ParquetLakeTable(
-                spark, os.path.join(d, f"t{r}"), num_buckets=32, stamps=CDC_STAMPS
-            )
+            table = ParquetLakeTable(spark, os.path.join(d, f"t{r}"), num_buckets=32)
             t0 = time.time()
             for i in range(n_batches):
                 lo, hi = i * step + 1, (i + 1) * step

@@ -10,7 +10,6 @@ TransformerEtlConsumer.java:90-99) → parallel loader with close-time merge com
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
@@ -21,8 +20,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pocket_etl_spark.cdc.evolution import EXTRAS_COL, PROMOTE_PREFIX, promote_extras
-from pocket_etl_spark.lake import MergeResult, ParquetLakeTable
+from pocket_etl_spark.lake import MergeResult, ParquetLakeTable, write_json_atomic
 from pocket_etl_spark.profiling import Profiler
+from pocket_etl_spark.schema import dlq_records
 
 VALID_OPS = ("I", "U", "D")
 # event-envelope columns that never reach the table
@@ -43,6 +43,10 @@ class ApplyResult:
 
 def valid_condition(events: DataFrame, table: ParquetLakeTable):
     """Validity predicate for a change event: non-null key / lsn, known op.
+    Invalid rows are the reference's recoverable-error channel
+    (LogAsErrorEtlConsumer.java:34-92): routed to the DLQ while the stream
+    keeps going. Unrecoverable failures are simply raised and abort the query
+    (restart from checkpoint), matching UnrecoverableStreamFailureException.
 
     Null-safe by construction: bare ``isin`` over a NULL op yields SQL NULL,
     which both ``filter(cond)`` and ``filter(~cond)`` exclude — a NULL-op row
@@ -55,22 +59,6 @@ def valid_condition(events: DataFrame, table: ParquetLakeTable):
         key_ok = key_ok & F.col(k).isNotNull()
     op = F.col(table.op_col)
     return key_ok & F.col(table.lsn_col).isNotNull() & op.isNotNull() & op.isin(*VALID_OPS)
-
-
-def split_invalid(events: DataFrame, table: ParquetLakeTable) -> tuple[DataFrame, DataFrame]:
-    """Route malformed events to the DLQ, keep the stream going — the reference's
-    recoverable-error channel (LogAsErrorEtlConsumer.java:34-92). Invalid =
-    null key / null lsn / unknown op. Unrecoverable failures are simply raised and
-    abort the query (restart from checkpoint), matching
-    UnrecoverableStreamFailureException semantics."""
-    cond = valid_condition(events, table)
-    good, bad = events.filter(cond), events.filter(~cond)
-    # envelope-decode residue (streaming/envelope.decode_kafka_envelope): the
-    # raw undecodable payload rides into the DLQ with the bad rows, but must
-    # never reach the merge or it would schema-evolve into the table.
-    if "_raw_value" in events.columns:
-        good = good.drop("_raw_value")
-    return good, bad
 
 
 def write_dlq(
@@ -112,15 +100,7 @@ def write_dlq(
             "validation: null key/lsn or bad op (payload redacted; "
             "apply_batch dlq_payload='full' opts in)"
         )
-    (
-        bad.select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            F.lit(stage).alias("stage"),
-            error.alias("error"),
-            body.alias("payload"),
-            F.current_timestamp().alias("ts"),
-        ).write.mode("append").parquet(dlq_path)
-    )
+    dlq_records(bad, batch_id, stage, error, body).write.mode("append").parquet(dlq_path)
 
 
 def apply_batch(
@@ -158,108 +138,108 @@ def apply_batch(
             duration_sec=time.time() - t0,
         )
     prof = Profiler()
-    with prof.scope("dlq_split"):
-        good, bad = split_invalid(events, table)
-    want_dlq = dlq_path is not None
-
-    # The batch is always persisted: the merge reads the payload twice
-    # (winner-ord aggregate + probe side), and a non-deterministic source
-    # would diverge between reads. The persist MUST happen before the stats
-    # pass below: if the stats pass ran against an unpersisted frame, a
-    # non-deterministic upstream could hand the merge keys whose bucket never
-    # entered touched_buckets — the merge would then write a bucket the
-    # manifest loop never registers, silently dropping the update.
-    #
-    # With a DLQ configured, the persisted frame is the FULL batch tagged with
-    # the validity flag: the bad-row count folds into the single stats pass
-    # below (a clean micro-batch pays ZERO extra upstream scans for having
-    # dlq_path set — VERDICT r3 'wrong' #3), and a nonzero DLQ write reads the
+    # The batch is always persisted, tagged with its validity flag: the merge
+    # reads the payload twice (winner-ord aggregate + probe side), and a
+    # non-deterministic source would diverge between reads. The persist MUST
+    # happen before the stats pass below: if the stats pass ran against an
+    # unpersisted frame, a non-deterministic upstream could hand the merge
+    # keys whose bucket never entered touched_buckets — the merge would then
+    # write a bucket the manifest loop never registers, silently dropping the
+    # update. Tagging the FULL batch folds the bad-row count into the single
+    # stats pass (a clean micro-batch pays ZERO extra upstream scans for the
+    # validation — VERDICT r3 'wrong' #3), and a nonzero DLQ write reads the
     # cache, never the upstream.
-    if want_dlq:
+    with prof.scope("dlq_split"):
         cached = events.withColumn("_valid", valid_condition(events, table)).persist()
-        good = cached.filter(F.col("_valid")).drop("_valid")
-        if "_raw_value" in good.columns:
-            good = good.drop("_raw_value")
-        bad = cached.filter(~F.col("_valid")).drop("_valid")
         valid = F.col("_valid")
-    else:
-        cached = good = good.persist()
-        valid = F.lit(True)
+        bad = cached.filter(~valid).drop("_valid")
+        # envelope-decode residue (streaming/envelope.decode_kafka_envelope):
+        # the raw undecodable payload rides into the DLQ with the bad rows, but
+        # must never reach the merge or it would schema-evolve into the table.
+        good = cached.filter(valid).drop("_valid", "_raw_value")
 
-    # ONE stats pass over the batch computes everything the driver needs
-    # before the merge: the set of touched hash buckets (merge reads and
-    # rewrites only those), the distinct promotable tunnel keys (schema
-    # evolution), and — when a DLQ is configured — the invalid-row count.
-    # This pass also populates the cache, so every later consumer reads the
-    # same materialization.
-    sel = [F.when(valid, table._bucket_expr()).alias("_b")]
-    aggs = [F.collect_set("_b").alias("_buckets")]
-    if want_dlq:
-        sel.append(F.when(valid, 0).otherwise(1).alias("_inv"))
-        aggs.append(F.sum("_inv").alias("_bad"))
-    if EXTRAS_COL in good.columns:
-        sel.append(
-            F.when(
-                valid,
-                F.filter(
-                    F.map_keys(F.col(EXTRAS_COL)), lambda k: k.startswith(PROMOTE_PREFIX)
-                ),
-            ).alias("_pk")
-        )
-        aggs.append(F.array_distinct(F.flatten(F.collect_set("_pk"))).alias("_promo"))
-    with prof.scope("batch_stats"):
-        stats = cached.select(*sel).agg(*aggs).collect()[0]
-        touched = sorted(stats["_buckets"])
-        promo_keys = sorted(stats["_promo"]) if EXTRAS_COL in good.columns else []
-    rows_bad = int(stats["_bad"] or 0) if want_dlq else 0
-
-    if rows_bad:
-        with prof.scope("dlq_write"):
-            write_dlq(
-                bad, dlq_path, batch_id,
-                dlq_keys=dlq_keys, payload=dlq_payload,
-            )
-
-    # Schema evolution: lift tunnel fields (extras map "new_col_*") to columns
-    # before the merge widens the table schema.
-    good = promote_extras(good, keys=promo_keys)
-    payload = good.drop(*[c for c in DROP_COLS if c in good.columns])
-
-    # The batch goes to the merge as is: the lake's union-argmax subsumes
-    # per-batch LWW dedupe in the same hash-aggregate (one shuffle total), so a
-    # separate lww_dedupe pass would only add a redundant shuffle. lww_dedupe
-    # remains the standalone operator for non-merge consumers.
     rows_applied, rows_in, hot = -1, -1, []
     try:
+        # ONE stats pass over the batch computes everything the driver needs
+        # before the merge: the set of touched hash buckets (merge reads and
+        # rewrites only those), the invalid-row count, and the distinct
+        # promotable tunnel keys (schema evolution). This pass also populates
+        # the cache, so every later consumer reads the same materialization.
+        sel = [
+            F.when(valid, table._bucket_expr()).alias("_b"),
+            F.when(valid, 0).otherwise(1).alias("_inv"),
+        ]
+        aggs = [F.collect_set("_b").alias("_buckets"), F.sum("_inv").alias("_bad")]
+        if EXTRAS_COL in good.columns:
+            sel.append(
+                F.when(
+                    valid,
+                    F.filter(
+                        F.map_keys(F.col(EXTRAS_COL)),
+                        lambda k: k.startswith(PROMOTE_PREFIX),
+                    ),
+                ).alias("_pk")
+            )
+            aggs.append(F.array_distinct(F.flatten(F.collect_set("_pk"))).alias("_promo"))
+        with prof.scope("batch_stats"):
+            stats = cached.select(*sel).agg(*aggs).collect()[0]
+            touched = sorted(stats["_buckets"])
+            promo_keys = sorted(stats["_promo"]) if EXTRAS_COL in good.columns else []
+        rows_bad = int(stats["_bad"] or 0)
+
+        if rows_bad:
+            # Same rule as redrive: an invalid row with nowhere to go must
+            # fail the batch before anything commits, never vanish under an
+            # advanced watermark.
+            if dlq_path is None:
+                raise ValueError(
+                    f"apply_batch: {rows_bad} rows are still invalid at apply "
+                    "(null key/lsn or bad op) and no dlq_path is configured to "
+                    "route them — merging would silently drop them. Pass "
+                    "dlq_path or repair them upstream."
+                )
+            with prof.scope("dlq_write"):
+                write_dlq(
+                    bad, dlq_path, batch_id,
+                    dlq_keys=dlq_keys, payload=dlq_payload,
+                )
+
+        # Schema evolution: lift tunnel fields (extras map "new_col_*") to
+        # columns before the merge widens the table schema.
+        good = promote_extras(good, keys=promo_keys)
+        payload = good.drop(*[c for c in DROP_COLS if c in good.columns])
+
         if lineage:
-            prof_ls = prof.scope("lineage_stats")
-            prof_ls.__enter__()
             # ONE upstream pass for all lineage stats: group once per key,
             # cache the (small) per-key histogram, derive row count, distinct
             # keys (= merge winners) and the hot-key top-32 from it (instead of
             # separate count, distinct and hot-key scans of the upstream).
-            grouped = (
-                payload.groupBy(*table.key_cols)
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .persist()
-            )
-            try:
-                tot = grouped.agg(
-                    F.sum("_n").alias("_rows"), F.count(F.lit(1)).alias("_keys")
-                ).collect()[0]
-                rows_in = int(tot["_rows"] or 0)
-                rows_applied = int(tot["_keys"])
-                cutoff = max(1, int(rows_in * 0.05))
-                hot = [
-                    tuple(r[k] for k in table.key_cols)
-                    for r in grouped.filter(F.col("_n") > cutoff)
-                    .orderBy(F.col("_n").desc())
-                    .limit(32)
-                    .collect()
-                ]
-            finally:
-                grouped.unpersist()
-                prof_ls.__exit__(None, None, None)
+            with prof.scope("lineage_stats"):
+                grouped = (
+                    payload.groupBy(*table.key_cols)
+                    .agg(F.count(F.lit(1)).alias("_n"))
+                    .persist()
+                )
+                try:
+                    tot = grouped.agg(
+                        F.sum("_n").alias("_rows"), F.count(F.lit(1)).alias("_keys")
+                    ).collect()[0]
+                    rows_in = int(tot["_rows"] or 0)
+                    rows_applied = int(tot["_keys"])
+                    cutoff = max(1, int(rows_in * 0.05))
+                    hot = [
+                        tuple(r[k] for k in table.key_cols)
+                        for r in grouped.filter(F.col("_n") > cutoff)
+                        .orderBy(F.col("_n").desc())
+                        .limit(32)
+                        .collect()
+                    ]
+                finally:
+                    grouped.unpersist()
+        # The batch goes to the merge as is: the lake's union-argmax subsumes
+        # per-batch LWW dedupe in the same hash-aggregate (one shuffle total), so a
+        # separate lww_dedupe pass would only add a redundant shuffle. lww_dedupe
+        # remains the standalone operator for non-merge consumers.
         with prof.scope("merge"):
             result = table.merge(
                 payload, batch_id=batch_id, query_id=query_id, touched_buckets=touched
@@ -269,7 +249,7 @@ def apply_batch(
         if lineage:
             with prof.scope("lineage_write"):
                 lineage_path = _write_lineage(
-                    table, payload, payload, result, batch_id, query_id, hot,
+                    table, payload, result, batch_id, query_id, hot,
                     rows_bad, timings=prof.flat(),
                 )
     finally:
@@ -288,7 +268,6 @@ def apply_batch(
 
 def _write_lineage(
     table: ParquetLakeTable,
-    winners: DataFrame,
     payload: DataFrame,
     result: MergeResult,
     batch_id: int | None,
@@ -303,7 +282,7 @@ def _write_lineage(
     audit which slice of the keyspace each commit touched and to replay-verify any
     bucket independently."""
     per_bucket = (
-        winners.withColumn("_bucket", table._bucket_expr())
+        payload.withColumn("_bucket", table._bucket_expr())
         .groupBy("_bucket")
         .agg(
             F.count(F.lit(1)).alias("rows"),
@@ -333,8 +312,5 @@ def _write_lineage(
     os.makedirs(lineage_dir, exist_ok=True)
     name = f"batch_{batch_id if batch_id is not None else uuid.uuid4().hex[:8]}_{result.version}.json"
     p = os.path.join(lineage_dir, name)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(doc, f)
-    os.replace(tmp, p)
+    write_json_atomic(p, doc)
     return p

@@ -11,9 +11,9 @@ still-bad rows to a fresh DLQ.
 
 One DLQ record schema across surfaces (batch_id, stage, error, payload, ts):
 the streaming tail / apply DLQ (cdc/apply.write_dlq) and the fluent API's DLQ
-(etl.EtlStream.run, RowSinkLoader) all write it, so this module consumes any
-of them. Fluent-API records carry a null batch_id (a fluent run is not a
-fenced micro-batch) — see the fencing note on ``redrive``.
+(etl.EtlStream.run, RowSinkLoader) all build it with schema.dlq_records, so
+this module consumes any of them. Fluent-API records carry a null batch_id (a
+fluent run is not a fenced micro-batch) — see the fencing note on ``redrive``.
 
 Requires full-record payloads (``apply_batch(dlq_payload="full")`` /
 ``write_dlq(payload="full")`` / fluent ``with_object_logger("full")``): the
@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pocket_etl_spark.cdc.apply import ApplyResult, apply_batch, valid_condition
+from pocket_etl_spark.cdc.apply import ApplyResult, apply_batch
 from pocket_etl_spark.schema import EVENT_SCHEMA
 
 
@@ -132,17 +132,17 @@ def redrive(
     (a fresh directory — never looped back into the input DLQ by default);
     with ``dlq_path_out=None`` the re-drive RAISES if any row is still
     invalid (ADVICE r4: silently dropping them while reporting rows_bad=0
-    would commit the watermark over lost records)."""
+    would commit the watermark over lost records) — apply_batch enforces
+    that rule for every caller without a DLQ, before anything commits."""
     events = read_dlq(spark, dlq_path, schema=schema, stage=stage, batch_ids=batch_ids)
     if fix is not None:
         events = fix(events)
-    # One materialization feeds the cursor aggregate, the still-invalid guard
-    # AND the merge: without it an expensive fix() re-executes per action, and
-    # a non-deterministic fix() could pass the guard on one evaluation while
-    # producing an invalid row on the merge's — which split_invalid would then
-    # drop under a committed watermark (DLQ selections are small by nature).
-    # A local checkpoint truncates the lineage, so fix() runs exactly once —
-    # unlike persist(), whose evicted blocks would recompute it.
+    # One materialization feeds the cursor aggregate AND apply_batch: without
+    # it an expensive fix() re-executes per action, and a non-deterministic
+    # fix() could hand apply_batch different rows than the cursor aggregate
+    # saw (DLQ selections are small by nature). A local checkpoint truncates
+    # the lineage, so fix() runs exactly once — unlike persist(), whose
+    # evicted blocks would recompute it.
     events = events.localCheckpoint()
     last = table.last_batch_id(query_id)
     if "_dlq_batch_id" in events.columns:
@@ -171,17 +171,8 @@ def redrive(
         batch_id = max(int(ids["mx"]), last + 1)
     else:
         batch_id = last + 1
-    kept = events.drop("_dlq_batch_id", "_dlq_error")
-    if dlq_path_out is None:
-        still_bad = kept.filter(~valid_condition(kept, table)).count()
-        if still_bad:
-            raise ValueError(
-                f"redrive: {still_bad} rows are still invalid after fix and no "
-                "dlq_path_out is configured to route them — re-applying would "
-                "silently drop them. Pass dlq_path_out or repair them in fix()."
-            )
     return apply_batch(
-        kept,
+        events.drop("_dlq_batch_id", "_dlq_error"),
         table,
         batch_id=batch_id,
         query_id=query_id,

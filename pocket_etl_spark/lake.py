@@ -60,6 +60,15 @@ _MANIFESTS = "_manifests"
 _DATA = "data"
 
 
+def write_json_atomic(path: str, obj: Any) -> None:
+    """Write ``obj`` as JSON via a unique temp file + ``os.replace`` (rename is
+    atomic on POSIX — a reader sees the old file or the complete new one)."""
+    tmp = f"{path}.tmp.{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 @dataclass
 class MergeResult:
     committed: bool
@@ -81,7 +90,6 @@ class ParquetLakeTable:
         op_col: str = OP_COL,
         schema: T.StructType | None = None,
         num_buckets: int = 16,
-        stamps: bool = True,
     ) -> None:
         self.spark = spark
         self.path = path
@@ -89,11 +97,6 @@ class ParquetLakeTable:
         self.lsn_col = lsn_col
         self.op_col = op_col
         self.num_buckets = num_buckets
-        # Change-feed stamps: per-row _version costs one long through the
-        # merge's union, winner join, and write (~3-4% of replay wall, measured
-        # in BENCH/BASELINE.md §stamp-cost). Tables nobody tails can turn it
-        # off; read_changes then refuses rather than returning wrong windows.
-        self.stamps = stamps
         self._base_schema = schema or TABLE_SCHEMA
         os.makedirs(os.path.join(path, _MANIFESTS), exist_ok=True)
         os.makedirs(os.path.join(path, _DATA), exist_ok=True)
@@ -127,15 +130,44 @@ class ParquetLakeTable:
         (rename is atomic on POSIX — the reader either sees the old version or the
         complete new one). Iceberg backend: this is the snapshot commit."""
         v = manifest["version"]
-        mpath = os.path.join(self.path, _MANIFESTS, f"v{v:012d}.json")
-        tmp = mpath + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, mpath)
-        ptmp = self._pointer_path() + f".tmp.{uuid.uuid4().hex}"
-        with open(ptmp, "w") as f:
-            f.write(str(v))
-        os.replace(ptmp, self._pointer_path())
+        write_json_atomic(os.path.join(self.path, _MANIFESTS, f"v{v:012d}.json"), manifest)
+        write_json_atomic(self._pointer_path(), v)
+
+    def _commit_next(
+        self,
+        man: dict[str, Any],
+        written: dict[str, str] | None = None,
+        replaced=(),
+        schema: T.StructType | None = None,
+        batch_id: int | None = None,
+        query_id: str = "default",
+        **stats: Any,
+    ) -> int:
+        """Commit manifest v{N+1} on top of ``man`` (v{N}) — the one commit
+        point of every write (merge, its empty-batch branch, overwrite,
+        compact). Buckets in ``replaced`` leave the map, ``written`` (bucket →
+        data dir) enters it, every other bucket carries forward by reference;
+        a replaced bucket absent from ``written`` lost all its rows and is
+        dropped. Watermarks carry forward, and ``query_id`` advances to
+        ``batch_id`` when one is given. Returns the new version."""
+        version = man["version"] + 1
+        gone = {str(b) for b in replaced}
+        buckets = {b: rel for b, rel in man["buckets"].items() if b not in gone}
+        buckets.update(written or {})
+        watermarks = dict(man["watermarks"])
+        if batch_id is not None:
+            watermarks[query_id] = batch_id
+        self._commit(
+            {
+                "version": version,
+                "parent": man["version"],
+                "schema": man["schema"] if schema is None else schema.json(),
+                "buckets": buckets,
+                "watermarks": watermarks,
+                "stats": {"committed_at": time.time(), **stats},
+            }
+        )
+        return version
 
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(json.loads(self._manifest(self.current_version())["schema"]))
@@ -208,11 +240,6 @@ class ParquetLakeTable:
         carried through the copy-on-write rewrite — an unchanged key is never
         emitted, and a late lower-LSN event that LOST its merge produces no
         change row (the stored winner keeps its original stamp)."""
-        if not self.stamps:
-            raise ValueError(
-                "read_changes requires stamps=True (this table was opened with "
-                "stamps=False, so rows carry no _version change-feed stamp)"
-            )
         # INVARIANT (pinned by test_lake.test_read_changes_window_is_stable):
         # the window's upper bound and BOTH manifests resolve EAGERLY, here at
         # call time — never lazily inside the returned plan. A merge committing
@@ -247,8 +274,8 @@ class ParquetLakeTable:
             int(b) for b, rel in to_man.items() if since_man.get(b) != rel
         ]
         df = self.read(version=to_v, buckets=changed, include_tombstones=True)
-        # Plain comparison, NOT coalesce(_version, 0): every row a stamped
-        # table stores carries a non-null _version (merge coalesces, overwrite
+        # Plain comparison, NOT coalesce(_version, 0): every row the table
+        # stores carries a non-null _version (merge coalesces, overwrite
         # stamps, compact preserves), and a bare predicate reaches the parquet
         # scan as PushedFilters [IsNotNull(_version), GreaterThan(_version, N)]
         # — rowgroup min/max stats then skip carried-forward cold rows inside
@@ -271,6 +298,37 @@ class ParquetLakeTable:
 
     def _bucket_expr(self):
         return F.pmod(F.xxhash64(*self.key_cols), F.lit(self.num_buckets)).cast("int")
+
+    def _write_buckets(
+        self, df: DataFrame, version: int, n_buckets: int, slices: int
+    ) -> dict[str, str]:
+        """Write ``df`` as snapshot dir ``data/v{version}``, one
+        ``_bucket=b`` directory per hash bucket — the one bucket writer of
+        merge, overwrite and compact. ``n_buckets`` is the number of buckets
+        the frame spans; with ``slices > 1`` each bucket spreads over that many
+        files by a key-salted ``_slice`` (``repartition(n, "_bucket")`` alone
+        hashes all of a bucket's rows into one task). Returns bucket → data
+        dir (relative to the table root) for the buckets actually written."""
+        rel_dir = os.path.join(_DATA, f"v{version:012d}")
+        out_dir = os.path.join(self.path, rel_dir)
+        df = df.withColumn("_bucket", self._bucket_expr())
+        if slices > 1:
+            df = (
+                df.withColumn(
+                    "_slice",
+                    F.pmod(F.xxhash64(F.lit("_slice"), *self.key_cols), F.lit(slices)),
+                )
+                .repartition(n_buckets * slices, "_bucket", "_slice")
+                .drop("_slice")
+            )
+        else:
+            df = df.repartition(n_buckets, "_bucket")
+        df.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
+        return {
+            d.split("=", 1)[1]: os.path.join(rel_dir, d)
+            for d in os.listdir(out_dir)
+            if d.startswith("_bucket=")
+        }
 
     def merge(
         self,
@@ -332,14 +390,8 @@ class ParquetLakeTable:
             )
         if not touched:
             # Still advance the watermark so the empty batch is fenced on replay.
-            new_man = dict(man)
-            new_man["version"] = cur_version + 1
-            new_man["parent"] = cur_version  # keep the manifest chain contiguous
-            new_man["watermarks"] = {**man["watermarks"]}
-            if batch_id is not None:
-                new_man["watermarks"][query_id] = batch_id
-            self._commit(new_man)
-            return MergeResult(True, cur_version + 1, batch_id, [], {"rows": 0})
+            version = self._commit_next(man, batch_id=batch_id, query_id=query_id)
+            return MergeResult(True, version, batch_id, [], {"rows": 0})
 
         current = conform_to(
             self.read(version=cur_version, buckets=touched, include_tombstones=True),
@@ -361,18 +413,17 @@ class ParquetLakeTable:
         # for incoming events; after winner selection NULL coalesces to the new
         # commit version — so a row's stamp moves iff an incoming event won
         # (the change-feed contract of read_changes).
-        stamp_cols = ["_version"] if self.stamps else []
         cur_tagged = current.select(
             *data_cols,
             F.when(F.coalesce(F.col("_deleted"), F.lit(False)), F.lit("D"))
             .otherwise(F.lit(None).cast("string"))
             .alias(self.op_col),
             F.lit(0).alias("_src"),
-            *[F.col(c) for c in stamp_cols],
+            F.col("_version"),
         )
         upd_tagged = winners.select(
             *data_cols, F.col(self.op_col), F.lit(1).alias("_src"),
-            *[F.lit(None).cast("long").alias(c) for c in stamp_cols],
+            F.lit(None).cast("long").alias("_version"),
         )
         combined = cur_tagged.unionByName(upd_tagged)
 
@@ -403,65 +454,25 @@ class ParquetLakeTable:
         merged = (
             keyed.join(winner_ords.hint("shuffle_hash"), on=[*self.key_cols, "_ord"])
             .dropDuplicates([*self.key_cols, "_ord"])
-            .select(*data_cols, self.op_col, *stamp_cols)
+            .select(*data_cols, self.op_col, "_version")
             .withColumn("_deleted", F.col(self.op_col) == "D")
+            .withColumn("_version", F.coalesce(F.col("_version"), F.lit(new_version)))
+            .drop(self.op_col)
         )
-        if self.stamps:
-            merged = merged.withColumn(
-                "_version", F.coalesce(F.col("_version"), F.lit(new_version))
-            )
-        merged = merged.drop(self.op_col).withColumn("_bucket", self._bucket_expr())
 
         # Write only the touched buckets of the new snapshot. Writer
         # parallelism = touched buckets x file slices: when a batch touches
         # fewer buckets than there are cores (the hot-bucket case), each bucket
         # splits into ``slices`` files so the rewrite stays core-parallel
         # instead of serializing on one task per bucket (capped at 8 slices to
-        # bound file counts).
-        rel_dir = os.path.join(_DATA, f"v{new_version:012d}")
-        out_dir = os.path.join(self.path, rel_dir)
+        # bound file counts). Untouched buckets carry forward by reference.
         par = self.spark.sparkContext.defaultParallelism
         slices = max(1, min(8, par // len(touched)))
-        if slices > 1:
-            writer = (
-                merged.withColumn(
-                    "_slice",
-                    F.pmod(F.xxhash64(F.lit("_slice"), *self.key_cols), F.lit(slices)),
-                )
-                .repartition(len(touched) * slices, "_bucket", "_slice")
-                .drop("_slice")
-            )
-        else:
-            writer = merged.repartition(len(touched), "_bucket")
-        writer.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-
-        # New manifest: rewritten buckets point at the new snapshot dir; untouched
-        # buckets carry forward by reference. A touched bucket that lost all rows
-        # (all deleted) is dropped.
-        new_buckets = dict(man["buckets"])
-        written = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(out_dir)
-            if d.startswith("_bucket=")
-        }
-        for b in touched:
-            key = str(b)
-            if b in written:
-                new_buckets[key] = os.path.join(rel_dir, f"_bucket={b}")
-            else:
-                new_buckets.pop(key, None)
-
-        new_man = {
-            "version": new_version,
-            "parent": cur_version,
-            "schema": new_schema.json(),
-            "buckets": new_buckets,
-            "watermarks": {**man["watermarks"]},
-            "stats": {"committed_at": time.time()},
-        }
-        if batch_id is not None:
-            new_man["watermarks"][query_id] = batch_id
-        self._commit(new_man)
+        written = self._write_buckets(merged, new_version, len(touched), slices)
+        self._commit_next(
+            man, written, replaced=touched, schema=new_schema,
+            batch_id=batch_id, query_id=query_id,
+        )
         return MergeResult(
             True, new_version, batch_id, touched, {"buckets_rewritten": len(touched)}
         )
@@ -471,36 +482,15 @@ class ParquetLakeTable:
     def overwrite(self, df: DataFrame) -> MergeResult:
         """CLOBBER strategy (full refresh) — the reference's deleteAndCopy
         (RedshiftJdbcClient.java:162-198) / truncate-on-empty (:205-219)."""
-        cur_version = self.current_version()
-        new_version = cur_version + 1
-        rel_dir = os.path.join(_DATA, f"v{new_version:012d}")
-        out_dir = os.path.join(self.path, rel_dir)
+        man = self._manifest(self.current_version())
+        new_version = man["version"] + 1
         schema = T.StructType([f for f in df.schema.fields if f.name != self.op_col])
-        with_bucket = (
-            df.drop(self.op_col)
-            .withColumn("_version", F.lit(new_version))
-            .withColumn("_bucket", self._bucket_expr())
+        stamped = df.drop(self.op_col).withColumn("_version", F.lit(new_version))
+        written = self._write_buckets(stamped, new_version, self.num_buckets, 1)
+        self._commit_next(
+            man, written, replaced=man["buckets"], schema=schema, clobber=True
         )
-        with_bucket.repartition(self.num_buckets, "_bucket").write.mode(
-            "overwrite"
-        ).partitionBy("_bucket").parquet(out_dir)
-        buckets = {
-            d.split("=", 1)[1]: os.path.join(rel_dir, d)
-            for d in os.listdir(out_dir)
-            if d.startswith("_bucket=")
-        }
-        man = self._manifest(cur_version)
-        self._commit(
-            {
-                "version": new_version,
-                "parent": cur_version,
-                "schema": schema.json(),
-                "buckets": buckets,
-                "watermarks": {**man["watermarks"]},
-                "stats": {"clobber": True},
-            }
-        )
-        return MergeResult(True, new_version, None, sorted(int(b) for b in buckets), {})
+        return MergeResult(True, new_version, None, sorted(int(b) for b in written), {})
 
     def compact(self, max_files_per_bucket: int = 1) -> MergeResult:
         """Small-file compaction (Iceberg: rewrite_data_files). Hot-bucket
@@ -523,40 +513,11 @@ class ParquetLakeTable:
         if not needs:
             return MergeResult(False, cur_version, None, [], {"compacted": 0})
         df = self.read(version=cur_version, buckets=needs, include_tombstones=True)
-        new_version = cur_version + 1
-        rel_dir = os.path.join(_DATA, f"v{new_version:012d}")
-        out_dir = os.path.join(self.path, rel_dir)
-        bucketed = df.withColumn("_bucket", self._bucket_expr())
-        if max_files_per_bucket > 1:
-            # repartition(n, "_bucket") alone hashes ALL of a bucket's rows into
-            # one partition — the >1 contract needs the same key-salted _slice
-            # the merge writer uses to spread one bucket across several files.
-            writer = (
-                bucketed.withColumn(
-                    "_slice",
-                    F.pmod(
-                        F.xxhash64(F.lit("_slice"), *self.key_cols),
-                        F.lit(max_files_per_bucket),
-                    ),
-                )
-                .repartition(len(needs) * max_files_per_bucket, "_bucket", "_slice")
-                .drop("_slice")
-            )
-        else:
-            writer = bucketed.repartition(len(needs), "_bucket")
-        writer.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-        new_buckets = dict(man["buckets"])
-        for b in needs:
-            new_buckets[str(b)] = os.path.join(rel_dir, f"_bucket={b}")
-        self._commit(
-            {
-                "version": new_version,
-                "parent": cur_version,
-                "schema": man["schema"],
-                "buckets": new_buckets,
-                "watermarks": {**man["watermarks"]},
-                "stats": {"compacted_buckets": len(needs)},
-            }
+        written = self._write_buckets(
+            df, cur_version + 1, len(needs), max_files_per_bucket
+        )
+        new_version = self._commit_next(
+            man, written, replaced=needs, compacted_buckets=len(needs)
         )
         return MergeResult(True, new_version, None, needs, {"compacted": len(needs)})
 
@@ -630,11 +591,7 @@ class ParquetLakeTable:
             "keep_versions": keep_versions,
             "vacuumed_at": time.time(),
         }
-        mpath = os.path.join(self.path, "_vacuum.json")
-        tmp = mpath + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(marker, f)
-        os.replace(tmp, mpath)
+        write_json_atomic(os.path.join(self.path, "_vacuum.json"), marker)
         if keep_manifests is not None:
             cutoff = cur - keep_manifests + 1
             mdir = os.path.join(self.path, _MANIFESTS)

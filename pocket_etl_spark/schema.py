@@ -10,6 +10,8 @@ fields tunnel through the map, and schema evolution promotes tunnel keys to real
 
 from __future__ import annotations
 
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Ops carried by the change log. Tie-break rank makes same-LSN collisions
@@ -66,6 +68,30 @@ DLQ_SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType(), nullable=True),
     ]
 )
+
+
+def dlq_records(
+    failed: DataFrame,
+    batch_id: int | None,
+    stage: str | None,
+    error: Column,
+    payload: Column,
+) -> DataFrame:
+    """Project failed rows onto DLQ_SCHEMA — the one record builder behind
+    every DLQ writer (tail/apply ``write_dlq``, fluent ``EtlStream.run``,
+    ``RowSinkLoader``), so cdc/redrive.read_dlq consumes any of them and no
+    surface can drift from the schema. ``ts`` is the write time."""
+    cols = {
+        "batch_id": F.lit(batch_id),
+        "stage": F.lit(stage),
+        "error": error,
+        "payload": payload,
+        "ts": F.current_timestamp(),
+    }
+    return failed.select(
+        *[cols[f.name].cast(f.dataType).alias(f.name) for f in DLQ_SCHEMA.fields]
+    )
+
 
 # Numeric widening lattice for schema evolution (kept deliberately small; anything
 # outside the lattice falls back to string).

@@ -69,7 +69,8 @@ def start_tail(
     e.g. ``streaming/envelope.decode_kafka_envelope`` when the WAL carries
     Kafka-shaped ``(key, value)`` byte pairs (``wal_schema=KAFKA_ENVELOPE_SCHEMA``)
     instead of typed event rows. ``on_batch`` is a fault-injection/observability
-    hook used by tests.
+    hook used by tests. Without ``dlq_path``, a batch holding invalid events
+    fails the query (apply_batch raises) instead of dropping them.
     """
     stream = read_wal_stream(
         spark, wal_dir, schema=wal_schema, max_files_per_trigger=max_files_per_trigger

@@ -129,6 +129,30 @@ def test_null_op_rows_route_to_dlq_not_lost(spark, tmp_table_path, tmp_path):
     assert_state_equals_oracle(table, good_pdf)
 
 
+def test_invalid_rows_without_dlq_raise_and_commit_nothing(spark, tmp_table_path):
+    """No row may vanish silently: without a dlq_path, a batch carrying
+    invalid rows (10% NULL op) raises before the merge — the table version,
+    the watermark and the cache are exactly as before the call."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    events = gen_change_events(spark, n_events=1000, n_keys=50, seed=13)
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
+    apply_batch(events.filter("lsn <= 500"), table, batch_id=0, lineage=False)
+    version = table.current_version()
+    poisoned = events.filter("lsn > 500").withColumn(
+        "op", F.when(F.pmod(F.col("lsn"), F.lit(10)) == 0, F.lit(None)).otherwise(F.col("op"))
+    )
+    sc = spark.sparkContext._jsc.sc()
+    cached_before = sc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="50 rows are still invalid"):
+        apply_batch(poisoned, table, batch_id=1)
+    assert table.current_version() == version
+    assert table.last_batch_id() == 0
+    assert sc.getPersistentRDDs().size() == cached_before
+    assert_state_equals_oracle(table, events.filter("lsn <= 500").toPandas())
+
+
 def test_dlq_default_payload_is_pii_safe(spark, tmp_table_path, tmp_path):
     """VERDICT r3 'wrong' #2 (reference parity DefaultLoggingStrategy.java:27-36):
     the streaming-tail DLQ's DEFAULT payload carries schema + opted-in key

@@ -275,3 +275,41 @@ def test_read_dlq_parses_full_payload_and_raw_value(spark, tmp_path):
     assert parsed.loc[0, "_raw_value"] == "{never json"
     assert pd.isna(parsed.loc[0, "lsn"])
     assert parsed.loc[0, "_dlq_batch_id"] == 0
+
+
+def test_every_dlq_surface_writes_dlq_schema(spark, tmp_path):
+    """The three DLQ writers — tail/apply, fluent EtlStream.run and
+    RowSinkLoader — all write exactly schema.DLQ_SCHEMA (types, not only
+    column names), so read_dlq never meets a drifted surface. The fluent
+    streams are unnamed: their stage is NULL and must still be a string."""
+    from pocket_etl_spark.etl import BufferLoader, EtlStream, RowSinkLoader
+    from pocket_etl_spark.schema import DLQ_SCHEMA
+
+    events = gen_change_events(spark, n_events=200, n_keys=20, seed=53)
+    table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=4)
+    apply_dlq = str(tmp_path / "apply_dlq")
+    apply_batch(_poison(events), table, batch_id=0, dlq_path=apply_dlq, lineage=False)
+
+    rows = spark.createDataFrame([{"name": f"p{i}", "score": i} for i in range(10)])
+
+    def boom(pdf):
+        if (pdf["score"] == 4).any():
+            raise ValueError("bad record 4")
+        return pdf
+
+    stream_dlq = str(tmp_path / "stream_dlq")
+    EtlStream.extract(rows).map_rows(boom).load(BufferLoader()).run(
+        spark, dlq_path=stream_dlq
+    )
+
+    def put_item(rec):
+        if rec["score"] == 4:
+            raise ValueError("bad record 4")
+
+    sink_dlq = str(tmp_path / "sink_dlq")
+    EtlStream.extract(rows).load(RowSinkLoader(put_item, dlq_path=sink_dlq)).run(spark)
+
+    for d in (apply_dlq, stream_dlq, sink_dlq):
+        got = spark.read.parquet(d)
+        assert got.count() > 0, d
+        assert got.schema == DLQ_SCHEMA, (d, got.schema.simpleString())

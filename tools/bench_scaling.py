@@ -210,7 +210,11 @@ def _pool(runs: list[dict], cells: list[tuple[int, float]]) -> dict[tuple[int, f
             prev["n_runs"] += 1
     missing = [c for c in cells if c not in pooled]
     if missing:
-        raise SystemExit(f"runs file lacks cells for current config: {missing}")
+        raise SystemExit(
+            "pool lacks cell "
+            + ", ".join(str(c) for c in missing)
+            + "; run the missing cells"
+        )
     for key, c in pooled.items():
         walls = c["all_walls_sec"]
         c["replay_wall_sec"] = round(min(walls), 2)
