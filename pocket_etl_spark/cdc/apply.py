@@ -117,7 +117,9 @@ def apply_batch(
 
     Phase timings are collected into a hierarchical Profiler tree (the
     reference's EtlProfilingScope.java:47-128 timer rollup) — exported on
-    ApplyResult.timings and written into the batch's lineage document.
+    ApplyResult.timings and written into the batch's lineage document. The
+    merge adds its own phases under ``merge``: ``merge.plan``,
+    ``merge.write`` and ``merge.commit`` (see ``ParquetLakeTable.merge``).
 
     ``dlq_keys``/``dlq_payload`` shape the DLQ record (see write_dlq): default
     is the PII-safe schema+keys payload; 'full' opts into whole-record JSON."""
@@ -242,7 +244,8 @@ def apply_batch(
         # remains the standalone operator for non-merge consumers.
         with prof.scope("merge"):
             result = table.merge(
-                payload, batch_id=batch_id, query_id=query_id, touched_buckets=touched
+                payload, batch_id=batch_id, query_id=query_id,
+                touched_buckets=touched, prof=prof,
             )
 
         lineage_path = None

@@ -53,6 +53,7 @@ from pyspark.sql import types as T
 
 from pocket_etl_spark.cdc.dedupe import OP_RANK_EXPR, lww_dedupe
 from pocket_etl_spark.cdc.evolution import conform_to, unify_schemas
+from pocket_etl_spark.profiling import Profiler
 from pocket_etl_spark.schema import KEY_COLS, LSN_COL, OP_COL, TABLE_SCHEMA
 
 _POINTER = "_latest"
@@ -300,15 +301,31 @@ class ParquetLakeTable:
         return F.pmod(F.xxhash64(*self.key_cols), F.lit(self.num_buckets)).cast("int")
 
     def _write_buckets(
-        self, df: DataFrame, version: int, n_buckets: int, slices: int
+        self, df: DataFrame, version: int, n_buckets: int, slices: int | None = None
     ) -> dict[str, str]:
         """Write ``df`` as snapshot dir ``data/v{version}``, one
         ``_bucket=b`` directory per hash bucket — the one bucket writer of
         merge, overwrite and compact. ``n_buckets`` is the number of buckets
-        the frame spans; with ``slices > 1`` each bucket spreads over that many
-        files by a key-salted ``_slice`` (``repartition(n, "_bucket")`` alone
-        hashes all of a bucket's rows into one task). Returns bucket → data
-        dir (relative to the table root) for the buckets actually written."""
+        the frame spans; with ``slices > 1`` each bucket spreads over up to
+        that many files by a key-salted ``_slice`` (``repartition(n,
+        "_bucket")`` alone hashes all of a bucket's rows into one task).
+        ``slices=None`` picks the hot-bucket rule: when the frame spans fewer
+        buckets than there are cores, each bucket splits into
+        ``min(8, cores // n_buckets)`` slices so the rewrite stays
+        core-parallel (the cap bounds file counts).
+
+        The write runs in ONE task wave: write tasks = min(n_buckets x
+        slices, cores = ``defaultParallelism``), and each (bucket, slice) hashes to exactly one task,
+        which writes the files of every bucket it holds — a bucket with one
+        slice is one part file. Every write task has a fixed cost (~15-20 ms
+        measured on a 4-core host), so a wave sized to the bucket count (32
+        tasks on 4 cores) pays it mostly for tasks holding one bucket or none.
+        Returns bucket → data dir (relative to the table root) for the
+        buckets actually written."""
+        par = self.spark.sparkContext.defaultParallelism
+        if slices is None:
+            slices = max(1, min(8, par // n_buckets))
+        n_tasks = min(n_buckets * slices, par)
         rel_dir = os.path.join(_DATA, f"v{version:012d}")
         out_dir = os.path.join(self.path, rel_dir)
         df = df.withColumn("_bucket", self._bucket_expr())
@@ -318,11 +335,11 @@ class ParquetLakeTable:
                     "_slice",
                     F.pmod(F.xxhash64(F.lit("_slice"), *self.key_cols), F.lit(slices)),
                 )
-                .repartition(n_buckets * slices, "_bucket", "_slice")
+                .repartition(n_tasks, "_bucket", "_slice")
                 .drop("_slice")
             )
         else:
-            df = df.repartition(n_buckets, "_bucket")
+            df = df.repartition(n_tasks, "_bucket")
         df.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
         return {
             d.split("=", 1)[1]: os.path.join(rel_dir, d)
@@ -336,6 +353,7 @@ class ParquetLakeTable:
         batch_id: int | None = None,
         query_id: str = "default",
         touched_buckets: list[int] | None = None,
+        prof: Profiler | None = None,
     ) -> MergeResult:
         """Keyed LWW MERGE of a change batch into the table.
 
@@ -351,128 +369,149 @@ class ParquetLakeTable:
         key is a packed-ord HashAggregate over (current ∪ batch), its rows are
         recovered by a shuffled-hash join on (key, ord), exact-duplicate ties
         collapse with ``dropDuplicates``, and the touched buckets are rewritten
-        in core-parallel file slices.
+        in one core-sized write wave (``_write_buckets``).
+
+        ``touched_buckets`` is the caller's set of buckets the batch's keys
+        hash to (it skips the probe scan). It must be complete: a merge that
+        writes a bucket outside it raises ``ValueError`` before committing,
+        because that bucket's current rows were never read.
+
+        ``prof`` (``apply_batch`` hands in its own) receives three scopes:
+        ``plan`` (manifest read, schema unification, the touched-bucket probe
+        when no hint is given, building the plan; an empty batch commits its
+        watermark here and stops), ``write`` (the one write action) and
+        ``commit`` (the manifest). The bucket read, argmax aggregate and
+        winner join run inside the write action, so the driver cannot time
+        them apart from it.
         """
-        cur_version = self.current_version()
-        man = self._manifest(cur_version)
+        prof = prof or Profiler()
+        with prof.scope("plan"):
+            cur_version = self.current_version()
+            man = self._manifest(cur_version)
 
-        # Fencing: Spark streaming batch ids are monotone per query; a batch at or
-        # below the committed watermark has already been applied → no-op
-        # (generalizes SQS delete-on-close, SqsExtractor.java:239-247).
-        if batch_id is not None and batch_id <= int(man["watermarks"].get(query_id, -1)):
-            return MergeResult(False, cur_version, batch_id, [], {"fenced": True})
+            # Fencing: Spark streaming batch ids are monotone per query; a batch at or
+            # below the committed watermark has already been applied → no-op
+            # (generalizes SQS delete-on-close, SqsExtractor.java:239-247).
+            if batch_id is not None and batch_id <= int(man["watermarks"].get(query_id, -1)):
+                return MergeResult(False, cur_version, batch_id, [], {"fenced": True})
 
-        table_schema = T.StructType.fromJson(json.loads(man["schema"]))
+            table_schema = T.StructType.fromJson(json.loads(man["schema"]))
 
-        # Schema evolution: widen/extend the table schema from the batch's columns
-        # (the envelope's tunnel fields already promoted upstream).
-        batch_payload_fields = [
-            f for f in updates.schema.fields if f.name not in (self.op_col,)
-        ]
-        new_schema = unify_schemas(table_schema, T.StructType(batch_payload_fields))
+            # Schema evolution: widen/extend the table schema from the batch's columns
+            # (the envelope's tunnel fields already promoted upstream).
+            batch_payload_fields = [
+                f for f in updates.schema.fields if f.name not in (self.op_col,)
+            ]
+            new_schema = unify_schemas(table_schema, T.StructType(batch_payload_fields))
 
-        winners = conform_to(
-            updates, new_schema, keep_extra=[self.op_col]
-        ).withColumn("_bucket", self._bucket_expr())
-        # NOTE: merge runs two actions over ``updates`` (the touched-bucket probe
-        # and the write). Callers are expected to hand in a cached/cheap frame —
-        # apply_batch caches the validated batch; double-caching here measurably
-        # thrashes the block manager, so merge itself does not persist.
+            winners = conform_to(
+                updates, new_schema, keep_extra=[self.op_col]
+            ).withColumn("_bucket", self._bucket_expr())
+            # NOTE: with ``touched_buckets`` given, merge runs one action over
+            # ``updates`` (the write); without it, two (the touched-bucket probe
+            # and the write). Callers are expected to hand in a cached/cheap frame
+            # — apply_batch caches the validated batch; double-caching here
+            # measurably thrashes the block manager, so merge itself does not
+            # persist.
 
-        # Bucket pruning: only buckets containing updated keys participate.
-        # Callers that already computed the batch's bucket set (apply_batch folds
-        # it into its single stats pass) hand it in and skip this probe scan.
-        if touched_buckets is not None:
-            touched = sorted(touched_buckets)
-        else:
-            touched = sorted(
-                r[0] for r in winners.select("_bucket").distinct().collect()
+            # Bucket pruning: only buckets containing updated keys participate.
+            # Callers that already computed the batch's bucket set (apply_batch folds
+            # it into its single stats pass) hand it in and skip this probe scan.
+            if touched_buckets is not None:
+                touched = sorted(touched_buckets)
+            else:
+                touched = sorted(
+                    r[0] for r in winners.select("_bucket").distinct().collect()
+                )
+            if not touched:
+                # Still advance the watermark so the empty batch is fenced on replay.
+                version = self._commit_next(man, batch_id=batch_id, query_id=query_id)
+                return MergeResult(True, version, batch_id, [], {"rows": 0})
+
+            current = conform_to(
+                self.read(version=cur_version, buckets=touched, include_tombstones=True),
+                new_schema,
+                keep_extra=["_deleted", "_version"],
             )
-        if not touched:
-            # Still advance the watermark so the empty batch is fenced on replay.
-            version = self._commit_next(man, batch_id=batch_id, query_id=query_id)
-            return MergeResult(True, version, batch_id, [], {"rows": 0})
 
-        current = conform_to(
-            self.read(version=cur_version, buckets=touched, include_tombstones=True),
-            new_schema,
-            keep_extra=["_deleted", "_version"],
-        )
+            # MERGE as union + second LWW pass: current rows enter with their stored lsn
+            # and op NULL (or 'D' for tombstones); at equal lsn the incoming event wins
+            # (_src tiebreak) so replaying the same batch is idempotent. One
+            # hash-aggregate shuffle on the key — map-side partial aggregation absorbs
+            # hot keys (skew-safe by construction). Deletes become tombstones (kept with
+            # the delete's LSN) so out-of-order/late lower-LSN events cannot resurrect a
+            # deleted key — the streaming refinement of the reference's
+            # delete-then-insert merge.
+            new_version = cur_version + 1
+            data_cols = [f.name for f in new_schema.fields]
+            # _version rides through the merge: current rows keep their stamp, NULL
+            # for incoming events; after winner selection NULL coalesces to the new
+            # commit version — so a row's stamp moves iff an incoming event won
+            # (the change-feed contract of read_changes).
+            cur_tagged = current.select(
+                *data_cols,
+                F.when(F.coalesce(F.col("_deleted"), F.lit(False)), F.lit("D"))
+                .otherwise(F.lit(None).cast("string"))
+                .alias(self.op_col),
+                F.lit(0).alias("_src"),
+                F.col("_version"),
+            )
+            upd_tagged = winners.select(
+                *data_cols, F.col(self.op_col), F.lit(1).alias("_src"),
+                F.lit(None).cast("long").alias("_version"),
+            )
+            combined = cur_tagged.unionByName(upd_tagged)
 
-        # MERGE as union + second LWW pass: current rows enter with their stored lsn
-        # and op NULL (or 'D' for tombstones); at equal lsn the incoming event wins
-        # (_src tiebreak) so replaying the same batch is idempotent. One
-        # hash-aggregate shuffle on the key — map-side partial aggregation absorbs
-        # hot keys (skew-safe by construction). Deletes become tombstones (kept with
-        # the delete's LSN) so out-of-order/late lower-LSN events cannot resurrect a
-        # deleted key — the streaming refinement of the reference's
-        # delete-then-insert merge.
-        new_version = cur_version + 1
-        data_cols = [f.name for f in new_schema.fields]
-        # _version rides through the merge: current rows keep their stamp, NULL
-        # for incoming events; after winner selection NULL coalesces to the new
-        # commit version — so a row's stamp moves iff an incoming event won
-        # (the change-feed contract of read_changes).
-        cur_tagged = current.select(
-            *data_cols,
-            F.when(F.coalesce(F.col("_deleted"), F.lit(False)), F.lit("D"))
-            .otherwise(F.lit(None).cast("string"))
-            .alias(self.op_col),
-            F.lit(0).alias("_src"),
-            F.col("_version"),
-        )
-        upd_tagged = winners.select(
-            *data_cols, F.col(self.op_col), F.lit(1).alias("_src"),
-            F.lit(None).cast("long").alias("_version"),
-        )
-        combined = cur_tagged.unionByName(upd_tagged)
+            # The argmax ordering (lsn, op_rank, src) packs into ONE long:
+            # lsn*8 + op_rank*2 + src (op_rank ∈ 0..3, src ∈ 0..1; lsn < 2^60 by
+            # contract). That turns the per-key argmax into a plain HashAggregate
+            # over (key, long) — whole-stage codegen, map-side partial aggregation
+            # (hot keys collapse before the exchange) — instead of a SortAggregate
+            # dragging the full row payload through the shuffle, which profiling
+            # showed dominated merge time and scaled poorly past 8 threads.
+            keyed = combined.withColumn(
+                "_ord",
+                F.col(self.lsn_col) * 8 + OP_RANK_EXPR(self.op_col) * 2 + F.col("_src"),
+            )
+            # Recover winning rows with a shuffled hash join on (key, ord): both the
+            # tiny winner set and the payload hash-partition on the key, so the
+            # join is fully parallel with zero driver-side work (a broadcast winner
+            # set was measured to cost ~6-10 s/batch of serial driver collect +
+            # rebroadcast, flattening N→4N scaling).
+            winner_ords = keyed.groupBy(*self.key_cols).agg(F.max("_ord").alias("_ord"))
+            # Exact-duplicate guard: at-least-once delivery can put the SAME event
+            # (key, lsn, op) in one batch twice; both rows tie at the max _ord and
+            # the join would emit both, breaking the one-row-per-key snapshot
+            # invariant (and the dupes would survive every later merge as identical
+            # _src=0 rows). Collapse ties on (key, _ord) — the join output is
+            # already hash-partitioned on exactly those columns, so this is a
+            # partition-local aggregate, no extra exchange.
+            merged = (
+                keyed.join(winner_ords.hint("shuffle_hash"), on=[*self.key_cols, "_ord"])
+                .dropDuplicates([*self.key_cols, "_ord"])
+                .select(*data_cols, self.op_col, "_version")
+                .withColumn("_deleted", F.col(self.op_col) == "D")
+                .withColumn("_version", F.coalesce(F.col("_version"), F.lit(new_version)))
+                .drop(self.op_col)
+            )
 
-        # The argmax ordering (lsn, op_rank, src) packs into ONE long:
-        # lsn*8 + op_rank*2 + src (op_rank ∈ 0..3, src ∈ 0..1; lsn < 2^60 by
-        # contract). That turns the per-key argmax into a plain HashAggregate
-        # over (key, long) — whole-stage codegen, map-side partial aggregation
-        # (hot keys collapse before the exchange) — instead of a SortAggregate
-        # dragging the full row payload through the shuffle, which profiling
-        # showed dominated merge time and scaled poorly past 8 threads.
-        keyed = combined.withColumn(
-            "_ord",
-            F.col(self.lsn_col) * 8 + OP_RANK_EXPR(self.op_col) * 2 + F.col("_src"),
-        )
-        # Recover winning rows with a shuffled hash join on (key, ord): both the
-        # tiny winner set and the payload hash-partition on the key, so the
-        # join is fully parallel with zero driver-side work (a broadcast winner
-        # set was measured to cost ~6-10 s/batch of serial driver collect +
-        # rebroadcast, flattening N→4N scaling).
-        winner_ords = keyed.groupBy(*self.key_cols).agg(F.max("_ord").alias("_ord"))
-        # Exact-duplicate guard: at-least-once delivery can put the SAME event
-        # (key, lsn, op) in one batch twice; both rows tie at the max _ord and
-        # the join would emit both, breaking the one-row-per-key snapshot
-        # invariant (and the dupes would survive every later merge as identical
-        # _src=0 rows). Collapse ties on (key, _ord) — the join output is
-        # already hash-partitioned on exactly those columns, so this is a
-        # partition-local aggregate, no extra exchange.
-        merged = (
-            keyed.join(winner_ords.hint("shuffle_hash"), on=[*self.key_cols, "_ord"])
-            .dropDuplicates([*self.key_cols, "_ord"])
-            .select(*data_cols, self.op_col, "_version")
-            .withColumn("_deleted", F.col(self.op_col) == "D")
-            .withColumn("_version", F.coalesce(F.col("_version"), F.lit(new_version)))
-            .drop(self.op_col)
-        )
-
-        # Write only the touched buckets of the new snapshot. Writer
-        # parallelism = touched buckets x file slices: when a batch touches
-        # fewer buckets than there are cores (the hot-bucket case), each bucket
-        # splits into ``slices`` files so the rewrite stays core-parallel
-        # instead of serializing on one task per bucket (capped at 8 slices to
-        # bound file counts). Untouched buckets carry forward by reference.
-        par = self.spark.sparkContext.defaultParallelism
-        slices = max(1, min(8, par // len(touched)))
-        written = self._write_buckets(merged, new_version, len(touched), slices)
-        self._commit_next(
-            man, written, replaced=touched, schema=new_schema,
-            batch_id=batch_id, query_id=query_id,
-        )
+        # Write only the touched buckets of the new snapshot; untouched buckets
+        # carry forward by reference.
+        with prof.scope("write"):
+            written = self._write_buckets(merged, new_version, len(touched))
+        stray = set(written) - {str(b) for b in touched}
+        if stray:
+            raise ValueError(
+                f"merge: the batch has keys in buckets {sorted(map(int, stray))} "
+                "outside touched_buckets; committing would replace those buckets "
+                "with the batch's rows alone. Pass the complete bucket set or "
+                "touched_buckets=None."
+            )
+        with prof.scope("commit"):
+            self._commit_next(
+                man, written, replaced=touched, schema=new_schema,
+                batch_id=batch_id, query_id=query_id,
+            )
         return MergeResult(
             True, new_version, batch_id, touched, {"buckets_rewritten": len(touched)}
         )
@@ -496,12 +535,16 @@ class ParquetLakeTable:
         """Small-file compaction (Iceberg: rewrite_data_files). Hot-bucket
         write slicing and repeated merges can leave several part files per
         bucket; compaction rewrites any bucket exceeding
-        ``max_files_per_bucket`` into that many files and commits a new
-        snapshot. Row content — including tombstones and the per-row
-        ``_version`` change-feed stamps — is preserved byte-for-byte, so
+        ``max_files_per_bucket`` (>= 1) into at most that many files and
+        commits a new snapshot. Row content — including tombstones and the
+        per-row ``_version`` change-feed stamps — is preserved byte-for-byte, so
         ``read_changes`` across a compaction emits NOTHING for compacted
         buckets (pointer moved, stamps did not). Untouched buckets carry
         forward by reference, same as merge."""
+        if max_files_per_bucket < 1:
+            raise ValueError(
+                f"compact: max_files_per_bucket must be >= 1, got {max_files_per_bucket}"
+            )
         cur_version = self.current_version()
         man = self._manifest(cur_version)
         needs = []

@@ -357,6 +357,48 @@ def test_compaction_preserves_state_and_change_feed(spark, tmp_table_path):
     assert table.read().count() > 0
 
 
+def test_merge_refuses_incomplete_touched_buckets_hint(spark, tmp_table_path):
+    """A batch key in a bucket outside the ``touched_buckets`` hint must fail
+    the merge before it commits: that bucket's current rows were never read,
+    so committing would replace the bucket with the batch's rows alone."""
+    import pytest
+
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
+    table.merge(_events(spark, n=300, keys=200).drop("ts", "extras"), batch_id=0)
+    v0, before = table.current_version(), table.read().count()
+    assert table.read(buckets=[3]).count() > 0
+    late = (
+        _events(spark, n=50, keys=50, seed=11).drop("ts", "extras")
+        .filter(table._bucket_expr() == 3)
+        .limit(1)
+        .withColumn("op", F.lit("I"))
+        .withColumn("lsn", F.lit(10**9).cast("long"))
+    )
+    with pytest.raises(ValueError, match="outside touched_buckets"):
+        table.merge(late, batch_id=1, touched_buckets=[0, 1, 2])
+    assert table.current_version() == v0
+    assert table.last_batch_id() == 0
+    assert table.read().count() == before
+    # the complete hint commits and keeps bucket 3's other rows
+    res = table.merge(late, batch_id=1, touched_buckets=[3])
+    assert res.committed
+    assert before <= table.read().count() <= before + 1
+
+
+def test_compact_rejects_max_files_below_one(spark, tmp_table_path):
+    """compact(0) is not "every bucket is over the limit": it raises instead
+    of rewriting and committing the whole table."""
+    import pytest
+
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=2)
+    table.merge(_events(spark, n=200, keys=40).drop("ts", "extras"), batch_id=0)
+    v = table.current_version()
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_files_per_bucket"):
+            table.compact(max_files_per_bucket=bad)
+    assert table.current_version() == v
+
+
 import pytest as _pytest
 
 
