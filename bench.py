@@ -106,7 +106,7 @@ def run_cdc_replay(spark) -> tuple[float, float]:
         gen_change_events(spark, CDC_EVENTS, CDC_KEYS, seed=42, content_repeat=2).write.parquet(wal)
         events = spark.read.parquet(wal)
         warm = ParquetLakeTable(spark, os.path.join(d, "warm"), num_buckets=32)
-        apply_batch(events.filter("lsn <= 100000"), warm, batch_id=0, lineage=False)
+        apply_batch(events.filter("lsn <= 100000"), warm, batch_id=0)
 
         n_batches = 4
         step = CDC_EVENTS // n_batches
@@ -116,12 +116,7 @@ def run_cdc_replay(spark) -> tuple[float, float]:
             t0 = time.time()
             for i in range(n_batches):
                 lo, hi = i * step + 1, (i + 1) * step
-                apply_batch(
-                    events.filter(f"lsn between {lo} and {hi}"),
-                    table,
-                    batch_id=i,
-                    lineage=False,
-                )
+                apply_batch(events.filter(f"lsn between {lo} and {hi}"), table, batch_id=i)
             walls.append(time.time() - t0)
             shutil.rmtree(os.path.join(d, f"t{r}"), ignore_errors=True)
         wall = min(walls)  # best-of-N (see run_headline)

@@ -1,5 +1,5 @@
 """Batch apply: validate → DLQ split → promote tunnel fields → LWW dedupe → MERGE,
-with per-partition lineage and ingest metrics.
+leaving one metrics record per committed batch (``<table>/_metrics``).
 
 This is the compiled "consumer chain" the engine runs once per micro-batch — the
 foreachBatch body of the streaming tail, also callable directly for batch replay.
@@ -10,17 +10,14 @@ TransformerEtlConsumer.java:90-99) → parallel loader with close-time merge com
 
 from __future__ import annotations
 
-import os
 import time
-import uuid
 from dataclasses import dataclass, field
-from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pocket_etl_spark.cdc.evolution import EXTRAS_COL, PROMOTE_PREFIX, promote_extras
-from pocket_etl_spark.lake import MergeResult, ParquetLakeTable, write_json_atomic
+from pocket_etl_spark.lake import MergeResult, ParquetLakeTable
 from pocket_etl_spark.profiling import Profiler
 from pocket_etl_spark.schema import dlq_records
 
@@ -35,8 +32,6 @@ class ApplyResult:
     rows_in: int
     rows_bad: int
     rows_applied: int
-    hot_keys: list[tuple] = field(default_factory=list)
-    lineage_path: str | None = None
     duration_sec: float = 0.0
     timings: dict[str, float] = field(default_factory=dict)
 
@@ -61,6 +56,11 @@ def valid_condition(events: DataFrame, table: ParquetLakeTable):
     return key_ok & F.col(table.lsn_col).isNotNull() & op.isNotNull() & op.isin(*VALID_OPS)
 
 
+def _check_payload_mode(payload: str) -> None:
+    if payload not in ("redacted", "full"):
+        raise ValueError(f"unknown payload mode {payload!r} (expected 'redacted' or 'full')")
+
+
 def write_dlq(
     bad: DataFrame,
     dlq_path: str,
@@ -80,8 +80,7 @@ def write_dlq(
     an UNDECODABLE envelope record's ``_raw_value`` (streaming/envelope.py)
     always rides in the payload — without it the record is unrecoverable, and
     by construction it never parsed into typed fields."""
-    if payload not in ("redacted", "full"):
-        raise ValueError(f"write_dlq: unknown payload mode {payload!r}")
+    _check_payload_mode(payload)
     if payload == "full":
         body = F.to_json(F.struct(*bad.columns))
         error = F.lit("validation: null key/lsn or bad op")
@@ -109,21 +108,31 @@ def apply_batch(
     batch_id: int | None = None,
     query_id: str = "default",
     dlq_path: str | None = None,
-    lineage: bool = True,
     dlq_keys: tuple[str, ...] = (),
     dlq_payload: str = "redacted",
 ) -> ApplyResult:
     """Apply one micro-batch of change events to the lake table, exactly-once.
 
     Phase timings are collected into a hierarchical Profiler tree (the
-    reference's EtlProfilingScope.java:47-128 timer rollup) — exported on
-    ApplyResult.timings and written into the batch's lineage document. The
-    merge adds its own phases under ``merge``: ``merge.plan``,
-    ``merge.write`` and ``merge.commit`` (see ``ParquetLakeTable.merge``).
+    reference's EtlProfilingScope.java:47-128 timer rollup) and exported
+    flat on ApplyResult.timings. The merge adds its own phases under
+    ``merge``: ``merge.plan``, ``merge.write`` and ``merge.commit`` (see
+    ``ParquetLakeTable.merge``).
+
+    Every committed batch leaves one metrics record (the reference's
+    per-run EtlMetrics tree, EtlMetrics.java:25-53), read back with
+    ``table.read_metrics()``: query_id, batch_id, version, rows_in (every
+    event), rows_bad, rows_applied (the events handed to the merge),
+    buckets_rewritten, min_lsn/max_lsn of the valid events, duration_sec,
+    committed_at and the timings. Its counts come from the one stats pass,
+    so the record costs no Spark job. A fenced replay writes none.
 
     ``dlq_keys``/``dlq_payload`` shape the DLQ record (see write_dlq): default
-    is the PII-safe schema+keys payload; 'full' opts into whole-record JSON."""
+    is the PII-safe schema+keys payload; 'full' opts into whole-record JSON.
+    An unknown ``dlq_payload`` raises before any Spark job, even for a batch
+    that would route nothing to the DLQ."""
     t0 = time.time()
+    _check_payload_mode(dlq_payload)
     # Early fence (one driver-side manifest read): a replayed micro-batch must
     # not redo SIDE EFFECTS — without this, a fenced replay still paid the
     # full stats pass and RE-APPENDED its bad rows to the DLQ (duplicate DLQ
@@ -160,18 +169,25 @@ def apply_batch(
         # must never reach the merge or it would schema-evolve into the table.
         good = cached.filter(valid).drop("_valid", "_raw_value")
 
-    rows_applied, rows_in, hot = -1, -1, []
     try:
         # ONE stats pass over the batch computes everything the driver needs
         # before the merge: the set of touched hash buckets (merge reads and
-        # rewrites only those), the invalid-row count, and the distinct
-        # promotable tunnel keys (schema evolution). This pass also populates
-        # the cache, so every later consumer reads the same materialization.
+        # rewrites only those), the event and invalid-row counts, the valid
+        # LSN range, and the distinct promotable tunnel keys (schema
+        # evolution). This pass also populates the cache, so every later
+        # consumer reads the same materialization.
         sel = [
             F.when(valid, table._bucket_expr()).alias("_b"),
             F.when(valid, 0).otherwise(1).alias("_inv"),
+            F.when(valid, F.col(table.lsn_col)).alias("_lsn"),
         ]
-        aggs = [F.collect_set("_b").alias("_buckets"), F.sum("_inv").alias("_bad")]
+        aggs = [
+            F.collect_set("_b").alias("_buckets"),
+            F.sum("_inv").alias("_bad"),
+            F.count(F.lit(1)).alias("_n"),
+            F.min("_lsn").alias("_min_lsn"),
+            F.max("_lsn").alias("_max_lsn"),
+        ]
         if EXTRAS_COL in good.columns:
             sel.append(
                 F.when(
@@ -187,6 +203,7 @@ def apply_batch(
             stats = cached.select(*sel).agg(*aggs).collect()[0]
             touched = sorted(stats["_buckets"])
             promo_keys = sorted(stats["_promo"]) if EXTRAS_COL in good.columns else []
+        rows_in = int(stats["_n"])
         rows_bad = int(stats["_bad"] or 0)
 
         if rows_bad:
@@ -211,33 +228,6 @@ def apply_batch(
         good = promote_extras(good, keys=promo_keys)
         payload = good.drop(*[c for c in DROP_COLS if c in good.columns])
 
-        if lineage:
-            # ONE upstream pass for all lineage stats: group once per key,
-            # cache the (small) per-key histogram, derive row count, distinct
-            # keys (= merge winners) and the hot-key top-32 from it (instead of
-            # separate count, distinct and hot-key scans of the upstream).
-            with prof.scope("lineage_stats"):
-                grouped = (
-                    payload.groupBy(*table.key_cols)
-                    .agg(F.count(F.lit(1)).alias("_n"))
-                    .persist()
-                )
-                try:
-                    tot = grouped.agg(
-                        F.sum("_n").alias("_rows"), F.count(F.lit(1)).alias("_keys")
-                    ).collect()[0]
-                    rows_in = int(tot["_rows"] or 0)
-                    rows_applied = int(tot["_keys"])
-                    cutoff = max(1, int(rows_in * 0.05))
-                    hot = [
-                        tuple(r[k] for k in table.key_cols)
-                        for r in grouped.filter(F.col("_n") > cutoff)
-                        .orderBy(F.col("_n").desc())
-                        .limit(32)
-                        .collect()
-                    ]
-                finally:
-                    grouped.unpersist()
         # The batch goes to the merge as is: the lake's union-argmax subsumes
         # per-batch LWW dedupe in the same hash-aggregate (one shuffle total), so a
         # separate lww_dedupe pass would only add a redundant shuffle. lww_dedupe
@@ -247,73 +237,32 @@ def apply_batch(
                 payload, batch_id=batch_id, query_id=query_id,
                 touched_buckets=touched, prof=prof,
             )
-
-        lineage_path = None
-        if lineage:
-            with prof.scope("lineage_write"):
-                lineage_path = _write_lineage(
-                    table, payload, result, batch_id, query_id, hot,
-                    rows_bad, timings=prof.flat(),
-                )
     finally:
         cached.unpersist()
-    return ApplyResult(
+    res = ApplyResult(
         merge=result,
         rows_in=rows_in,
         rows_bad=rows_bad,
-        rows_applied=rows_applied,
-        hot_keys=hot,
-        lineage_path=lineage_path,
+        rows_applied=rows_in - rows_bad,
         duration_sec=time.time() - t0,
         timings=prof.flat(),
     )
-
-
-def _write_lineage(
-    table: ParquetLakeTable,
-    payload: DataFrame,
-    result: MergeResult,
-    batch_id: int | None,
-    query_id: str,
-    hot_keys: list[tuple],
-    rows_bad: int,
-    timings: dict[str, float] | None = None,
-) -> str:
-    """Per-partition lineage + ingest metrics (north rule; reference analogue is the
-    hierarchical metrics tree, EtlMetrics.java:25-53). One distributed aggregate per
-    hash bucket over the batch events: row counts, LSN range, deletes — enough to
-    audit which slice of the keyspace each commit touched and to replay-verify any
-    bucket independently."""
-    per_bucket = (
-        payload.withColumn("_bucket", table._bucket_expr())
-        .groupBy("_bucket")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.min(table.lsn_col).alias("min_lsn"),
-            F.max(table.lsn_col).alias("max_lsn"),
-            F.sum(F.when(F.col(table.op_col) == "D", 1).otherwise(0)).alias("deletes"),
+    if result.committed:
+        table.write_metrics(
+            result.version,
+            {
+                "query_id": query_id,
+                "batch_id": batch_id,
+                "version": result.version,
+                "rows_in": res.rows_in,
+                "rows_bad": res.rows_bad,
+                "rows_applied": res.rows_applied,
+                "buckets_rewritten": len(result.touched_buckets),
+                "min_lsn": stats["_min_lsn"],
+                "max_lsn": stats["_max_lsn"],
+                "duration_sec": res.duration_sec,
+                "committed_at": time.time(),
+                "timings": res.timings,
+            },
         )
-        .collect()
-    )
-    op_counts = {
-        r[table.op_col]: r["n"]
-        for r in payload.groupBy(table.op_col).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    doc: dict[str, Any] = {
-        "batch_id": batch_id,
-        "query_id": query_id,
-        "version": result.version,
-        "committed": result.committed,
-        "rows_bad": rows_bad,
-        "op_counts": op_counts,
-        "hot_keys": [list(k) for k in hot_keys],
-        "buckets": [r.asDict() for r in per_bucket],
-        "timings": timings or {},
-        "committed_at": time.time(),
-    }
-    lineage_dir = os.path.join(table.path, "_lineage")
-    os.makedirs(lineage_dir, exist_ok=True)
-    name = f"batch_{batch_id if batch_id is not None else uuid.uuid4().hex[:8]}_{result.version}.json"
-    p = os.path.join(lineage_dir, name)
-    write_json_atomic(p, doc)
-    return p
+    return res

@@ -6,8 +6,8 @@ Closes the loop the reference's recoverable-error channel implies
 and re-submits) — here the re-submission is first-class: ``redrive`` parses the
 DLQ payloads back into typed event rows, runs an optional caller-supplied
 ``fix`` transform, and hands the result to ``apply_batch`` under its own
-query_id, so the re-drive is itself fenced, lineage-tracked, and can route
-still-bad rows to a fresh DLQ.
+query_id, so the re-drive is itself fenced, leaves its own metrics record,
+and can route still-bad rows to a fresh DLQ.
 
 One DLQ record schema across surfaces (batch_id, stage, error, payload, ts):
 the streaming tail / apply DLQ (cdc/apply.write_dlq) and the fluent API's DLQ

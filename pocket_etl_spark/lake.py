@@ -38,6 +38,7 @@ the atomic pointer swap makes readers never see a partial commit.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re as _re
@@ -58,7 +59,14 @@ from pocket_etl_spark.schema import KEY_COLS, LSN_COL, OP_COL, TABLE_SCHEMA
 
 _POINTER = "_latest"
 _MANIFESTS = "_manifests"
+_METRICS = "_metrics"
 _DATA = "data"
+# One record per committed apply_batch (cdc/apply.py builds it).
+METRICS_SCHEMA = (
+    "query_id string, batch_id long, version long, rows_in long, rows_bad long, "
+    "rows_applied long, buckets_rewritten long, min_lsn long, max_lsn long, "
+    "duration_sec double, committed_at double, timings map<string,double>"
+)
 
 
 def write_json_atomic(path: str, obj: Any) -> None:
@@ -175,6 +183,24 @@ class ParquetLakeTable:
 
     def last_batch_id(self, query_id: str = "default") -> int:
         return int(self._manifest(self.current_version())["watermarks"].get(query_id, -1))
+
+    # ---------- per-batch metrics ----------
+
+    def write_metrics(self, version: int, record: dict[str, Any]) -> None:
+        """Write the metrics record of the commit that produced ``version`` to
+        ``_metrics/v{version}.json``. It is written after the commit, so a
+        crash between the two loses that one record, never data."""
+        d = os.path.join(self.path, _METRICS)
+        os.makedirs(d, exist_ok=True)
+        write_json_atomic(os.path.join(d, f"v{version:012d}.json"), record)
+
+    def read_metrics(self) -> DataFrame:
+        """Every retained metrics record, one row per committed batch
+        (``METRICS_SCHEMA``); empty when none has been written."""
+        files = sorted(glob.glob(os.path.join(self.path, _METRICS, "v*.json")))
+        if not files:
+            return self.spark.createDataFrame([], METRICS_SCHEMA)
+        return self.spark.read.schema(METRICS_SCHEMA).json(files)
 
     # ---------- read ----------
 
@@ -575,7 +601,8 @@ class ParquetLakeTable:
         """Drop data directories unreachable from the last ``keep_versions``
         manifests (Iceberg: expire_snapshots), and prune manifest JSONs older
         than ``keep_manifests`` versions so the manifest chain does not grow
-        O(commits) forever (VERDICT r4 #8).
+        O(commits) forever (VERDICT r4 #8). The per-batch ``_metrics`` records
+        follow the same cutoff.
 
         Retention contract:
         - time travel (``read(version=...)``) is bounded by ``keep_versions``:
@@ -636,16 +663,16 @@ class ParquetLakeTable:
         }
         write_json_atomic(os.path.join(self.path, "_vacuum.json"), marker)
         if keep_manifests is not None:
+            # metrics records share the manifests' version key and retention
             cutoff = cur - keep_manifests + 1
-            mdir = os.path.join(self.path, _MANIFESTS)
-            for name in os.listdir(mdir):
-                if name.startswith("v") and name.endswith(".json"):
+            for sub in (_MANIFESTS, _METRICS):
+                for f in glob.glob(os.path.join(self.path, sub, "v*.json")):
                     try:
-                        mv = int(name[1:-5])
+                        mv = int(os.path.basename(f)[1:-5])
                     except ValueError:
                         continue
                     if mv < cutoff:
-                        os.remove(os.path.join(mdir, name))
+                        os.remove(f)
         return removed
 
 

@@ -16,8 +16,10 @@ Usage::
             ...
         with prof.scope("merge"):
             ...
-    prof.tree()   # {"name": ..., "elapsed_sec": ..., "self_sec": ..., "children": [...]}
     prof.flat()   # {"apply_batch": 1.23, "apply_batch.merge": 1.0, ...}
+
+``apply_batch`` stores its ``flat()`` timings in each batch's metrics record
+(``ParquetLakeTable.read_metrics``).
 """
 
 from __future__ import annotations
@@ -25,7 +27,6 @@ from __future__ import annotations
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Any
 
 
 @dataclass
@@ -34,17 +35,6 @@ class _Scope:
     started: float
     elapsed: float = 0.0
     children: list["_Scope"] = field(default_factory=list)
-
-    def to_dict(self) -> dict[str, Any]:
-        child_total = sum(c.elapsed for c in self.children)
-        return {
-            "name": self.name,
-            "elapsed_sec": round(self.elapsed, 6),
-            # self time = elapsed minus children (the rollup invariant:
-            # parent elapsed >= sum of child elapsed)
-            "self_sec": round(max(0.0, self.elapsed - child_total), 6),
-            "children": [c.to_dict() for c in self.children],
-        }
 
 
 class Profiler:
@@ -65,9 +55,6 @@ class Profiler:
         finally:
             s.elapsed = time.time() - s.started
             self._stack.pop()
-
-    def tree(self) -> list[dict[str, Any]]:
-        return [c.to_dict() for c in self._root.children]
 
     def flat(self) -> dict[str, float]:
         """Dotted-path → elapsed seconds (the reference's hierarchical metric

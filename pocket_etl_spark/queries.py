@@ -437,7 +437,7 @@ def q_cdc_apply_upsert(spark, sf):
 
 def q_cdc_op_counts(spark, sf):
     """Ingest-metrics analogue (MetricsLoader.java:84-98): per-op counters +
-    exact value totals — what the engine's lineage rows carry per batch."""
+    exact value totals."""
     e = t(spark, sf, "events")
     return e.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),

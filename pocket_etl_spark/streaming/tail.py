@@ -53,7 +53,6 @@ def start_tail(
     dlq_path: str | None = None,
     dlq_keys: tuple[str, ...] = (),
     dlq_payload: str = "redacted",
-    lineage: bool = False,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
     processing_time: str | None = None,
@@ -70,7 +69,10 @@ def start_tail(
     Kafka-shaped ``(key, value)`` byte pairs (``wal_schema=KAFKA_ENVELOPE_SCHEMA``)
     instead of typed event rows. ``on_batch`` is a fault-injection/observability
     hook used by tests. Without ``dlq_path``, a batch holding invalid events
-    fails the query (apply_batch raises) instead of dropping them.
+    fails the query (apply_batch raises) instead of dropping them. Each
+    committed batch leaves its metrics record (``table.read_metrics()``);
+    Spark's own per-trigger progress is on the returned query's
+    ``recentProgress``.
     """
     stream = read_wal_stream(
         spark, wal_dir, schema=wal_schema, max_files_per_trigger=max_files_per_trigger
@@ -89,7 +91,6 @@ def start_tail(
             dlq_path=dlq_path,
             dlq_keys=dlq_keys,
             dlq_payload=dlq_payload,
-            lineage=lineage,
         )
 
     writer = (

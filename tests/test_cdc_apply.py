@@ -30,7 +30,7 @@ def assert_state_equals_oracle(table: ParquetLakeTable, events_pdf: pd.DataFrame
 def test_single_batch_apply_matches_oracle(spark, tmp_table_path):
     events = gen_change_events(spark, n_events=3000, n_keys=300, seed=42)
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=8)
-    res = apply_batch(events, table, batch_id=0, lineage=False)
+    res = apply_batch(events, table, batch_id=0)
     assert res.merge.committed
     assert_state_equals_oracle(table, events.toPandas())
 
@@ -43,7 +43,7 @@ def test_multi_batch_replay_matches_oracle(spark, tmp_table_path):
     for i in range(4):
         lo, hi = i * 500 + 1, (i + 1) * 500
         batch = events.filter((events.lsn >= lo) & (events.lsn <= hi))
-        apply_batch(batch, table, batch_id=i, lineage=False)
+        apply_batch(batch, table, batch_id=i)
     assert_state_equals_oracle(table, events.toPandas())
 
 
@@ -56,7 +56,7 @@ def test_out_of_order_batches_never_regress(spark, tmp_table_path):
     ranges = [(2001, 3000), (1, 1000), (1001, 2000)]  # shuffled replay order
     for i, (lo, hi) in enumerate(ranges):
         batch = events.filter((events.lsn >= lo) & (events.lsn <= hi))
-        apply_batch(batch, table, batch_id=i, lineage=False)
+        apply_batch(batch, table, batch_id=i)
     assert_state_equals_oracle(table, events.toPandas())
 
 
@@ -65,15 +65,15 @@ def test_double_replay_is_idempotent(spark, tmp_table_path):
     batch_id → merge guard makes it a semantic no-op. Both leave state identical."""
     events = gen_change_events(spark, n_events=2000, n_keys=100, seed=5)
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=8)
-    apply_batch(events, table, batch_id=0, lineage=False)
+    apply_batch(events, table, batch_id=0)
     v1 = table.current_version()
     state1 = _normalize(table.read().toPandas())
 
-    fenced = apply_batch(events, table, batch_id=0, lineage=False)
+    fenced = apply_batch(events, table, batch_id=0)
     assert not fenced.merge.committed and fenced.merge.stats.get("fenced")
     assert table.current_version() == v1
 
-    apply_batch(events, table, batch_id=1, lineage=False)  # replay under a NEW batch id
+    apply_batch(events, table, batch_id=1)  # replay under a NEW batch id
     state2 = _normalize(table.read().toPandas())
     pd.testing.assert_frame_equal(state1, state2)
 
@@ -83,7 +83,7 @@ def test_deletes_remove_rows(spark, tmp_table_path):
         spark, n_events=2000, n_keys=50, seed=3, insert_pct=10, update_pct=40
     )  # 50% deletes
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
-    apply_batch(events, table, batch_id=0, lineage=False)
+    apply_batch(events, table, batch_id=0)
     assert_state_equals_oracle(table, events.toPandas())
     pdf = table.read().toPandas()
     # every surviving row's latest event was not a delete
@@ -138,7 +138,7 @@ def test_invalid_rows_without_dlq_raise_and_commit_nothing(spark, tmp_table_path
 
     events = gen_change_events(spark, n_events=1000, n_keys=50, seed=13)
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
-    apply_batch(events.filter("lsn <= 500"), table, batch_id=0, lineage=False)
+    apply_batch(events.filter("lsn <= 500"), table, batch_id=0)
     version = table.current_version()
     poisoned = events.filter("lsn > 500").withColumn(
         "op", F.when(F.pmod(F.col("lsn"), F.lit(10)) == 0, F.lit(None)).otherwise(F.col("op"))
@@ -253,7 +253,7 @@ def test_dlq_clean_batch_single_upstream_execution(spark, tmp_table_path, tmp_pa
     counted = events.mapInPandas(counting, events.schema)
 
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
-    apply_batch(counted, table, batch_id=0, dlq_path=str(tmp_path / "dlq"), lineage=False)
+    apply_batch(counted, table, batch_id=0, dlq_path=str(tmp_path / "dlq"))
     assert len(os.listdir(marker_dir)) == 4  # one execution per partition
 
     # poisoned batch: DLQ write reads the cache, still one upstream execution
@@ -268,8 +268,46 @@ def test_dlq_clean_batch_single_upstream_execution(spark, tmp_table_path, tmp_pa
         .repartition(4)
     )
     counted2 = poisoned.mapInPandas(counting, poisoned.schema)
-    res = apply_batch(
-        counted2, table, batch_id=1, dlq_path=str(tmp_path / "dlq2"), lineage=False
-    )
+    res = apply_batch(counted2, table, batch_id=1, dlq_path=str(tmp_path / "dlq2"))
     assert res.rows_bad == 200
     assert len(os.listdir(marker_dir)) == 4
+
+
+def test_unknown_dlq_payload_rejected_on_a_clean_batch(spark, tmp_table_path):
+    """A mistyped DLQ payload mode fails before any Spark job, not mid-stream
+    at the first batch that happens to hold an invalid event."""
+    import pytest
+
+    events = gen_change_events(spark, n_events=200, n_keys=20, seed=19)
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
+    with pytest.raises(ValueError, match="unknown payload mode"):
+        apply_batch(events, table, batch_id=0, dlq_path="unused", dlq_payload="ful")
+    assert table.current_version() == 0
+
+
+def test_metrics_record_per_commit_not_per_replay(spark, tmp_table_path, monkeypatch):
+    """Each committed batch leaves one metrics record keyed by its version; a
+    replay fenced early or inside the merge writes none."""
+    events = gen_change_events(spark, n_events=600, n_keys=40, seed=27)
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
+    assert table.read_metrics().count() == 0
+    first = events.filter("lsn <= 300")
+    res = apply_batch(first, table, batch_id=0, query_id="q")
+    assert (res.rows_in, res.rows_bad, res.rows_applied) == (300, 0, 300)
+
+    assert not apply_batch(first, table, batch_id=0, query_id="q").merge.committed
+    # skip the early fence so the merge's own watermark check fences it
+    monkeypatch.setattr(table, "last_batch_id", lambda query_id="default": -1)
+    inner = apply_batch(first, table, batch_id=0, query_id="q")
+    assert inner.merge.stats == {"fenced": True}
+    monkeypatch.undo()
+    apply_batch(events.filter("lsn > 300"), table, batch_id=1, query_id="q")
+
+    rows = sorted(table.read_metrics().collect(), key=lambda r: r["version"])
+    assert [(r["version"], r["batch_id"], r["query_id"]) for r in rows] == [
+        (1, 0, "q"), (2, 1, "q")
+    ]
+    assert [(r["rows_in"], r["min_lsn"], r["max_lsn"]) for r in rows] == [
+        (300, 1, 300), (300, 301, 600)
+    ]
+    assert rows[0]["buckets_rewritten"] == len(res.merge.touched_buckets)

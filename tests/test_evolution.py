@@ -90,8 +90,8 @@ def test_tunnel_promotion_through_apply(spark, tmp_table_path):
     a real table column, null for rows last touched before the evolution point."""
     ev = with_schema_evolution(gen_change_events(spark, 600, 40, seed=6), from_lsn=300)
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=2)
-    apply_batch(ev.filter("lsn <= 300"), table, batch_id=0, lineage=False)
-    apply_batch(ev.filter("lsn > 300"), table, batch_id=1, lineage=False)
+    apply_batch(ev.filter("lsn <= 300"), table, batch_id=0)
+    apply_batch(ev.filter("lsn > 300"), table, batch_id=1)
     assert "new_col_score" in [f.name for f in table.schema().fields]
     pdf = table.read().toPandas()
     assert pdf[pdf.lsn >= 300]["new_col_score"].notna().all()

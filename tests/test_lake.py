@@ -107,6 +107,24 @@ def test_vacuum_manifest_retention_bounds_cursor(spark, tmp_table_path):
         table.vacuum(keep_versions=3, keep_manifests=2)
 
 
+def test_vacuum_prunes_metrics_records_with_manifests(spark, tmp_table_path):
+    """The per-batch metrics records share the manifests' retention: a
+    continuous tail must not grow one file per batch forever."""
+    from pocket_etl_spark.cdc.apply import apply_batch
+
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=2)
+    ev = _events(spark, n=600, keys=20)
+    for i, (lo, hi) in enumerate([(1, 200), (201, 400), (401, 600)]):
+        apply_batch(ev.filter(f"lsn between {lo} and {hi}"), table, batch_id=i)
+    table.vacuum(keep_versions=1, keep_manifests=None)
+    assert table.read_metrics().count() == 3
+    table.vacuum(keep_versions=2, keep_manifests=2)
+    assert sorted(os.listdir(os.path.join(tmp_table_path, "_metrics"))) == [
+        "v000000000002.json", "v000000000003.json"
+    ]
+    assert [r["version"] for r in table.read_metrics().orderBy("version").collect()] == [2, 3]
+
+
 def test_vacuum_aborts_on_missing_in_window_manifest(spark, tmp_table_path):
     """A manifest missing INSIDE the readable window is metadata corruption:
     vacuum must abort before any rmtree instead of silently dropping that

@@ -6,10 +6,8 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from pocket_etl_spark.cdc.apply import apply_batch
 from pocket_etl_spark.cdc.dedupe import OP_RANK_EXPR, lww_dedupe, lww_dedupe_salted
 from pocket_etl_spark.datagen import gen_change_events
-from pocket_etl_spark.lake import ParquetLakeTable
 from pocket_etl_spark.schema import LSN_COL, OP_COL
 
 
@@ -40,16 +38,6 @@ def test_dedupe_variants_agree(spark):
     c = _sorted_pdf(lww_dedupe_window(events, cols))
     pd.testing.assert_frame_equal(a, b)
     pd.testing.assert_frame_equal(a, c)
-
-
-def test_hot_key_detection(spark, tmp_table_path):
-    """apply_batch's lineage stats name exactly the injected hot key."""
-    events = gen_change_events(spark, 3000, 200, seed=13, hot_key_fraction=0.5)
-    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
-    hot = apply_batch(events, table, batch_id=0, lineage=True).hot_keys
-    assert len(hot) == 1  # exactly the injected hot key
-    repo, path = hot[0]
-    assert repo == "org/repo-00000"
 
 
 def test_lsh_recovers_all_same_bucket_neighbors(spark):

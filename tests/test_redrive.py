@@ -47,6 +47,25 @@ def test_redrive_round_trip_matches_oracle(spark, tmp_path):
     assert_state_equals_oracle(table, fixed)
 
 
+def test_redrive_writes_one_metrics_record(spark, tmp_path):
+    """A re-drive is an ordinary committed apply: it leaves exactly one metrics
+    record under its own query_id, and a fenced re-run adds none."""
+    events = gen_change_events(spark, n_events=300, n_keys=30, seed=41)
+    table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=4)
+    dlq = str(tmp_path / "dlq")
+    apply_batch(_poison(events), table, batch_id=0, dlq_path=dlq, dlq_payload="full")
+
+    def fix(df):
+        return df.withColumn("op", F.when(F.col("op") == "X", F.lit("U")).otherwise(F.col("op")))
+
+    res = redrive(spark, dlq, table, fix=fix)
+    redrive(spark, dlq, table, fix=fix)
+    rows = table.read_metrics().filter("query_id = 'redrive'").collect()
+    assert len(rows) == 1
+    assert (rows[0]["version"], rows[0]["batch_id"]) == (res.merge.version, 0)
+    assert (rows[0]["rows_in"], rows[0]["rows_bad"], rows[0]["rows_applied"]) == (30, 0, 30)
+
+
 def test_redrive_is_fenced_and_routes_still_bad_rows(spark, tmp_path):
     events = gen_change_events(spark, n_events=1000, n_keys=50, seed=29)
     table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=4)
@@ -288,7 +307,7 @@ def test_every_dlq_surface_writes_dlq_schema(spark, tmp_path):
     events = gen_change_events(spark, n_events=200, n_keys=20, seed=53)
     table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=4)
     apply_dlq = str(tmp_path / "apply_dlq")
-    apply_batch(_poison(events), table, batch_id=0, dlq_path=apply_dlq, lineage=False)
+    apply_batch(_poison(events), table, batch_id=0, dlq_path=apply_dlq)
 
     rows = spark.createDataFrame([{"name": f"p{i}", "score": i} for i in range(10)])
 

@@ -100,7 +100,7 @@ def test_crash_after_merge_fences_on_restart(spark, tmp_path, wal):
         # writes the checkpoint commit marker for this batch
         if batch_id == 1 and not crashed["done"]:
             crashed["done"] = True
-            apply_batch(df, table, batch_id=batch_id, query_id="q1", lineage=False)
+            apply_batch(df, table, batch_id=batch_id, query_id="q1")
             raise RuntimeError("injected crash post-merge, pre-checkpoint")
 
     with pytest.raises(Exception):
@@ -136,47 +136,37 @@ def test_tail_with_transform_and_dlq(spark, tmp_path, wal):
     assert_state_equals_oracle(table, good.toPandas())
 
 
-def test_ingest_metrics_listener_records_batches(spark, tmp_path, wal):
-    """North rule: per-partition lineage AND ingest metrics. The listener must
-    record rows covering every source event with batch-level input counts.
-
-    Deliberately NOT pinned to one-row-per-WAL-file: availableNow batching may
-    legally pack several files into one trigger even under maxFilesPerTrigger,
-    and StreamingQueryListener delivery is async — so the test polls for event
-    drain and asserts on coverage (total input rows, contiguous batch ids from
-    0) instead of an exact batch count. Exact per-batch event accounting is the
-    lineage documents' job (tested in test_cdc_apply)."""
-    import time
-
-    from pocket_etl_spark.streaming import metrics as M
+def test_tail_leaves_one_metrics_record_per_batch(spark, tmp_path, wal):
+    """Every committed micro-batch of a plain tail leaves one metrics record:
+    batch ids contiguous from 0, every WAL event counted once, versions equal
+    to the manifests that carry each batch's watermark, and phase timings that
+    roll up into their parents. A replayed batch id adds no record."""
+    from pocket_etl_spark.cdc.apply import apply_batch
 
     wal_dir, events = wal
-    tpath = str(tmp_path / "t")
-    table = ParquetLakeTable(spark, tpath, num_buckets=4)
-    lis = M.attach(spark, tpath, query_name="qm")
-    try:
-        run_tail_to_exhaustion(
-            spark, wal_dir, table, str(tmp_path / "ckpt"), query_id="qm",
-            max_files_per_trigger=1,
-        )
-        # listener delivery is async: wait for the progress events to drain
-        deadline = time.time() + 20
-        rows = []
-        while time.time() < deadline:
-            rows = M.read_metrics(spark, tpath).collect()
-            if sum(r["num_input_rows"] for r in rows) >= 1500:
-                break
-            time.sleep(0.5)
-    finally:
-        M.detach(spark, lis)
-    with_data = [r for r in rows if r["num_input_rows"] > 0]
-    # every WAL event was read and recorded (numInputRows counts source reads;
-    # the apply body scans each batch at least once → >= the 1500 events)
-    assert sum(r["num_input_rows"] for r in with_data) >= 1500
-    # batch ids are contiguous from 0 (one row per completed micro-batch)
-    ids = sorted(r["batch_id"] for r in with_data)
-    assert ids == list(range(len(ids))) and len(ids) >= 1
-    assert all(r["query_name"] == "qm" for r in rows)
+    table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=4)
+    run_tail_to_exhaustion(
+        spark, wal_dir, table, str(tmp_path / "ckpt"), query_id="qm",
+        max_files_per_trigger=1,
+    )
+    rows = sorted(table.read_metrics().collect(), key=lambda r: r["batch_id"])
+    assert [r["batch_id"] for r in rows] == list(range(table.last_batch_id("qm") + 1))
+    assert all(r["query_id"] == "qm" for r in rows)
+    assert sum(r["rows_in"] for r in rows) == 1500
+    assert sorted(r["version"] for r in rows) == list(range(1, table.current_version() + 1))
+    for r in rows:
+        assert table._manifest(r["version"])["watermarks"]["qm"] == r["batch_id"]
+        assert r["rows_applied"] == r["rows_in"] - r["rows_bad"]
+        t = r["timings"]
+        top = sum(v for k, v in t.items() if "." not in k)
+        sub = sum(v for k, v in t.items() if k.startswith("merge."))
+        # timings are rounded to 1 us each, so allow a few us of slack
+        assert top <= r["duration_sec"] + 1e-5, t
+        assert sub <= t["merge"] + 1e-5, t
+
+    replay = apply_batch(events.filter("lsn <= 500"), table, batch_id=0, query_id="qm")
+    assert not replay.merge.committed
+    assert table.read_metrics().count() == len(rows)
 
 
 def test_kafka_envelope_tail_matches_oracle(spark, tmp_path):

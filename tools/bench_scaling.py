@@ -90,7 +90,7 @@ def worker(cores: int, hot: float) -> None:
         # shuffle path) before the timer starts — a fixed single-JVM cost that a
         # long-running cluster tail pays once, not per batch.
         warm = ParquetLakeTable(spark, os.path.join(d, "warm"), num_buckets=32)
-        apply_batch(events.filter("lsn <= 200000"), warm, batch_id=0, lineage=False)
+        apply_batch(events.filter("lsn <= 200000"), warm, batch_id=0)
 
         # num_buckets constant across parallelism levels → identical output layout,
         # so the two runs do byte-for-byte the same logical work.
@@ -102,10 +102,7 @@ def worker(cores: int, hot: float) -> None:
             t0 = time.time()
             for i in range(N_BATCHES):
                 lo, hi = i * step + 1, (i + 1) * step
-                apply_batch(
-                    events.filter(f"lsn between {lo} and {hi}"), table,
-                    batch_id=i, lineage=False,
-                )
+                apply_batch(events.filter(f"lsn between {lo} and {hi}"), table, batch_id=i)
             walls.append(time.time() - t0)
             final_rows = table.read().count()
             version = table.current_version()
