@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pocket_etl_spark.cdc.evolution import EXTRAS_COL, PROMOTE_PREFIX, promote_extras
 from pocket_etl_spark.lake import MergeResult, ParquetLakeTable
 from pocket_etl_spark.profiling import Profiler
-from pocket_etl_spark.schema import dlq_records
+from pocket_etl_spark.schema import DlqPayload, check_dlq_payload, dlq_records
 
 VALID_OPS = ("I", "U", "D")
 # event-envelope columns that never reach the table
@@ -56,52 +56,6 @@ def valid_condition(events: DataFrame, table: ParquetLakeTable):
     return key_ok & F.col(table.lsn_col).isNotNull() & op.isNotNull() & op.isin(*VALID_OPS)
 
 
-def _check_payload_mode(payload: str) -> None:
-    if payload not in ("redacted", "full"):
-        raise ValueError(f"unknown payload mode {payload!r} (expected 'redacted' or 'full')")
-
-
-def write_dlq(
-    bad: DataFrame,
-    dlq_path: str,
-    batch_id: int | None,
-    stage: str = "apply",
-    dlq_keys: tuple[str, ...] = (),
-    payload: str = "redacted",
-) -> None:
-    """Append failed records to the DLQ directory.
-
-    The DEFAULT payload is PII-safe (reference parity:
-    DefaultLoggingStrategy.java:27-36 logs class info, never field values): the
-    record's schema DDL plus any business-key columns opted in via
-    ``dlq_keys`` — a DLQ directory of raw records is a governance hazard at
-    deployment scale. ``payload='full'`` opts into a JVM-side ``to_json`` of
-    every column (required for redrive, cdc/redrive.py). Documented exception:
-    an UNDECODABLE envelope record's ``_raw_value`` (streaming/envelope.py)
-    always rides in the payload — without it the record is unrecoverable, and
-    by construction it never parsed into typed fields."""
-    _check_payload_mode(payload)
-    if payload == "full":
-        body = F.to_json(F.struct(*bad.columns))
-        error = F.lit("validation: null key/lsn or bad op")
-    else:
-        missing = [c for c in dlq_keys if c not in bad.columns]
-        if missing:
-            raise ValueError(f"write_dlq: unknown dlq_keys columns {missing}")
-        schema_ddl = bad.schema.simpleString()
-        parts = [F.lit(schema_ddl).alias("record_schema")]
-        if dlq_keys:
-            parts.append(F.struct(*dlq_keys).alias("keys"))
-        if "_raw_value" in bad.columns:
-            parts.append(F.col("_raw_value").alias("_raw_value"))
-        body = F.to_json(F.struct(*parts))
-        error = F.lit(
-            "validation: null key/lsn or bad op (payload redacted; "
-            "apply_batch dlq_payload='full' opts in)"
-        )
-    dlq_records(bad, batch_id, stage, error, body).write.mode("append").parquet(dlq_path)
-
-
 def apply_batch(
     events: DataFrame,
     table: ParquetLakeTable,
@@ -109,7 +63,7 @@ def apply_batch(
     query_id: str = "default",
     dlq_path: str | None = None,
     dlq_keys: tuple[str, ...] = (),
-    dlq_payload: str = "redacted",
+    dlq_payload: DlqPayload = "redacted",
 ) -> ApplyResult:
     """Apply one micro-batch of change events to the lake table, exactly-once.
 
@@ -127,12 +81,15 @@ def apply_batch(
     committed_at and the timings. Its counts come from the one stats pass,
     so the record costs no Spark job. A fenced replay writes none.
 
-    ``dlq_keys``/``dlq_payload`` shape the DLQ record (see write_dlq): default
-    is the PII-safe schema+keys payload; 'full' opts into whole-record JSON.
-    An unknown ``dlq_payload`` raises before any Spark job, even for a batch
-    that would route nothing to the DLQ."""
+    ``dlq_payload``/``dlq_keys`` are the DLQ payload policy of every surface
+    (``schema.dlq_records``): the PII-safe ``"redacted"`` default carries the
+    schema DDL, the ``dlq_keys`` columns and an undecodable record's
+    ``_raw_value``; ``"full"`` is whole-record JSON (what redrive needs); a
+    ``dict -> str`` callable formats each failed record. An unknown mode or
+    key column raises before any Spark job, even for a batch that would
+    route nothing to the DLQ."""
     t0 = time.time()
-    _check_payload_mode(dlq_payload)
+    check_dlq_payload(dlq_payload, dlq_keys, events.columns)
     # Early fence (one driver-side manifest read): a replayed micro-batch must
     # not redo SIDE EFFECTS — without this, a fenced replay still paid the
     # full stats pass and RE-APPENDED its bad rows to the DLQ (duplicate DLQ
@@ -217,11 +174,13 @@ def apply_batch(
                     "route them — merging would silently drop them. Pass "
                     "dlq_path or repair them upstream."
                 )
+            error = "validation: null key/lsn or bad op"
+            if dlq_payload == "redacted":
+                error += " (payload redacted; apply_batch dlq_payload='full' opts in)"
             with prof.scope("dlq_write"):
-                write_dlq(
-                    bad, dlq_path, batch_id,
-                    dlq_keys=dlq_keys, payload=dlq_payload,
-                )
+                dlq_records(
+                    bad, batch_id, "apply", F.lit(error), dlq_payload, dlq_keys
+                ).write.mode("append").parquet(dlq_path)
 
         # Schema evolution: lift tunnel fields (extras map "new_col_*") to
         # columns before the merge widens the table schema.

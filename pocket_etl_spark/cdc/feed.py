@@ -18,10 +18,11 @@ from __future__ import annotations
 import fcntl
 import json
 import os
-import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
+
+from pocket_etl_spark.lake import write_json_atomic
 
 
 class ChangeFeedCursor:
@@ -78,15 +79,12 @@ class ChangeFeedCursor:
                 fcntl.flock(lf, fcntl.LOCK_UN)
 
     def commit(self, version: int) -> None:
-        """Atomically advance the cursor (os.replace under an exclusive file
-        lock, same pattern as the lake's pointer swap). Never moves backwards —
-        for any consumer_id in the shared file, not just this one."""
+        """Atomically advance the cursor (``lake.write_json_atomic`` under an
+        exclusive file lock). Never moves backwards — for any consumer_id in
+        the shared file, not just this one."""
         with self._locked():
             state = self._read_state()
             if version <= int(state.get(self.consumer_id, 0)):
                 return
             state[self.consumer_id] = int(version)
-            tmp = f"{self.cursor_path}.tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(state, f)
-            os.replace(tmp, self.cursor_path)
+            write_json_atomic(self.cursor_path, state)

@@ -9,20 +9,21 @@ DLQ payloads back into typed event rows, runs an optional caller-supplied
 query_id, so the re-drive is itself fenced, leaves its own metrics record,
 and can route still-bad rows to a fresh DLQ.
 
-One DLQ record schema across surfaces (batch_id, stage, error, payload, ts):
-the streaming tail / apply DLQ (cdc/apply.write_dlq) and the fluent API's DLQ
-(etl.EtlStream.run, RowSinkLoader) all build it with schema.dlq_records, so
-this module consumes any of them. Fluent-API records carry a null batch_id (a
-fluent run is not a fenced micro-batch) — see the fencing note on ``redrive``.
+One DLQ record schema (batch_id, stage, error, payload, ts) and one payload
+policy across surfaces: the streaming tail / apply DLQ (cdc/apply.apply_batch)
+and the fluent API's DLQ (etl.EtlStream.run, RowSinkLoader) all build it with
+schema.dlq_records, so this module consumes any of them. Fluent-API records
+carry a null batch_id (a fluent run is not a fenced micro-batch) — see the
+fencing note on ``redrive``.
 
-Requires full-record payloads (``apply_batch(dlq_payload="full")`` /
-``write_dlq(payload="full")`` / fluent ``with_object_logger("full")``): the
-PII-safe default payload deliberately does not carry field values, so a
-redacted DLQ cannot be re-driven from the DLQ alone — re-extract from the
-source using the opted-in key columns instead. ``read_dlq`` refuses redacted
-payloads loudly rather than re-applying rows of nulls. Undecodable-envelope
-records (streaming/envelope.py) surface their ``_raw_value`` so a ``fix`` can
-re-decode them.
+Requires full-record payloads (``apply_batch(dlq_payload="full")`` / fluent
+``with_object_logger("full")``): the PII-safe default payload deliberately
+does not carry field values, so a redacted DLQ cannot be re-driven from the
+DLQ alone — re-extract from the source using the opted-in key columns
+instead. ``read_dlq`` refuses redacted payloads loudly (``schema
+.is_redacted_payload``) rather than re-applying rows of nulls.
+Undecodable-envelope records (streaming/envelope.py) surface their
+``_raw_value`` so a ``fix`` can re-decode them.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pocket_etl_spark.cdc.apply import ApplyResult, apply_batch
-from pocket_etl_spark.schema import EVENT_SCHEMA
+from pocket_etl_spark.schema import EVENT_SCHEMA, is_redacted_payload
 
 
 def read_dlq(
@@ -70,10 +71,7 @@ def read_dlq(
         df = df.filter(F.col("stage") == stage)
     if batch_ids is not None:
         df = df.filter(F.col("batch_id").isin(*[int(b) for b in batch_ids]))
-    # Redacted payloads are a fixed JSON object whose first key is the schema
-    # DDL marker — a full-record payload of an event row can never start with
-    # it (events have no record_schema column by contract).
-    redacted = df.filter(F.col("payload").startswith('{"record_schema":'))
+    redacted = df.filter(is_redacted_payload(F.col("payload")))
     if redacted.limit(1).count() > 0:
         raise ValueError(
             "read_dlq: DLQ records carry the redacted default payload (no field "

@@ -10,6 +10,8 @@ fields tunnel through the map, and schema evolution promotes tunnel keys to real
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -70,21 +72,81 @@ DLQ_SCHEMA = T.StructType(
 )
 
 
+# A DLQ payload policy, the same values on every surface: "redacted", "full",
+# or a dict -> str formatter.
+DlqPayload = str | Callable[[dict], str]
+
+
+def check_dlq_payload(
+    mode: DlqPayload, keys: Iterable[str] = (), columns: Iterable[str] | None = None
+) -> None:
+    """The one validation of a DLQ payload policy: ``mode`` is ``"redacted"``,
+    ``"full"`` or a ``dict -> str`` callable, and every key is one of
+    ``columns`` (when given). Every surface calls it before its first Spark
+    job, so a typo fails the run instead of the first failing record."""
+    if not (mode in ("redacted", "full") or callable(mode)):
+        raise ValueError(
+            f"unknown DLQ payload mode {mode!r} (expected 'redacted', 'full' "
+            "or a dict -> str callable)"
+        )
+    if columns is not None:
+        cols = set(columns)
+        missing = [k for k in keys if k not in cols]
+        if missing:
+            raise ValueError(f"unknown DLQ key columns {missing}")
+
+
+def is_redacted_payload(payload: Column) -> Column:
+    """True where a DLQ payload is redacted: its first key is the schema DDL
+    that ``dlq_records`` writes. A full-record payload of an event row never
+    matches: events have no ``record_schema`` column by contract."""
+    return payload.startswith('{"record_schema":')
+
+
 def dlq_records(
     failed: DataFrame,
     batch_id: int | None,
     stage: str | None,
-    error: Column,
-    payload: Column,
+    error: Column | str,
+    mode: DlqPayload = "redacted",
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Project failed rows onto DLQ_SCHEMA — the one record builder behind
-    every DLQ writer (tail/apply ``write_dlq``, fluent ``EtlStream.run``,
+    every DLQ writer (tail/apply ``apply_batch``, fluent ``EtlStream.run``,
     ``RowSinkLoader``), so cdc/redrive.read_dlq consumes any of them and no
-    surface can drift from the schema. ``ts`` is the write time."""
+    surface can drift from the schema or the payload policy. ``ts`` is the
+    write time.
+
+    ``error`` is a Column, or the name of the column of ``failed`` holding the
+    per-row error; the other columns are the data columns. The payload follows
+    ``mode`` (reference parity: EtlConsumerStage.java:58-63):
+
+    - ``"redacted"`` (PII-safe default, DefaultLoggingStrategy.java:27-36 logs
+      class info, never field values): the data columns' schema DDL, the
+      opted-in ``keys`` columns, and ``_raw_value`` when the frame has it;
+    - ``"full"``: ``to_json`` of every data column (what redrive needs);
+    - a ``dict -> str`` callable: a Python UDF over the failed rows only."""
+    error_col = error if isinstance(error, str) else None
+    data_cols = [c for c in failed.columns if c != error_col]
+    check_dlq_payload(mode, keys, data_cols)
+    if mode == "redacted":
+        ddl = T.StructType([f for f in failed.schema.fields if f.name in data_cols])
+        parts = [F.lit(ddl.simpleString()).alias("record_schema")]
+        if keys:
+            parts.append(F.struct(*keys).alias("keys"))
+        # an undecodable envelope record (streaming/envelope.py) is
+        # unrecoverable without its raw value, and never parsed into fields
+        if "_raw_value" in data_cols:
+            parts.append(F.col("_raw_value"))
+        payload = F.to_json(F.struct(*parts))
+    elif mode == "full":
+        payload = F.to_json(F.struct(*data_cols))
+    else:
+        payload = F.udf(lambda r: mode(r.asDict()), T.StringType())(F.struct(*data_cols))
     cols = {
         "batch_id": F.lit(batch_id),
         "stage": F.lit(stage),
-        "error": error,
+        "error": F.col(error_col) if error_col else error,
         "payload": payload,
         "ts": F.current_timestamp(),
     }

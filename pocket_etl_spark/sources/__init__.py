@@ -8,7 +8,6 @@ action runs, and filters/projections applied downstream push into the scan.
 
 from __future__ import annotations
 
-import hashlib
 import math
 import os
 from collections.abc import Iterable
@@ -366,7 +365,3 @@ class FileQueueExtractor:
         self._claimed = []
         return n
 
-
-def message_digest(body: str) -> str:
-    """Stable digest for queue-message dedupe bookkeeping."""
-    return hashlib.sha256(body.encode()).hexdigest()

@@ -28,7 +28,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from pocket_etl_spark.cdc.apply import apply_batch
 from pocket_etl_spark.lake import ParquetLakeTable
-from pocket_etl_spark.schema import EVENT_SCHEMA
+from pocket_etl_spark.schema import EVENT_SCHEMA, DlqPayload
 
 
 def read_wal_stream(
@@ -52,7 +52,7 @@ def start_tail(
     query_id: str = "cdc_tail",
     dlq_path: str | None = None,
     dlq_keys: tuple[str, ...] = (),
-    dlq_payload: str = "redacted",
+    dlq_payload: DlqPayload = "redacted",
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
     processing_time: str | None = None,

@@ -198,13 +198,13 @@ def test_dlq_default_payload_is_pii_safe(spark, tmp_table_path, tmp_path):
     # unknown key column / unknown mode fail loudly
     import pytest
 
-    from pocket_etl_spark.cdc.apply import write_dlq
+    from pocket_etl_spark.schema import check_dlq_payload
 
     bad = poisoned.filter("op = 'X'")
-    with pytest.raises(ValueError, match="unknown dlq_keys"):
-        write_dlq(bad, str(tmp_path / "x"), 0, dlq_keys=("nope",))
-    with pytest.raises(ValueError, match="unknown payload mode"):
-        write_dlq(bad, str(tmp_path / "x"), 0, payload="yaml")
+    with pytest.raises(ValueError, match="unknown DLQ key columns"):
+        check_dlq_payload("redacted", ("nope",), bad.columns)
+    with pytest.raises(ValueError, match="unknown DLQ payload mode"):
+        check_dlq_payload("yaml")
 
 
 def test_dlq_undecodable_raw_value_rides_in_default_payload(spark, tmp_table_path, tmp_path):
@@ -280,8 +280,20 @@ def test_unknown_dlq_payload_rejected_on_a_clean_batch(spark, tmp_table_path):
 
     events = gen_change_events(spark, n_events=200, n_keys=20, seed=19)
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
-    with pytest.raises(ValueError, match="unknown payload mode"):
+    with pytest.raises(ValueError, match="unknown DLQ payload mode"):
         apply_batch(events, table, batch_id=0, dlq_path="unused", dlq_payload="ful")
+    assert table.current_version() == 0
+
+
+def test_unknown_dlq_keys_rejected_on_a_clean_batch(spark, tmp_table_path):
+    """A mistyped DLQ key column fails before any Spark job, not mid-stream
+    at the first batch that happens to hold an invalid event."""
+    import pytest
+
+    events = gen_change_events(spark, n_events=200, n_keys=20, seed=19)
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
+    with pytest.raises(ValueError, match=r"unknown DLQ key columns \['nope'\]"):
+        apply_batch(events, table, batch_id=0, dlq_path="unused", dlq_keys=("nope",))
     assert table.current_version() == 0
 
 

@@ -409,6 +409,29 @@ def test_row_sink_loader_dlq_full_payload_opt_in(spark, tmp_path):
     assert '"name":"p4"' in dlq_rows[0]["payload"]
 
 
+def test_row_sink_loader_rejects_unknown_dlq_keys_before_writing(spark, tmp_path):
+    """An unknown with_dlq_keys column fails the run before write_fn runs on
+    any record — never after the sink's side effects, where the failed
+    records would reach neither the DLQ nor the result."""
+    outdir = str(tmp_path / "items")
+    os.makedirs(outdir)
+
+    def put_item(rec):
+        if rec["score"] == 4:
+            raise ValueError("conditional check failed on 4")
+        with open(os.path.join(outdir, f"{rec['name']}.item"), "w") as f:
+            f.write(str(rec["score"]))
+
+    s = (
+        EtlStream.extract(_src(spark))
+        .with_dlq_keys("nope")
+        .load(RowSinkLoader(put_item, dlq_path=str(tmp_path / "sink_dlq")))
+    )
+    with pytest.raises(ValueError, match=r"unknown DLQ key columns \['nope'\]"):
+        s.run(spark)
+    assert os.listdir(outdir) == []
+
+
 def test_row_sink_loader_unrecoverable_aborts(spark, tmp_path):
     def fatal(rec):
         raise UnrecoverableStreamFailure("sink down")
@@ -463,7 +486,7 @@ def test_dlq_default_payload_redacts_values(spark, tmp_path):
     # unknown key column is an error, not silent redaction
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="unknown columns"):
+    with _pytest.raises(ValueError, match="unknown DLQ key columns"):
         base.with_dlq_keys("nope").load(BufferLoader()).run(spark)
 
 
@@ -475,7 +498,7 @@ def test_with_object_logger_rejects_unknown_string_mode(spark):
     from pocket_etl_spark.sources import IterableExtractor
 
     s = EtlStream.extract(IterableExtractor([{"a": 1}], "a long"))
-    with _pytest.raises(ValueError, match="unknown mode"):
+    with _pytest.raises(ValueError, match="unknown DLQ payload mode"):
         s.with_object_logger("json")
     # the two valid forms still construct
     s.with_object_logger("full")

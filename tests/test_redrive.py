@@ -300,35 +300,53 @@ def test_every_dlq_surface_writes_dlq_schema(spark, tmp_path):
     """The three DLQ writers — tail/apply, fluent EtlStream.run and
     RowSinkLoader — all write exactly schema.DLQ_SCHEMA (types, not only
     column names), so read_dlq never meets a drifted surface. The fluent
-    streams are unnamed: their stage is NULL and must still be a string."""
+    streams are unnamed: their stage is NULL and must still be a string.
+    Each surface gets the same undecodable envelope record and writes the
+    same redacted payload for it: the schema DDL plus its ``_raw_value``."""
+    import json
+
     from pocket_etl_spark.etl import BufferLoader, EtlStream, RowSinkLoader
     from pocket_etl_spark.schema import DLQ_SCHEMA
+    from pocket_etl_spark.streaming.envelope import (
+        decode_kafka_envelope,
+        encode_kafka_envelope,
+    )
 
     events = gen_change_events(spark, n_events=200, n_keys=20, seed=53)
+    poison = spark.createDataFrame([(b"k", b"{never json")], "key binary, value binary")
+    decoded = decode_kafka_envelope(
+        encode_kafka_envelope(_poison(events)).unionByName(poison)
+    )
     table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=4)
     apply_dlq = str(tmp_path / "apply_dlq")
-    apply_batch(_poison(events), table, batch_id=0, dlq_path=apply_dlq)
+    apply_batch(decoded, table, batch_id=0, dlq_path=apply_dlq)
 
-    rows = spark.createDataFrame([{"name": f"p{i}", "score": i} for i in range(10)])
-
+    # the fluent surfaces fail the undecodable record only
     def boom(pdf):
-        if (pdf["score"] == 4).any():
-            raise ValueError("bad record 4")
+        if pdf["_raw_value"].notna().any():
+            raise ValueError("undecodable record")
         return pdf
 
     stream_dlq = str(tmp_path / "stream_dlq")
-    EtlStream.extract(rows).map_rows(boom).load(BufferLoader()).run(
+    EtlStream.extract(decoded).map_rows(boom).load(BufferLoader()).run(
         spark, dlq_path=stream_dlq
     )
 
     def put_item(rec):
-        if rec["score"] == 4:
-            raise ValueError("bad record 4")
+        if rec["_raw_value"] is not None:
+            raise ValueError("undecodable record")
 
     sink_dlq = str(tmp_path / "sink_dlq")
-    EtlStream.extract(rows).load(RowSinkLoader(put_item, dlq_path=sink_dlq)).run(spark)
+    EtlStream.extract(decoded).load(RowSinkLoader(put_item, dlq_path=sink_dlq)).run(spark)
 
     for d in (apply_dlq, stream_dlq, sink_dlq):
         got = spark.read.parquet(d)
         assert got.count() > 0, d
         assert got.schema == DLQ_SCHEMA, (d, got.schema.simpleString())
+        raw = [
+            p for p in map(json.loads, [r["payload"] for r in got.collect()])
+            if "_raw_value" in p
+        ]
+        assert len(raw) == 1, d
+        assert set(raw[0]) == {"record_schema", "_raw_value"}, (d, raw[0])
+        assert raw[0]["_raw_value"] == "{never json", d
