@@ -29,9 +29,10 @@ lineage: build = logical plan, ``run()`` = action. Parity map (file:line into
   enforced (EtlLoadStage.java:90-92, EtlStream.java:292-296)
 - withName / withThreads / withObjectLogger → query naming, repartition hint,
   DLQ payload formatter (EtlConsumerStage.java:58-85)
-- error routing: recoverable per-record failures divert the record to an error
-  channel and the stream continues; unrecoverable aborts
-  (TransformerEtlConsumer.java:90-99, LoaderEtlConsumer.java:72-80,
+- error routing: a recoverable per-record failure leaves the stream at the
+  stage that failed it (``_divert``) and the stream continues; later stages
+  never see it; unrecoverable aborts (TransformerEtlConsumer.java:90-99,
+  LoaderEtlConsumer.java:72-80,
   exception/UnrecoverableStreamFailureException.java:27-52,
   functionalTests/StreamFailureTest.java:50-190)
 - per-stage recordsProcessed metrics → pyspark Observation per stage
@@ -41,7 +42,7 @@ Scale notes: every stage stays declarative (Catalyst sees through the whole
 chain — pushdown/pruning cross stage boundaries); Python transforms are
 Arrow-vectorized ``mapInPandas`` only (never per-row Python); the per-record
 error channel costs nothing on clean batches (vectorized fast path, row-retry
-only inside a failing batch).
+only inside a failing batch) beyond one persist per ``map_rows`` stage.
 """
 
 from __future__ import annotations
@@ -49,6 +50,7 @@ from __future__ import annotations
 import traceback
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field, replace
+from functools import reduce
 from typing import Any
 
 import pandas as pd
@@ -64,6 +66,21 @@ class UnrecoverableStreamFailure(Exception):
     UnrecoverableStreamFailureException.java:27-52). Any exception raised from a
     declarative stage is unrecoverable by construction; inside ``map_rows`` a
     user fn raises this to abort instead of routing the record to the DLQ."""
+
+
+# Emitted by map_rows and RowSinkLoader's sink: NULL, or the record's error.
+_ERR_COL = "_etl_error"
+
+
+def _divert(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(cached, clean, failed)``: the one place a failed record leaves the
+    stream. ``clean`` (error column dropped) feeds the next stage; ``failed``
+    keeps the columns the record had when it failed. Both legs read the one
+    persisted ``cached`` frame (the caller unpersists it), so the stage runs
+    once and a record lands in exactly one leg."""
+    cached = df.persist()
+    err = F.col(_ERR_COL)
+    return cached, cached.filter(err.isNull()).drop(_ERR_COL), cached.filter(err.isNotNull())
 
 
 # ---------------------------------------------------------------------------
@@ -175,7 +192,9 @@ class CsvLoader(Loader):
 class LakeMergeLoader(Loader):
     """Keyed upsert sink — RedshiftBulkLoader MERGE / DynamoDbLoader put-item
     (loader/RedshiftBulkLoader.java:86-375, loader/DynamoDbLoader.java:45-137)
-    re-expressed as the engine's fenced LWW lake merge (lake.py)."""
+    re-expressed as the engine's fenced LWW lake merge (lake.py). Invalid
+    rows (null key/lsn, unknown op) raise ``ValueError`` before anything is
+    written; route them out upstream (``cdc/apply.apply_batch`` has a DLQ)."""
 
     table: Any  # ParquetLakeTable | IcebergLakeTable
     batch_id: int | None = None
@@ -194,12 +213,13 @@ class RowSinkLoader(Loader):
 
     ``write_fn(record: dict)`` runs once per record ON THE EXECUTORS
     (partition-parallel, Arrow-batched transfer); a record whose write raises
-    is routed to the sink DLQ (``dlq_path`` parquet + the returned counts)
-    and the stream continues. Raise UnrecoverableStreamFailure inside
-    ``write_fn`` to abort the run instead. The DLQ payload follows the
-    stream's object-logger policy (``schema.dlq_records``): PII-safe redacted
-    by default, ``with_object_logger('full')`` opts into the whole record; the
-    keys are checked by ``EtlStream.run`` before ``write_fn`` runs.
+    is split off by ``_divert``, as in ``map_rows``, into the sink DLQ
+    (``dlq_path`` parquet + the returned counts). Raise
+    UnrecoverableStreamFailure inside ``write_fn`` to abort the run instead.
+    The DLQ payload follows the stream's object-logger policy
+    (``schema.dlq_records``): PII-safe redacted by default,
+    ``with_object_logger('full')`` opts into the whole record; the keys are
+    checked by ``EtlStream.run`` before ``write_fn`` runs.
 
     The per-record Python loop is the SINK's own contract here (a
     row-at-a-time put-item API), not a transform hot path — batch-capable
@@ -211,9 +231,7 @@ class RowSinkLoader(Loader):
     dlq_path: str | None = None
 
     def load(self, df: DataFrame, stream: "EtlStream") -> dict[str, int]:
-        out_schema = T.StructType(
-            list(df.schema.fields) + [T.StructField(_ERR_COL, T.StringType())]
-        )
+        out_schema = T.StructType(df.schema.fields + [T.StructField(_ERR_COL, T.StringType())])
         fn = self.write_fn
 
         def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -231,20 +249,20 @@ class RowSinkLoader(Loader):
                 out[_ERR_COL] = pd.Series(statuses, index=pdf.index, dtype="object")
                 yield out
 
-        res = df.mapInPandas(sink, schema=out_schema).persist()
+        cached, written, failed = _divert(df.mapInPandas(sink, schema=out_schema))
         try:
-            # one action materializes the cache → every record written exactly
-            # once per run; the DLQ leg below reads the cached result
-            n_failed = res.filter(F.col(_ERR_COL).isNotNull()).count()
-            n_total = res.count()
+            # the first count materializes the cache → every record written
+            # exactly once per run; the other reads are of the cached result
+            n_failed = failed.count()
+            n_written = written.count()
             if n_failed and self.dlq_path is not None:
                 dlq_records(
-                    res.filter(F.col(_ERR_COL).isNotNull()), None, stream._name,
-                    _ERR_COL, stream._object_logger, stream._dlq_key_cols,
+                    failed, None, stream._name, _ERR_COL,
+                    stream._object_logger, stream._dlq_key_cols,
                 ).write.mode("append").parquet(self.dlq_path)
         finally:
-            res.unpersist()
-        return {"records_written": n_total - n_failed, "records_failed": n_failed}
+            cached.unpersist()
+        return {"records_written": n_written, "records_failed": n_failed}
 
 
 @dataclass
@@ -287,9 +305,6 @@ class RunResult:
 # The stream
 # ---------------------------------------------------------------------------
 
-_ERR_COL = "_etl_error"
-
-
 @dataclass(frozen=True)
 class _Stage:
     kind: str  # "transform" | "filter" | "observe"
@@ -330,8 +345,9 @@ class EtlStream:
     @classmethod
     def extract(cls, *sources: Any) -> "EtlStream":
         """One or more sources; several = parallel fan-in union
-        (EtlStream.java:162-181). A source is a DataFrame or an Extractor from
-        sources/ (anything with ``.to_df(spark)``)."""
+        (EtlStream.java:162-181). A source is a DataFrame, an unterminated
+        EtlStream, or an Extractor from sources/ (anything with
+        ``.to_df(spark)``)."""
         if not sources:
             raise ValueError("extract() needs at least one source")
         return cls(tuple(sources))
@@ -341,11 +357,12 @@ class EtlStream:
         """Combine whole streams (EtlStream.java:98-118): all component stages
         run, results union by name (heterogeneous schemas allowed,
         README.md:81-99), later stages apply to the combined stream. Components
-        must be unterminated (EtlStream.java:298-300)."""
+        must be unterminated (EtlStream.java:298-300). A component's failed
+        records join the combined run's DLQ."""
         for s in streams:
             if s._loader is not None:
                 raise ValueError("cannot combine terminated streams")
-        return cls((("__combine__", streams),))
+        return cls(streams)
 
     def _copy(self, **kw: Any) -> "EtlStream":
         args = dict(
@@ -369,9 +386,7 @@ class EtlStream:
         """Long-form chaining (README.md:14-21): append another (unterminated)
         stream's stages to this one."""
         self._check_open()
-        if stage._loader is not None:
-            return self._copy(stages=self._stages + stage._stages, loader=stage._loader)
-        return self._copy(stages=self._stages + stage._stages)
+        return self._copy(stages=self._stages + stage._stages, loader=stage._loader)
 
     def transform(self, fn: Callable[[DataFrame], DataFrame], name: str | None = None) -> "EtlStream":
         """Declarative stage: fn(df) -> df. The Spark-native shape — Catalyst
@@ -397,11 +412,12 @@ class EtlStream:
         received (TransformerFanoutTest.java:47-70); 1→0 filter: return fewer.
 
         Error semantics (StreamFailureTest.java:50-190): if ``fn`` raises for a
-        batch, the engine retries the batch ROW BY ROW; rows whose singleton
-        retry still fails are diverted to the DLQ with the exception text, and
-        the stream continues. Raise UnrecoverableStreamFailure to abort the
-        whole run instead. The vectorized fast path pays zero overhead when no
-        batch fails."""
+        batch, the engine retries the batch ROW BY ROW; a row whose singleton
+        retry still fails leaves the stream at this stage (``_divert``) for
+        the run's DLQ, with the exception text and the values it had then;
+        later stages never see it. Raise UnrecoverableStreamFailure to abort
+        the whole run instead. The vectorized fast path pays zero overhead
+        when no batch fails."""
         self._check_open()
 
         def make(df: DataFrame) -> DataFrame:
@@ -444,7 +460,7 @@ class EtlStream:
 
             return df.mapInPandas(run_batches, schema=schema)
 
-        return self._copy(stages=self._stages + (_Stage("transform", make, name, partitions=-1),))
+        return self._copy(stages=self._stages + (_Stage("transform", make, name),))
 
     def filter(self, pred: str | Column | ContainsFilter, name: str | None = None) -> "EtlStream":
         """FilterTransformer (transformer/FilterTransformer.java:32-66):
@@ -514,25 +530,28 @@ class EtlStream:
 
     # ---- compile & run ----
 
-    def to_df(self, spark: SparkSession) -> tuple[DataFrame, list[tuple[str, Observation]]]:
+    def _compile(
+        self, spark: SparkSession
+    ) -> tuple[DataFrame, list[tuple[str, Observation]], list[DataFrame], list[DataFrame]]:
         """Compile the stage chain to a DataFrame (logical plan). The reference
         compiles sink-to-source into a consumer graph (EtlStageChain.java:53-69);
-        here Catalyst owns physical planning."""
-        dfs = []
+        here Catalyst owns physical planning. Returns ``(clean, observations,
+        failed, cached)``: the ``_divert`` legs of every stage (component
+        streams included) that emits the error column, and their caches."""
+        dfs, failed, cached = [], [], []
         for src in self._sources:
-            if isinstance(src, tuple) and src and src[0] == "__combine__":
-                for comp in src[1]:
-                    cdf, _ = comp.to_df(spark)
-                    dfs.append(cdf)
+            if isinstance(src, EtlStream):
+                cdf, _, legs, caches = src._compile(spark)
+                dfs.append(cdf)
+                failed += legs
+                cached += caches
             elif isinstance(src, DataFrame):
                 dfs.append(src)
             elif hasattr(src, "to_df"):
                 dfs.append(src.to_df(spark))
             else:
                 raise TypeError(f"not a source: {src!r}")
-        df = dfs[0]
-        for other in dfs[1:]:
-            df = df.unionByName(other, allowMissingColumns=True)
+        df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
 
         observations: list[tuple[str, Observation]] = []
         if self._observe_stages:
@@ -540,65 +559,53 @@ class EtlStream:
             df = df.observe(obs, F.count(F.lit(1)).alias("recordsProcessed"))
             observations.append(("extract", obs))
         for i, st in enumerate(self._stages):
-            if st.partitions and st.partitions > 0:
+            if st.partitions:
                 df = df.repartition(st.partitions)
             df = st.fn(df)
             if self._observe_stages:
                 obs = Observation()
                 df = df.observe(obs, F.count(F.lit(1)).alias("recordsProcessed"))
                 observations.append((st.name or f"{st.kind}_{i}", obs))
-        return df, observations
+            if _ERR_COL in df.columns:
+                stage_cache, df, leg = _divert(df)
+                cached.append(stage_cache)
+                failed.append(leg)
+        return df, observations, failed, cached
 
-    def run(
-        self,
-        spark: SparkSession,
-        dlq_path: str | None = None,
-    ) -> RunResult:
-        """Execute: compile, split the DLQ channel, drive the sink, collect
-        metrics. When any map_rows stage exists the post-split frame is
-        persisted ONCE: the DLQ leg and the clean leg both read that single
-        materialization, so (a) the upstream executes exactly once per run and
-        (b) a non-deterministic transform can never land a record in both (or
-        neither) leg."""
+    def run(self, spark: SparkSession, dlq_path: str | None = None) -> RunResult:
+        """Execute: compile, write this run's DLQ, drive the sink, collect
+        metrics. The DLQ is the union of the failed legs, each record with the
+        columns it had at its failing stage; it is written once, before the
+        loader, and ``dlq_count`` is this run's count. Each split reads one
+        persisted frame, so (a) the upstream executes exactly once per run
+        and (b) a non-deterministic transform can never land a record in both
+        (or neither) leg."""
         if self._loader is None:
             raise ValueError("stream has no loader; terminate with .load(...)")
-        df, observations = self.to_df(spark)
-        # before any loader side effect (a RowSinkLoader's write_fn), for
-        # every loader, not only when a record first fails
-        check_dlq_payload(
-            self._object_logger,
-            self._dlq_key_cols,
-            [c for c in df.columns if c != _ERR_COL],
-        )
-
+        df, observations, failed, cached = self._compile(spark)
         dlq_df = None
         dlq_count = 0
-        persisted = None
         try:
-            if _ERR_COL in df.columns:
-                persisted = df.persist()
-                err = persisted.filter(F.col(_ERR_COL).isNotNull())
-                # ONE DLQ record schema and payload policy across surfaces
-                # (schema.dlq_records, shared with the tail/apply DLQ), so
-                # cdc/redrive.read_dlq consumes fluent-API failures too.
-                # batch_id is null (a fluent run is not a fenced micro-batch);
-                # the stream name plays the stage.
-                dlq_df = dlq_records(
-                    err, None, self._name, _ERR_COL,
-                    self._object_logger, self._dlq_key_cols,
-                )
+            # before any loader side effect, even when no record fails
+            check_dlq_payload(self._object_logger, self._dlq_key_cols, df.columns)
+            if failed:
+                # schema.dlq_records, as for the tail/apply DLQ, so redrive
+                # reads it too; batch_id is null (a fluent run is not a fenced
+                # micro-batch) and the stream name plays the stage
+                dlq_df = reduce(DataFrame.unionByName, [
+                    dlq_records(
+                        leg, None, self._name, _ERR_COL,
+                        self._object_logger, self._dlq_key_cols,
+                    )
+                    for leg in failed
+                ])
                 if dlq_path is not None:
-                    # append THIS run's failures; materializes the persist
                     dlq_df.write.mode("append").parquet(dlq_path)
-                # this run's DLQ count (never the accumulated directory's) —
-                # cheap: reads the cached split, not the upstream
                 dlq_count = dlq_df.count()
-                df = persisted.filter(F.col(_ERR_COL).isNull()).drop(_ERR_COL)
-
             sink_result = self._loader.load(df, self)
         finally:
-            if persisted is not None:
-                persisted.unpersist()
+            for c in cached:
+                c.unpersist()
         metrics = {name: obs.get for name, obs in observations}
         return RunResult(sink_result=sink_result, metrics=metrics, dlq=dlq_df, dlq_count=dlq_count)
 

@@ -55,7 +55,7 @@ from pyspark.sql import types as T
 from pocket_etl_spark.cdc.dedupe import OP_RANK_EXPR, lww_dedupe
 from pocket_etl_spark.cdc.evolution import conform_to, unify_schemas
 from pocket_etl_spark.profiling import Profiler
-from pocket_etl_spark.schema import KEY_COLS, LSN_COL, OP_COL, TABLE_SCHEMA
+from pocket_etl_spark.schema import KEY_COLS, LSN_COL, OP_COL, TABLE_SCHEMA, valid_event
 
 _POINTER = "_latest"
 _MANIFESTS = "_manifests"
@@ -400,7 +400,9 @@ class ParquetLakeTable:
         ``touched_buckets`` is the caller's set of buckets the batch's keys
         hash to (it skips the probe scan). It must be complete: a merge that
         writes a bucket outside it raises ``ValueError`` before committing,
-        because that bucket's current rows were never read.
+        because that bucket's current rows were never read. Without it, a
+        batch holding an invalid row (``schema.valid_event``) raises
+        ``ValueError`` before anything is written.
 
         ``prof`` (``apply_batch`` hands in its own) receives three scopes:
         ``plan`` (manifest read, schema unification, the touched-bucket probe
@@ -442,13 +444,19 @@ class ParquetLakeTable:
 
             # Bucket pruning: only buckets containing updated keys participate.
             # Callers that already computed the batch's bucket set (apply_batch folds
-            # it into its single stats pass) hand it in and skip this probe scan.
+            # it into its single stats pass) hand it in and skip this probe scan,
+            # which also counts the invalid rows merge has no DLQ for.
             if touched_buckets is not None:
                 touched = sorted(touched_buckets)
             else:
-                touched = sorted(
-                    r[0] for r in winners.select("_bucket").distinct().collect()
-                )
+                ok = valid_event(self.key_cols, self.lsn_col, self.op_col)
+                buckets, n_bad = winners.agg(F.collect_set("_bucket"), F.count_if(~ok)).first()
+                if n_bad:
+                    raise ValueError(
+                        f"merge: {n_bad} rows are invalid (null key/lsn or unknown "
+                        "op); nothing was written (apply_batch DLQs them)."
+                    )
+                touched = sorted(buckets)
             if not touched:
                 # Still advance the watermark so the empty batch is fenced on replay.
                 version = self._commit_next(man, batch_id=batch_id, query_id=query_id)

@@ -196,13 +196,3 @@ def simhash(
         )
     )
 
-
-def simhash_dup_groups(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 16
-) -> DataFrame:
-    """Documents grouped by identical simhash (hamming-0 candidates); banding the
-    hash into sub-blocks extends this to hamming≤k with the same join shape."""
-    sh = simhash(df, id_col, text_col, bits)
-    return sh.groupBy("simhash").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("kept_id")
-    ).filter(F.col("n_docs") > 1)

@@ -22,12 +22,6 @@ def tokens(text_col: str = "text") -> Column:
     return F.split(F.col(text_col), " ")
 
 
-def token_count(text_col: str = "text") -> Column:
-    """Whitespace token count (BPE-ish subword counting lives in the quality map
-    as a documented extension point)."""
-    return F.size(tokens(text_col))
-
-
 def stopword_count(text_col: str = "text") -> Column:
     toks = tokens(text_col)
     sw = F.array(*[F.lit(s) for s in STOPWORDS])

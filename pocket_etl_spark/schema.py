@@ -59,6 +59,24 @@ TABLE_SCHEMA = T.StructType(
     ]
 )
 
+
+def valid_event(key_cols: Iterable[str], lsn_col: str, op_col: str) -> Column:
+    """Validity of a change event: non-null key / lsn, known op. Invalid rows
+    are the reference's recoverable-error channel (LogAsErrorEtlConsumer.java:
+    34-92): ``cdc/apply.apply_batch`` routes them to its DLQ and
+    ``ParquetLakeTable.merge`` raises on them.
+
+    Null-safe: bare ``isin`` over a NULL op is SQL NULL, which both
+    ``filter(cond)`` and ``filter(~cond)`` exclude (the row would vanish). The
+    ``op IS NOT NULL`` conjunct forces FALSE instead and, unlike a
+    ``coalesce`` wrapper, stays scan-pushable."""
+    key_ok = F.lit(True)
+    for k in key_cols:
+        key_ok = key_ok & F.col(k).isNotNull()
+    op = F.col(op_col)
+    return key_ok & F.col(lsn_col).isNotNull() & op.isNotNull() & op.isin(*OP_RANK)
+
+
 # DLQ table: per-record recoverable failures routed out of the stream
 # (reference error consumer: TransformerEtlConsumer.java:90-99).
 DLQ_SCHEMA = T.StructType(

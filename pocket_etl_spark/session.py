@@ -74,8 +74,9 @@ def get_spark(
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # AQE: runtime partition coalescing + skew-join splitting. Our custom
-        # foreachBatch merge adds explicit salting on top (AQE does not see it).
+        # AQE: runtime partition coalescing + skew-join splitting. The merge
+        # adds no salting of its own; only its bucket write salts a hot bucket
+        # into slices (lake._write_buckets' ``_slice``).
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -47,7 +47,7 @@ def decode_kafka_envelope(
     ``value`` (binary JSON) parses against ``schema`` via ``from_json``; a
     record whose value fails to parse (or is null) comes out with every event
     column null EXCEPT a preserved ``_raw_value`` string — it then fails the
-    tail's validation (cdc/apply.valid_condition: null lsn/op/key) and
+    tail's validation (schema.valid_event: null lsn/op/key) and
     routes to the DLQ with its raw payload intact, instead of being silently
     dropped. Well-formed records carry no ``_raw_value`` (null), so the DLQ
     stays PII-minimal for the good path.

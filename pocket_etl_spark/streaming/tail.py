@@ -4,7 +4,7 @@ Re-expresses the reference's run-to-exhaustion micro-batch shape (SQS tail consu
 capped batches with commit-on-close, SqsExtractor.java:115-126,239-247) as a real
 Structured Streaming query:
 
-- source: file-source over the WAL directory (parquet/json events). In production the
+- source: file-source over the WAL directory (parquet events). In production the
   same ``apply_batch`` body runs unchanged against a Kafka/binlog source — the engine
   only sees a DataFrame per micro-batch.
 - ``maxFilesPerTrigger`` ≈ the reference's ``withBatchSizeLimit`` source-side cap.
@@ -21,7 +21,6 @@ Structured Streaming query:
 from __future__ import annotations
 
 from collections.abc import Callable
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
@@ -35,13 +34,12 @@ def read_wal_stream(
     spark: SparkSession,
     wal_dir: str,
     schema=EVENT_SCHEMA,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ):
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.format(fmt).load(wal_dir)
+    return reader.parquet(wal_dir)
 
 
 def start_tail(
@@ -57,7 +55,6 @@ def start_tail(
     available_now: bool = True,
     processing_time: str | None = None,
     transform: Callable[[DataFrame], DataFrame] | None = None,
-    on_batch: Callable[[DataFrame, int], Any] | None = None,
     wal_schema=EVENT_SCHEMA,
 ) -> StreamingQuery:
     """Start the CDC tail query.
@@ -67,9 +64,10 @@ def start_tail(
     DataFrame→DataFrame hook (the fluent pipeline's transform chain plugs in here) —
     e.g. ``streaming/envelope.decode_kafka_envelope`` when the WAL carries
     Kafka-shaped ``(key, value)`` byte pairs (``wal_schema=KAFKA_ENVELOPE_SCHEMA``)
-    instead of typed event rows. ``on_batch`` is a fault-injection/observability
-    hook used by tests. Without ``dlq_path``, a batch holding invalid events
-    fails the query (apply_batch raises) instead of dropping them. Each
+    instead of typed event rows. Each micro-batch runs ``apply_batch`` (resolved
+    through this module, so a test can patch it to inject a crash). Without
+    ``dlq_path``, a batch holding invalid events fails the query (apply_batch
+    raises) instead of dropping them. Each
     committed batch leaves its metrics record (``table.read_metrics()``);
     Spark's own per-trigger progress is on the returned query's
     ``recentProgress``.
@@ -79,8 +77,6 @@ def start_tail(
     )
 
     def _body(batch_df: DataFrame, batch_id: int) -> None:
-        if on_batch is not None:
-            on_batch(batch_df, batch_id)
         if transform is not None:
             batch_df = transform(batch_df)
         apply_batch(

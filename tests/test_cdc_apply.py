@@ -113,7 +113,7 @@ def test_dlq_routes_invalid_rows(spark, tmp_table_path, tmp_path):
 def test_null_op_rows_route_to_dlq_not_lost(spark, tmp_table_path, tmp_path):
     """A NULL op makes bare `isin` evaluate to SQL NULL, which both filter(cond)
     and filter(~cond) exclude — the row would vanish (neither merged nor DLQ'd)
-    while the watermark commits. valid_condition must force FALSE instead."""
+    while the watermark commits. schema.valid_event must force FALSE instead."""
     from pyspark.sql import functions as F
 
     events = gen_change_events(spark, n_events=1000, n_keys=50, seed=13)

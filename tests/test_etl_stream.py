@@ -55,6 +55,68 @@ def test_combine_heterogeneous_schemas(spark):
     assert by_name["y"]["phone"] == "123" and by_name["y"]["email"] is None
 
 
+def test_combine_failing_component_reaches_combined_dlq(spark):
+    """A record a component fails lands in the combined run's DLQ, with the
+    payload it had at its failing stage, and is never loaded."""
+    buf = BufferLoader()
+    failing = EtlStream.extract(_six_rows(spark)).map_rows(_fail_on_3())
+    other = EtlStream.extract(spark.createDataFrame([{"name": "y"}]))
+    res = (
+        EtlStream.combine(failing, other)
+        .with_object_logger("full")
+        .with_name("combined")
+        .load(buf)
+        .run(spark)
+    )
+    assert res.dlq_count == 1
+    [rec] = res.dlq.collect()
+    assert rec["payload"] == '{"id":3,"v":30}' and rec["stage"] == "combined"
+    assert sorted(r["id"] for r in buf.rows if r["id"] is not None) == [0, 1, 2, 4, 5]
+    assert [r["name"] for r in buf.rows if r["name"] is not None] == ["y"]
+
+
+# --- StreamFailureTest.java:50-190: a failed record leaves at its stage ---
+
+
+def _six_rows(spark):
+    return spark.createDataFrame([(i, 10 * i) for i in range(6)], "id long, v long").repartition(1)
+
+
+def _fail_on_3():
+    # built per test: executors cannot import this module, so the fn must be
+    # pickled by value
+    def fn(pdf):
+        if (pdf["id"] == 3).any():
+            raise ValueError("boom on 3")
+        pdf["v"] = pdf["v"] + 1
+        return pdf
+
+    return fn
+
+
+@pytest.mark.parametrize(
+    "later",
+    [
+        lambda s: s.map_rows(lambda pdf: pdf),
+        lambda s: s.filter("v % 2 = 1"),
+        lambda s: s.transform(lambda df: df.withColumn("v", F.col("v") * 2)),
+    ],
+    ids=["map_rows", "filter", "transform"],
+)
+def test_failed_record_leaves_at_its_stage(spark, later):
+    """Later stages never see a failed record: a second map_rows does not
+    collide with the first's error channel, a filter cannot drop the record
+    before the DLQ, and a transform cannot rewrite its payload."""
+    buf = BufferLoader()
+    stream = later(EtlStream.extract(_six_rows(spark)).map_rows(_fail_on_3()))
+    res = stream.with_object_logger("full").load(buf).run(spark)
+    assert res.dlq_count == 1
+    [rec] = res.dlq.collect()
+    assert rec["payload"] == '{"id":3,"v":30}'
+    assert "boom on 3" in rec["error"]
+    assert sorted(r["id"] for r in buf.rows) == [0, 1, 2, 4, 5]
+
+
 # --- SimpleFluentFunctionalTest: long form, with_threads / with_name ---
 
 

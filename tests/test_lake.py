@@ -572,3 +572,25 @@ def test_iceberg_maintenance_sql_statements():
         iceberg_maintenance_sql("t; DROP TABLE x", compact=True)
     with pytest.raises(ValueError, match="timestamp"):
         iceberg_maintenance_sql("t", expire_older_than_ts="now() --")
+
+
+def test_merge_without_hint_rejects_invalid_rows(spark, tmp_table_path):
+    """A merge without a touched_buckets hint (LakeMergeLoader, a direct
+    call) has no DLQ: a batch holding a null key, a NULL op or an unknown op
+    raises before anything is written — none of those rows may vanish or land
+    as a live row under a committed version."""
+    import pytest
+
+    schema = "lsn long, op string, repo string, path string, commit string, lang string, content string"
+    rows = [
+        (1, "I", "r", "a", "c1", "py", "ok"),
+        (2, "I", None, "b", "c1", "py", "null repo"),
+        (3, None, "r", "c", "c1", "py", "null op"),
+        (4, "X", "r", "d", "c1", "py", "unknown op"),
+        (5, "U", "r", None, "c1", "py", "null path"),
+    ]
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
+    with pytest.raises(ValueError, match="4 rows are invalid"):
+        table.merge(spark.createDataFrame(rows, schema), batch_id=1)
+    assert table.current_version() == 0
+    assert table.last_batch_id() == -1

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from pocket_etl_spark.datagen import gen_change_events
 from pocket_etl_spark.lake import ParquetLakeTable
+from pocket_etl_spark.streaming import tail as cdc_tail
 from pocket_etl_spark.streaming.tail import run_tail_to_exhaustion
 from tests.test_cdc_apply import assert_state_equals_oracle
 
@@ -59,23 +60,26 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path, wal):
     assert_state_equals_oracle(table, full.toPandas())
 
 
-def test_crash_before_merge_then_restart(spark, tmp_path, wal):
+def test_crash_before_merge_then_restart(spark, tmp_path, wal, monkeypatch):
     """Unrecoverable failure inside batch 1 BEFORE any merge: restart reprocesses
     that batch; final state equals oracle (no loss)."""
     wal_dir, events = wal
     table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=4)
     ckpt = str(tmp_path / "ckpt")
     crashed = {"done": False}
+    real_apply = cdc_tail.apply_batch
 
-    def bomb(df, batch_id):
+    def bomb(df, table, batch_id=None, **kw):
         if batch_id == 1 and not crashed["done"]:
             crashed["done"] = True
             raise RuntimeError("injected unrecoverable failure (pre-merge)")
+        return real_apply(df, table, batch_id=batch_id, **kw)
 
+    # the tail's foreachBatch body calls apply_batch through its own module
+    monkeypatch.setattr(cdc_tail, "apply_batch", bomb)
     with pytest.raises(Exception):
         run_tail_to_exhaustion(
-            spark, wal_dir, table, ckpt, query_id="q1",
-            max_files_per_trigger=1, on_batch=bomb,
+            spark, wal_dir, table, ckpt, query_id="q1", max_files_per_trigger=1,
         )
         raise RuntimeError("query should have failed")  # pragma: no cover
     run_tail_to_exhaustion(
@@ -84,29 +88,29 @@ def test_crash_before_merge_then_restart(spark, tmp_path, wal):
     assert_state_equals_oracle(table, events.toPandas())
 
 
-def test_crash_after_merge_fences_on_restart(spark, tmp_path, wal):
+def test_crash_after_merge_fences_on_restart(spark, tmp_path, wal, monkeypatch):
     """Failure AFTER the merge committed but before Spark records the batch:
     restart replays the same batch_id → fencing makes it a no-op; state equals
     oracle with no double-apply."""
     wal_dir, events = wal
     table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=4)
     ckpt = str(tmp_path / "ckpt")
-    from pocket_etl_spark.cdc.apply import apply_batch
-
     crashed = {"done": False}
+    real_apply = cdc_tail.apply_batch
 
-    def apply_then_bomb(df, batch_id):
+    def apply_then_bomb(df, table, batch_id=None, **kw):
+        res = real_apply(df, table, batch_id=batch_id, **kw)
         # emulate: merge commit succeeds, then the executor dies before Spark
         # writes the checkpoint commit marker for this batch
         if batch_id == 1 and not crashed["done"]:
             crashed["done"] = True
-            apply_batch(df, table, batch_id=batch_id, query_id="q1")
             raise RuntimeError("injected crash post-merge, pre-checkpoint")
+        return res
 
+    monkeypatch.setattr(cdc_tail, "apply_batch", apply_then_bomb)
     with pytest.raises(Exception):
         run_tail_to_exhaustion(
-            spark, wal_dir, table, ckpt, query_id="q1",
-            max_files_per_trigger=1, on_batch=apply_then_bomb,
+            spark, wal_dir, table, ckpt, query_id="q1", max_files_per_trigger=1,
         )
         raise RuntimeError("query should have failed")  # pragma: no cover
     run_tail_to_exhaustion(
