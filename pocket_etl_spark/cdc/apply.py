@@ -67,7 +67,7 @@ def apply_batch(
     ``dict -> str`` callable formats each failed record. An unknown mode or
     key column raises before any Spark job, even for a batch that would
     route nothing to the DLQ."""
-    t0 = time.time()
+    t0 = time.perf_counter()
     check_dlq_payload(dlq_payload, dlq_keys, events.columns)
     # Early fence (one driver-side manifest read): a replayed micro-batch must
     # not redo SIDE EFFECTS — without this, a fenced replay still paid the
@@ -82,20 +82,20 @@ def apply_batch(
             rows_in=0,
             rows_bad=0,
             rows_applied=0,
-            duration_sec=time.time() - t0,
+            duration_sec=time.perf_counter() - t0,
         )
     prof = Profiler()
-    # The batch is always persisted, tagged with its validity flag: the merge
-    # reads the payload twice (winner-ord aggregate + probe side), and a
-    # non-deterministic source would diverge between reads. The persist MUST
-    # happen before the stats pass below: if the stats pass ran against an
-    # unpersisted frame, a non-deterministic upstream could hand the merge
-    # keys whose bucket never entered touched_buckets — the merge would then
-    # write a bucket the manifest loop never registers, silently dropping the
-    # update. Tagging the FULL batch folds the bad-row count into the single
-    # stats pass (a clean micro-batch pays ZERO extra upstream scans for the
-    # validation — VERDICT r3 'wrong' #3), and a nonzero DLQ write reads the
-    # cache, never the upstream.
+    # The batch is always persisted, tagged with its validity flag: the stats
+    # pass and the merge both read the payload, and a non-deterministic source
+    # would diverge between reads. The persist MUST happen before the stats
+    # pass below: if the stats pass ran against an unpersisted frame, a
+    # non-deterministic upstream could hand the merge keys whose bucket never
+    # entered touched_buckets — the merge would then write a bucket the
+    # manifest loop never registers, silently dropping the update. Tagging the
+    # FULL batch folds the bad-row count into the single stats pass (a clean
+    # micro-batch pays ZERO extra upstream scans for the validation — VERDICT
+    # r3 'wrong' #3), and a nonzero DLQ write reads the cache, never the
+    # upstream.
     with prof.scope("dlq_split"):
         cached = events.withColumn(
             "_valid", valid_event(table.key_cols, table.lsn_col, table.op_col)
@@ -168,8 +168,8 @@ def apply_batch(
         good = promote_extras(good, keys=promo_keys)
         payload = good.drop(*[c for c in DROP_COLS if c in good.columns])
 
-        # The batch goes to the merge as is: the lake's union-argmax subsumes
-        # per-batch LWW dedupe in the same hash-aggregate (one shuffle total), so a
+        # The batch goes to the merge as is: the merge collapses it to one row
+        # per key itself (a map-side partial top-1 before its key shuffle), so a
         # separate lww_dedupe pass would only add a redundant shuffle. lww_dedupe
         # remains the standalone operator for non-merge consumers.
         with prof.scope("merge"):
@@ -184,7 +184,7 @@ def apply_batch(
         rows_in=rows_in,
         rows_bad=rows_bad,
         rows_applied=rows_in - rows_bad,
-        duration_sec=time.time() - t0,
+        duration_sec=time.perf_counter() - t0,
         timings=prof.flat(),
     )
     if result.committed:

@@ -5,17 +5,23 @@ staged rows (RedshiftJdbcClient.java:279-291); within a batch the last write to 
 wins implicitly. We refine that to an explicit, deterministic per-event rule:
 winner(key) = argmax over (lsn, op_rank) — op_rank breaks same-LSN ties as D > U > I.
 
-Scale design — why groupBy/max_by and not a window:
+Scale design — the winner pick must collapse a hot key before the shuffle:
 
-- ``row_number() OVER (PARTITION BY key ORDER BY lsn DESC)`` shuffles EVERY row of a
-  key to one reducer: a hot key (50% of a 10^10-event log) lands 5·10^9 rows on one
-  task. That plan melts at scale.
-- ``groupBy(key).agg(max_by(payload, ord))`` is a commutative-associative aggregate:
-  Spark performs map-side partial aggregation, so each input partition first collapses
-  its local rows per key to ONE row, and only those partials shuffle. The hot key
-  contributes at most one row per upstream partition — skew is absorbed before the
-  exchange. This is the same trick as the reference's per-thread buffering
-  (ParallelLoader.java:156-167), done by Tungsten's hash aggregate.
+- A bare window (``row_number() OVER (PARTITION BY key ORDER BY lsn DESC)`` kept as
+  a column) shuffles EVERY row of a key to one reducer: a hot key (50% of a
+  10^10-event log) lands 5·10^9 rows on one task. That plan melts at scale.
+- ``groupBy(key).agg(max_by(payload, ord))`` (``lww_dedupe``) is a
+  commutative-associative aggregate: Spark performs map-side partial aggregation,
+  so each input partition first collapses its local rows per key to ONE row, and
+  only those partials shuffle. The hot key contributes at most one row per upstream
+  partition — skew is absorbed before the exchange. This is the same trick as the
+  reference's per-thread buffering (ParallelLoader.java:156-167), done by
+  Tungsten's hash aggregate.
+- A ``row_number() ... = 1`` FILTER is the same map-side collapse in window form:
+  Spark (3.5+) plans it as a partial top-1 (``WindowGroupLimit ... Partial``)
+  before the key exchange, so each input partition again ships at most one row
+  per key. The lake merge (lake.py) picks its batch winners this way: it keeps
+  whole rows and sorts on one packed long instead of aggregating a struct payload.
 
 An explicit two-phase salted variant is provided for completeness and for plans where
 a window is genuinely required (e.g. top-N per key with N>1); the

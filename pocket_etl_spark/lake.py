@@ -26,8 +26,10 @@ Scale design (the part that matters at 100 TB):
   transform + copy-on-write MERGE. A micro-batch touching 0.1% of keys rewrites
   ~0.1%·num_buckets of the table, not all of it.
 - Untouched buckets are carried forward in the manifest by reference (no data copy).
-- The merge itself is one hash-aggregate per key (map-side partial aggregation →
-  hot keys collapse inside each task before the shuffle; see cdc/dedupe.py).
+- The merge moves the table payload through ONE exchange, the bucket repartition
+  of its write: each write task keeps its keys' winners. The batch first collapses
+  to one row per key in a map-side partial top-1 (hot keys collapse inside each
+  task before the batch's key shuffle; see cdc/dedupe.py).
 - Fencing: the manifest records a per-query-id high-watermark batch id; replaying an
   already-committed micro-batch is a no-op (exactly-once on top of Spark's
   at-least-once foreachBatch — same contract Delta/Iceberg implement via txn versions).
@@ -51,6 +53,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from pocket_etl_spark.cdc.dedupe import OP_RANK_EXPR, lww_dedupe
 from pocket_etl_spark.cdc.evolution import conform_to, unify_schemas
@@ -327,7 +330,8 @@ class ParquetLakeTable:
         return F.pmod(F.xxhash64(*self.key_cols), F.lit(self.num_buckets)).cast("int")
 
     def _write_buckets(
-        self, df: DataFrame, version: int, n_buckets: int, slices: int | None = None
+        self, df: DataFrame, version: int, n_buckets: int, slices: int | None = None,
+        _top1: bool = False,
     ) -> dict[str, str]:
         """Write ``df`` as snapshot dir ``data/v{version}``, one
         ``_bucket=b`` directory per hash bucket — the one bucket writer of
@@ -346,6 +350,10 @@ class ParquetLakeTable:
         slice is one part file. Every write task has a fixed cost (~15-20 ms
         measured on a 4-core host), so a wave sized to the bucket count (32
         tasks on 4 cores) pays it mostly for tasks holding one bucket or none.
+
+        ``_top1`` (merge only): each task keeps, per key, the row with the
+        largest ``_ord``. A key's rows share one (bucket, slice), so this
+        top-1 needs no exchange beyond the repartition.
         Returns bucket → data dir (relative to the table root) for the
         buckets actually written."""
         par = self.spark.sparkContext.defaultParallelism
@@ -355,17 +363,19 @@ class ParquetLakeTable:
         rel_dir = os.path.join(_DATA, f"v{version:012d}")
         out_dir = os.path.join(self.path, rel_dir)
         df = df.withColumn("_bucket", self._bucket_expr())
+        parts = ["_bucket"]
         if slices > 1:
-            df = (
-                df.withColumn(
-                    "_slice",
-                    F.pmod(F.xxhash64(F.lit("_slice"), *self.key_cols), F.lit(slices)),
-                )
-                .repartition(n_tasks, "_bucket", "_slice")
-                .drop("_slice")
+            parts.append("_slice")
+            df = df.withColumn(
+                "_slice",
+                F.pmod(F.xxhash64(F.lit("_slice"), *self.key_cols), F.lit(slices)),
             )
-        else:
-            df = df.repartition(n_tasks, "_bucket")
+        df = df.repartition(n_tasks, *parts)
+        if _top1:
+            latest = Window.partitionBy(*parts, *self.key_cols).orderBy(F.desc("_ord"))
+            df = df.withColumn("_rn", F.row_number().over(latest)).filter("_rn = 1")
+            df = df.drop("_rn", "_ord")
+        df = df.drop(*parts[1:])
         df.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
         return {
             d.split("=", 1)[1]: os.path.join(rel_dir, d)
@@ -390,12 +400,14 @@ class ParquetLakeTable:
             (idempotent MERGE guard — replay can never regress state);
           - a winning D removes the row; I/U upsert it.
 
-        Physical plan (one pass): batch LWW-dedupe is NOT run separately — the
-        union-argmax below subsumes it (argmax is associative). The winner per
-        key is a packed-ord HashAggregate over (current ∪ batch), its rows are
-        recovered by a shuffled-hash join on (key, ord), exact-duplicate ties
-        collapse with ``dropDuplicates``, and the touched buckets are rewritten
-        in one core-sized write wave (``_write_buckets``).
+        Physical plan: the table payload crosses ONE exchange, the bucket
+        repartition of the write. The batch first collapses to one row per
+        key (``row_number() = 1`` by lsn and op rank — a map-side partial
+        top-1, so a hot key collapses before the batch's key exchange), is
+        unioned with the touched buckets' current rows, and the union goes to
+        ``_write_buckets``, whose write tasks each keep every key's winner by
+        the packed ``_ord`` among their own rows. Exact-duplicate events keep
+        one row there too (``row_number`` picks one of a tie).
 
         ``touched_buckets`` is the caller's set of buckets the batch's keys
         hash to (it skips the probe scan). It must be complete: a merge that
@@ -408,9 +420,9 @@ class ParquetLakeTable:
         ``plan`` (manifest read, schema unification, the touched-bucket probe
         when no hint is given, building the plan; an empty batch commits its
         watermark here and stops), ``write`` (the one write action) and
-        ``commit`` (the manifest). The bucket read, argmax aggregate and
-        winner join run inside the write action, so the driver cannot time
-        them apart from it.
+        ``commit`` (the manifest). The bucket read, the batch's top-1 and the
+        per-task winner pick run inside the write action, so the driver
+        cannot time them apart from it.
         """
         prof = prof or Profiler()
         with prof.scope("plan"):
@@ -432,7 +444,7 @@ class ParquetLakeTable:
             ]
             new_schema = unify_schemas(table_schema, T.StructType(batch_payload_fields))
 
-            winners = conform_to(
+            batch = conform_to(
                 updates, new_schema, keep_extra=[self.op_col]
             ).withColumn("_bucket", self._bucket_expr())
             # NOTE: with ``touched_buckets`` given, merge runs one action over
@@ -450,7 +462,7 @@ class ParquetLakeTable:
                 touched = sorted(touched_buckets)
             else:
                 ok = valid_event(self.key_cols, self.lsn_col, self.op_col)
-                buckets, n_bad = winners.agg(F.collect_set("_bucket"), F.count_if(~ok)).first()
+                buckets, n_bad = batch.agg(F.collect_set("_bucket"), F.count_if(~ok)).first()
                 if n_bad:
                     raise ValueError(
                         f"merge: {n_bad} rows are invalid (null key/lsn or unknown "
@@ -468,71 +480,49 @@ class ParquetLakeTable:
                 keep_extra=["_deleted", "_version"],
             )
 
-            # MERGE as union + second LWW pass: current rows enter with their stored lsn
-            # and op NULL (or 'D' for tombstones); at equal lsn the incoming event wins
-            # (_src tiebreak) so replaying the same batch is idempotent. One
-            # hash-aggregate shuffle on the key — map-side partial aggregation absorbs
-            # hot keys (skew-safe by construction). Deletes become tombstones (kept with
-            # the delete's LSN) so out-of-order/late lower-LSN events cannot resurrect a
-            # deleted key — the streaming refinement of the reference's
+            # MERGE as batch top-1, union, then a second LWW pick in the write tasks:
+            # current rows enter with their stored lsn and op NULL (or 'D' for
+            # tombstones); at equal lsn the incoming event wins (src tiebreak) so
+            # replaying the same batch is idempotent. Deletes become tombstones (kept
+            # with the delete's LSN) so out-of-order/late lower-LSN events cannot
+            # resurrect a deleted key — the streaming refinement of the reference's
             # delete-then-insert merge.
+            #
+            # The LWW ordering (lsn, op_rank, src) packs into ONE long:
+            # lsn*8 + op_rank*2 + src (op_rank ∈ 0..3, src ∈ 0..1; lsn < 2^60 by
+            # contract), so each pick sorts on one long, not a struct.
             new_version = cur_version + 1
             data_cols = [f.name for f in new_schema.fields]
+            packed = F.col(self.lsn_col) * 8 + OP_RANK_EXPR(self.op_col) * 2
+            latest = Window.partitionBy(*self.key_cols).orderBy(packed.desc())
             # _version rides through the merge: current rows keep their stamp, NULL
-            # for incoming events; after winner selection NULL coalesces to the new
-            # commit version — so a row's stamp moves iff an incoming event won
-            # (the change-feed contract of read_changes).
+            # for incoming events coalesces to the new commit version — so a row's
+            # stamp moves iff an incoming event won (the change-feed contract of
+            # read_changes).
+            upd_tagged = (
+                batch.withColumn("_rn", F.row_number().over(latest))
+                .filter("_rn = 1")
+                .select(*data_cols, self.op_col, F.lit(None).cast("long").alias("_version"))
+                .withColumn("_ord", packed + 1)
+            )
             cur_tagged = current.select(
                 *data_cols,
                 F.when(F.coalesce(F.col("_deleted"), F.lit(False)), F.lit("D"))
                 .otherwise(F.lit(None).cast("string"))
                 .alias(self.op_col),
-                F.lit(0).alias("_src"),
                 F.col("_version"),
-            )
-            upd_tagged = winners.select(
-                *data_cols, F.col(self.op_col), F.lit(1).alias("_src"),
-                F.lit(None).cast("long").alias("_version"),
-            )
-            combined = cur_tagged.unionByName(upd_tagged)
-
-            # The argmax ordering (lsn, op_rank, src) packs into ONE long:
-            # lsn*8 + op_rank*2 + src (op_rank ∈ 0..3, src ∈ 0..1; lsn < 2^60 by
-            # contract). That turns the per-key argmax into a plain HashAggregate
-            # over (key, long) — whole-stage codegen, map-side partial aggregation
-            # (hot keys collapse before the exchange) — instead of a SortAggregate
-            # dragging the full row payload through the shuffle, which profiling
-            # showed dominated merge time and scaled poorly past 8 threads.
-            keyed = combined.withColumn(
-                "_ord",
-                F.col(self.lsn_col) * 8 + OP_RANK_EXPR(self.op_col) * 2 + F.col("_src"),
-            )
-            # Recover winning rows with a shuffled hash join on (key, ord): both the
-            # tiny winner set and the payload hash-partition on the key, so the
-            # join is fully parallel with zero driver-side work (a broadcast winner
-            # set was measured to cost ~6-10 s/batch of serial driver collect +
-            # rebroadcast, flattening N→4N scaling).
-            winner_ords = keyed.groupBy(*self.key_cols).agg(F.max("_ord").alias("_ord"))
-            # Exact-duplicate guard: at-least-once delivery can put the SAME event
-            # (key, lsn, op) in one batch twice; both rows tie at the max _ord and
-            # the join would emit both, breaking the one-row-per-key snapshot
-            # invariant (and the dupes would survive every later merge as identical
-            # _src=0 rows). Collapse ties on (key, _ord) — the join output is
-            # already hash-partitioned on exactly those columns, so this is a
-            # partition-local aggregate, no extra exchange.
+            ).withColumn("_ord", packed)
             merged = (
-                keyed.join(winner_ords.hint("shuffle_hash"), on=[*self.key_cols, "_ord"])
-                .dropDuplicates([*self.key_cols, "_ord"])
-                .select(*data_cols, self.op_col, "_version")
+                cur_tagged.unionByName(upd_tagged)
                 .withColumn("_deleted", F.col(self.op_col) == "D")
                 .withColumn("_version", F.coalesce(F.col("_version"), F.lit(new_version)))
                 .drop(self.op_col)
             )
 
         # Write only the touched buckets of the new snapshot; untouched buckets
-        # carry forward by reference.
+        # carry forward by reference. Each write task keeps every key's winner.
         with prof.scope("write"):
-            written = self._write_buckets(merged, new_version, len(touched))
+            written = self._write_buckets(merged, new_version, len(touched), _top1=True)
         stray = set(written) - {str(b) for b in touched}
         if stray:
             raise ValueError(

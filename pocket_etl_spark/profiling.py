@@ -42,18 +42,18 @@ class Profiler:
     one Profiler per run/batch, like one EtlMetrics per EtlStream run)."""
 
     def __init__(self) -> None:
-        self._root = _Scope("root", time.time())
+        self._root = _Scope("root", time.perf_counter())
         self._stack = [self._root]
 
     @contextmanager
     def scope(self, name: str):
-        s = _Scope(name, time.time())
+        s = _Scope(name, time.perf_counter())
         self._stack[-1].children.append(s)
         self._stack.append(s)
         try:
             yield s
         finally:
-            s.elapsed = time.time() - s.started
+            s.elapsed = time.perf_counter() - s.started
             self._stack.pop()
 
     def flat(self) -> dict[str, float]:

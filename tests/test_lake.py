@@ -594,3 +594,52 @@ def test_merge_without_hint_rejects_invalid_rows(spark, tmp_table_path):
         table.merge(spark.createDataFrame(rows, schema), batch_id=1)
     assert table.current_version() == 0
     assert table.last_batch_id() == -1
+
+
+def test_sliced_merge_keeps_one_winner_per_key(spark, tmp_table_path):
+    """One bucket at local[8] splits into 8 write slices, and each write task
+    picks the winners of its own keys. Ties and guards must come out as the
+    LWW rule says: exact duplicates keep one row, an equal-LSN U/D pair
+    deletes, an equal-LSN replay of a stored row keeps it, and a late
+    lower-LSN event cannot revive a tombstone."""
+    from pocket_etl_spark.cdc.dedupe import lww_dedupe
+
+    schema = "lsn long, op string, repo string, path string, commit string, lang string, content string"
+
+    def ev(lsn, op, path, content):
+        live = op != "D"
+        return (lsn, op, "r", path, "c" if live else None, "py" if live else None, content)
+
+    filler = [ev(100 + i, "I", f"f{i}", f"f{i}") for i in range(40)]
+    first = [
+        ev(10, "I", "replay", "stored"),
+        ev(5, "I", "dead", "d0"),
+        ev(30, "D", "dead", None),
+        ev(40, "I", "pair", "p0"),
+    ] + filler
+    second = [
+        ev(50, "U", "dup", "x"),
+        ev(50, "U", "dup", "x"),
+        ev(60, "U", "pair", "p1"),
+        ev(60, "D", "pair", None),
+        ev(10, "I", "replay", "stored"),
+        ev(20, "U", "dead", "zombie"),
+    ] + [ev(200 + i, "U", f"f{i}", f"g{i}") for i in range(0, 40, 3)]
+
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=1)
+    table.merge(spark.createDataFrame(first, schema), batch_id=0)
+    res = table.merge(spark.createDataFrame(second, schema), batch_id=1)
+    bucket_dir = os.path.join(tmp_table_path, "data", f"v{res.version:012d}", "_bucket=0")
+    assert len([f for f in os.listdir(bucket_dir) if f.endswith(".parquet")]) >= 2
+
+    stored = table.read(include_tombstones=True)
+    assert stored.groupBy("repo", "path").count().filter("count > 1").count() == 0
+    cols = ["repo", "path", "lsn", "content"]
+    want = (
+        lww_dedupe(spark.createDataFrame(first + second, schema), ["repo", "path"])
+        .filter("op <> 'D'")
+        .select(*cols)
+    )
+    assert sorted(table.read().select(*cols).collect()) == sorted(want.collect())
+    dead = {r["path"] for r in stored.filter("_deleted").collect()}
+    assert dead == {"dead", "pair"}

@@ -4,6 +4,8 @@ Each test pins the plan SHAPE of a catalogue query or engine operator — shuffl
 budget, broadcast usage, pushdown, aggregation strategy — so a regression that
 keeps results correct but wrecks the 100 TB story fails loudly here."""
 
+import re
+
 import pytest
 
 from pocket_etl_spark.plans import assert_filters_pushed, assert_scan_pruned, plan_facts
@@ -173,3 +175,65 @@ def test_read_changes_pushes_version_filter(spark, tmp_path):
     f = plan_facts(table.read_changes(1))
     pushed = " ".join(f.pushed_filters)
     assert "_version" in pushed and "GreaterThan" in pushed, f.text[:2500]
+
+
+def _plan_nodes(text):
+    """Formatted-plan node id -> (name, Arguments line) from its detail section."""
+    nodes = {}
+    for m in re.finditer(
+        r"^\((\d+)\) (\w+)[^\n]*\n(.*?)(?=^\(\d+\) |\Z)", text, flags=re.MULTILINE | re.DOTALL
+    ):
+        arg = re.search(r"^Arguments: (.*)$", m.group(3), flags=re.MULTILINE)
+        nodes[m.group(1)] = (m.group(2), arg.group(1) if arg else "")
+    return nodes
+
+
+@pytest.mark.parametrize(
+    "num_buckets, write_cols",
+    [(4, ["_bucket", "_slice"]), (16, ["_bucket"])],
+    ids=["sliced", "unsliced"],
+)
+def test_merge_has_one_table_sized_exchange(spark, tmp_path, monkeypatch, num_buckets, write_cols):
+    """The merge moves the table payload through ONE exchange: the write's
+    bucket repartition (on ``_bucket``, plus ``_slice`` when the touched
+    buckets are fewer than the cores and so split into slices), inside which
+    every task keeps each key's winner. The only other exchange is the
+    batch's key shuffle, fed by a map-side partial top-1 so a hot key
+    collapses before it. No join, no winner aggregate."""
+    from pyspark.sql import DataFrameWriter
+
+    from pocket_etl_spark.datagen import gen_change_events
+    from pocket_etl_spark.lake import ParquetLakeTable
+
+    plans = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans.append(plan_facts(self._df).text)
+        return parquet(self, path, *args, **kwargs)
+
+    table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=num_buckets)
+    ev = gen_change_events(spark, 2000, 200, seed=3, hot_key_fraction=0.5).drop("ts", "extras")
+    table.merge(ev.filter("lsn <= 1000"), batch_id=0)
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    res = table.merge(ev.filter("lsn > 1000"), batch_id=1)
+    assert res.touched_buckets == list(range(num_buckets))
+    [text] = plans
+
+    nodes = _plan_nodes(text)
+    assert not [n for n, _ in nodes.values() if "Join" in n or "Aggregate" in n], text
+
+    def hash_cols(args):
+        inner = args.split("hashpartitioning(", 1)[1].split(")", 1)[0]
+        return re.findall(r"(\w+)#\d+", inner)
+
+    exchanges = {i: a for i, (n, a) in nodes.items() if n == "Exchange"}
+    assert len(exchanges) == 2, text
+    [write] = [i for i, a in exchanges.items() if "REPARTITION_BY_NUM" in a]
+    assert hash_cols(exchanges[write]) == write_cols, exchanges[write]
+    [batch] = [i for i in exchanges if i != write]
+    assert hash_cols(exchanges[batch]) == ["repo", "path"], exchanges[batch]
+    # the batch exchange's child in the plan tree is the partial top-1
+    child = re.search(rf"Exchange \({batch}\)\n[ :|+-]*(\w+) \((\d+)\)", text)
+    assert child and child.group(1) == "WindowGroupLimit", text
+    assert nodes[child.group(2)][1].endswith("Partial"), text

@@ -33,3 +33,33 @@ def test_apply_batch_records_phase_timings(spark, tmp_path):
     # the batch's metrics record carries the same timings
     [record] = table.read_metrics().collect()
     assert record["timings"] == res.timings
+
+
+def test_elapsed_times_ignore_wall_clock_steps(spark, tmp_path, monkeypatch):
+    """A wall-clock step (NTP correction, VM resume) must not put a negative
+    phase time into the metrics record: scopes and apply_batch's
+    duration_sec measure elapsed time on a monotonic clock."""
+    from pocket_etl_spark.cdc.apply import apply_batch
+    from pocket_etl_spark.datagen import gen_change_events
+    from pocket_etl_spark.lake import ParquetLakeTable
+
+    events = gen_change_events(spark, n_events=10, n_keys=5, seed=11)
+    table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=4)
+    # an empty batch commits watermark 0 without a Spark job, so the
+    # apply_batch below takes its fenced early return
+    table.merge(events.limit(0), batch_id=0, touched_buckets=[])
+
+    wall = [time.time()]
+
+    def stepping_back():
+        wall[0] -= 3600.0
+        return wall[0]
+
+    prof = Profiler()
+    with prof.scope("phase"):
+        monkeypatch.setattr(time, "time", stepping_back)
+    assert prof.flat()["phase"] >= 0
+
+    res = apply_batch(events, table, batch_id=0)
+    assert res.merge.stats["fenced"] is True
+    assert res.duration_sec >= 0

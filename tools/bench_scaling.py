@@ -447,9 +447,10 @@ backends). The local[2]→local[8] history remains in `BENCH/scaling_runs.jsonl`
 `BENCH/APPENDIX.md`.
 
 Engine properties that carry the scaling to a real cluster:
-- one hash-partitioned shuffle per merge (packed-long argmax; no wide payload
-  through the exchange — lake.py merge);
-- map-side partial aggregation absorbs hot keys before the exchange — the
+- the table payload crosses one exchange per merge, the bucket repartition the
+  write needs anyway; each write task keeps its keys' winners by a packed-long
+  order (lake.py merge);
+- a map-side partial top-1 collapses hot keys before the batch's key exchange — the
   hot-4N wall {hot_vs_uniform_4n}
   despite half the input hitting one key (cdc/dedupe.py; SURVEY.md §4.2.2);
 - bucket-level copy-on-write bounds each batch's write amplification;
