@@ -56,7 +56,8 @@ def apply_batch(
     per-run EtlMetrics tree, EtlMetrics.java:25-53), read back with
     ``table.read_metrics()``: query_id, batch_id, version, rows_in (every
     event), rows_bad, rows_applied (the events handed to the merge),
-    buckets_rewritten, min_lsn/max_lsn of the valid events, duration_sec,
+    buckets_rewritten, files_written (part files the commit wrote),
+    min_lsn/max_lsn of the valid events, duration_sec,
     committed_at and the timings. Its counts come from the one stats pass,
     so the record costs no Spark job. A fenced replay writes none.
 
@@ -198,6 +199,7 @@ def apply_batch(
                 "rows_bad": res.rows_bad,
                 "rows_applied": res.rows_applied,
                 "buckets_rewritten": len(result.touched_buckets),
+                "files_written": result.stats.get("files_written", 0),
                 "min_lsn": stats["_min_lsn"],
                 "max_lsn": stats["_max_lsn"],
                 "duration_sec": res.duration_sec,

@@ -323,3 +323,10 @@ def test_metrics_record_per_commit_not_per_replay(spark, tmp_table_path, monkeyp
         (300, 1, 300), (300, 301, 600)
     ]
     assert rows[0]["buckets_rewritten"] == len(res.merge.touched_buckets)
+    # files_written is each commit's part files on disk
+    import os
+
+    for r in rows:
+        snap = os.path.join(tmp_table_path, "data", f"v{r['version']:012d}")
+        on_disk = [f for f in os.listdir(snap) if f.endswith(".parquet")]
+        assert r["files_written"] == len(on_disk) > 0, (r, on_disk)

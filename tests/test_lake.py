@@ -180,9 +180,10 @@ def test_tombstone_blocks_late_lower_lsn(spark, tmp_table_path):
 
 def test_exact_duplicate_events_keep_one_row_per_key(spark, tmp_table_path):
     """At-least-once delivery can land the SAME event (key, lsn, op) twice in
-    one batch: both rows tie at the max packed ordinal and the winner-recovery
-    join would emit both. The snapshot must stay one-row-per-key, and the
-    duplicate must not survive subsequent merges as a _src=0 resident pair."""
+    one batch: both rows tie at the max packed ordinal, and each
+    ``row_number() = 1`` winner pick must keep exactly one of them. The
+    snapshot must stay one-row-per-key, and the duplicate must not survive
+    subsequent merges as a resident pair."""
     schema = "lsn long, op string, repo string, path string, commit string, lang string, content string"
     dup = [
         {"lsn": 10, "op": "I", "repo": "r", "path": "p", "commit": "c1", "lang": "py", "content": "v1"},
@@ -227,10 +228,7 @@ def test_hot_bucket_write_splits_into_file_slices(spark, tmp_table_path):
     ev = _events(spark, n=2000, keys=400).drop("ts", "extras")
     res = table.merge(ev, batch_id=0)
     assert res.touched_buckets == [0]
-    bucket_dir = os.path.join(
-        tmp_table_path, "data", f"v{res.version:012d}", "_bucket=0"
-    )
-    parts = [f for f in os.listdir(bucket_dir) if f.endswith(".parquet")]
+    parts = table._manifest(res.version)["buckets"]["0"]
     assert len(parts) >= 2, parts  # hot bucket no longer a single writer
     # correctness unchanged: one row per live key
     got = table.read()
@@ -327,8 +325,7 @@ def test_compaction_to_several_files_per_bucket(spark, tmp_table_path):
     v1 = table.current_version()
 
     def n_files(version):
-        d = os.path.join(tmp_table_path, f"data/v{version:012d}/_bucket=0")
-        return len([f for f in os.listdir(d) if f.endswith(".parquet")])
+        return len(table._manifest(version)["buckets"]["0"])
 
     def rows():
         return sorted(
@@ -354,15 +351,13 @@ def test_compaction_preserves_state_and_change_feed(spark, tmp_table_path):
     ev = _events(spark, n=1000, keys=100).drop("ts", "extras")
     table.merge(ev, batch_id=0)
     v1 = table.current_version()
-    man_rel = f"data/v{v1:012d}/_bucket=0"
-    n_before = len([f for f in os.listdir(os.path.join(tmp_table_path, man_rel)) if f.endswith(".parquet")])
+    n_before = len(table._manifest(v1)["buckets"]["0"])
     assert n_before >= 2  # slicing produced the small files to compact
     before = sorted(map(tuple, table.read().collect()))
 
     res = table.compact(max_files_per_bucket=1)
     assert res.committed and res.stats["compacted"] == 1
-    new_rel = f"data/v{res.version:012d}/_bucket=0"
-    n_after = len([f for f in os.listdir(os.path.join(tmp_table_path, new_rel)) if f.endswith(".parquet")])
+    n_after = len(table._manifest(res.version)["buckets"]["0"])
     assert n_after == 1
     assert sorted(map(tuple, table.read().collect())) == before
     # change feed is silent across a compaction
@@ -629,8 +624,7 @@ def test_sliced_merge_keeps_one_winner_per_key(spark, tmp_table_path):
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=1)
     table.merge(spark.createDataFrame(first, schema), batch_id=0)
     res = table.merge(spark.createDataFrame(second, schema), batch_id=1)
-    bucket_dir = os.path.join(tmp_table_path, "data", f"v{res.version:012d}", "_bucket=0")
-    assert len([f for f in os.listdir(bucket_dir) if f.endswith(".parquet")]) >= 2
+    assert len(table._manifest(res.version)["buckets"]["0"]) >= 2
 
     stored = table.read(include_tombstones=True)
     assert stored.groupBy("repo", "path").count().filter("count > 1").count() == 0
@@ -643,3 +637,75 @@ def test_sliced_merge_keeps_one_winner_per_key(spark, tmp_table_path):
     assert sorted(table.read().select(*cols).collect()) == sorted(want.collect())
     dead = {r["path"] for r in stored.filter("_deleted").collect()}
     assert dead == {"dead", "pair"}
+
+
+def test_rewritten_bucket_leaves_no_dead_rows_in_reads(spark, tmp_table_path):
+    """A write task's file holds several buckets. A sparse merge rewrites only
+    its touched bucket, so that bucket's old rows stay behind, dead, in the
+    shared file. No read may return them: the snapshot, the tombstone view,
+    a bucket-pruned read and every change-feed window must equal the LWW
+    state of all events, through merges, a late lower-LSN event, compaction
+    and vacuum."""
+    from pocket_etl_spark.cdc.dedupe import lww_dedupe
+
+    schema = "lsn long, op string, repo string, path string, commit string, lang string, content string"
+    keys = ["repo", "path"]
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=16)
+    events = [tuple(r) for r in _events(spark, n=800, keys=200).drop("ts", "extras")
+              .select("lsn", "op", "repo", "path", "commit", "lang", "content").collect()]
+    res = table.merge(spark.createDataFrame(events, schema), batch_id=0)
+    assert res.touched_buckets == list(range(16))
+    shared = [bs for bs in table._manifest(res.version)["files"].values() if len(bs) > 1]
+    assert shared, "the dense merge wrote no file holding several buckets"
+    b1, b2 = shared[0][:2]
+    k1, k2 = (min((r["repo"], r["path"]) for r in table.read(buckets=[b]).collect()) for b in (b1, b2))
+    stamp = {(e[2], e[3]): res.version for e in events}  # key -> version of its last change
+    bucket = {
+        (r["repo"], r["path"]): r["b"]
+        for r in spark.createDataFrame(events, schema)
+        .select(*keys, table._bucket_expr().alias("b")).collect()
+    }
+    top = max(e[0] for e in events)
+
+    def check():
+        want = lww_dedupe(spark.createDataFrame(events, schema), keys).collect()
+        state = {(r["repo"], r["path"], r["lsn"], r["op"] == "D") for r in want}
+        got = table.read(include_tombstones=True).collect()
+        assert {(r["repo"], r["path"], r["lsn"], bool(r["_deleted"])) for r in got} == state
+        assert len(got) == len(state)
+        alive = sorted((r, p, lsn) for r, p, lsn, dead in state if not dead)
+        assert sorted((r["repo"], r["path"], r["lsn"]) for r in table.read().collect()) == alive
+        for b in (b1, b2):
+            got_b = sorted((r["repo"], r["path"], r["lsn"]) for r in table.read(buckets=[b]).collect())
+            assert got_b == [k for k in alive if bucket[k[:2]] == b], b
+        for v in range(table.current_version()):
+            got_ch = table.read_changes(v).collect()
+            want_ch = {
+                (r, p, lsn, "delete" if dead else "upsert", stamp[(r, p)])
+                for r, p, lsn, dead in state
+                if stamp[(r, p)] > v
+            }
+            assert len(got_ch) == len(want_ch), v
+            assert {
+                (r["repo"], r["path"], r["lsn"], r["_change_type"], r["_commit_version"])
+                for r in got_ch
+            } == want_ch, v
+
+    check()
+    sparse = [
+        (top + 1, "U", *k1, "c9", "py", "updated"),
+        (top + 2, "D", *k2, None, None, None),
+        (top + 1, "U", *k2, "c8", "py", "late"),  # loses to the delete
+    ]
+    for i, event in enumerate(sparse, start=1):
+        key = event[2:4]
+        if event[0] > max(e[0] for e in events if e[2:4] == key):
+            stamp[key] = table.current_version() + 1
+        events.append(event)
+        res = table.merge(spark.createDataFrame([event], schema), batch_id=i)
+        assert res.stats["buckets_rewritten"] == 1, res
+        check()
+    assert table.compact(max_files_per_bucket=1).committed
+    check()
+    assert table.vacuum(keep_versions=2) > 0
+    check()

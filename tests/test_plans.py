@@ -121,10 +121,7 @@ def test_hot_bucket_merge_write_has_slice_repartition(spark, tmp_path):
     ev = gen_change_events(spark, 500, 50, seed=3).drop("ts", "extras")
     res = table.merge(ev, batch_id=0)
     # physical evidence: >1 part file in the single touched bucket
-    import os
-
-    bucket_dir = os.path.join(str(tmp_path / "t"), "data", f"v{res.version:012d}", "_bucket=0")
-    parts = [p for p in os.listdir(bucket_dir) if p.endswith(".parquet")]
+    parts = table._manifest(res.version)["buckets"]["0"]
     assert len(parts) >= 2, parts
 
 
@@ -154,10 +151,13 @@ def test_merge_writes_in_one_core_sized_task_wave(spark, tmp_path):
     write_stage = tracker.getStageInfo(max(last_job.stageIds))
     assert write_stage.numTasks <= sc.defaultParallelism, write_stage
 
-    snap = os.path.join(str(tmp_path / "t"), "data", f"v{res.version:012d}")
+    man = table._manifest(res.version)
     for b in res.touched_buckets:
-        parts = [p for p in os.listdir(os.path.join(snap, f"_bucket={b}")) if p.endswith(".parquet")]
+        parts = man["buckets"][str(b)]
         assert len(parts) == 1, (b, parts)
+    snap = os.path.join(str(tmp_path / "t"), "data", f"v{res.version:012d}")
+    files = [p for p in os.listdir(snap) if p.endswith(".parquet")]
+    assert len(files) <= sc.defaultParallelism, files
 
 
 def test_read_changes_pushes_version_filter(spark, tmp_path):
