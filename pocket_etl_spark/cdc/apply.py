@@ -49,16 +49,16 @@ def apply_batch(
     Phase timings are collected into a hierarchical Profiler tree (the
     reference's EtlProfilingScope.java:47-128 timer rollup) and exported
     flat on ApplyResult.timings. The merge adds its own phases under
-    ``merge``: ``merge.plan``, ``merge.write`` and ``merge.commit`` (see
-    ``ParquetLakeTable.merge``).
+    ``merge``: ``merge.plan``, ``merge.write``, ``merge.commit`` and
+    ``merge.fold`` (see ``ParquetLakeTable.merge``).
 
     Every committed batch leaves one metrics record (the reference's
     per-run EtlMetrics tree, EtlMetrics.java:25-53), read back with
     ``table.read_metrics()``: query_id, batch_id, version, rows_in (every
     event), rows_bad, rows_applied (the events handed to the merge),
     buckets_rewritten, files_written (part files the commit wrote),
-    min_lsn/max_lsn of the valid events, duration_sec,
-    committed_at and the timings. Its counts come from the one stats pass,
+    buckets_folded (buckets the merge's fold rewrote), min_lsn/max_lsn of
+    the valid events, duration_sec, committed_at and the timings. Its counts come from the one stats pass,
     so the record costs no Spark job. A fenced replay writes none.
 
     ``dlq_payload``/``dlq_keys`` are the DLQ payload policy of every surface
@@ -110,10 +110,10 @@ def apply_batch(
 
     try:
         # ONE stats pass over the batch computes everything the driver needs
-        # before the merge: the set of touched hash buckets (merge reads and
-        # rewrites only those), the event and invalid-row counts, the valid
-        # LSN range, and the distinct promotable tunnel keys (schema
-        # evolution). This pass also populates the cache, so every later
+        # before the merge: the set of touched hash buckets (merge compares
+        # against and appends to only those), the event and invalid-row
+        # counts, the valid LSN range, and the distinct promotable tunnel keys
+        # (schema evolution). This pass also populates the cache, so every later
         # consumer reads the same materialization.
         sel = [
             F.when(valid, table._bucket_expr()).alias("_b"),
@@ -200,6 +200,7 @@ def apply_batch(
                 "rows_applied": res.rows_applied,
                 "buckets_rewritten": len(result.touched_buckets),
                 "files_written": result.stats.get("files_written", 0),
+                "buckets_folded": result.stats.get("buckets_folded", 0),
                 "min_lsn": stats["_min_lsn"],
                 "max_lsn": stats["_max_lsn"],
                 "duration_sec": res.duration_sec,

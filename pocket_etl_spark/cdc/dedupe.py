@@ -39,8 +39,8 @@ from pocket_etl_spark.schema import LSN_COL, OP_COL, OP_RANK
 
 def OP_RANK_EXPR(op_col: str = OP_COL):
     """Deterministic tie-break rank for same-LSN events: D(3) > U(2) > I(1);
-    NULL op (current table rows in the merge union) ranks 0 so any same-LSN
-    incoming event replaces them (idempotent replay)."""
+    any other op ranks 0 (the rank the merge gives a stored live row, so any
+    same-LSN incoming event replaces it: idempotent replay)."""
     expr = F.lit(0)
     for op, rank in OP_RANK.items():
         expr = F.when(F.col(op_col) == op, F.lit(rank)).otherwise(expr)

@@ -1,4 +1,4 @@
-"""LakeTable — keyed-upsert table with snapshot isolation, bucket-level copy-on-write,
+"""LakeTable — keyed-upsert table with snapshot isolation, merge-on-read deltas,
 and idempotent (fenced) commits.
 
 This is the engine's re-expression of the reference's two upsert sinks:
@@ -21,22 +21,28 @@ Two backends share the same MERGE semantics:
 Scale design (the part that matters at 100 TB):
 
 - Data is hash-bucketed on the merge key: ``pmod(xxhash64(*keys), num_buckets)``.
-  A bucket is the **copy-on-write unit**: a merge reads and rewrites exactly the
-  buckets that contain updated keys (Iceberg's bucket partition transform +
-  copy-on-write MERGE). That is a small share of the table only when the batch
-  has few keys: a batch of n distinct keys leaves each bucket untouched with
-  probability (1 - 1/num_buckets)^n, so a batch with more keys than buckets
-  rewrites most of the table.
-- A part file is the **write unit**: each write task writes ONE file holding
+  A part file is the **write unit**: each write task writes ONE file holding
   every bucket hashed to it (the reference's one part file per writer thread,
   S3FastLoader). The manifest maps each bucket to the files that hold it and
-  each file to the buckets written into it; untouched buckets carry forward by
-  reference (no data copy). Rows of a rewritten bucket that stay behind in an
-  older shared file are dead, and ``read`` filters them out.
-- The merge moves the table payload through ONE exchange, the bucket repartition
-  of its write: each write task keeps its keys' winners. The batch first collapses
-  to one row per key in a map-side partial top-1 (hot keys collapse inside each
-  task before the batch's key shuffle; see cdc/dedupe.py).
+  each file to the buckets written into it.
+- A merge **appends a delta** (merge-on-read: Iceberg v2 row-level deltas,
+  Delta Lake deletion vectors). It writes only the batch's per-key winners
+  that beat the stored state, stamped ``_version`` = the commit, and adds
+  their files to the touched buckets' file lists; no stored row is read in
+  full or rewritten. Deciding "beats the stored state" reads a narrow scan of
+  the touched buckets (key columns, lsn, ``_deleted``). Its cost is O(batch)
+  written, not O(table): a batch of n distinct keys touches all but a
+  (1 - 1/num_buckets)^n share of the buckets, so a copy-on-write merge would
+  rewrite most of the table.
+- Every stored row beat every earlier row of its key when it was written, and
+  one commit writes at most one row per key, so a key's live row is its row
+  with the highest ``_version``. A read resolves a bucket by that rule only
+  when the bucket's files come from more than one commit.
+- A **fold** bounds how many commits a read resolves: after its own commit, a
+  merge rewrites every bucket whose files span more than ``_FOLD_AT`` commits
+  into one resolved commit (``compact``'s rewrite, stamps preserved, so the
+  change feed emits nothing for it). Rows of a rewritten bucket that stay
+  behind in an older shared file are dead, and every read filters them out.
 - Fencing: the manifest records a per-query-id high-watermark batch id; replaying an
   already-committed micro-batch is a no-op (exactly-once on top of Spark's
   at-least-once foreachBatch — same contract Delta/Iceberg implement via txn versions).
@@ -71,13 +77,22 @@ _POINTER = "_latest"
 _MANIFESTS = "_manifests"
 _METRICS = "_metrics"
 _DATA = "data"
+# A merge folds every bucket whose files come from more than this many commits.
+_FOLD_AT = 8
 # One record per committed apply_batch (cdc/apply.py builds it).
 METRICS_SCHEMA = (
     "query_id string, batch_id long, version long, rows_in long, rows_bad long, "
-    "rows_applied long, buckets_rewritten long, files_written long, min_lsn long, "
+    "rows_applied long, buckets_rewritten long, files_written long, "
+    "buckets_folded long, min_lsn long, "
     "max_lsn long, duration_sec double, committed_at double, "
     "timings map<string,double>"
 )
+
+
+def _commit_of(rel: str) -> int:
+    """The version of the commit that wrote data file ``rel``
+    (``data/v{version}/part-…``)."""
+    return int(os.path.normpath(rel).split(os.sep)[1][1:])
 
 
 def write_json_atomic(path: str, obj: Any) -> None:
@@ -165,9 +180,10 @@ class ParquetLakeTable:
         **stats: Any,
     ) -> int:
         """Commit manifest v{N+1} on top of ``man`` (v{N}) — the one commit
-        point of every write (merge, its empty-batch branch, overwrite,
-        compact). Buckets in ``replaced`` leave the bucket → files map, the
-        buckets of ``written`` (file → buckets written into it) enter it, and
+        point of every write (merge, its empty-batch branch, its fold,
+        overwrite, compact). Buckets in ``replaced`` leave the bucket → files
+        map, the files of ``written`` (file → buckets written into it) are
+        added to their buckets' lists (a merge's delta replaces nothing), and
         every other bucket carries forward by reference; a replaced bucket
         absent from ``written`` lost all its rows and is dropped. The file →
         buckets map keeps exactly the files some bucket still lists.
@@ -224,38 +240,27 @@ class ParquetLakeTable:
 
     # ---------- read ----------
 
-    def read(
+    def _scan(
         self,
-        version: int | None = None,
+        man: dict[str, Any],
         buckets: list[int] | None = None,
-        include_tombstones: bool = False,
-    ) -> DataFrame:
-        """Read a snapshot (time travel via ``version``); ``buckets`` prunes the scan
-        to the files holding the named hash buckets — the storage-level analogue
-        of partition pruning, used by merge to avoid reading untouched data.
+        since: int = 0,
+        schema: T.StructType | None = None,
+    ) -> tuple[DataFrame, bool]:
+        """Every stored row of manifest ``man`` in the files that list a bucket
+        of ``buckets`` (all buckets when None) and that a commit after
+        ``since`` wrote, unresolved, as ``schema`` (default: the manifest's)
+        plus ``_deleted`` and ``_version``. Also returns whether a key may
+        have several rows: true when some bucket's scanned files come from
+        more than one commit (see ``_latest``).
 
-        A file may hold rows the read must not return: rows of buckets outside
-        ``buckets``, and dead rows of a bucket a later merge rewrote into a new
-        file. Only when a scanned file holds such rows does the scan filter on
-        its ``_bucket`` column against the file's live buckets (by
-        ``_metadata.file_name``); a read of files whose every bucket it wants
-        applies no filter.
-
-        Deletes are stored as tombstones (``_deleted`` flag + the delete's LSN) so a
-        late-arriving lower-LSN event can never resurrect a deleted key; the reader
-        view filters them out unless ``include_tombstones``."""
-        v = self.current_version() if version is None else version
-        vac = self._vacuum_info()
-        if vac is not None and v < int(vac["min_readable_version"]):
-            # clean time-travel boundary (VERDICT r4 wrong #3): the manifest
-            # may survive, but vacuum removed data dirs it references — fail
-            # here with the retention context, not inside the parquet scan.
-            raise ValueError(
-                f"version {v} vacuumed (retention={vac['keep_versions']}): "
-                f"earliest time-travelable version is {vac['min_readable_version']}"
-            )
-        man = self._manifest(v)
-        schema = T.StructType.fromJson(json.loads(man["schema"]))
+        A file may hold rows the scan must not return: rows of buckets outside
+        ``buckets``, and dead rows of a bucket a later fold or compaction
+        rewrote into a new file. Only when a scanned file holds such rows does
+        the scan filter on its ``_bucket`` column against the file's live
+        buckets (by ``_metadata.file_name``); a scan of files whose every
+        bucket it wants applies no filter."""
+        schema = schema or T.StructType.fromJson(json.loads(man["schema"]))
         stored = T.StructType(
             schema.fields
             + [
@@ -265,29 +270,74 @@ class ParquetLakeTable:
             ]
         )
         wanted = {str(b) for b in buckets} if buckets is not None else None
-        live: dict[str, set[int]] = {}  # file -> the buckets this read takes from it
+        live: dict[str, set[int]] = {}  # file -> the buckets this scan takes from it
+        several = False
         for b, fs in man["buckets"].items():
             if wanted is None or b in wanted:
+                fs = [f for f in fs if _commit_of(f) > since]
+                several |= len({_commit_of(f) for f in fs}) > 1
                 for f in fs:
                     live.setdefault(f, set()).add(int(b))
         if not live:
-            df = self.spark.createDataFrame([], stored)
-        else:
-            df = self.spark.read.schema(
-                T.StructType(stored.fields + [T.StructField("_bucket", T.IntegerType())])
-            ).parquet(*(os.path.join(self.path, f) for f in sorted(live)))
-            mixed = {
-                os.path.basename(f): sorted(bs)
-                for f, bs in live.items()
-                if set(man["files"][f]) - bs
-            }
-            if mixed:
-                name = F.col("_metadata.file_name")
-                keep = ~name.isin(list(mixed))
-                for n, bs in mixed.items():
-                    keep |= (name == n) & F.col("_bucket").isin(bs)
-                df = df.filter(keep)
-            df = df.drop("_bucket")
+            return self.spark.createDataFrame([], stored), False
+        df = self.spark.read.schema(
+            T.StructType(stored.fields + [T.StructField("_bucket", T.IntegerType())])
+        ).parquet(*(os.path.join(self.path, f) for f in sorted(live)))
+        mixed = {
+            os.path.basename(f): sorted(bs)
+            for f, bs in live.items()
+            if set(man["files"][f]) - bs
+        }
+        if mixed:
+            name = F.col("_metadata.file_name")
+            keep = ~name.isin(list(mixed))
+            for n, bs in mixed.items():
+                keep |= (name == n) & F.col("_bucket").isin(bs)
+            df = df.filter(keep)
+        return df.drop("_bucket"), several
+
+    def _latest(self, df: DataFrame) -> DataFrame:
+        """Each key's row with the highest ``_version``: its live row. Every
+        stored row beat every earlier row of its key when it was written, and
+        a commit writes at most one row per key, so the stamp orders a key's
+        rows and never ties."""
+        latest = Window.partitionBy(*self.key_cols).orderBy(F.desc("_version"))
+        return df.withColumn("_rn", F.row_number().over(latest)).filter("_rn = 1").drop("_rn")
+
+    def _check_readable(self, version: int) -> None:
+        vac = self._vacuum_info()
+        if vac is not None and version < int(vac["min_readable_version"]):
+            # clean time-travel boundary (VERDICT r4 wrong #3): the manifest
+            # may survive, but vacuum removed data dirs it references — fail
+            # here with the retention context, not inside the parquet scan.
+            raise ValueError(
+                f"version {version} vacuumed (retention={vac['keep_versions']}): "
+                f"earliest time-travelable version is {vac['min_readable_version']}"
+            )
+
+    def read(
+        self,
+        version: int | None = None,
+        buckets: list[int] | None = None,
+        include_tombstones: bool = False,
+    ) -> DataFrame:
+        """Read a snapshot (time travel via ``version``); ``buckets`` prunes the scan
+        to the files holding the named hash buckets — the storage-level analogue
+        of partition pruning.
+
+        A bucket whose files come from one commit reads as stored. A bucket
+        holding deltas of several commits may hold several rows of a key, and
+        the read keeps each key's highest ``_version`` (one exchange on the
+        keys); dead rows of rewritten buckets never reach it (``_scan``).
+
+        Deletes are stored as tombstones (``_deleted`` flag + the delete's LSN) so a
+        late-arriving lower-LSN event can never resurrect a deleted key; the reader
+        view filters them out unless ``include_tombstones``."""
+        v = self.current_version() if version is None else version
+        self._check_readable(v)
+        df, several = self._scan(self._manifest(v), buckets)
+        if several:
+            df = self._latest(df)
         if include_tombstones:
             return df
         return (
@@ -302,15 +352,15 @@ class ParquetLakeTable:
         INCREMENTALLY instead of re-scanning snapshots.
 
         Output = data columns + ``_change_type`` ('upsert' | 'delete') +
-        ``_commit_version``. Scale design: the scan is pruned to buckets whose
-        file list changed between the two manifests (``read`` drops the dead
-        rows a shared file keeps of a later-rewritten bucket — without that, a
-        dead row stamped after ``since_version`` would be emitted), and within
-        a rewritten bucket the per-row ``_version`` stamp filters out rows
-        that were merely carried through the copy-on-write rewrite — an
-        unchanged key is never emitted, and a late lower-LSN event that LOST
-        its merge produces no change row (the stored winner keeps its
-        original stamp)."""
+        ``_commit_version``. Scale design: a row stamped v lives in a file of
+        a commit >= v (a delta writes its rows at their stamp; a fold or
+        compaction moves rows forward with their stamps), so the scan reads
+        only the ``to`` snapshot's files of commits after ``since_version``
+        — a trickle consumer reads the last delta, not the table. The
+        per-row ``_version`` stamp then drops rows a fold or compaction
+        carried forward, and when the scanned files of a bucket span several
+        commits each key keeps its highest stamp. A late lower-LSN event that
+        LOST its merge was never written, so it produces no change row."""
         # INVARIANT (pinned by test_lake.test_read_changes_window_is_stable):
         # the window's upper bound and BOTH manifests resolve EAGERLY, here at
         # call time — never lazily inside the returned plan. A merge committing
@@ -329,8 +379,8 @@ class ParquetLakeTable:
                 f"current version {current}"
             )
         try:
-            since_man = self._manifest(since_version)["buckets"]
-            to_man = self._manifest(to_v)["buckets"]
+            self._manifest(since_version)  # the cursor is within manifest retention
+            man = self._manifest(to_v)
         except FileNotFoundError:
             # manifest pruned by vacuum(keep_manifests=...) — the cursor is
             # older than manifest retention (the Delta/Iceberg CDF convention):
@@ -341,19 +391,23 @@ class ParquetLakeTable:
                 "retention (manifest pruned by vacuum); re-bootstrap the consumer "
                 "with read_changes(0)"
             ) from None
-        changed = [int(b) for b, fs in to_man.items() if since_man.get(b) != fs]
-        df = self.read(version=to_v, buckets=changed, include_tombstones=True)
+        self._check_readable(to_v)
+        df, several = self._scan(man, since=since_version)
         # Plain comparison, NOT coalesce(_version, 0): every row the table
-        # stores carries a non-null _version (merge coalesces, overwrite
-        # stamps, compact preserves), and a bare predicate reaches the parquet
+        # stores carries a non-null _version (a delta and overwrite stamp,
+        # fold and compact preserve), and a bare predicate reaches the parquet
         # scan as PushedFilters [IsNotNull(_version), GreaterThan(_version, N)]
         # — rowgroup min/max stats then skip carried-forward cold rows inside
-        # rewritten buckets without decoding them. A coalesce-wrapped predicate
-        # is unpushable and would rescan every row of every changed bucket.
+        # folded buckets without decoding them. A coalesce-wrapped predicate
+        # is unpushable and would rescan every row of every scanned file.
         # (Pinned by tests/test_plans.py::test_read_changes_pushes_version_filter.)
+        # Filtering before resolution is exact: a key's live row has its
+        # highest stamp, so it passes whenever the key changed in the window.
+        df = df.filter(F.col("_version") > F.lit(since_version))
+        if several:
+            df = self._latest(df)
         return (
-            df.filter(F.col("_version") > F.lit(since_version))
-            .withColumn(
+            df.withColumn(
                 "_change_type",
                 F.when(
                     F.coalesce(F.col("_deleted"), F.lit(False)), F.lit("delete")
@@ -369,11 +423,10 @@ class ParquetLakeTable:
         return F.pmod(F.xxhash64(*self.key_cols), F.lit(self.num_buckets)).cast("int")
 
     def _write_buckets(
-        self, df: DataFrame, version: int, n_buckets: int, slices: int | None = None,
-        _top1: bool = False,
+        self, df: DataFrame, version: int, n_buckets: int, slices: int | None = None
     ) -> dict[str, list[int]]:
         """Write ``df`` as snapshot dir ``data/v{version}``, ONE part file per
-        write task — the one bucket writer of merge, overwrite and compact.
+        write task — the one bucket writer of merge, fold, overwrite and compact.
         Each row keeps its bucket as the int column ``_bucket``. ``n_buckets``
         is the number of buckets the frame spans; with ``slices > 1`` each
         bucket spreads over up to that many tasks by a key-salted ``_slice``
@@ -391,10 +444,6 @@ class ParquetLakeTable:
         Hadoop each file or dir created forks a ``chmod``. A file per bucket
         (32 files, dirs and ``.crc`` files for a 32-bucket commit) cost twice
         the wall of a file per task.
-
-        ``_top1`` (merge only): each task keeps, per key, the row with the
-        largest ``_ord``. A key's rows share one (bucket, slice), so this
-        top-1 needs no exchange beyond the repartition.
 
         The write reports which task held which buckets through an
         ``Observation`` on the write itself (no extra job), and a task's
@@ -417,10 +466,6 @@ class ParquetLakeTable:
                 F.pmod(F.xxhash64(F.lit("_slice"), *self.key_cols), F.lit(slices)),
             )
         df = df.repartition(n_tasks, *parts)
-        if _top1:
-            latest = Window.partitionBy(*parts, *self.key_cols).orderBy(F.desc("_ord"))
-            df = df.withColumn("_rn", F.row_number().over(latest)).filter("_rn = 1")
-            df = df.drop("_rn", "_ord")
         # spark_partition_id() must be a projected column: inside observe()
         # it is never initialized
         held = Observation()
@@ -445,7 +490,7 @@ class ParquetLakeTable:
         touched_buckets: list[int] | None = None,
         prof: Profiler | None = None,
     ) -> MergeResult:
-        """Keyed LWW MERGE of a change batch into the table.
+        """Keyed LWW MERGE of a change batch into the table, as an appended delta.
 
         Semantics (the reference's upsert truth table, RedshiftLoadStrategy.java:21-75,
         refined per-event):
@@ -454,35 +499,39 @@ class ParquetLakeTable:
             (idempotent MERGE guard — replay can never regress state);
           - a winning D removes the row; I/U upsert it.
 
-        Physical plan: the table payload crosses ONE exchange, the bucket
-        repartition of the write. The batch first collapses to one row per
-        key (``row_number() = 1`` by lsn and op rank — a map-side partial
-        top-1, so a hot key collapses before the batch's key exchange), is
-        unioned with the touched buckets' current rows, and the union goes to
-        ``_write_buckets``, whose write tasks each keep every key's winner by
-        the packed ``_ord`` among their own rows. Exact-duplicate events keep
-        one row there too (``row_number`` picks one of a tie).
+        Physical plan: the batch collapses to one row per key
+        (``row_number() = 1`` by lsn and op rank — a map-side partial top-1,
+        so a hot key collapses before the batch's key exchange; exact
+        duplicates keep one row). A ``left_anti`` join on the keys then drops
+        every batch winner that some stored row of its key beats. The stored
+        side is a narrow scan of the touched buckets (key columns, lsn and
+        ``_deleted`` only, unresolved): the stored rows' ords only grow with
+        ``_version``, so beating them all is beating the live row. The kept
+        winners are written by ``_write_buckets`` as this commit's delta,
+        stamped ``_version`` = the commit, and their files are added to the
+        touched buckets' file lists. The table's payload is never read or
+        rewritten.
 
-        The merge rewrites exactly its touched buckets, each write task into
-        one new file. A touched bucket's rows left in an older file shared
-        with untouched buckets are dead: the manifest no longer lists that
-        file for the bucket, and ``read`` drops them. ``stats`` reports
-        ``buckets_rewritten`` and ``files_written``.
+        After its own commit, the merge folds every bucket whose files span
+        more than ``_FOLD_AT`` commits (a separate commit; see ``compact``).
+        ``stats`` reports ``buckets_rewritten`` (the touched buckets),
+        ``files_written`` (the delta's files) and ``buckets_folded``.
 
         ``touched_buckets`` is the caller's set of buckets the batch's keys
         hash to (it skips the probe scan). It must be complete: a merge that
         writes a bucket outside it raises ``ValueError`` before committing,
-        because that bucket's current rows were never read. Without it, a
+        because that bucket's stored rows were never compared. Without it, a
         batch holding an invalid row (``schema.valid_event``) raises
         ``ValueError`` before anything is written.
 
-        ``prof`` (``apply_batch`` hands in its own) receives three scopes:
-        ``plan`` (manifest read, schema unification, the touched-bucket probe
-        when no hint is given, building the plan; an empty batch commits its
-        watermark here and stops), ``write`` (the one write action) and
-        ``commit`` (the manifest). The bucket read, the batch's top-1 and the
-        per-task winner pick run inside the write action, so the driver
-        cannot time them apart from it.
+        ``prof`` (``apply_batch`` hands in its own) receives four scopes:
+        ``plan`` (manifest read, schema unification — with the table's
+        rewrite when the batch changes a column's type —, the touched-bucket
+        probe when no hint is given, building the plan; an empty batch commits its
+        watermark here and stops), ``write`` (the one write action: stored
+        scan, batch top-1, anti-join and delta write run inside it),
+        ``commit`` (the manifest) and ``fold`` (the fold check, and the fold
+        when one is due).
         """
         prof = prof or Profiler()
         with prof.scope("plan"):
@@ -503,6 +552,17 @@ class ParquetLakeTable:
                 f for f in updates.schema.fields if f.name not in (self.op_col,)
             ]
             new_schema = unify_schemas(table_schema, T.StructType(batch_payload_fields))
+            if man["buckets"] and any(
+                f.dataType != new_schema[f.name].dataType for f in table_schema.fields
+            ):
+                # A stored file reads only as types parquet can widen its own
+                # to (int as long or double, never long as double or a number
+                # as string), so a batch that changes a column's type first
+                # rewrites the table in the new types, as a commit of its own.
+                cur_version = self._rewrite(
+                    man, sorted(int(b) for b in man["buckets"]), None, schema=new_schema
+                )
+                man = self._manifest(cur_version)
 
             batch = conform_to(
                 updates, new_schema, keep_extra=[self.op_col]
@@ -534,74 +594,104 @@ class ParquetLakeTable:
                 version = self._commit_next(man, batch_id=batch_id, query_id=query_id)
                 return MergeResult(True, version, batch_id, [], {"rows": 0})
 
-            current = conform_to(
-                self.read(version=cur_version, buckets=touched, include_tombstones=True),
-                new_schema,
-                keep_extra=["_deleted", "_version"],
-            )
-
-            # MERGE as batch top-1, union, then a second LWW pick in the write tasks:
-            # current rows enter with their stored lsn and op NULL (or 'D' for
-            # tombstones); at equal lsn the incoming event wins (src tiebreak) so
-            # replaying the same batch is idempotent. Deletes become tombstones (kept
-            # with the delete's LSN) so out-of-order/late lower-LSN events cannot
-            # resurrect a deleted key — the streaming refinement of the reference's
-            # delete-then-insert merge.
-            #
             # The LWW ordering (lsn, op_rank, src) packs into ONE long:
             # lsn*8 + op_rank*2 + src (op_rank ∈ 0..3, src ∈ 0..1; lsn < 2^60 by
-            # contract), so each pick sorts on one long, not a struct.
+            # contract). An incoming winner's ord is odd (src 1); a stored row's
+            # is even, lsn*8 + 6 for a tombstone (a stored 'D') and lsn*8 for a
+            # live row (op rank 0), so at equal lsn an incoming event beats a
+            # live row (replaying a batch is idempotent) and only a 'D' beats a
+            # tombstone. Deletes become tombstones (kept with the delete's LSN)
+            # so out-of-order/late lower-LSN events cannot resurrect a deleted
+            # key — the streaming refinement of the reference's
+            # delete-then-insert merge.
             new_version = cur_version + 1
             data_cols = [f.name for f in new_schema.fields]
             packed = F.col(self.lsn_col) * 8 + OP_RANK_EXPR(self.op_col) * 2
             latest = Window.partitionBy(*self.key_cols).orderBy(packed.desc())
-            # _version rides through the merge: current rows keep their stamp, NULL
-            # for incoming events coalesces to the new commit version — so a row's
-            # stamp moves iff an incoming event won (the change-feed contract of
-            # read_changes).
-            upd_tagged = (
+            winners = (
                 batch.withColumn("_rn", F.row_number().over(latest))
                 .filter("_rn = 1")
-                .select(*data_cols, self.op_col, F.lit(None).cast("long").alias("_version"))
-                .withColumn("_ord", packed + 1)
+                .select(*data_cols, self.op_col, (packed + 1).alias("_ord"))
             )
-            cur_tagged = current.select(
+            # The schema is the merged one: an empty table's manifest schema
+            # may lack the batch's key columns.
+            stored, _ = self._scan(man, touched, schema=new_schema)
+            stored = stored.select(
+                *[F.col(k).alias(f"_s_{k}") for k in self.key_cols],
+                (
+                    F.col(self.lsn_col) * 8
+                    + F.when(F.coalesce(F.col("_deleted"), F.lit(False)), 6).otherwise(0)
+                ).alias("_sord"),
+            )
+            beaten = [F.col(k) == F.col(f"_s_{k}") for k in self.key_cols]
+            beaten.append(F.col("_sord") >= F.col("_ord"))
+            delta = winners.join(stored, on=beaten, how="left_anti").select(
                 *data_cols,
-                F.when(F.coalesce(F.col("_deleted"), F.lit(False)), F.lit("D"))
-                .otherwise(F.lit(None).cast("string"))
-                .alias(self.op_col),
-                F.col("_version"),
-            ).withColumn("_ord", packed)
-            merged = (
-                cur_tagged.unionByName(upd_tagged)
-                .withColumn("_deleted", F.col(self.op_col) == "D")
-                .withColumn("_version", F.coalesce(F.col("_version"), F.lit(new_version)))
-                .drop(self.op_col)
+                (F.col(self.op_col) == "D").alias("_deleted"),
+                F.lit(new_version).cast("long").alias("_version"),
             )
 
-        # Write only the touched buckets of the new snapshot; untouched buckets
-        # carry forward by reference. Each write task keeps every key's winner.
         with prof.scope("write"):
-            written = self._write_buckets(merged, new_version, len(touched), _top1=True)
+            written = self._write_buckets(delta, new_version, len(touched))
         stray = {b for bs in written.values() for b in bs} - set(touched)
         if stray:
             raise ValueError(
                 f"merge: the batch has keys in buckets {sorted(stray)} "
-                "outside touched_buckets; committing would replace those buckets "
-                "with the batch's rows alone. Pass the complete bucket set or "
-                "touched_buckets=None."
+                "outside touched_buckets; their stored rows were never compared, "
+                "so committing could let a stale event win. Pass the complete "
+                "bucket set or touched_buckets=None."
             )
         with prof.scope("commit"):
             self._commit_next(
-                man, written, replaced=touched, schema=new_schema,
-                batch_id=batch_id, query_id=query_id,
+                man, written, schema=new_schema, batch_id=batch_id, query_id=query_id
             )
+        with prof.scope("fold"):
+            folded = self._fold(new_version)
         return MergeResult(
             True, new_version, batch_id, touched,
-            {"buckets_rewritten": len(touched), "files_written": len(written)},
+            {
+                "buckets_rewritten": len(touched),
+                "files_written": len(written),
+                "buckets_folded": folded,
+            },
         )
 
     # ---------- maintenance ----------
+
+    def _rewrite(
+        self,
+        man: dict[str, Any],
+        buckets: list[int],
+        slices: int | None,
+        schema: T.StructType | None = None,
+        **stats: Any,
+    ) -> int:
+        """Rewrite ``buckets`` of snapshot ``man`` as their resolved rows in
+        one new commit — the body of the fold, of ``compact`` and of a merge's
+        type change (``schema``: cast every row to it and commit it). Row
+        content, tombstones and ``_version`` stamps are kept as they are, so
+        the change feed emits nothing for the commit. The buckets' rows left
+        in older files shared with other buckets become dead rows. Returns
+        the new version."""
+        df = self.read(version=man["version"], buckets=buckets, include_tombstones=True)
+        if schema is not None:
+            df = conform_to(df, schema, keep_extra=["_deleted", "_version"])
+        written = self._write_buckets(df, man["version"] + 1, len(buckets), slices)
+        return self._commit_next(man, written, replaced=buckets, schema=schema, **stats)
+
+    def _fold(self, version: int) -> int:
+        """Fold every bucket of snapshot ``version`` whose files come from more
+        than ``_FOLD_AT`` commits, so no read resolves more commits than that.
+        Returns the number of buckets folded."""
+        man = self._manifest(version)
+        due = sorted(
+            int(b)
+            for b, fs in man["buckets"].items()
+            if len({_commit_of(f) for f in fs}) > _FOLD_AT
+        )
+        if due:
+            self._rewrite(man, due, None, folded_buckets=len(due))
+        return len(due)
 
     def overwrite(self, df: DataFrame) -> MergeResult:
         """CLOBBER strategy (full refresh) — the reference's deleteAndCopy
@@ -609,7 +699,11 @@ class ParquetLakeTable:
         man = self._manifest(self.current_version())
         new_version = man["version"] + 1
         schema = T.StructType([f for f in df.schema.fields if f.name != self.op_col])
-        stamped = df.drop(self.op_col).withColumn("_version", F.lit(new_version))
+        stamped = (
+            df.drop(self.op_col)
+            .withColumn("_deleted", F.lit(False))
+            .withColumn("_version", F.lit(new_version))
+        )
         written = self._write_buckets(stamped, new_version, self.num_buckets, 1)
         self._commit_next(
             man, written, replaced=man["buckets"], schema=schema, clobber=True
@@ -618,16 +712,15 @@ class ParquetLakeTable:
         return MergeResult(True, new_version, None, buckets, {})
 
     def compact(self, max_files_per_bucket: int = 1) -> MergeResult:
-        """Small-file compaction (Iceberg: rewrite_data_files). Hot-bucket
-        write slicing can leave a bucket in several part files; compaction
-        rewrites any bucket that more than ``max_files_per_bucket`` (>= 1)
-        files list in the manifest into at most that many files and commits
-        a new snapshot. The rewritten buckets' rows in the old files become
-        dead rows, as after a merge. Row content — including tombstones and the
-        per-row ``_version`` change-feed stamps — is preserved byte-for-byte, so
-        ``read_changes`` across a compaction emits NOTHING for compacted
-        buckets (pointer moved, stamps did not). Untouched buckets carry
-        forward by reference, same as merge."""
+        """Small-file compaction (Iceberg: rewrite_data_files). Deltas and
+        hot-bucket write slicing leave a bucket in several part files;
+        compaction rewrites any bucket that more than ``max_files_per_bucket``
+        (>= 1) files list in the manifest into at most that many files of one
+        commit, resolved (``compact(1)`` folds every bucket with a delta).
+        Row content — including tombstones and the per-row ``_version``
+        change-feed stamps — is preserved byte-for-byte, so ``read_changes``
+        across a compaction emits NOTHING for compacted buckets (files moved,
+        stamps did not). Untouched buckets carry forward by reference."""
         if max_files_per_bucket < 1:
             raise ValueError(
                 f"compact: max_files_per_bucket must be >= 1, got {max_files_per_bucket}"
@@ -639,12 +732,8 @@ class ParquetLakeTable:
         ]
         if not needs:
             return MergeResult(False, cur_version, None, [], {"compacted": 0})
-        df = self.read(version=cur_version, buckets=needs, include_tombstones=True)
-        written = self._write_buckets(
-            df, cur_version + 1, len(needs), max_files_per_bucket
-        )
-        new_version = self._commit_next(
-            man, written, replaced=needs, compacted_buckets=len(needs)
+        new_version = self._rewrite(
+            man, needs, max_files_per_bucket, compacted_buckets=len(needs)
         )
         return MergeResult(True, new_version, None, needs, {"compacted": len(needs)})
 
@@ -668,10 +757,9 @@ class ParquetLakeTable:
           raise a clean "version vacuumed" error instead of an opaque
           missing-path failure inside the Spark scan (VERDICT r4 wrong #3);
         - change-feed cursors are bounded by the looser ``keep_manifests``
-          (default 64; ``None`` keeps all): ``read_changes(since)`` needs the
-          ``since`` manifest for bucket diffing only — the data it reads is
-          always the ``to`` snapshot's, so any cursor WITHIN manifest
-          retention survives vacuum; one older than it must re-bootstrap with
+          (default 64; ``None`` keeps all): ``read_changes(since)`` reads only
+          the ``to`` snapshot's files, so any cursor WITHIN manifest
+          retention (its ``since`` manifest exists) survives vacuum; one older than it must re-bootstrap with
           ``read_changes(0)`` (the Delta/Iceberg CDF convention).
         Returns the number of data directories removed."""
         if keep_manifests is not None and keep_manifests < keep_versions:

@@ -330,3 +330,24 @@ def test_metrics_record_per_commit_not_per_replay(spark, tmp_table_path, monkeyp
         snap = os.path.join(tmp_table_path, "data", f"v{r['version']:012d}")
         on_disk = [f for f in os.listdir(snap) if f.endswith(".parquet")]
         assert r["files_written"] == len(on_disk) > 0, (r, on_disk)
+
+
+def test_fold_is_reported_in_the_metrics_record(spark, tmp_table_path, monkeypatch):
+    """A merge that folds reports it: ``buckets_folded`` in its stats and its
+    metrics record, and a ``merge.fold`` phase in the timings. The fold is a
+    commit of its own after the batch's, and the state stays the oracle's."""
+    from pocket_etl_spark import lake
+
+    monkeypatch.setattr(lake, "_FOLD_AT", 1)  # fold a bucket once it spans 2 commits
+    events = gen_change_events(spark, n_events=600, n_keys=40, seed=31)
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
+    first = apply_batch(events.filter("lsn <= 300"), table, batch_id=0)
+    assert first.merge.stats["buckets_folded"] == 0
+    res = apply_batch(events.filter("lsn > 300"), table, batch_id=1)
+    folded = res.merge.stats["buckets_folded"]
+    assert folded > 0 and table.current_version() == res.merge.version + 1
+    assert res.timings["merge.fold"] > 0
+    rows = sorted(table.read_metrics().collect(), key=lambda r: r["version"])
+    assert [(r["version"], r["buckets_folded"]) for r in rows] == [(1, 0), (2, folded)]
+    assert "merge.fold" in rows[1]["timings"]
+    assert_state_equals_oracle(table, events.toPandas())

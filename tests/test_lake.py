@@ -49,6 +49,8 @@ def test_vacuum_drops_unreachable_versions(spark, tmp_table_path):
     ev = _events(spark, n=600, keys=30).drop("ts", "extras")
     for i, (lo, hi) in enumerate([(1, 200), (201, 400), (401, 600)]):
         table.merge(ev.filter(f"lsn between {lo} and {hi}"), batch_id=i)
+    # merges append deltas, so every commit's files stay live until a fold
+    assert table.compact(max_files_per_bucket=1).committed
     data_root = os.path.join(tmp_table_path, "data")
     before = len(os.listdir(data_root))
     removed = table.vacuum(keep_versions=1)
@@ -709,3 +711,147 @@ def test_rewritten_bucket_leaves_no_dead_rows_in_reads(spark, tmp_table_path):
     check()
     assert table.vacuum(keep_versions=2) > 0
     check()
+
+
+def test_deleted_flag_is_never_null(spark, tmp_table_path):
+    """Every stored row carries a two-valued ``_deleted``: a merge, an
+    overwrite (which has no deletes) and a fold all write true or false."""
+    from pocket_etl_spark.cdc.dedupe import lww_dedupe
+
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
+
+    def nulls():
+        return table.read(include_tombstones=True).filter("_deleted IS NULL").count()
+
+    table.merge(_events(spark, n=300, keys=40).drop("ts", "extras"), batch_id=0)
+    assert nulls() == 0
+    fresh = lww_dedupe(_events(spark, n=200, keys=30, seed=9).drop("ts", "extras"), ["repo", "path"])
+    table.overwrite(fresh.filter("op <> 'D'"))
+    assert nulls() == 0
+    table.merge(_events(spark, n=300, keys=40, seed=12).drop("ts", "extras"), batch_id=1)
+    assert nulls() == 0
+    assert table.compact(max_files_per_bucket=1).committed
+    assert nulls() == 0
+
+
+def test_type_change_rewrites_stored_files(spark, tmp_table_path):
+    """Parquet reads a stored column only as a type it can widen its own to
+    (int as long or double, not long as double or a number as string). A
+    batch that changes a column's type must leave every stored row readable
+    in the new type, in buckets it touches and in buckets it does not."""
+    schema = "lsn long, op string, repo string, path string, score {}"
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=8)
+    first = [(i, "I", "r", f"p{i}", i) for i in range(40)]
+    table.merge(spark.createDataFrame(first, schema.format("long")), batch_id=0)
+    table.merge(spark.createDataFrame([(100, "U", "r", "p0", 0.5)], schema.format("double")), batch_id=1)
+    got = {r["path"]: r["score"] for r in table.read().collect()}
+    assert got == {**{f"p{i}": float(i) for i in range(40)}, "p0": 0.5}
+    assert table.schema()["score"].dataType.simpleString() == "double"
+    table.merge(spark.createDataFrame([(101, "U", "r", "p1", "x")], schema.format("string")), batch_id=2)
+    got = {r["path"]: r["score"] for r in table.read().collect()}
+    assert got == {**{f"p{i}": str(float(i)) for i in range(40)}, "p0": "0.5", "p1": "x"}
+    assert {r["path"] for r in table.read_changes(1).collect()} == {"p0", "p1"}
+
+
+def test_deltas_and_fold_match_lww(spark, tmp_table_path):
+    """Merges append deltas and a fold rewrites a bucket once its files span
+    more than ``_FOLD_AT`` commits. Through a dozen merges (late lower-LSN
+    events, a delete then a re-insert, exact duplicates, an int -> double
+    widening) every read must equal the LWW state of all events: the
+    snapshot, the tombstone view, bucket-pruned reads and every change-feed
+    window ``(s, v]`` of every commit, and the fold's window is empty."""
+    from pocket_etl_spark.cdc.dedupe import OP_RANK, lww_dedupe
+    from pocket_etl_spark.lake import _FOLD_AT
+
+    keys = ["repo", "path"]
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=8)
+    paths = [f"p{i:02d}" for i in range(40)]
+    bucket = {
+        r["path"]: r["b"]
+        for r in spark.createDataFrame([("r", p) for p in paths], "repo string, path string")
+        .select("path", table._bucket_expr().alias("b")).collect()
+    }
+    hot = paths[0]  # updated in every batch, so its bucket gets a delta per commit
+    # a key no regular update or late event of the batches below touches
+    cold = next(p for i, p in enumerate(paths) if i > 16 and i % 5 in (0, 4) and bucket[p] != bucket[hot])
+
+    def ev(lsn, op, path, score=None):
+        return (lsn, op, "r", path, None if op == "D" else f"{path}@{lsn}", score)
+
+    batches = [[ev(10 + i, "I", p, i) for i, p in enumerate(paths)]]
+    for n in range(1, 12):
+        base = 100 * n
+        b = [ev(base, "U", hot, n)]
+        b += [ev(base + 1 + i, "U", p, n) for i, p in enumerate(paths[1 + n % 3 :: 5])]
+        b.append(ev(5, "U", paths[n + 5]))  # late: loses to the stored row
+        batches.append(b)
+    batches[2] += [ev(250, "D", cold)]
+    batches[3] += [ev(240, "U", cold)]  # late lower-LSN event after the delete
+    batches[4] += [ev(250, "U", cold)]  # equal LSN: loses to the stored tombstone
+    batches[5] += [ev(450, "I", cold, 5)]  # re-insert after the delete
+    batches[5] += [ev(520, "U", paths[7], 5)] * 2  # exact duplicates in one batch
+    batches[6] += [ev(520, "U", paths[7], 5)]  # and replayed by a later batch
+    widen_at = 10  # score arrives as double from this batch on
+
+    state = {}  # path -> (lsn, op, content, score, version)
+    events = []
+
+    def rank(e):
+        return (e[0], OP_RANK.get(e[1], 0))
+
+    def check():
+        v = table.current_version()
+        want = lww_dedupe(
+            spark.createDataFrame([e[:5] for e in events], "lsn long, op string, repo string, path string, content string"),
+            keys,
+        ).collect()
+        assert {(r["path"], r["lsn"], r["op"] == "D") for r in want} == {
+            (p, s[0], s[1] == "D") for p, s in state.items()
+        }
+        rows = table.read(include_tombstones=True).collect()
+        assert len(rows) == len(state)
+        assert {
+            (r["path"], r["lsn"], r["_deleted"], r["content"], r["score"], r["_version"]) for r in rows
+        } == {(p, s[0], s[1] == "D", s[2], s[3], s[4]) for p, s in state.items()}
+        alive = sorted((p, s[0], s[2]) for p, s in state.items() if s[1] != "D")
+        assert sorted((r["path"], r["lsn"], r["content"]) for r in table.read().collect()) == alive
+        for b in {bucket[hot], bucket[cold]}:
+            got = sorted((r["path"], r["lsn"], r["content"]) for r in table.read(buckets=[b]).collect())
+            assert got == [k for k in alive if bucket[k[0]] == b], b
+        windows = None
+        for s in range(v):
+            w = table.read_changes(s, v).select(F.lit(s).alias("s"), "path", "lsn", "_change_type", "_commit_version")
+            windows = w if windows is None else windows.unionByName(w)
+        got = sorted(tuple(r) for r in windows.collect())
+        assert got == sorted(
+            (s, p, st[0], "delete" if st[1] == "D" else "upsert", st[4])
+            for s in range(v) for p, st in state.items() if st[4] > s
+        ), v
+
+    for n, batch in enumerate(batches):
+        typ = "double" if n >= widen_at else "int"
+        cast = float if n >= widen_at else int
+        rows = [(*e[:5], None if e[5] is None else cast(e[5])) for e in batch]
+        df = spark.createDataFrame(rows, f"lsn long, op string, repo string, path string, content string, score {typ}")
+        res = table.merge(df, batch_id=n)
+        events.extend(batch)
+        win = {}
+        for e in batch:
+            if e[3] not in win or rank(e) > rank(win[e[3]]):
+                win[e[3]] = e
+        for p, e in win.items():
+            s = state.get(p)
+            # the MERGE guard: newer lsn wins; at equal lsn the incoming event
+            # wins unless the stored row is a tombstone and it is no delete
+            if s is None or e[0] > s[0] or (e[0] == s[0] and (s[1] != "D" or e[1] == "D")):
+                score = None if e[5] is None else float(e[5])
+                state[p] = (e[0], e[1], e[4], score, res.version)
+        if res.stats["buckets_folded"]:
+            assert table.current_version() == res.version + 1
+            assert table.read_changes(res.version, res.version + 1).count() == 0
+            man = table._manifest(table.current_version())
+            assert len({f.split("/")[1] for f in man["buckets"][str(bucket[hot])]}) == 1
+        check()
+    assert any(
+        table._manifest(v)["stats"].get("folded_buckets") for v in range(1, table.current_version() + 1)
+    ), f"no fold in {len(batches)} merges (_FOLD_AT={_FOLD_AT})"

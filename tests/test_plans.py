@@ -177,15 +177,16 @@ def test_read_changes_pushes_version_filter(spark, tmp_path):
     assert "_version" in pushed and "GreaterThan" in pushed, f.text[:2500]
 
 
-def _plan_nodes(text):
-    """Formatted-plan node id -> (name, Arguments line) from its detail section."""
-    nodes = {}
-    for m in re.finditer(
-        r"^\((\d+)\) (\w+)[^\n]*\n(.*?)(?=^\(\d+\) |\Z)", text, flags=re.MULTILINE | re.DOTALL
-    ):
-        arg = re.search(r"^Arguments: (.*)$", m.group(3), flags=re.MULTILINE)
-        nodes[m.group(1)] = (m.group(2), arg.group(1) if arg else "")
-    return nodes
+def _plan_blocks(text):
+    """Formatted-plan node id -> (name, detail lines) from its detail section."""
+    return {
+        m.group(1): (m.group(2), m.group(3))
+        for m in re.finditer(
+            r"^\((\d+)\) (\w+)[^\n]*\n(.*?)(?=^\(\d+\) |\Z)",
+            text,
+            flags=re.MULTILINE | re.DOTALL,
+        )
+    }
 
 
 @pytest.mark.parametrize(
@@ -193,13 +194,15 @@ def _plan_nodes(text):
     [(4, ["_bucket", "_slice"]), (16, ["_bucket"])],
     ids=["sliced", "unsliced"],
 )
-def test_merge_has_one_table_sized_exchange(spark, tmp_path, monkeypatch, num_buckets, write_cols):
-    """The merge moves the table payload through ONE exchange: the write's
-    bucket repartition (on ``_bucket``, plus ``_slice`` when the touched
-    buckets are fewer than the cores and so split into slices), inside which
-    every task keeps each key's winner. The only other exchange is the
-    batch's key shuffle, fed by a map-side partial top-1 so a hot key
-    collapses before it. No join, no winner aggregate."""
+def test_merge_reads_no_stored_payload(spark, tmp_path, monkeypatch, num_buckets, write_cols):
+    """A merge appends its batch's winners without reading the table's
+    payload. The stored side is a narrow scan of the touched buckets (key
+    columns, lsn and ``_deleted``), and only two exchanges carry ``content``:
+    the batch's key exchange, fed by a map-side partial top-1 so a hot key
+    collapses before it, and the delta's write repartition (on ``_bucket``,
+    plus ``_slice`` when the touched buckets are fewer than the cores)."""
+    import os
+
     from pyspark.sql import DataFrameWriter
 
     from pocket_etl_spark.datagen import gen_change_events
@@ -219,21 +222,29 @@ def test_merge_has_one_table_sized_exchange(spark, tmp_path, monkeypatch, num_bu
     res = table.merge(ev.filter("lsn > 1000"), batch_id=1)
     assert res.touched_buckets == list(range(num_buckets))
     [text] = plans
+    blocks = _plan_blocks(text)
 
-    nodes = _plan_nodes(text)
-    assert not [n for n, _ in nodes.values() if "Join" in n or "Aggregate" in n], text
+    data_dir = os.path.join(table.path, "data")
+    stored = [d for n, d in blocks.values() if n == "Scan" and data_dir in d]
+    assert stored, text
+    for detail in stored:
+        schema = re.search(r"^ReadSchema: struct<(.*)>$", detail, flags=re.MULTILINE).group(1)
+        assert {c.split(":")[0] for c in schema.split(",")} == {"repo", "path", "lsn", "_deleted"}, schema
 
-    def hash_cols(args):
-        inner = args.split("hashpartitioning(", 1)[1].split(")", 1)[0]
+    def hash_cols(detail):
+        inner = detail.split("hashpartitioning(", 1)[1].split(")", 1)[0]
         return re.findall(r"(\w+)#\d+", inner)
 
-    exchanges = {i: a for i, (n, a) in nodes.items() if n == "Exchange"}
-    assert len(exchanges) == 2, text
-    [write] = [i for i, a in exchanges.items() if "REPARTITION_BY_NUM" in a]
-    assert hash_cols(exchanges[write]) == write_cols, exchanges[write]
-    [batch] = [i for i in exchanges if i != write]
-    assert hash_cols(exchanges[batch]) == ["repo", "path"], exchanges[batch]
+    payload = {
+        i: d for i, (n, d) in blocks.items()
+        if n.endswith("Exchange") and re.search(r"^Input \[\d+\]: \[.*\bcontent#", d, flags=re.MULTILINE)
+    }
+    assert len(payload) == 2, text
+    [write] = [i for i, d in payload.items() if "REPARTITION_BY_NUM" in d]
+    assert hash_cols(payload[write]) == write_cols, payload[write]
+    [batch] = [i for i in payload if i != write]
+    assert hash_cols(payload[batch]) == ["repo", "path"], payload[batch]
     # the batch exchange's child in the plan tree is the partial top-1
     child = re.search(rf"Exchange \({batch}\)\n[ :|+-]*(\w+) \((\d+)\)", text)
     assert child and child.group(1) == "WindowGroupLimit", text
-    assert nodes[child.group(2)][1].endswith("Partial"), text
+    assert "Partial" in blocks[child.group(2)][1], text

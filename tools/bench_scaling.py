@@ -447,13 +447,13 @@ backends). The local[2]→local[8] history remains in `BENCH/scaling_runs.jsonl`
 `BENCH/APPENDIX.md`.
 
 Engine properties that carry the scaling to a real cluster:
-- the table payload crosses one exchange per merge, the bucket repartition the
-  write needs anyway; each write task keeps its keys' winners by a packed-long
-  order (lake.py merge);
+- a merge appends only its batch's winners that beat the stored state, judged
+  against a narrow scan of keys and LSNs; the table payload is never re-read or
+  rewritten, and a fold bounds the commits a read resolves (lake.py merge);
 - a map-side partial top-1 collapses hot keys before the batch's key exchange — the
   hot-4N wall {hot_vs_uniform_4n}
   despite half the input hitting one key (cdc/dedupe.py; SURVEY.md §4.2.2);
-- bucket-level copy-on-write bounds each batch's write amplification;
+- a merge writes O(batch) bytes, not O(table): its write amplification is its winners;
 - all driver-side steps are O(num_buckets + num_promoted_keys), independent of
   event volume.
 
