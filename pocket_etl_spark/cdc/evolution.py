@@ -20,34 +20,13 @@ EXTRAS_COL = "extras"
 PROMOTE_PREFIX = "new_col_"
 
 
-def discover_promotable_keys(df: DataFrame, extras_col: str = EXTRAS_COL, prefix: str = PROMOTE_PREFIX) -> list[str]:
-    """Distinct tunnel-field names in the batch that are marked for promotion.
-
-    One distributed aggregate over map_keys — no driver-side row iteration."""
-    if extras_col not in df.columns:
-        return []
-    rows = (
-        df.select(F.explode(F.map_keys(F.col(extras_col))).alias("k"))
-        .filter(F.col("k").startswith(prefix))
-        .distinct()
-        .collect()
-    )
-    return sorted(r["k"] for r in rows)
-
-
-def promote_extras(
-    df: DataFrame,
-    keys: list[str] | None = None,
-    extras_col: str = EXTRAS_COL,
-    prefix: str = PROMOTE_PREFIX,
-) -> DataFrame:
-    """Lift tunnel fields out of the extras map into real (string) columns.
+def promote_extras(df: DataFrame, keys: list[str], extras_col: str = EXTRAS_COL) -> DataFrame:
+    """Lift the tunnel fields ``keys`` out of the extras map into real (string)
+    columns (``apply_batch`` finds the batch's ``new_col_*`` keys in its stats pass).
 
     Type refinement happens later via the widen lattice if a typed batch arrives;
     strings are the safe landing type (reference parity: all tunnel values are
     Jackson strings)."""
-    if keys is None:
-        keys = discover_promotable_keys(df, extras_col, prefix)
     out = df
     for k in keys:
         out = out.withColumn(k, F.col(extras_col).getItem(k))

@@ -53,6 +53,7 @@ the atomic pointer swap makes readers never see a partial commit.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -447,10 +448,10 @@ class ParquetLakeTable:
 
         The write reports which task held which buckets through an
         ``Observation`` on the write itself (no extra job), and a task's
-        ``part-NNNNN`` number is its partition id. Returns every file the
-        write created (relative to the table root) → the buckets written into
-        it; Spark writes an empty file when task 0 gets no rows, and that file
-        holds none."""
+        ``part-NNNNN`` number is its partition id. Spark writes an empty file
+        when task 0 gets no rows; a file holding no bucket is removed with its
+        ``.crc``. Returns every file left (relative to the table root) → the
+        buckets written into it."""
         par = self.spark.sparkContext.defaultParallelism
         if slices is None:
             slices = max(1, min(8, par // n_buckets))
@@ -477,9 +478,14 @@ class ParquetLakeTable:
             for f in os.listdir(out_dir)
             if f.startswith("part-")
         }
-        files: dict[str, list[int]] = {f: [] for f in part.values()}
+        files: dict[str, list[int]] = {}
         for task, b in sorted(held.get["held"]):
-            files[part[task]].append(b)
+            files.setdefault(part[task], []).append(b)
+        for f in set(part.values()) - files.keys():
+            name = os.path.basename(f)
+            os.remove(os.path.join(out_dir, name))
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(out_dir, f".{name}.crc"))
         return files
 
     def merge(

@@ -323,12 +323,16 @@ def test_metrics_record_per_commit_not_per_replay(spark, tmp_table_path, monkeyp
         (300, 1, 300), (300, 301, 600)
     ]
     assert rows[0]["buckets_rewritten"] == len(res.merge.touched_buckets)
-    # files_written is each commit's part files on disk
+    # files_written is each commit's part files on disk, and every one of
+    # them is in the commit's manifest (no empty file nothing references)
     import os
 
     for r in rows:
-        snap = os.path.join(tmp_table_path, "data", f"v{r['version']:012d}")
+        rel = os.path.join("data", f"v{r['version']:012d}")
+        snap = os.path.join(tmp_table_path, rel)
         on_disk = [f for f in os.listdir(snap) if f.endswith(".parquet")]
+        listed = [f for f in table._manifest(r["version"])["files"] if os.path.dirname(f) == rel]
+        assert sorted(os.path.join(rel, f) for f in on_disk) == sorted(listed), r
         assert r["files_written"] == len(on_disk) > 0, (r, on_disk)
 
 

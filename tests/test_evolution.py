@@ -56,7 +56,7 @@ def test_promote_extras_lifts_tunnel_keys(spark):
     ev = with_schema_evolution(
         gen_change_events(spark, 200, 20, seed=4), from_lsn=100
     )
-    out = promote_extras(ev)
+    out = promote_extras(ev, keys=["new_col_score"])
     assert "new_col_score" in out.columns
     pdf = out.select("lsn", "new_col_score").toPandas()
     assert pdf[pdf.lsn < 100]["new_col_score"].isna().all()
