@@ -57,7 +57,8 @@ def apply_batch(
     ``table.read_metrics()``: query_id, batch_id, version, rows_in (every
     event), rows_bad, rows_applied (the events handed to the merge),
     buckets_rewritten, files_written (part files the commit wrote),
-    buckets_folded (buckets the merge's fold rewrote), min_lsn/max_lsn of
+    buckets_folded (buckets the merge's fold rewrote), stored_files_scanned
+    (files the merge's stored side read), min_lsn/max_lsn of
     the valid events, duration_sec, committed_at and the timings. Its counts come from the one stats pass,
     so the record costs no Spark job. A fenced replay writes none.
 
@@ -112,9 +113,10 @@ def apply_batch(
         # ONE stats pass over the batch computes everything the driver needs
         # before the merge: the set of touched hash buckets (merge compares
         # against and appends to only those), the event and invalid-row
-        # counts, the valid LSN range, and the distinct promotable tunnel keys
-        # (schema evolution). This pass also populates the cache, so every later
-        # consumer reads the same materialization.
+        # counts, the valid LSN range (its low end is the merge's lsn floor),
+        # and the distinct promotable tunnel keys (schema evolution). This
+        # pass also populates the cache, so every later consumer reads the
+        # same materialization.
         sel = [
             F.when(valid, table._bucket_expr()).alias("_b"),
             F.when(valid, 0).otherwise(1).alias("_inv"),
@@ -176,7 +178,7 @@ def apply_batch(
         with prof.scope("merge"):
             result = table.merge(
                 payload, batch_id=batch_id, query_id=query_id,
-                touched_buckets=touched, prof=prof,
+                touched_buckets=touched, lsn_floor=stats["_min_lsn"], prof=prof,
             )
     finally:
         cached.unpersist()
@@ -201,6 +203,7 @@ def apply_batch(
                 "buckets_rewritten": len(result.touched_buckets),
                 "files_written": result.stats.get("files_written", 0),
                 "buckets_folded": result.stats.get("buckets_folded", 0),
+                "stored_files_scanned": result.stats.get("stored_files_scanned", 0),
                 "min_lsn": stats["_min_lsn"],
                 "max_lsn": stats["_max_lsn"],
                 "duration_sec": res.duration_sec,

@@ -34,6 +34,12 @@ Scale design (the part that matters at 100 TB):
   written, not O(table): a batch of n distinct keys touches all but a
   (1 - 1/num_buckets)^n share of the buckets, so a copy-on-write merge would
   rewrite most of the table.
+- The manifest records an upper bound on each file's lsn values (``max_lsn``,
+  file → bound; a file it does not list is unbounded). A stored row whose lsn
+  is below the batch's lowest lsn can never beat one of its winners, so the
+  merge's stored-side scan reads only the files whose bound reaches the batch
+  (Iceberg manifest column bounds, Delta Lake data skipping). On a WAL of
+  increasing lsns no file does, and the merge reads no stored file at all.
 - Every stored row beat every earlier row of its key when it was written, and
   one commit writes at most one row per key, so a key's live row is its row
   with the highest ``_version``. A read resolves a bucket by that rule only
@@ -84,7 +90,7 @@ _FOLD_AT = 8
 METRICS_SCHEMA = (
     "query_id string, batch_id long, version long, rows_in long, rows_bad long, "
     "rows_applied long, buckets_rewritten long, files_written long, "
-    "buckets_folded long, min_lsn long, "
+    "buckets_folded long, stored_files_scanned long, min_lsn long, "
     "max_lsn long, duration_sec double, committed_at double, "
     "timings map<string,double>"
 )
@@ -178,6 +184,7 @@ class ParquetLakeTable:
         schema: T.StructType | None = None,
         batch_id: int | None = None,
         query_id: str = "default",
+        max_lsn: int | None = None,
         **stats: Any,
     ) -> int:
         """Commit manifest v{N+1} on top of ``man`` (v{N}) — the one commit
@@ -187,9 +194,13 @@ class ParquetLakeTable:
         added to their buckets' lists (a merge's delta replaces nothing), and
         every other bucket carries forward by reference; a replaced bucket
         absent from ``written`` lost all its rows and is dropped. The file →
-        buckets map keeps exactly the files some bucket still lists.
-        Watermarks carry forward, and ``query_id`` advances to ``batch_id``
-        when one is given. Returns the new version."""
+        buckets map keeps exactly the files some bucket still lists, and so
+        does the file → lsn bound map (``max_lsn``): each file of ``written``
+        is bounded by ``max_lsn``, the highest lsn of the write (a file with
+        no bound — a write with no lsn, or a manifest from before bounds —
+        is scanned by every merge). Watermarks carry forward, and
+        ``query_id`` advances to ``batch_id`` when one is given. Returns the
+        new version."""
         version = man["version"] + 1
         written = written or {}
         gone = {str(b) for b in replaced}
@@ -199,6 +210,9 @@ class ParquetLakeTable:
                 buckets.setdefault(str(b), []).append(f)
         live = {f for fs in buckets.values() for f in fs}
         files = {f: bs for f, bs in {**man["files"], **written}.items() if f in live}
+        bounds = {f: n for f, n in man.get("max_lsn", {}).items() if f in live}
+        if max_lsn is not None:
+            bounds.update(dict.fromkeys(written, max_lsn))
         watermarks = dict(man["watermarks"])
         if batch_id is not None:
             watermarks[query_id] = batch_id
@@ -209,6 +223,7 @@ class ParquetLakeTable:
                 "schema": man["schema"] if schema is None else schema.json(),
                 "buckets": buckets,
                 "files": files,
+                "max_lsn": bounds,
                 "watermarks": watermarks,
                 "stats": {"committed_at": time.time(), **stats},
             }
@@ -247,13 +262,19 @@ class ParquetLakeTable:
         buckets: list[int] | None = None,
         since: int = 0,
         schema: T.StructType | None = None,
-    ) -> tuple[DataFrame, bool]:
+        lsn_floor: int | None = None,
+    ) -> tuple[DataFrame, bool, int]:
         """Every stored row of manifest ``man`` in the files that list a bucket
         of ``buckets`` (all buckets when None) and that a commit after
         ``since`` wrote, unresolved, as ``schema`` (default: the manifest's)
         plus ``_deleted`` and ``_version``. Also returns whether a key may
-        have several rows: true when some bucket's scanned files come from
-        more than one commit (see ``_latest``).
+        have several rows — true when some bucket's scanned files come from
+        more than one commit (see ``_latest``) — and how many files it scans.
+
+        With ``lsn_floor`` (the merge's stored side) the scan returns only
+        rows with ``lsn >= lsn_floor``: it lists only the files whose lsn
+        bound (``max_lsn`` in the manifest) reaches the floor, and unbounded
+        ones, and pushes the comparison down to the parquet scan.
 
         A file may hold rows the scan must not return: rows of buckets outside
         ``buckets``, and dead rows of a bucket a later fold or compaction
@@ -271,16 +292,21 @@ class ParquetLakeTable:
             ]
         )
         wanted = {str(b) for b in buckets} if buckets is not None else None
+        bound = man.get("max_lsn", {})
         live: dict[str, set[int]] = {}  # file -> the buckets this scan takes from it
         several = False
         for b, fs in man["buckets"].items():
             if wanted is None or b in wanted:
-                fs = [f for f in fs if _commit_of(f) > since]
+                fs = [
+                    f for f in fs
+                    if _commit_of(f) > since
+                    and (lsn_floor is None or bound.get(f, lsn_floor) >= lsn_floor)
+                ]
                 several |= len({_commit_of(f) for f in fs}) > 1
                 for f in fs:
                     live.setdefault(f, set()).add(int(b))
         if not live:
-            return self.spark.createDataFrame([], stored), False
+            return self.spark.createDataFrame([], stored), False, 0
         df = self.spark.read.schema(
             T.StructType(stored.fields + [T.StructField("_bucket", T.IntegerType())])
         ).parquet(*(os.path.join(self.path, f) for f in sorted(live)))
@@ -295,7 +321,9 @@ class ParquetLakeTable:
             for n, bs in mixed.items():
                 keep |= (name == n) & F.col("_bucket").isin(bs)
             df = df.filter(keep)
-        return df.drop("_bucket"), several
+        if lsn_floor is not None:
+            df = df.filter(F.col(self.lsn_col) >= F.lit(lsn_floor))
+        return df.drop("_bucket"), several, len(live)
 
     def _latest(self, df: DataFrame) -> DataFrame:
         """Each key's row with the highest ``_version``: its live row. Every
@@ -336,7 +364,7 @@ class ParquetLakeTable:
         view filters them out unless ``include_tombstones``."""
         v = self.current_version() if version is None else version
         self._check_readable(v)
-        df, several = self._scan(self._manifest(v), buckets)
+        df, several, _ = self._scan(self._manifest(v), buckets)
         if several:
             df = self._latest(df)
         if include_tombstones:
@@ -393,7 +421,7 @@ class ParquetLakeTable:
                 "with read_changes(0)"
             ) from None
         self._check_readable(to_v)
-        df, several = self._scan(man, since=since_version)
+        df, several, _ = self._scan(man, since=since_version)
         # Plain comparison, NOT coalesce(_version, 0): every row the table
         # stores carries a non-null _version (a delta and overwrite stamp,
         # fold and compact preserve), and a bare predicate reaches the parquet
@@ -425,7 +453,7 @@ class ParquetLakeTable:
 
     def _write_buckets(
         self, df: DataFrame, version: int, n_buckets: int, slices: int | None = None
-    ) -> dict[str, list[int]]:
+    ) -> tuple[dict[str, list[int]], int | None, int | None]:
         """Write ``df`` as snapshot dir ``data/v{version}``, ONE part file per
         write task — the one bucket writer of merge, fold, overwrite and compact.
         Each row keeps its bucket as the int column ``_bucket``. ``n_buckets``
@@ -446,12 +474,13 @@ class ParquetLakeTable:
         (32 files, dirs and ``.crc`` files for a 32-bucket commit) cost twice
         the wall of a file per task.
 
-        The write reports which task held which buckets through an
-        ``Observation`` on the write itself (no extra job), and a task's
-        ``part-NNNNN`` number is its partition id. Spark writes an empty file
-        when task 0 gets no rows; a file holding no bucket is removed with its
-        ``.crc``. Returns every file left (relative to the table root) → the
-        buckets written into it."""
+        The write reports which task held which buckets, and the lowest and
+        highest lsn it wrote, through an ``Observation`` on the write itself
+        (no extra job); a task's ``part-NNNNN`` number is its partition id.
+        Spark writes an empty file when task 0 gets no rows; a file holding no
+        bucket is removed with its ``.crc``. Returns every file left (relative
+        to the table root) → the buckets written into it, then the lowest and
+        the highest lsn written (None when no row has one)."""
         par = self.spark.sparkContext.defaultParallelism
         if slices is None:
             slices = max(1, min(8, par // n_buckets))
@@ -471,22 +500,29 @@ class ParquetLakeTable:
         # it is never initialized
         held = Observation()
         df = df.drop(*parts[1:]).withColumn("_task", F.spark_partition_id())
-        df = df.observe(held, F.collect_set(F.struct("_task", "_bucket")).alias("held"))
+        lsn = F.col(self.lsn_col) if self.lsn_col in df.columns else F.lit(None).cast("long")
+        df = df.observe(
+            held,
+            F.collect_set(F.struct("_task", "_bucket")).alias("held"),
+            F.min(lsn).alias("lo"),
+            F.max(lsn).alias("hi"),
+        )
         df.drop("_task").write.mode("overwrite").parquet(out_dir)
+        seen = held.get
         part = {
             int(f.split("-", 2)[1]): os.path.join(rel_dir, f)
             for f in os.listdir(out_dir)
             if f.startswith("part-")
         }
         files: dict[str, list[int]] = {}
-        for task, b in sorted(held.get["held"]):
+        for task, b in sorted(seen["held"]):
             files.setdefault(part[task], []).append(b)
         for f in set(part.values()) - files.keys():
             name = os.path.basename(f)
             os.remove(os.path.join(out_dir, name))
             with contextlib.suppress(FileNotFoundError):
                 os.remove(os.path.join(out_dir, f".{name}.crc"))
-        return files
+        return files, seen["lo"], seen["hi"]
 
     def merge(
         self,
@@ -494,6 +530,7 @@ class ParquetLakeTable:
         batch_id: int | None = None,
         query_id: str = "default",
         touched_buckets: list[int] | None = None,
+        lsn_floor: int | None = None,
         prof: Profiler | None = None,
     ) -> MergeResult:
         """Keyed LWW MERGE of a change batch into the table, as an appended delta.
@@ -512,23 +549,33 @@ class ParquetLakeTable:
         every batch winner that some stored row of its key beats. The stored
         side is a narrow scan of the touched buckets (key columns, lsn and
         ``_deleted`` only, unresolved): the stored rows' ords only grow with
-        ``_version``, so beating them all is beating the live row. The kept
+        ``_version``, so beating them all is beating the live row. A winner's
+        ord is at least ``floor*8 + 1``, where ``floor`` is the batch's lowest
+        lsn, and a stored row's at most ``lsn*8 + 6``, so no stored row below
+        the floor can beat a winner: the scan reads only files whose lsn bound
+        reaches the floor (``_scan``). When none does, as on a WAL of
+        increasing lsns, there is no stored side and no join. The kept
         winners are written by ``_write_buckets`` as this commit's delta,
         stamped ``_version`` = the commit, and their files are added to the
-        touched buckets' file lists. The table's payload is never read or
-        rewritten.
+        touched buckets' file lists with the write's highest lsn as their
+        bound. The table's payload is never read or rewritten.
 
         After its own commit, the merge folds every bucket whose files span
         more than ``_FOLD_AT`` commits (a separate commit; see ``compact``).
         ``stats`` reports ``buckets_rewritten`` (the touched buckets),
-        ``files_written`` (the delta's files) and ``buckets_folded``.
+        ``files_written`` (the delta's files), ``stored_files_scanned`` (the
+        files of the stored side) and ``buckets_folded``.
 
         ``touched_buckets`` is the caller's set of buckets the batch's keys
-        hash to (it skips the probe scan). It must be complete: a merge that
-        writes a bucket outside it raises ``ValueError`` before committing,
-        because that bucket's stored rows were never compared. Without it, a
-        batch holding an invalid row (``schema.valid_event``) raises
-        ``ValueError`` before anything is written.
+        hash to (it skips the probe scan), and ``lsn_floor`` the lowest lsn of
+        the batch's rows (without it, a merge given ``touched_buckets`` scans
+        every file of the touched buckets). Both must be right: a merge that
+        writes a bucket outside ``touched_buckets``, or a row below
+        ``lsn_floor``, raises ``ValueError`` before committing, because stored
+        rows it had to compare were never read. Without ``touched_buckets``,
+        the probe finds both, and a batch holding an invalid row
+        (``schema.valid_event``) raises ``ValueError`` before anything is
+        written.
 
         ``prof`` (``apply_batch`` hands in its own) receives four scopes:
         ``plan`` (manifest read, schema unification — with the table's
@@ -585,10 +632,12 @@ class ParquetLakeTable:
             # it into its single stats pass) hand it in and skip this probe scan,
             # which also counts the invalid rows merge has no DLQ for.
             if touched_buckets is not None:
-                touched = sorted(touched_buckets)
+                touched, floor = sorted(touched_buckets), lsn_floor
             else:
                 ok = valid_event(self.key_cols, self.lsn_col, self.op_col)
-                buckets, n_bad = batch.agg(F.collect_set("_bucket"), F.count_if(~ok)).first()
+                buckets, n_bad, floor = batch.agg(
+                    F.collect_set("_bucket"), F.count_if(~ok), F.min(self.lsn_col)
+                ).first()
                 if n_bad:
                     raise ValueError(
                         f"merge: {n_bad} rows are invalid (null key/lsn or unknown "
@@ -620,25 +669,29 @@ class ParquetLakeTable:
                 .select(*data_cols, self.op_col, (packed + 1).alias("_ord"))
             )
             # The schema is the merged one: an empty table's manifest schema
-            # may lack the batch's key columns.
-            stored, _ = self._scan(man, touched, schema=new_schema)
-            stored = stored.select(
-                *[F.col(k).alias(f"_s_{k}") for k in self.key_cols],
-                (
-                    F.col(self.lsn_col) * 8
-                    + F.when(F.coalesce(F.col("_deleted"), F.lit(False)), 6).otherwise(0)
-                ).alias("_sord"),
-            )
-            beaten = [F.col(k) == F.col(f"_s_{k}") for k in self.key_cols]
-            beaten.append(F.col("_sord") >= F.col("_ord"))
-            delta = winners.join(stored, on=beaten, how="left_anti").select(
+            # may lack the batch's key columns. (Catalyst keeps the join of an
+            # empty stored side, exchanges included, so skip it here.)
+            stored, _, scanned = self._scan(man, touched, schema=new_schema, lsn_floor=floor)
+            delta = winners
+            if scanned:
+                stored = stored.select(
+                    *[F.col(k).alias(f"_s_{k}") for k in self.key_cols],
+                    (
+                        F.col(self.lsn_col) * 8
+                        + F.when(F.coalesce(F.col("_deleted"), F.lit(False)), 6).otherwise(0)
+                    ).alias("_sord"),
+                )
+                beaten = [F.col(k) == F.col(f"_s_{k}") for k in self.key_cols]
+                beaten.append(F.col("_sord") >= F.col("_ord"))
+                delta = winners.join(stored, on=beaten, how="left_anti")
+            delta = delta.select(
                 *data_cols,
                 (F.col(self.op_col) == "D").alias("_deleted"),
                 F.lit(new_version).cast("long").alias("_version"),
             )
 
         with prof.scope("write"):
-            written = self._write_buckets(delta, new_version, len(touched))
+            written, lo, hi = self._write_buckets(delta, new_version, len(touched))
         stray = {b for bs in written.values() for b in bs} - set(touched)
         if stray:
             raise ValueError(
@@ -647,9 +700,17 @@ class ParquetLakeTable:
                 "so committing could let a stale event win. Pass the complete "
                 "bucket set or touched_buckets=None."
             )
+        if floor is not None and lo is not None and lo < floor:
+            raise ValueError(
+                f"merge: the batch has a row at lsn {lo}, below lsn_floor={floor}; "
+                "stored rows below the floor were never compared, so committing "
+                "could let a stale event win. Pass the batch's lowest lsn or "
+                "lsn_floor=None."
+            )
         with prof.scope("commit"):
             self._commit_next(
-                man, written, schema=new_schema, batch_id=batch_id, query_id=query_id
+                man, written, schema=new_schema, batch_id=batch_id, query_id=query_id,
+                max_lsn=hi,
             )
         with prof.scope("fold"):
             folded = self._fold(new_version)
@@ -658,6 +719,7 @@ class ParquetLakeTable:
             {
                 "buckets_rewritten": len(touched),
                 "files_written": len(written),
+                "stored_files_scanned": scanned,
                 "buckets_folded": folded,
             },
         )
@@ -682,8 +744,10 @@ class ParquetLakeTable:
         df = self.read(version=man["version"], buckets=buckets, include_tombstones=True)
         if schema is not None:
             df = conform_to(df, schema, keep_extra=["_deleted", "_version"])
-        written = self._write_buckets(df, man["version"] + 1, len(buckets), slices)
-        return self._commit_next(man, written, replaced=buckets, schema=schema, **stats)
+        written, _, hi = self._write_buckets(df, man["version"] + 1, len(buckets), slices)
+        return self._commit_next(
+            man, written, replaced=buckets, schema=schema, max_lsn=hi, **stats
+        )
 
     def _fold(self, version: int) -> int:
         """Fold every bucket of snapshot ``version`` whose files come from more
@@ -710,9 +774,9 @@ class ParquetLakeTable:
             .withColumn("_deleted", F.lit(False))
             .withColumn("_version", F.lit(new_version))
         )
-        written = self._write_buckets(stamped, new_version, self.num_buckets, 1)
+        written, _, hi = self._write_buckets(stamped, new_version, self.num_buckets, 1)
         self._commit_next(
-            man, written, replaced=man["buckets"], schema=schema, clobber=True
+            man, written, replaced=man["buckets"], schema=schema, max_lsn=hi, clobber=True
         )
         buckets = sorted({b for bs in written.values() for b in bs})
         return MergeResult(True, new_version, None, buckets, {})

@@ -855,3 +855,110 @@ def test_deltas_and_fold_match_lww(spark, tmp_table_path):
     assert any(
         table._manifest(v)["stats"].get("folded_buckets") for v in range(1, table.current_version() + 1)
     ), f"no fold in {len(batches)} merges (_FOLD_AT={_FOLD_AT})"
+
+
+def test_lsn_bounds_prune_the_stored_side_exactly(spark, tmp_table_path, monkeypatch):
+    """The merge's stored side reads only files whose lsn bound reaches the
+    batch's lowest lsn. Through monotone batches, an equal-lsn event against a
+    stored tombstone (its file's bound equals the batch's floor), a late batch
+    whose floor falls inside one file's lsn range and below other files'
+    bounds, a replayed batch, a fold and a manifest written without bounds,
+    every read must equal the LWW state of all events: the snapshot, the
+    tombstone view and every change-feed window ``(s, v]``. A merge handed a
+    floor above one of its rows raises and commits nothing."""
+    import json
+
+    import pytest
+
+    from pocket_etl_spark import lake
+    from pocket_etl_spark.cdc.dedupe import lww_dedupe
+
+    cols = "lsn long, op string, repo string, path string, content string"
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
+    paths = [f"p{i:02d}" for i in range(30)]
+    gone = paths[0]  # deleted at lsn 120, the highest lsn of its commit
+    events = []
+    stamp = {}  # (path, lsn, op) -> the last commit that merged that event
+
+    def ev(lsn, op, path):
+        return (lsn, op, "r", path, None if op == "D" else f"{path}@{lsn}")
+
+    def listed(touched, version):
+        man = table._manifest(version)
+        return {f for b in touched for f in man["buckets"].get(str(b), [])}
+
+    def check():
+        v = table.current_version()
+        want = {
+            (r["path"], r["lsn"], r["op"] == "D", r["content"], stamp[(r["path"], r["lsn"], r["op"])])
+            for r in lww_dedupe(spark.createDataFrame(events, cols), ["repo", "path"]).collect()
+        }
+        got = {
+            (r["path"], r["lsn"], r["_deleted"], r["content"], r["_version"])
+            for r in table.read(include_tombstones=True).collect()
+        }
+        assert got == want, v
+        alive = sorted((p, lsn, c) for p, lsn, d, c, _ in want if not d)
+        assert sorted((r["path"], r["lsn"], r["content"]) for r in table.read().collect()) == alive
+        windows = None
+        for s in range(v):
+            w = table.read_changes(s, v).select(F.lit(s).alias("s"), "path", "lsn", "_change_type", "_commit_version")
+            windows = w if windows is None else windows.unionByName(w)
+        assert sorted(tuple(r) for r in windows.collect()) == sorted(
+            (s, p, lsn, "delete" if d else "upsert", c_v)
+            for s in range(v) for p, lsn, d, _, c_v in want if c_v > s
+        ), v
+
+    def merge(batch, batch_id):
+        res = table.merge(spark.createDataFrame(batch, cols), batch_id=batch_id)
+        events.extend(batch)
+        for e in batch:
+            stamp[(e[3], e[0], e[1])] = res.version
+        check()
+        return res
+
+    monkeypatch.setattr(lake, "_FOLD_AT", 100)
+    merge([ev(10 + i, "I", p) for i, p in enumerate(paths)], 0)
+    b1 = [ev(100 + i, "U", p) for i, p in enumerate(paths[1:16], 1)] + [ev(120, "D", gone)]
+    merge(b1, 1)
+    # monotone: the batch's lowest lsn is above every file's bound
+    res = merge([ev(200 + i, "U", p) for i, p in enumerate(paths[16:])], 2)
+    assert res.stats["stored_files_scanned"] == 0
+    # equal lsn against the stored tombstone: its file is bounded by 120 exactly
+    res = merge([ev(120, "U", gone)] + [ev(300 + i, "U", p) for i, p in enumerate(paths[20:25])], 3)
+    assert res.stats["stored_files_scanned"] > 0
+    # late: lsn 105 is inside commit 2's range (101..120) and below later
+    # commits' bounds, and above commit 1's (39), whose files are skipped
+    late = [ev(105, "U", p) for p in paths[1:17]]
+    res = merge(late, 4)
+    assert 0 < res.stats["stored_files_scanned"] < len(listed(res.touched_buckets, res.version - 1))
+    # a replayed batch (a new batch id, so not fenced), then a fold
+    monkeypatch.setattr(lake, "_FOLD_AT", 1)
+    res = merge(b1, 5)
+    assert res.stats["buckets_folded"] > 0
+    assert table.read_changes(res.version, res.version + 1).count() == 0
+    monkeypatch.setattr(lake, "_FOLD_AT", 100)
+
+    # a manifest written before bounds: every file of it is unbounded
+    head = os.path.join(tmp_table_path, "_manifests", f"v{table.current_version():012d}.json")
+    with open(head) as f:
+        man = json.load(f)
+    assert man.pop("max_lsn")
+    with open(head, "w") as f:
+        json.dump(man, f)
+    unbounded = listed(range(4), table.current_version())
+    res = merge([ev(110, "U", p) for p in paths[1:4]] + [ev(400 + i, "U", p) for i, p in enumerate(paths[25:])], 6)
+    assert res.stats["stored_files_scanned"] == len(listed(res.touched_buckets, res.version - 1))
+    man = table._manifest(res.version)
+    assert set(man["max_lsn"]) == {f for f in man["files"] if lake._commit_of(f) == res.version}
+    # later merges still scan the unbounded files, and only those
+    res = merge([ev(500 + i, "U", p) for i, p in enumerate(paths[5:12])], 7)
+    assert res.stats["stored_files_scanned"] == len(listed(res.touched_buckets, res.version) & unbounded)
+
+    # a floor above one of the batch's rows: the merge raises before committing
+    v, wm = table.current_version(), table.last_batch_id()
+    bad = spark.createDataFrame([ev(50, "I", "pnew"), ev(600, "U", paths[1])], cols)
+    with pytest.raises(ValueError, match="below lsn_floor"):
+        table.merge(bad, batch_id=8, touched_buckets=list(range(4)), lsn_floor=600)
+    assert (table.current_version(), table.last_batch_id()) == (v, wm)
+    check()

@@ -189,18 +189,11 @@ def _plan_blocks(text):
     }
 
 
-@pytest.mark.parametrize(
-    "num_buckets, write_cols",
-    [(4, ["_bucket", "_slice"]), (16, ["_bucket"])],
-    ids=["sliced", "unsliced"],
-)
-def test_merge_reads_no_stored_payload(spark, tmp_path, monkeypatch, num_buckets, write_cols):
-    """A merge appends its batch's winners without reading the table's
-    payload. The stored side is a narrow scan of the touched buckets (key
-    columns, lsn and ``_deleted``), and only two exchanges carry ``content``:
-    the batch's key exchange, fed by a map-side partial top-1 so a hot key
-    collapses before it, and the delta's write repartition (on ``_bucket``,
-    plus ``_slice`` when the touched buckets are fewer than the cores)."""
+def _second_merge_plan(spark, tmp_path, monkeypatch, num_buckets, second, **gen):
+    """Merge the events with ``lsn <= 1000`` into a new table, then the
+    events matching ``second``, which must touch every bucket. Returns the
+    second merge's write plan: its text, its node blocks (``_plan_blocks``)
+    and the table's data dir."""
     import os
 
     from pyspark.sql import DataFrameWriter
@@ -216,15 +209,32 @@ def test_merge_reads_no_stored_payload(spark, tmp_path, monkeypatch, num_buckets
         return parquet(self, path, *args, **kwargs)
 
     table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=num_buckets)
-    ev = gen_change_events(spark, 2000, 200, seed=3, hot_key_fraction=0.5).drop("ts", "extras")
+    ev = gen_change_events(spark, 2000, 200, seed=3, **gen).drop("ts", "extras")
     table.merge(ev.filter("lsn <= 1000"), batch_id=0)
     monkeypatch.setattr(DataFrameWriter, "parquet", spy)
-    res = table.merge(ev.filter("lsn > 1000"), batch_id=1)
+    res = table.merge(ev.filter(second), batch_id=1)
     assert res.touched_buckets == list(range(num_buckets))
     [text] = plans
-    blocks = _plan_blocks(text)
+    return text, _plan_blocks(text), os.path.join(table.path, "data")
 
-    data_dir = os.path.join(table.path, "data")
+
+@pytest.mark.parametrize(
+    "num_buckets, write_cols",
+    [(4, ["_bucket", "_slice"]), (16, ["_bucket"])],
+    ids=["sliced", "unsliced"],
+)
+def test_merge_reads_no_stored_payload(spark, tmp_path, monkeypatch, num_buckets, write_cols):
+    """A merge appends its batch's winners without reading the table's
+    payload. The stored side is a narrow scan of the touched buckets (key
+    columns, lsn and ``_deleted``), and only two exchanges carry ``content``:
+    the batch's key exchange, fed by a map-side partial top-1 so a hot key
+    collapses before it, and the delta's write repartition (on ``_bucket``,
+    plus ``_slice`` when the touched buckets are fewer than the cores). The
+    second batch re-sends some events of the first, so its lsns reach below
+    the first commit's lsn bound and the stored side is scanned."""
+    text, blocks, data_dir = _second_merge_plan(
+        spark, tmp_path, monkeypatch, num_buckets, "lsn > 1000 OR lsn % 10 = 0", hot_key_fraction=0.5
+    )
     stored = [d for n, d in blocks.values() if n == "Scan" and data_dir in d]
     assert stored, text
     for detail in stored:
@@ -248,3 +258,13 @@ def test_merge_reads_no_stored_payload(spark, tmp_path, monkeypatch, num_buckets
     child = re.search(rf"Exchange \({batch}\)\n[ :|+-]*(\w+) \((\d+)\)", text)
     assert child and child.group(1) == "WindowGroupLimit", text
     assert "Partial" in blocks[child.group(2)][1], text
+
+
+def test_merge_above_every_bound_reads_no_stored_file(spark, tmp_path, monkeypatch):
+    """A batch whose lowest lsn is above every stored file's lsn bound can
+    lose to no stored row, so its merge plans no stored side at all: no scan
+    under the table's ``data/`` dir and no join, only the batch's top-1 and
+    the delta's write."""
+    text, blocks, data_dir = _second_merge_plan(spark, tmp_path, monkeypatch, 4, "lsn > 1000")
+    assert not [d for n, d in blocks.values() if n == "Scan" and data_dir in d], text
+    assert not [n for n, _ in blocks.values() if "Join" in n], text

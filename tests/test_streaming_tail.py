@@ -215,3 +215,81 @@ def test_kafka_envelope_tail_matches_oracle(spark, tmp_path):
     bad = spark.read.parquet(dlq).collect()
     assert len(bad) == 1
     assert "{not json at all" in bad[0]["payload"]
+
+
+def test_stop_during_fold_then_restart(spark, tmp_path, monkeypatch):
+    """``stop()`` while a committed batch's fold is in flight, then a restart
+    on the same checkpoint. The fold blocks in a JVM call, which the stop
+    interrupts; the batch's delta had already committed, so Spark replays the
+    batch on restart and the fence makes that replay a no-op: no second
+    commit and no second copy of its DLQ rows. The next commit writes over
+    the fold's half-written data dir. (Spark's interruption check matches the
+    Python error text against a regex whose repeated group recurses once per
+    character, so a long text overflows the stream thread's stack; the query
+    ends with no exception either way.)"""
+    import threading
+
+    from pocket_etl_spark import lake
+
+    events = gen_change_events(spark, n_events=1500, n_keys=120, seed=23).withColumn(
+        "op", F.when(F.pmod(F.col("lsn"), F.lit(100)) == 0, F.lit("??")).otherwise(F.col("op"))
+    )
+    stage, wal = str(tmp_path / "stage"), str(tmp_path / "wal")
+    for i, (lo, hi) in enumerate([(1, 500), (501, 1000), (1001, 1500)]):
+        events.filter(f"lsn between {lo} and {hi}").coalesce(1).write.parquet(f"{stage}/{i}")
+    os.makedirs(wal)
+
+    def send(i):
+        [f] = [p for p in os.listdir(f"{stage}/{i}") if p.endswith(".parquet")]
+        os.rename(f"{stage}/{i}/{f}", f"{wal}/{i}.parquet")
+
+    table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=8)
+    dlq, ckpt = str(tmp_path / "dlq"), str(tmp_path / "ckpt")
+    folding = threading.Event()
+    real_rewrite = ParquetLakeTable._rewrite
+
+    def blocked_rewrite(self, man, buckets, slices, **kw):
+        if kw.get("folded_buckets") and not folding.is_set():
+            # the fold's write has begun: its data dir holds a stray part file
+            half = os.path.join(self.path, "data", f"v{man['version'] + 1:012d}")
+            os.makedirs(half)
+            with open(os.path.join(half, "part-00000-half.parquet"), "wb") as f:
+                f.write(b"PAR1")
+            folding.set()
+            # a JVM call on the stream thread, so stop() interrupts it
+            spark.sparkContext._jvm.java.lang.Thread.sleep(120_000)
+        return real_rewrite(self, man, buckets, slices, **kw)
+
+    monkeypatch.setattr(lake, "_FOLD_AT", 1)
+    monkeypatch.setattr(ParquetLakeTable, "_rewrite", blocked_rewrite)
+    send(0)
+    send(1)
+    q = cdc_tail.start_tail(
+        spark, wal, table, ckpt, query_id="qs", dlq_path=dlq,
+        max_files_per_trigger=1, available_now=False,
+    )
+    try:
+        assert folding.wait(120), "the fold never started"
+        q.stop()
+    finally:
+        folding.set()
+        if q.isActive:
+            q.stop()
+    assert not q.isActive and q.exception() is None
+    assert (table.last_batch_id("qs"), table.current_version()) == (1, 2)
+    half = os.path.join(table.path, "data", f"v{3:012d}")
+    assert os.listdir(half) == ["part-00000-half.parquet"]
+
+    send(2)
+    run_tail_to_exhaustion(spark, wal, table, ckpt, query_id="qs", dlq_path=dlq, max_files_per_trigger=1)
+    good = events.filter(F.col("op").isin("I", "U", "D"))
+    assert_state_equals_oracle(table, good.toPandas())
+    assert spark.read.parquet(dlq).count() == events.count() - good.count() == 15
+    assert [
+        v for v in range(1, table.current_version() + 1)
+        if table._manifest(v)["watermarks"].get("qs") == 1
+        and table._manifest(v - 1)["watermarks"].get("qs") != 1
+    ] == [2]
+    on_disk = sorted(f for f in os.listdir(half) if f.endswith(".parquet"))
+    assert on_disk == sorted(os.path.basename(f) for f in table._manifest(3)["files"] if lake._commit_of(f) == 3)
+    assert "part-00000-half.parquet" not in on_disk
