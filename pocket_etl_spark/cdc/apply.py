@@ -10,7 +10,12 @@ TransformerEtlConsumer.java:90-99) → parallel loader with close-time merge com
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import os
+import shutil
 import time
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -35,6 +40,27 @@ class ApplyResult:
     timings: dict[str, float] = field(default_factory=dict)
 
 
+def _write_dlq(records: DataFrame, dlq_path: str, query_id: str, batch_id: int | None) -> None:
+    """Write a batch's DLQ records into ``dlq_path`` as its files
+    ``dlq-<hash(query_id)>-<batch_id>-<n>.parquet``, replacing the files an
+    earlier attempt of the batch left there, so a replayed batch leaves each
+    invalid row once. Spark writes them to a hidden ``_``-prefixed staging
+    dir (readers of ``dlq_path`` skip it); then the address's earlier files
+    are removed, the new ones moved in and the staging dir dropped. A crash
+    on the way leaves the batch uncommitted, and its replay rewrites the
+    address. A batch without an id gets a fresh address."""
+    qh = hashlib.sha1(query_id.encode()).hexdigest()[:12]
+    addr = f"dlq-{qh}-{uuid.uuid4().hex if batch_id is None else batch_id}"
+    staging = os.path.join(dlq_path, f"_{addr}")
+    records.write.mode("overwrite").parquet(staging)
+    for f in glob.glob(os.path.join(dlq_path, f"{addr}-*.parquet")):
+        os.remove(f)
+    parts = sorted(f for f in os.listdir(staging) if f.endswith(".parquet"))
+    for n, f in enumerate(parts):
+        os.replace(os.path.join(staging, f), os.path.join(dlq_path, f"{addr}-{n}.parquet"))
+    shutil.rmtree(staging)
+
+
 def apply_batch(
     events: DataFrame,
     table: ParquetLakeTable,
@@ -49,18 +75,22 @@ def apply_batch(
     Phase timings are collected into a hierarchical Profiler tree (the
     reference's EtlProfilingScope.java:47-128 timer rollup) and exported
     flat on ApplyResult.timings. The merge adds its own phases under
-    ``merge``: ``merge.plan``, ``merge.write``, ``merge.commit`` and
-    ``merge.fold`` (see ``ParquetLakeTable.merge``).
+    ``merge``: ``merge.plan``, ``merge.write`` and ``merge.commit`` (see
+    ``ParquetLakeTable.merge``).
 
     Every committed batch leaves one metrics record (the reference's
     per-run EtlMetrics tree, EtlMetrics.java:25-53), read back with
     ``table.read_metrics()``: query_id, batch_id, version, rows_in (every
     event), rows_bad, rows_applied (the events handed to the merge),
     buckets_rewritten, files_written (part files the commit wrote),
-    buckets_folded (buckets the merge's fold rewrote), stored_files_scanned
+    buckets_folded (buckets the merge folded), stored_files_scanned
     (files the merge's stored side read), min_lsn/max_lsn of
     the valid events, duration_sec, committed_at and the timings. Its counts come from the one stats pass,
     so the record costs no Spark job. A fenced replay writes none.
+
+    Invalid rows go to ``dlq_path`` under the batch's own file names
+    (``_write_dlq``), so a replay of a batch that failed before its commit
+    replaces its DLQ rows instead of adding a second copy.
 
     ``dlq_payload``/``dlq_keys`` are the DLQ payload policy of every surface
     (``schema.dlq_records``): the PII-safe ``"redacted"`` default carries the
@@ -162,9 +192,10 @@ def apply_batch(
             if dlq_payload == "redacted":
                 error += " (payload redacted; apply_batch dlq_payload='full' opts in)"
             with prof.scope("dlq_write"):
-                dlq_records(
-                    bad, batch_id, "apply", F.lit(error), dlq_payload, dlq_keys
-                ).write.mode("append").parquet(dlq_path)
+                _write_dlq(
+                    dlq_records(bad, batch_id, "apply", F.lit(error), dlq_payload, dlq_keys),
+                    dlq_path, query_id, batch_id,
+                )
 
         # Schema evolution: lift tunnel fields (extras map "new_col_*") to
         # columns before the merge widens the table schema.

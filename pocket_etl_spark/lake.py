@@ -44,11 +44,13 @@ Scale design (the part that matters at 100 TB):
   one commit writes at most one row per key, so a key's live row is its row
   with the highest ``_version``. A read resolves a bucket by that rule only
   when the bucket's files come from more than one commit.
-- A **fold** bounds how many commits a read resolves: after its own commit, a
-  merge rewrites every bucket whose files span more than ``_FOLD_AT`` commits
-  into one resolved commit (``compact``'s rewrite, stamps preserved, so the
-  change feed emits nothing for it). Rows of a rewritten bucket that stay
-  behind in an older shared file are dead, and every read filters them out.
+- A **fold** bounds how many commits a read resolves: a merge that would
+  leave a touched bucket's files spanning more than ``_FOLD_AT`` commits
+  rewrites that bucket, resolved, in the same write and commit as its delta
+  (stamps preserved, so the change feed emits only the batch's rows). Rows of
+  a rewritten bucket that stay behind in an older shared file are dead, and
+  every read filters them out. A batch that changes a column's type rewrites
+  every stored bucket the same way. Every merge is one commit.
 - Fencing: the manifest records a per-query-id high-watermark batch id; replaying an
   already-committed micro-batch is a no-op (exactly-once on top of Spark's
   at-least-once foreachBatch — same contract Delta/Iceberg implement via txn versions).
@@ -84,7 +86,8 @@ _POINTER = "_latest"
 _MANIFESTS = "_manifests"
 _METRICS = "_metrics"
 _DATA = "data"
-# A merge folds every bucket whose files come from more than this many commits.
+# A merge folds each touched bucket whose files would otherwise come from
+# more than this many commits.
 _FOLD_AT = 8
 # One record per committed apply_batch (cdc/apply.py builds it).
 METRICS_SCHEMA = (
@@ -188,10 +191,10 @@ class ParquetLakeTable:
         **stats: Any,
     ) -> int:
         """Commit manifest v{N+1} on top of ``man`` (v{N}) — the one commit
-        point of every write (merge, its empty-batch branch, its fold,
-        overwrite, compact). Buckets in ``replaced`` leave the bucket → files
-        map, the files of ``written`` (file → buckets written into it) are
-        added to their buckets' lists (a merge's delta replaces nothing), and
+        point of every write (merge, its empty-batch branch, overwrite,
+        compact). Buckets in ``replaced`` leave the bucket → files map, the
+        files of ``written`` (file → buckets written into it) are added to
+        their buckets' lists (a merge replaces only the buckets it folds), and
         every other bucket carries forward by reference; a replaced bucket
         absent from ``written`` lost all its rows and is dropped. The file →
         buckets map keeps exactly the files some bucket still lists, and so
@@ -455,7 +458,7 @@ class ParquetLakeTable:
         self, df: DataFrame, version: int, n_buckets: int, slices: int | None = None
     ) -> tuple[dict[str, list[int]], int | None, int | None]:
         """Write ``df`` as snapshot dir ``data/v{version}``, ONE part file per
-        write task — the one bucket writer of merge, fold, overwrite and compact.
+        write task — the one bucket writer of merge, overwrite and compact.
         Each row keeps its bucket as the int column ``_bucket``. ``n_buckets``
         is the number of buckets the frame spans; with ``slices > 1`` each
         bucket spreads over up to that many tasks by a key-salted ``_slice``
@@ -474,13 +477,15 @@ class ParquetLakeTable:
         (32 files, dirs and ``.crc`` files for a 32-bucket commit) cost twice
         the wall of a file per task.
 
-        The write reports which task held which buckets, and the lowest and
-        highest lsn it wrote, through an ``Observation`` on the write itself
-        (no extra job); a task's ``part-NNNNN`` number is its partition id.
-        Spark writes an empty file when task 0 gets no rows; a file holding no
-        bucket is removed with its ``.crc``. Returns every file left (relative
-        to the table root) → the buckets written into it, then the lowest and
-        the highest lsn written (None when no row has one)."""
+        The write reports which task held which buckets, the lowest lsn of the
+        rows stamped ``_version`` = ``version`` (a merge's own rows, not the
+        rows its fold carries forward) and the highest lsn of all rows,
+        through an ``Observation`` on the write itself (no extra job); a
+        task's ``part-NNNNN`` number is its partition id. Spark writes an
+        empty file when task 0 gets no rows; a file holding no bucket is
+        removed with its ``.crc``. Returns every file left (relative to the
+        table root) → the buckets written into it, then those two lsns (None
+        when no row has one)."""
         par = self.spark.sparkContext.defaultParallelism
         if slices is None:
             slices = max(1, min(8, par // n_buckets))
@@ -504,7 +509,7 @@ class ParquetLakeTable:
         df = df.observe(
             held,
             F.collect_set(F.struct("_task", "_bucket")).alias("held"),
-            F.min(lsn).alias("lo"),
+            F.min(F.when(F.col("_version") == version, lsn)).alias("lo"),
             F.max(lsn).alias("hi"),
         )
         df.drop("_task").write.mode("overwrite").parquet(out_dir)
@@ -558,12 +563,18 @@ class ParquetLakeTable:
         winners are written by ``_write_buckets`` as this commit's delta,
         stamped ``_version`` = the commit, and their files are added to the
         touched buckets' file lists with the write's highest lsn as their
-        bound. The table's payload is never read or rewritten.
+        bound. Outside a fold, the table's payload is never read or rewritten.
 
-        After its own commit, the merge folds every bucket whose files span
-        more than ``_FOLD_AT`` commits (a separate commit; see ``compact``).
-        ``stats`` reports ``buckets_rewritten`` (the touched buckets),
-        ``files_written`` (the delta's files), ``stored_files_scanned`` (the
+        A merge is one commit. Each touched bucket whose files already span
+        ``_FOLD_AT`` commits folds in it: the same write holds every stored
+        row of the bucket (read in the manifest's types and cast to the new
+        ones) and its delta rows, resolved to each key's highest ``_version``
+        (a delta row, when the key has one), and the commit replaces the
+        bucket's file list. A batch that changes a column's type folds every
+        stored bucket that way, since parquet cannot read a stored file in
+        every new type; its stored side then covers all of them. ``stats``
+        reports ``buckets_rewritten`` (the touched buckets),
+        ``files_written`` (the commit's files), ``stored_files_scanned`` (the
         files of the stored side) and ``buckets_folded``.
 
         ``touched_buckets`` is the caller's set of buckets the batch's keys
@@ -577,14 +588,12 @@ class ParquetLakeTable:
         (``schema.valid_event``) raises ``ValueError`` before anything is
         written.
 
-        ``prof`` (``apply_batch`` hands in its own) receives four scopes:
-        ``plan`` (manifest read, schema unification — with the table's
-        rewrite when the batch changes a column's type —, the touched-bucket
-        probe when no hint is given, building the plan; an empty batch commits its
+        ``prof`` (``apply_batch`` hands in its own) receives three scopes:
+        ``plan`` (manifest read, schema unification, the touched-bucket probe
+        when no hint is given, building the plan; an empty batch commits its
         watermark here and stops), ``write`` (the one write action: stored
-        scan, batch top-1, anti-join and delta write run inside it),
-        ``commit`` (the manifest) and ``fold`` (the fold check, and the fold
-        when one is due).
+        scan, batch top-1, anti-join, the fold's read and resolution, and the
+        write run inside it) and ``commit`` (the manifest).
         """
         prof = prof or Profiler()
         with prof.scope("plan"):
@@ -605,17 +614,6 @@ class ParquetLakeTable:
                 f for f in updates.schema.fields if f.name not in (self.op_col,)
             ]
             new_schema = unify_schemas(table_schema, T.StructType(batch_payload_fields))
-            if man["buckets"] and any(
-                f.dataType != new_schema[f.name].dataType for f in table_schema.fields
-            ):
-                # A stored file reads only as types parquet can widen its own
-                # to (int as long or double, never long as double or a number
-                # as string), so a batch that changes a column's type first
-                # rewrites the table in the new types, as a commit of its own.
-                cur_version = self._rewrite(
-                    man, sorted(int(b) for b in man["buckets"]), None, schema=new_schema
-                )
-                man = self._manifest(cur_version)
 
             batch = conform_to(
                 updates, new_schema, keep_extra=[self.op_col]
@@ -649,6 +647,21 @@ class ParquetLakeTable:
                 version = self._commit_next(man, batch_id=batch_id, query_id=query_id)
                 return MergeResult(True, version, batch_id, [], {"rows": 0})
 
+            # The buckets this commit rewrites, resolved, beside its delta: every
+            # stored bucket when a column changes type (a stored file reads only
+            # as types parquet can widen its own to: int as long or double, never
+            # long as double or a number as string), else each touched bucket
+            # whose files already span _FOLD_AT commits, which this commit's
+            # delta would take past it.
+            if any(f.dataType != new_schema[f.name].dataType for f in table_schema.fields):
+                redo = sorted(int(b) for b in man["buckets"])
+            else:
+                redo = [
+                    b for b in touched
+                    if len({_commit_of(f) for f in man["buckets"].get(str(b), [])}) >= _FOLD_AT
+                ]
+            scope = sorted(set(touched) | set(redo))
+
             # The LWW ordering (lsn, op_rank, src) packs into ONE long:
             # lsn*8 + op_rank*2 + src (op_rank ∈ 0..3, src ∈ 0..1; lsn < 2^60 by
             # contract). An incoming winner's ord is odd (src 1); a stored row's
@@ -671,7 +684,7 @@ class ParquetLakeTable:
             # The schema is the merged one: an empty table's manifest schema
             # may lack the batch's key columns. (Catalyst keeps the join of an
             # empty stored side, exchanges included, so skip it here.)
-            stored, _, scanned = self._scan(man, touched, schema=new_schema, lsn_floor=floor)
+            stored, _, scanned = self._scan(man, scope, schema=new_schema, lsn_floor=floor)
             delta = winners
             if scanned:
                 stored = stored.select(
@@ -689,10 +702,18 @@ class ParquetLakeTable:
                 (F.col(self.op_col) == "D").alias("_deleted"),
                 F.lit(new_version).cast("long").alias("_version"),
             )
+            if redo:
+                # Every stored row of ``redo`` in the manifest's types, then
+                # each key's highest stamp: the delta's row, when it has one.
+                folded, _, _ = self._scan(man, redo)
+                delta = self._latest(
+                    conform_to(folded, new_schema, keep_extra=["_deleted", "_version"])
+                    .unionByName(delta)
+                )
 
         with prof.scope("write"):
-            written, lo, hi = self._write_buckets(delta, new_version, len(touched))
-        stray = {b for bs in written.values() for b in bs} - set(touched)
+            written, lo, hi = self._write_buckets(delta, new_version, len(scope))
+        stray = {b for bs in written.values() for b in bs} - set(scope)
         if stray:
             raise ValueError(
                 f"merge: the batch has keys in buckets {sorted(stray)} "
@@ -709,59 +730,32 @@ class ParquetLakeTable:
             )
         with prof.scope("commit"):
             self._commit_next(
-                man, written, schema=new_schema, batch_id=batch_id, query_id=query_id,
-                max_lsn=hi,
+                man, written, replaced=redo, schema=new_schema, batch_id=batch_id,
+                query_id=query_id, max_lsn=hi, folded_buckets=len(redo),
             )
-        with prof.scope("fold"):
-            folded = self._fold(new_version)
         return MergeResult(
             True, new_version, batch_id, touched,
             {
                 "buckets_rewritten": len(touched),
                 "files_written": len(written),
                 "stored_files_scanned": scanned,
-                "buckets_folded": folded,
+                "buckets_folded": len(redo),
             },
         )
 
     # ---------- maintenance ----------
 
     def _rewrite(
-        self,
-        man: dict[str, Any],
-        buckets: list[int],
-        slices: int | None,
-        schema: T.StructType | None = None,
-        **stats: Any,
+        self, man: dict[str, Any], buckets: list[int], slices: int | None, **stats: Any
     ) -> int:
         """Rewrite ``buckets`` of snapshot ``man`` as their resolved rows in
-        one new commit — the body of the fold, of ``compact`` and of a merge's
-        type change (``schema``: cast every row to it and commit it). Row
-        content, tombstones and ``_version`` stamps are kept as they are, so
-        the change feed emits nothing for the commit. The buckets' rows left
-        in older files shared with other buckets become dead rows. Returns
-        the new version."""
+        one new commit: the body of ``compact``. Row content, tombstones and
+        ``_version`` stamps are kept as they are, so the change feed emits
+        nothing for the commit. The buckets' rows left in older files shared
+        with other buckets become dead rows. Returns the new version."""
         df = self.read(version=man["version"], buckets=buckets, include_tombstones=True)
-        if schema is not None:
-            df = conform_to(df, schema, keep_extra=["_deleted", "_version"])
         written, _, hi = self._write_buckets(df, man["version"] + 1, len(buckets), slices)
-        return self._commit_next(
-            man, written, replaced=buckets, schema=schema, max_lsn=hi, **stats
-        )
-
-    def _fold(self, version: int) -> int:
-        """Fold every bucket of snapshot ``version`` whose files come from more
-        than ``_FOLD_AT`` commits, so no read resolves more commits than that.
-        Returns the number of buckets folded."""
-        man = self._manifest(version)
-        due = sorted(
-            int(b)
-            for b, fs in man["buckets"].items()
-            if len({_commit_of(f) for f in fs}) > _FOLD_AT
-        )
-        if due:
-            self._rewrite(man, due, None, folded_buckets=len(due))
-        return len(due)
+        return self._commit_next(man, written, replaced=buckets, max_lsn=hi, **stats)
 
     def overwrite(self, df: DataFrame) -> MergeResult:
         """CLOBBER strategy (full refresh) — the reference's deleteAndCopy

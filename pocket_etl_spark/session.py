@@ -99,6 +99,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # A lake scan hands Spark its explicit file list; above this many paths
+        # Spark lists them in a distributed job (one task per file) instead of
+        # on the driver. A merge's fold reads a few dozen to hundreds of files.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

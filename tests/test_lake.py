@@ -738,16 +738,20 @@ def test_type_change_rewrites_stored_files(spark, tmp_table_path):
     """Parquet reads a stored column only as a type it can widen its own to
     (int as long or double, not long as double or a number as string). A
     batch that changes a column's type must leave every stored row readable
-    in the new type, in buckets it touches and in buckets it does not."""
+    in the new type, in buckets it touches and in buckets it does not, and
+    rewrite them inside its own one commit."""
     schema = "lsn long, op string, repo string, path string, score {}"
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=8)
     first = [(i, "I", "r", f"p{i}", i) for i in range(40)]
     table.merge(spark.createDataFrame(first, schema.format("long")), batch_id=0)
-    table.merge(spark.createDataFrame([(100, "U", "r", "p0", 0.5)], schema.format("double")), batch_id=1)
+    res = table.merge(spark.createDataFrame([(100, "U", "r", "p0", 0.5)], schema.format("double")), batch_id=1)
+    assert table.current_version() == res.version == 2
+    assert res.stats["buckets_folded"] == len(table._manifest(1)["buckets"])
     got = {r["path"]: r["score"] for r in table.read().collect()}
     assert got == {**{f"p{i}": float(i) for i in range(40)}, "p0": 0.5}
     assert table.schema()["score"].dataType.simpleString() == "double"
-    table.merge(spark.createDataFrame([(101, "U", "r", "p1", "x")], schema.format("string")), batch_id=2)
+    res = table.merge(spark.createDataFrame([(101, "U", "r", "p1", "x")], schema.format("string")), batch_id=2)
+    assert table.current_version() == res.version == 3
     got = {r["path"]: r["score"] for r in table.read().collect()}
     assert got == {**{f"p{i}": str(float(i)) for i in range(40)}, "p0": "0.5", "p1": "x"}
     assert {r["path"] for r in table.read_changes(1).collect()} == {"p0", "p1"}
@@ -759,7 +763,8 @@ def test_deltas_and_fold_match_lww(spark, tmp_table_path):
     events, a delete then a re-insert, exact duplicates, an int -> double
     widening) every read must equal the LWW state of all events: the
     snapshot, the tombstone view, bucket-pruned reads and every change-feed
-    window ``(s, v]`` of every commit, and the fold's window is empty."""
+    window ``(s, v]`` of every commit. Every merge, the folding ones and the
+    one that widens a column included, is one commit."""
     from pocket_etl_spark.cdc.dedupe import OP_RANK, lww_dedupe
     from pocket_etl_spark.lake import _FOLD_AT
 
@@ -846,10 +851,9 @@ def test_deltas_and_fold_match_lww(spark, tmp_table_path):
             if s is None or e[0] > s[0] or (e[0] == s[0] and (s[1] != "D" or e[1] == "D")):
                 score = None if e[5] is None else float(e[5])
                 state[p] = (e[0], e[1], e[4], score, res.version)
+        assert table.current_version() == res.version
         if res.stats["buckets_folded"]:
-            assert table.current_version() == res.version + 1
-            assert table.read_changes(res.version, res.version + 1).count() == 0
-            man = table._manifest(table.current_version())
+            man = table._manifest(res.version)
             assert len({f.split("/")[1] for f in man["buckets"][str(bucket[hot])]}) == 1
         check()
     assert any(
@@ -865,7 +869,8 @@ def test_lsn_bounds_prune_the_stored_side_exactly(spark, tmp_table_path, monkeyp
     bounds, a replayed batch, a fold and a manifest written without bounds,
     every read must equal the LWW state of all events: the snapshot, the
     tombstone view and every change-feed window ``(s, v]``. A merge handed a
-    floor above one of its rows raises and commits nothing."""
+    floor above one of its rows raises and commits nothing; a folding merge
+    handed the right floor commits, though its fold carries rows below it."""
     import json
 
     import pytest
@@ -909,8 +914,8 @@ def test_lsn_bounds_prune_the_stored_side_exactly(spark, tmp_table_path, monkeyp
             for s in range(v) for p, lsn, d, _, c_v in want if c_v > s
         ), v
 
-    def merge(batch, batch_id):
-        res = table.merge(spark.createDataFrame(batch, cols), batch_id=batch_id)
+    def merge(batch, batch_id, **hint):
+        res = table.merge(spark.createDataFrame(batch, cols), batch_id=batch_id, **hint)
         events.extend(batch)
         for e in batch:
             stamp[(e[3], e[0], e[1])] = res.version
@@ -936,7 +941,22 @@ def test_lsn_bounds_prune_the_stored_side_exactly(spark, tmp_table_path, monkeyp
     monkeypatch.setattr(lake, "_FOLD_AT", 1)
     res = merge(b1, 5)
     assert res.stats["buckets_folded"] > 0
-    assert table.read_changes(res.version, res.version + 1).count() == 0
+    assert table.current_version() == res.version
+    # a folding merge with the batch's buckets and lowest lsn as its hint:
+    # a floor above one of its rows raises, the right floor commits
+    hinted = [ev(130 + i, "U", p) for i, p in enumerate(paths[1:9])]
+    hint = {
+        "touched_buckets": sorted({
+            r["b"] for r in spark.createDataFrame(hinted, cols).select(table._bucket_expr().alias("b")).collect()
+        })
+    }
+    v, wm = table.current_version(), table.last_batch_id()
+    with pytest.raises(ValueError, match="below lsn_floor"):
+        table.merge(spark.createDataFrame(hinted, cols), batch_id=6, lsn_floor=131, **hint)
+    assert (table.current_version(), table.last_batch_id()) == (v, wm)
+    res = merge(hinted, 6, lsn_floor=130, **hint)
+    assert res.stats["buckets_folded"] == len(hint["touched_buckets"])
+    assert table.current_version() == res.version == v + 1
     monkeypatch.setattr(lake, "_FOLD_AT", 100)
 
     # a manifest written before bounds: every file of it is unbounded
@@ -947,18 +967,18 @@ def test_lsn_bounds_prune_the_stored_side_exactly(spark, tmp_table_path, monkeyp
     with open(head, "w") as f:
         json.dump(man, f)
     unbounded = listed(range(4), table.current_version())
-    res = merge([ev(110, "U", p) for p in paths[1:4]] + [ev(400 + i, "U", p) for i, p in enumerate(paths[25:])], 6)
+    res = merge([ev(110, "U", p) for p in paths[1:4]] + [ev(400 + i, "U", p) for i, p in enumerate(paths[25:])], 7)
     assert res.stats["stored_files_scanned"] == len(listed(res.touched_buckets, res.version - 1))
     man = table._manifest(res.version)
     assert set(man["max_lsn"]) == {f for f in man["files"] if lake._commit_of(f) == res.version}
     # later merges still scan the unbounded files, and only those
-    res = merge([ev(500 + i, "U", p) for i, p in enumerate(paths[5:12])], 7)
+    res = merge([ev(500 + i, "U", p) for i, p in enumerate(paths[5:12])], 8)
     assert res.stats["stored_files_scanned"] == len(listed(res.touched_buckets, res.version) & unbounded)
 
     # a floor above one of the batch's rows: the merge raises before committing
     v, wm = table.current_version(), table.last_batch_id()
     bad = spark.createDataFrame([ev(50, "I", "pnew"), ev(600, "U", paths[1])], cols)
     with pytest.raises(ValueError, match="below lsn_floor"):
-        table.merge(bad, batch_id=8, touched_buckets=list(range(4)), lsn_floor=600)
+        table.merge(bad, batch_id=9, touched_buckets=list(range(4)), lsn_floor=600)
     assert (table.current_version(), table.last_batch_id()) == (v, wm)
     check()

@@ -268,3 +268,29 @@ def test_merge_above_every_bound_reads_no_stored_file(spark, tmp_path, monkeypat
     text, blocks, data_dir = _second_merge_plan(spark, tmp_path, monkeypatch, 4, "lsn > 1000")
     assert not [d for n, d in blocks.values() if n == "Scan" and data_dir in d], text
     assert not [n for n, _ in blocks.values() if "Join" in n], text
+
+
+def test_read_of_many_files_lists_them_on_the_driver(spark, tmp_path, monkeypatch):
+    """A lake read hands Spark its explicit file list. Above
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths (32 by
+    default) Spark lists them in a Spark job of one task per file; the
+    session's threshold keeps a read of a few dozen files, like a fold's,
+    listing on the driver: planning the read runs no Spark job."""
+    from pocket_etl_spark import lake
+    from pocket_etl_spark.datagen import gen_change_events
+
+    monkeypatch.setattr(lake, "_FOLD_AT", 100)
+    table = lake.ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=16)
+    ev = gen_change_events(spark, 1000, 400, seed=5).drop("ts", "extras")
+    for i in range(5):
+        table.merge(ev.filter(f"lsn > {200 * i} AND lsn <= {200 * (i + 1)}"), batch_id=i)
+    assert len(table._manifest(table.current_version())["files"]) > 32
+
+    sc = spark.sparkContext
+    group = f"listing-{tmp_path.name}"
+    sc.setJobGroup(group, "lake read plan")
+    try:
+        table.read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

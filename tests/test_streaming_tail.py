@@ -218,15 +218,16 @@ def test_kafka_envelope_tail_matches_oracle(spark, tmp_path):
 
 
 def test_stop_during_fold_then_restart(spark, tmp_path, monkeypatch):
-    """``stop()`` while a committed batch's fold is in flight, then a restart
-    on the same checkpoint. The fold blocks in a JVM call, which the stop
-    interrupts; the batch's delta had already committed, so Spark replays the
-    batch on restart and the fence makes that replay a no-op: no second
-    commit and no second copy of its DLQ rows. The next commit writes over
-    the fold's half-written data dir. (Spark's interruption check matches the
-    Python error text against a regex whose repeated group recurses once per
-    character, so a long text overflows the stream thread's stack; the query
-    ends with no exception either way.)"""
+    """``stop()`` while a batch's folding merge is writing, then a restart on
+    the same checkpoint. The write blocks in a JVM call, which the stop
+    interrupts; the fold is inside the batch's one commit, so nothing of the
+    batch has committed and Spark replays it on restart. Every committed
+    batch then has its metrics record, the replay replaces the batch's DLQ
+    rows instead of adding a second copy, and it writes over the half-written
+    data dir. (Spark's interruption check matches the Python error text
+    against a regex whose repeated group recurses once per character, so a
+    long text overflows the stream thread's stack; the query ends with no
+    exception either way.)"""
     import threading
 
     from pocket_etl_spark import lake
@@ -246,22 +247,23 @@ def test_stop_during_fold_then_restart(spark, tmp_path, monkeypatch):
     table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=8)
     dlq, ckpt = str(tmp_path / "dlq"), str(tmp_path / "ckpt")
     folding = threading.Event()
-    real_rewrite = ParquetLakeTable._rewrite
+    real_write = ParquetLakeTable._write_buckets
 
-    def blocked_rewrite(self, man, buckets, slices, **kw):
-        if kw.get("folded_buckets") and not folding.is_set():
-            # the fold's write has begun: its data dir holds a stray part file
-            half = os.path.join(self.path, "data", f"v{man['version'] + 1:012d}")
+    def blocked_write(self, df, version, n_buckets, slices=None):
+        if version == 2 and not folding.is_set():
+            # batch 1's merge folds (every bucket it touches holds commit 1)
+            # and its write has begun: its data dir holds a stray part file
+            half = os.path.join(self.path, "data", f"v{version:012d}")
             os.makedirs(half)
             with open(os.path.join(half, "part-00000-half.parquet"), "wb") as f:
                 f.write(b"PAR1")
             folding.set()
             # a JVM call on the stream thread, so stop() interrupts it
             spark.sparkContext._jvm.java.lang.Thread.sleep(120_000)
-        return real_rewrite(self, man, buckets, slices, **kw)
+        return real_write(self, df, version, n_buckets, slices)
 
     monkeypatch.setattr(lake, "_FOLD_AT", 1)
-    monkeypatch.setattr(ParquetLakeTable, "_rewrite", blocked_rewrite)
+    monkeypatch.setattr(ParquetLakeTable, "_write_buckets", blocked_write)
     send(0)
     send(1)
     q = cdc_tail.start_tail(
@@ -269,15 +271,15 @@ def test_stop_during_fold_then_restart(spark, tmp_path, monkeypatch):
         max_files_per_trigger=1, available_now=False,
     )
     try:
-        assert folding.wait(120), "the fold never started"
+        assert folding.wait(120), "the folding merge never started writing"
         q.stop()
     finally:
         folding.set()
         if q.isActive:
             q.stop()
     assert not q.isActive and q.exception() is None
-    assert (table.last_batch_id("qs"), table.current_version()) == (1, 2)
-    half = os.path.join(table.path, "data", f"v{3:012d}")
+    assert (table.last_batch_id("qs"), table.current_version()) == (0, 1)
+    half = os.path.join(table.path, "data", f"v{2:012d}")
     assert os.listdir(half) == ["part-00000-half.parquet"]
 
     send(2)
@@ -285,11 +287,14 @@ def test_stop_during_fold_then_restart(spark, tmp_path, monkeypatch):
     good = events.filter(F.col("op").isin("I", "U", "D"))
     assert_state_equals_oracle(table, good.toPandas())
     assert spark.read.parquet(dlq).count() == events.count() - good.count() == 15
+    metrics = sorted(table.read_metrics().collect(), key=lambda r: r["version"])
+    assert [r["batch_id"] for r in metrics] == [0, 1, 2]
+    assert metrics[1]["buckets_folded"] > 0
     assert [
         v for v in range(1, table.current_version() + 1)
         if table._manifest(v)["watermarks"].get("qs") == 1
         and table._manifest(v - 1)["watermarks"].get("qs") != 1
     ] == [2]
     on_disk = sorted(f for f in os.listdir(half) if f.endswith(".parquet"))
-    assert on_disk == sorted(os.path.basename(f) for f in table._manifest(3)["files"] if lake._commit_of(f) == 3)
+    assert on_disk == sorted(os.path.basename(f) for f in table._manifest(2)["files"] if lake._commit_of(f) == 2)
     assert "part-00000-half.parquet" not in on_disk
