@@ -1,4 +1,4 @@
-"""Batch apply: validate → DLQ split → promote tunnel fields → LWW dedupe → MERGE,
+"""Batch apply: validate → DLQ split → promote tunnel fields → MERGE (LWW per key),
 leaving one metrics record per committed batch (``<table>/_metrics``).
 
 This is the compiled "consumer chain" the engine runs once per micro-batch — the
@@ -13,12 +13,13 @@ from __future__ import annotations
 import glob
 import hashlib
 import os
-import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pocket_etl_spark.cdc.evolution import EXTRAS_COL, PROMOTE_PREFIX, promote_extras
@@ -40,25 +41,24 @@ class ApplyResult:
     timings: dict[str, float] = field(default_factory=dict)
 
 
-def _write_dlq(records: DataFrame, dlq_path: str, query_id: str, batch_id: int | None) -> None:
-    """Write a batch's DLQ records into ``dlq_path`` as its files
-    ``dlq-<hash(query_id)>-<batch_id>-<n>.parquet``, replacing the files an
-    earlier attempt of the batch left there, so a replayed batch leaves each
-    invalid row once. Spark writes them to a hidden ``_``-prefixed staging
-    dir (readers of ``dlq_path`` skip it); then the address's earlier files
-    are removed, the new ones moved in and the staging dir dropped. A crash
-    on the way leaves the batch uncommitted, and its replay rewrites the
+def _write_dlq(records: pa.Table, dlq_path: str, query_id: str, batch_id: int | None) -> None:
+    """Write a batch's DLQ records, already on the driver as an Arrow table
+    of ``DLQ_SCHEMA``, into ``dlq_path`` as the file
+    ``dlq-<hash(query_id)>-<batch_id>-0.parquet``, replacing the files an
+    earlier attempt of the batch left at that address, so a replayed batch
+    leaves each invalid row once. pyarrow writes a hidden ``_``-prefixed temp
+    file (readers of ``dlq_path`` skip it), the address's earlier files are
+    removed, and ``os.replace`` moves the new one in: no Spark job. A crash on
+    the way leaves the batch uncommitted, and its replay rewrites the
     address. A batch without an id gets a fresh address."""
     qh = hashlib.sha1(query_id.encode()).hexdigest()[:12]
     addr = f"dlq-{qh}-{uuid.uuid4().hex if batch_id is None else batch_id}"
-    staging = os.path.join(dlq_path, f"_{addr}")
-    records.write.mode("overwrite").parquet(staging)
+    os.makedirs(dlq_path, exist_ok=True)
+    tmp = os.path.join(dlq_path, f"_{addr}.{uuid.uuid4().hex}")
+    pq.write_table(records, tmp)
     for f in glob.glob(os.path.join(dlq_path, f"{addr}-*.parquet")):
         os.remove(f)
-    parts = sorted(f for f in os.listdir(staging) if f.endswith(".parquet"))
-    for n, f in enumerate(parts):
-        os.replace(os.path.join(staging, f), os.path.join(dlq_path, f"{addr}-{n}.parquet"))
-    shutil.rmtree(staging)
+    os.replace(tmp, os.path.join(dlq_path, f"{addr}-0.parquet"))
 
 
 def apply_batch(
@@ -71,6 +71,13 @@ def apply_batch(
     dlq_payload: DlqPayload = "redacted",
 ) -> ApplyResult:
     """Apply one micro-batch of change events to the lake table, exactly-once.
+
+    A steady batch runs three Spark jobs: one stats pass over the cached
+    batch (its aggregates are an ``Observation``; its action fills the cache
+    and brings back the invalid rows as DLQ records) and the merge's write
+    (its repartition's map stage, then the write). The driver holds only the
+    batch's invalid rows, as DLQ records (an Arrow table), and writes them
+    itself; a batch with many invalid rows costs driver memory in proportion.
 
     Phase timings are collected into a hierarchical Profiler tree (the
     reference's EtlProfilingScope.java:47-128 timer rollup) and exported
@@ -88,7 +95,7 @@ def apply_batch(
     the valid events, duration_sec, committed_at and the timings. Its counts come from the one stats pass,
     so the record costs no Spark job. A fenced replay writes none.
 
-    Invalid rows go to ``dlq_path`` under the batch's own file names
+    Invalid rows go to ``dlq_path`` under the batch's own file name
     (``_write_dlq``), so a replay of a batch that failed before its commit
     replaces its DLQ rows instead of adding a second copy.
 
@@ -123,59 +130,49 @@ def apply_batch(
     # pass below: if the stats pass ran against an unpersisted frame, a
     # non-deterministic upstream could hand the merge keys whose bucket never
     # entered touched_buckets — the merge would then write a bucket the
-    # manifest loop never registers, silently dropping the update. Tagging the
-    # FULL batch folds the bad-row count into the single stats pass (a clean
-    # micro-batch pays ZERO extra upstream scans for the validation — VERDICT
-    # r3 'wrong' #3), and a nonzero DLQ write reads the cache, never the
-    # upstream.
+    # manifest loop never registers, silently dropping the update.
     with prof.scope("dlq_split"):
+        valid = F.col("_valid")
         cached = events.withColumn(
             "_valid", valid_event(table.key_cols, table.lsn_col, table.op_col)
         ).persist()
-        valid = F.col("_valid")
-        bad = cached.filter(~valid).drop("_valid")
+        # ONE stats pass (see the docstring) observes what the merge needs:
+        # the touched hash buckets, the event and invalid-row counts, the
+        # valid LSN range (its low end is the merge's lsn floor) and the
+        # promotable tunnel keys.
+        observed = Observation()
+        aggs = [
+            F.collect_set(F.when(valid, table._bucket_expr())).alias("buckets"),
+            F.count_if(~valid).alias("bad"),
+            F.count(F.lit(1)).alias("n"),
+            F.min(F.when(valid, F.col(table.lsn_col))).alias("min_lsn"),
+            F.max(F.when(valid, F.col(table.lsn_col))).alias("max_lsn"),
+        ]
+        if EXTRAS_COL in events.columns:
+            promotable = F.filter(
+                F.map_keys(F.col(EXTRAS_COL)), lambda k: k.startswith(PROMOTE_PREFIX)
+            )
+            aggs.append(
+                F.array_distinct(F.flatten(F.collect_set(F.when(valid, promotable))))
+                .alias("promo")
+            )
+        error = "validation: null key/lsn or bad op"
+        if dlq_payload == "redacted":
+            error += " (payload redacted; apply_batch dlq_payload='full' opts in)"
         # envelope-decode residue (streaming/envelope.decode_kafka_envelope):
-        # the raw undecodable payload rides into the DLQ with the bad rows, but
-        # must never reach the merge or it would schema-evolve into the table.
-        good = cached.filter(valid).drop("_valid", "_raw_value")
+        # the raw undecodable payload rides into the DLQ with the bad rows.
+        bad = dlq_records(
+            cached.observe(observed, *aggs).filter(~valid).drop("_valid"),
+            batch_id, "apply", F.lit(error), dlq_payload, dlq_keys,
+        )
 
     try:
-        # ONE stats pass over the batch computes everything the driver needs
-        # before the merge: the set of touched hash buckets (merge compares
-        # against and appends to only those), the event and invalid-row
-        # counts, the valid LSN range (its low end is the merge's lsn floor),
-        # and the distinct promotable tunnel keys (schema evolution). This
-        # pass also populates the cache, so every later consumer reads the
-        # same materialization.
-        sel = [
-            F.when(valid, table._bucket_expr()).alias("_b"),
-            F.when(valid, 0).otherwise(1).alias("_inv"),
-            F.when(valid, F.col(table.lsn_col)).alias("_lsn"),
-        ]
-        aggs = [
-            F.collect_set("_b").alias("_buckets"),
-            F.sum("_inv").alias("_bad"),
-            F.count(F.lit(1)).alias("_n"),
-            F.min("_lsn").alias("_min_lsn"),
-            F.max("_lsn").alias("_max_lsn"),
-        ]
-        if EXTRAS_COL in good.columns:
-            sel.append(
-                F.when(
-                    valid,
-                    F.filter(
-                        F.map_keys(F.col(EXTRAS_COL)),
-                        lambda k: k.startswith(PROMOTE_PREFIX),
-                    ),
-                ).alias("_pk")
-            )
-            aggs.append(F.array_distinct(F.flatten(F.collect_set("_pk"))).alias("_promo"))
         with prof.scope("batch_stats"):
-            stats = cached.select(*sel).agg(*aggs).collect()[0]
-            touched = sorted(stats["_buckets"])
-            promo_keys = sorted(stats["_promo"]) if EXTRAS_COL in good.columns else []
-        rows_in = int(stats["_n"])
-        rows_bad = int(stats["_bad"] or 0)
+            records = bad.toArrow()
+            stats = observed.get
+        touched = sorted(stats["buckets"])
+        rows_in = int(stats["n"])
+        rows_bad = int(stats["bad"])
 
         if rows_bad:
             # Same rule as redrive: an invalid row with nowhere to go must
@@ -188,28 +185,23 @@ def apply_batch(
                     "route them — merging would silently drop them. Pass "
                     "dlq_path or repair them upstream."
                 )
-            error = "validation: null key/lsn or bad op"
-            if dlq_payload == "redacted":
-                error += " (payload redacted; apply_batch dlq_payload='full' opts in)"
             with prof.scope("dlq_write"):
-                _write_dlq(
-                    dlq_records(bad, batch_id, "apply", F.lit(error), dlq_payload, dlq_keys),
-                    dlq_path, query_id, batch_id,
-                )
+                _write_dlq(records, dlq_path, query_id, batch_id)
 
         # Schema evolution: lift tunnel fields (extras map "new_col_*") to
-        # columns before the merge widens the table schema.
-        good = promote_extras(good, keys=promo_keys)
-        payload = good.drop(*[c for c in DROP_COLS if c in good.columns])
+        # columns before the merge widens the table schema. The raw
+        # undecodable payload never reaches the merge, or it would
+        # schema-evolve into the table.
+        good = promote_extras(cached.filter(valid), keys=sorted(stats.get("promo") or []))
+        payload = good.drop("_valid", "_raw_value", *DROP_COLS)
 
-        # The batch goes to the merge as is: the merge collapses it to one row
-        # per key itself (a map-side partial top-1 before its key shuffle), so a
-        # separate lww_dedupe pass would only add a redundant shuffle. lww_dedupe
-        # remains the standalone operator for non-merge consumers.
+        # The batch goes to the merge as is: its write tasks keep each key's
+        # winner, so a separate lww_dedupe pass would only add a shuffle.
+        # lww_dedupe remains the standalone operator for non-merge consumers.
         with prof.scope("merge"):
             result = table.merge(
                 payload, batch_id=batch_id, query_id=query_id,
-                touched_buckets=touched, lsn_floor=stats["_min_lsn"], prof=prof,
+                touched_buckets=touched, lsn_floor=stats["min_lsn"], prof=prof,
             )
     finally:
         cached.unpersist()
@@ -235,8 +227,8 @@ def apply_batch(
                 "files_written": result.stats.get("files_written", 0),
                 "buckets_folded": result.stats.get("buckets_folded", 0),
                 "stored_files_scanned": result.stats.get("stored_files_scanned", 0),
-                "min_lsn": stats["_min_lsn"],
-                "max_lsn": stats["_max_lsn"],
+                "min_lsn": stats["min_lsn"],
+                "max_lsn": stats["max_lsn"],
                 "duration_sec": res.duration_sec,
                 "committed_at": time.time(),
                 "timings": res.timings,

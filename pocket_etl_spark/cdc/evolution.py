@@ -27,10 +27,9 @@ def promote_extras(df: DataFrame, keys: list[str], extras_col: str = EXTRAS_COL)
     Type refinement happens later via the widen lattice if a typed batch arrives;
     strings are the safe landing type (reference parity: all tunnel values are
     Jackson strings)."""
-    out = df
-    for k in keys:
-        out = out.withColumn(k, F.col(extras_col).getItem(k))
-    return out
+    if not keys:
+        return df
+    return df.withColumns({k: F.col(extras_col).getItem(k) for k in keys})
 
 
 def unify_schemas(table_schema: T.StructType, batch_schema: T.StructType) -> T.StructType:
@@ -56,15 +55,23 @@ def unify_schemas(table_schema: T.StructType, batch_schema: T.StructType) -> T.S
 def conform_to(df: DataFrame, schema: T.StructType, keep_extra: list[str] | None = None) -> DataFrame:
     """Project/cast ``df`` to ``schema``: missing columns become typed NULLs,
     conflicting types are cast (safe by construction — widen only widens).
-    ``keep_extra`` columns (e.g. the op column) ride along untouched."""
-    cols = []
+    ``keep_extra`` columns (e.g. the op column) ride along untouched. A frame
+    whose columns already are ``schema``'s names and types, in order, then
+    the present ``keep_extra`` columns, comes back as it is (no projection
+    to analyze); only columns of another type are cast."""
     have = set(df.columns)
+    extras = [c for c in keep_extra or [] if c in have]
+    target = [(f.name, f.dataType) for f in schema.fields]
+    if [(f.name, f.dataType) for f in df.schema.fields] == target + [
+        (c, df.schema[c].dataType) for c in extras
+    ]:
+        return df
+    cols: list = []
     for f in schema.fields:
-        if f.name in have:
+        if f.name not in have:
+            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+        elif df.schema[f.name].dataType != f.dataType:
             cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
         else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    for extra in keep_extra or []:
-        if extra in have:
-            cols.append(F.col(extra))
-    return df.select(*cols)
+            cols.append(f.name)
+    return df.select(*cols, *extras)

@@ -29,7 +29,9 @@ Scale design (the part that matters at 100 TB):
   Delta Lake deletion vectors). It writes only the batch's per-key winners
   that beat the stored state, stamped ``_version`` = the commit, and adds
   their files to the touched buckets' file lists; no stored row is read in
-  full or rewritten. Deciding "beats the stored state" reads a narrow scan of
+  full or rewritten. The write tasks pick each key's winner after the
+  write's one repartition (all of a key's rows share its bucket), so the
+  batch is exchanged once. Deciding "beats the stored state" reads a narrow scan of
   the touched buckets (key columns, lsn, ``_deleted``). Its cost is O(batch)
   written, not O(table): a batch of n distinct keys touches all but a
   (1 - 1/num_buckets)^n share of the buckets, so a copy-on-write merge would
@@ -46,8 +48,9 @@ Scale design (the part that matters at 100 TB):
   when the bucket's files come from more than one commit.
 - A **fold** bounds how many commits a read resolves: a merge that would
   leave a touched bucket's files spanning more than ``_FOLD_AT`` commits
-  rewrites that bucket, resolved, in the same write and commit as its delta
-  (stamps preserved, so the change feed emits only the batch's rows). Rows of
+  rewrites that bucket, resolved by the same in-task pick, in the same write
+  and commit as its delta (stamps preserved, so the change feed emits only
+  the batch's rows). Rows of
   a rewritten bucket that stay behind in an older shared file are dead, and
   every read filters them out. A batch that changes a column's type rewrites
   every stored bucket the same way. Every merge is one commit.
@@ -455,7 +458,12 @@ class ParquetLakeTable:
         return F.pmod(F.xxhash64(*self.key_cols), F.lit(self.num_buckets)).cast("int")
 
     def _write_buckets(
-        self, df: DataFrame, version: int, n_buckets: int, slices: int | None = None
+        self,
+        df: DataFrame,
+        version: int,
+        n_buckets: int,
+        slices: int | None = None,
+        order: tuple[str, ...] = (),
     ) -> tuple[dict[str, list[int]], int | None, int | None]:
         """Write ``df`` as snapshot dir ``data/v{version}``, ONE part file per
         write task — the one bucket writer of merge, overwrite and compact.
@@ -467,6 +475,14 @@ class ParquetLakeTable:
         frame spans fewer buckets than there are cores, each bucket splits
         into ``min(8, cores // n_buckets)`` slices so the rewrite stays
         core-parallel (the cap bounds file counts).
+
+        With ``order``, each key keeps one row: its highest by the ``order``
+        columns, descending in turn. The write tasks pick it themselves
+        (``row_number() = 1`` over ``_bucket``, ``_slice`` and the keys,
+        after the write repartition): all of a key's rows share a bucket and
+        a slice, so one task holds them all and the pick needs no exchange of
+        its own. ``_ord`` (the merge's event order) is a pick-only column and
+        is never written. Without ``order`` every row is written.
 
         The write runs in ONE task wave: write tasks = min(n_buckets x
         slices, cores = ``defaultParallelism``), and each (bucket, slice)
@@ -492,27 +508,24 @@ class ParquetLakeTable:
         n_tasks = min(n_buckets * slices, par)
         rel_dir = os.path.join(_DATA, f"v{version:012d}")
         out_dir = os.path.join(self.path, rel_dir)
-        df = df.withColumn("_bucket", self._bucket_expr())
-        parts = ["_bucket"]
+        parts = {"_bucket": self._bucket_expr()}
         if slices > 1:
-            parts.append("_slice")
-            df = df.withColumn(
-                "_slice",
-                F.pmod(F.xxhash64(F.lit("_slice"), *self.key_cols), F.lit(slices)),
-            )
-        df = df.repartition(n_tasks, *parts)
+            parts["_slice"] = F.pmod(F.xxhash64(F.lit("_slice"), *self.key_cols), F.lit(slices))
+        df = df.withColumns(parts).repartition(n_tasks, *parts)
+        if order:
+            pick = Window.partitionBy(*parts, *self.key_cols).orderBy(*map(F.desc, order))
+            df = df.withColumn("_rn", F.row_number().over(pick)).filter("_rn = 1")
         # spark_partition_id() must be a projected column: inside observe()
         # it is never initialized
-        held = Observation()
-        df = df.drop(*parts[1:]).withColumn("_task", F.spark_partition_id())
+        df = df.drop("_slice", "_rn", "_ord").withColumn("_task", F.spark_partition_id())
         lsn = F.col(self.lsn_col) if self.lsn_col in df.columns else F.lit(None).cast("long")
-        df = df.observe(
+        held = Observation()
+        df.observe(
             held,
             F.collect_set(F.struct("_task", "_bucket")).alias("held"),
             F.min(F.when(F.col("_version") == version, lsn)).alias("lo"),
             F.max(lsn).alias("hi"),
-        )
-        df.drop("_task").write.mode("overwrite").parquet(out_dir)
+        ).drop("_task").write.mode("overwrite").parquet(out_dir)
         seen = held.get
         part = {
             int(f.split("-", 2)[1]): os.path.join(rel_dir, f)
@@ -547,30 +560,32 @@ class ParquetLakeTable:
             (idempotent MERGE guard — replay can never regress state);
           - a winning D removes the row; I/U upsert it.
 
-        Physical plan: the batch collapses to one row per key
-        (``row_number() = 1`` by lsn and op rank — a map-side partial top-1,
-        so a hot key collapses before the batch's key exchange; exact
-        duplicates keep one row). A ``left_anti`` join on the keys then drops
-        every batch winner that some stored row of its key beats. The stored
-        side is a narrow scan of the touched buckets (key columns, lsn and
-        ``_deleted`` only, unresolved): the stored rows' ords only grow with
-        ``_version``, so beating them all is beating the live row. A winner's
-        ord is at least ``floor*8 + 1``, where ``floor`` is the batch's lowest
-        lsn, and a stored row's at most ``lsn*8 + 6``, so no stored row below
-        the floor can beat a winner: the scan reads only files whose lsn bound
-        reaches the floor (``_scan``). When none does, as on a WAL of
-        increasing lsns, there is no stored side and no join. The kept
-        winners are written by ``_write_buckets`` as this commit's delta,
-        stamped ``_version`` = the commit, and their files are added to the
-        touched buckets' file lists with the write's highest lsn as their
+        Physical plan: the batch has no key exchange of its own. Each row
+        carries its event order ``_ord`` (lsn, then op rank), and a
+        ``left_anti`` join on the keys drops every batch row that some stored
+        row of its key beats: a stored row that beats a key's best row beats
+        all of the key's rows, so the key's winner survives exactly when it
+        beats the stored state. The stored side is a narrow scan of the
+        touched buckets (key columns, lsn and ``_deleted`` only, unresolved):
+        the stored rows' ords only grow with ``_version``, so beating them all
+        is beating the live row. A batch row's ord is at least
+        ``floor*8 + 1``, where ``floor`` is the batch's lowest lsn, and a
+        stored row's at most ``lsn*8 + 6``, so no stored row below the floor
+        can beat one: the scan reads only files whose lsn bound reaches the
+        floor (``_scan``). When none does, as on a WAL of increasing lsns,
+        there is no stored side and no join. ``_write_buckets`` then writes
+        the rows as this commit's delta, stamped ``_version`` = the commit,
+        and its write tasks keep each key's highest ``_ord`` after the write
+        repartition (exact duplicates keep one row); the files are added to
+        the touched buckets' file lists with the write's highest lsn as their
         bound. Outside a fold, the table's payload is never read or rewritten.
 
         A merge is one commit. Each touched bucket whose files already span
         ``_FOLD_AT`` commits folds in it: the same write holds every stored
         row of the bucket (read in the manifest's types and cast to the new
-        ones) and its delta rows, resolved to each key's highest ``_version``
-        (a delta row, when the key has one), and the commit replaces the
-        bucket's file list. A batch that changes a column's type folds every
+        ones) and its delta rows, and the write tasks resolve them to each
+        key's highest ``_version`` (a delta row, when the key has one), with
+        no exchange of their own; the commit replaces the bucket's file list. A batch that changes a column's type folds every
         stored bucket that way, since parquet cannot read a stored file in
         every new type; its stored side then covers all of them. ``stats``
         reports ``buckets_rewritten`` (the touched buckets),
@@ -592,8 +607,8 @@ class ParquetLakeTable:
         ``plan`` (manifest read, schema unification, the touched-bucket probe
         when no hint is given, building the plan; an empty batch commits its
         watermark here and stops), ``write`` (the one write action: stored
-        scan, batch top-1, anti-join, the fold's read and resolution, and the
-        write run inside it) and ``commit`` (the manifest).
+        scan, anti-join, the fold's read, each key's pick and the write run
+        inside it) and ``commit`` (the manifest).
         """
         prof = prof or Profiler()
         with prof.scope("plan"):
@@ -615,9 +630,7 @@ class ParquetLakeTable:
             ]
             new_schema = unify_schemas(table_schema, T.StructType(batch_payload_fields))
 
-            batch = conform_to(
-                updates, new_schema, keep_extra=[self.op_col]
-            ).withColumn("_bucket", self._bucket_expr())
+            batch = conform_to(updates, new_schema, keep_extra=[self.op_col])
             # NOTE: with ``touched_buckets`` given, merge runs one action over
             # ``updates`` (the write); without it, two (the touched-bucket probe
             # and the write). Callers are expected to hand in a cached/cheap frame
@@ -634,7 +647,7 @@ class ParquetLakeTable:
             else:
                 ok = valid_event(self.key_cols, self.lsn_col, self.op_col)
                 buckets, n_bad, floor = batch.agg(
-                    F.collect_set("_bucket"), F.count_if(~ok), F.min(self.lsn_col)
+                    F.collect_set(self._bucket_expr()), F.count_if(~ok), F.min(self.lsn_col)
                 ).first()
                 if n_bad:
                     raise ValueError(
@@ -675,18 +688,20 @@ class ParquetLakeTable:
             new_version = cur_version + 1
             data_cols = [f.name for f in new_schema.fields]
             packed = F.col(self.lsn_col) * 8 + OP_RANK_EXPR(self.op_col) * 2
-            latest = Window.partitionBy(*self.key_cols).orderBy(packed.desc())
-            winners = (
-                batch.withColumn("_rn", F.row_number().over(latest))
-                .filter("_rn = 1")
-                .select(*data_cols, self.op_col, (packed + 1).alias("_ord"))
+            delta = batch.select(
+                *data_cols,
+                (F.col(self.op_col) == "D").alias("_deleted"),
+                F.lit(new_version).cast("long").alias("_version"),
+                (packed + 1).alias("_ord"),
             )
             # The schema is the merged one: an empty table's manifest schema
             # may lack the batch's key columns. (Catalyst keeps the join of an
             # empty stored side, exchanges included, so skip it here.)
             stored, _, scanned = self._scan(man, scope, schema=new_schema, lsn_floor=floor)
-            delta = winners
             if scanned:
+                # A stored row that beats a key's best batch row beats every
+                # row of the key, so filtering the raw rows leaves the
+                # winner's fate to it alone.
                 stored = stored.select(
                     *[F.col(k).alias(f"_s_{k}") for k in self.key_cols],
                     (
@@ -696,23 +711,21 @@ class ParquetLakeTable:
                 )
                 beaten = [F.col(k) == F.col(f"_s_{k}") for k in self.key_cols]
                 beaten.append(F.col("_sord") >= F.col("_ord"))
-                delta = winners.join(stored, on=beaten, how="left_anti")
-            delta = delta.select(
-                *data_cols,
-                (F.col(self.op_col) == "D").alias("_deleted"),
-                F.lit(new_version).cast("long").alias("_version"),
-            )
+                delta = delta.join(stored, on=beaten, how="left_anti")
             if redo:
-                # Every stored row of ``redo`` in the manifest's types, then
-                # each key's highest stamp: the delta's row, when it has one.
+                # Every stored row of ``redo`` in the manifest's types; the
+                # write keeps each key's highest stamp, the delta's row when
+                # it has one.
                 folded, _, _ = self._scan(man, redo)
-                delta = self._latest(
-                    conform_to(folded, new_schema, keep_extra=["_deleted", "_version"])
-                    .unionByName(delta)
+                delta = delta.unionByName(
+                    conform_to(folded, new_schema, keep_extra=["_deleted", "_version"]),
+                    allowMissingColumns=True,
                 )
 
         with prof.scope("write"):
-            written, lo, hi = self._write_buckets(delta, new_version, len(scope))
+            written, lo, hi = self._write_buckets(
+                delta, new_version, len(scope), order=("_version", "_ord")
+            )
         stray = {b for bs in written.values() for b in bs} - set(scope)
         if stray:
             raise ValueError(
@@ -749,12 +762,15 @@ class ParquetLakeTable:
         self, man: dict[str, Any], buckets: list[int], slices: int | None, **stats: Any
     ) -> int:
         """Rewrite ``buckets`` of snapshot ``man`` as their resolved rows in
-        one new commit: the body of ``compact``. Row content, tombstones and
+        one new commit: the body of ``compact``. The write tasks keep each
+        key's highest ``_version``. Row content, tombstones and
         ``_version`` stamps are kept as they are, so the change feed emits
         nothing for the commit. The buckets' rows left in older files shared
         with other buckets become dead rows. Returns the new version."""
-        df = self.read(version=man["version"], buckets=buckets, include_tombstones=True)
-        written, _, hi = self._write_buckets(df, man["version"] + 1, len(buckets), slices)
+        df, _, _ = self._scan(man, buckets)
+        written, _, hi = self._write_buckets(
+            df, man["version"] + 1, len(buckets), slices, order=("_version",)
+        )
         return self._commit_next(man, written, replaced=buckets, max_lsn=hi, **stats)
 
     def overwrite(self, df: DataFrame) -> MergeResult:
@@ -763,10 +779,8 @@ class ParquetLakeTable:
         man = self._manifest(self.current_version())
         new_version = man["version"] + 1
         schema = T.StructType([f for f in df.schema.fields if f.name != self.op_col])
-        stamped = (
-            df.drop(self.op_col)
-            .withColumn("_deleted", F.lit(False))
-            .withColumn("_version", F.lit(new_version))
+        stamped = df.drop(self.op_col).withColumns(
+            {"_deleted": F.lit(False), "_version": F.lit(new_version)}
         )
         written, _, hi = self._write_buckets(stamped, new_version, self.num_buckets, 1)
         self._commit_next(

@@ -103,6 +103,11 @@ def get_spark(
         # Spark lists them in a distributed job (one task per file) instead of
         # on the driver. A merge's fold reads a few dozen to hundreds of files.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+        # With DataFrame debugging on, every PySpark Column or DataFrame call
+        # first records its Python call site in the JVM (for error context):
+        # about 10 py4j round trips per call, most of a commit's plan-building
+        # round trips.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

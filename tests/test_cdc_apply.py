@@ -4,6 +4,7 @@ invariant. Mirrors the reference's order-insensitive golden assertions
 (functionalTests/SimpleEtlFunctionalTest.java:56-61)."""
 
 import pandas as pd
+import pytest
 
 from pocket_etl_spark.cdc.apply import apply_batch
 from pocket_etl_spark.datagen import content_sha256, gen_change_events, oracle_apply_pandas
@@ -392,3 +393,140 @@ def test_replayed_batch_replaces_its_dlq_rows(spark, tmp_table_path, tmp_path, m
     apply_batch(poisoned, other, batch_id=0, query_id="q2", dlq_path=dlq, dlq_payload="full")
     assert sorted(r["lsn"] for r in read_dlq(spark, dlq).collect()) == sorted(invalid * 2)
     assert not [f for f in os.listdir(dlq) if f.startswith("_")]  # no staging dir left
+
+
+def _steady_batch(spark, path, dlq):
+    """A table holding ``lsn <= 1000`` of a 2,000-event log (30% hot key, a
+    NULL op at every 100th lsn, a tunnel field on every event), and the rest
+    of the log: a steady batch above every stored file's lsn bound, with 10
+    invalid rows and a tunnel field."""
+    from pyspark.sql import functions as F
+
+    from pocket_etl_spark.datagen import with_schema_evolution
+
+    events = with_schema_evolution(
+        gen_change_events(spark, n_events=2000, n_keys=200, seed=43, hot_key_fraction=0.3),
+        from_lsn=1,
+    ).withColumn(
+        "op", F.when(F.pmod(F.col("lsn"), F.lit(100)) == 0, F.lit(None)).otherwise(F.col("op"))
+    )
+    table = ParquetLakeTable(spark, path, num_buckets=32)
+    apply_batch(events.filter("lsn <= 1000"), table, batch_id=0, dlq_path=dlq)
+    return table, events.filter("lsn > 1000")
+
+
+def test_steady_apply_batch_runs_three_spark_jobs(spark, tmp_table_path, tmp_path):
+    """A steady commit runs three Spark jobs: the one stats pass, whose
+    action also brings back the invalid rows as DLQ records, and the merge's
+    write (its repartition's map stage, then the write). The DLQ is written
+    on the driver, and the write tasks pick each key's winner, so the batch
+    has no key exchange of its own."""
+    dlq = str(tmp_path / "dlq")
+    table, steady = _steady_batch(spark, tmp_table_path, dlq)
+    sc = spark.sparkContext
+    group = f"steady-{tmp_path.name}"
+    sc.setJobGroup(group, "steady apply_batch")
+    try:
+        res = apply_batch(steady, table, batch_id=1, dlq_path=dlq)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res.rows_bad == 10 and res.merge.committed
+    assert res.merge.stats["stored_files_scanned"] == 0
+    assert res.merge.stats["buckets_folded"] == 0
+    assert "new_col_score" in table.schema().fieldNames()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+
+
+def test_steady_apply_batch_py4j_round_trips_are_bounded(
+    spark, tmp_table_path, tmp_path, monkeypatch
+):
+    """Building a commit's plans costs py4j round trips, each a blocking
+    call into the JVM. A steady ``apply_batch`` makes 588 of them at
+    local[8]; the ceiling leaves about 20% headroom. Object-release commands are not counted:
+    Python's garbage collector sends them whenever it happens to run."""
+    from py4j.java_gateway import GatewayClient
+
+    dlq = str(tmp_path / "dlq")
+    table, steady = _steady_batch(spark, tmp_table_path, dlq)
+    calls = []
+    send = GatewayClient.send_command
+
+    def counted(self, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    res = apply_batch(steady, table, batch_id=1, dlq_path=dlq)
+    monkeypatch.undo()
+    assert res.merge.committed and res.rows_bad == 10
+    assert len(calls) <= 700, len(calls)
+
+
+@pytest.mark.parametrize("payload", ["redacted", "full", "callable"])
+def test_driver_written_dlq_reads_back_and_redrives(spark, tmp_table_path, tmp_path, payload):
+    """The DLQ file written on the driver reads back as DLQ_SCHEMA, one row
+    per invalid event, under the batch's address. A full-record payload (the
+    ``"full"`` mode or a callable writing the record as JSON) re-drives: the
+    repaired rows restore the oracle's state. A redacted one is refused."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from pocket_etl_spark.cdc.redrive import read_dlq, redrive
+    from pocket_etl_spark.schema import DLQ_SCHEMA
+
+    events = gen_change_events(spark, n_events=400, n_keys=40, seed=47)
+    poisoned = events.withColumn(
+        "op", F.when(F.pmod(F.col("lsn"), F.lit(8)) == 0, F.lit(None)).otherwise(F.col("op"))
+    )
+    mode = payload
+    if payload == "callable":
+        def mode(r):
+            return json.dumps({k: v for k, v in r.items() if k != "ts"})
+
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
+    dlq = str(tmp_path / "dlq")
+    res = apply_batch(poisoned, table, batch_id=0, query_id="q", dlq_path=dlq, dlq_payload=mode)
+    assert res.rows_bad == 50
+    [name] = os.listdir(dlq)
+    assert name.startswith("dlq-") and name.endswith("-0-0.parquet"), name
+    back = spark.read.parquet(dlq)
+    assert back.schema == DLQ_SCHEMA
+    rows = back.collect()
+    assert len(rows) == 50 and {(r["batch_id"], r["stage"]) for r in rows} == {(0, "apply")}
+    if payload == "redacted":
+        with pytest.raises(ValueError, match="redacted"):
+            read_dlq(spark, dlq)
+        return
+    assert sorted(r["lsn"] for r in read_dlq(spark, dlq).collect()) == list(range(8, 401, 8))
+
+    def fix(df):
+        return df.withColumn("op", F.coalesce(F.col("op"), F.lit("U")))
+
+    assert redrive(spark, dlq, table, fix=fix).merge.committed
+    assert_state_equals_oracle(table, fix(poisoned).toPandas())
+
+
+def test_all_invalid_batch_lands_in_dlq_once(spark, tmp_table_path, tmp_path):
+    """A batch whose every row is invalid writes each row to the DLQ once,
+    leaves the table's rows as they were and still advances the watermark,
+    so its replay is fenced and adds no DLQ row."""
+    from pyspark.sql import functions as F
+
+    from pocket_etl_spark.cdc.redrive import read_dlq
+
+    events = gen_change_events(spark, n_events=300, n_keys=30, seed=53)
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
+    dlq = str(tmp_path / "dlq")
+    apply_batch(events.filter("lsn <= 200"), table, batch_id=0, dlq_path=dlq)
+    before = sorted(map(tuple, table.read().collect()))
+    bad = events.filter("lsn > 200").withColumn("op", F.lit("X"))
+    res = apply_batch(bad, table, batch_id=1, dlq_path=dlq, dlq_payload="full")
+    assert (res.rows_in, res.rows_bad, res.rows_applied) == (100, 100, 0)
+    assert res.merge.committed and res.merge.touched_buckets == []
+    assert table.last_batch_id() == 1
+    assert sorted(map(tuple, table.read().collect())) == before
+    assert not apply_batch(bad, table, batch_id=1, dlq_path=dlq).merge.committed
+    assert sorted(r["lsn"] for r in read_dlq(spark, dlq).collect()) == list(range(201, 301))

@@ -49,7 +49,14 @@ def test_conform_fills_missing_and_casts(spark):
     )
     row = conform_to(df, target).collect()[0]
     assert row["v"] == 1 and row["w"] is None
-    assert conform_to(df, target).schema["v"].dataType == T.LongType()
+    conformed = conform_to(df, target)
+    assert conformed.schema["v"].dataType == T.LongType()
+    # a frame already in the target's names and types (then the kept extras)
+    # comes back as it is
+    assert conform_to(conformed, target) is conformed
+    extra = conformed.withColumn("op", F.lit("U"))
+    assert conform_to(extra, target, keep_extra=["op", "absent"]) is extra
+    assert conform_to(extra, target).columns == ["k", "v", "w"]
 
 
 def test_promote_extras_lifts_tunnel_keys(spark):

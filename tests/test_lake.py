@@ -982,3 +982,91 @@ def test_lsn_bounds_prune_the_stored_side_exactly(spark, tmp_table_path, monkeyp
         table.merge(bad, batch_id=9, touched_buckets=list(range(4)), lsn_floor=600)
     assert (table.current_version(), table.last_batch_id()) == (v, wm)
     check()
+
+
+def test_in_task_pick_matches_lww(spark, tmp_table_path, monkeypatch):
+    """The write tasks pick each key's row after the write repartition: the
+    merge's batch winner (by lsn and op rank) among the rows no stored row
+    beats, a fold's highest stamp, and ``compact(1)``'s highest stamp. Two
+    buckets at local[8] make every write sliced. Through batches where one
+    hot key takes over 30% of the events, with late lower-LSN events, equal-LSN
+    events against stored tombstones and live rows, deletes, folds
+    (``_FOLD_AT`` = 3) and a ``compact(1)``, after every commit the table
+    must hold ``lww_dedupe`` of all events, and every change-feed window
+    ``(s, v]`` must hold the keys whose winner last changed after ``s``."""
+    import random
+
+    from pocket_etl_spark import lake
+    from pocket_etl_spark.cdc.dedupe import OP_RANK, lww_dedupe
+
+    monkeypatch.setattr(lake, "_FOLD_AT", 3)
+    schema = "lsn long, op string, repo string, path string, content string"
+    rng = random.Random(59)
+    paths = [f"p{i:02d}" for i in range(30)]
+    hot = paths[0]
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=2)
+    events: list[tuple] = []
+    version: dict[str, int] = {}  # path -> commit that wrote its live row
+    late_lsns = iter(range(1, 10**6, 2))  # odd: no regular event has one
+
+    def ev(lsn, op, path):
+        return (lsn, op, "r", path, None if op == "D" else f"{path}@{lsn}{op}")
+
+    def winners():
+        best: dict[str, tuple] = {}
+        for e in events:
+            if e[3] not in best or (e[0], OP_RANK[e[1]]) > (best[e[3]][0], OP_RANK[best[e[3]][1]]):
+                best[e[3]] = e
+        return best
+
+    def check(v):
+        want = lww_dedupe(spark.createDataFrame(events, schema), ["repo", "path"]).collect()
+        got = table.read(include_tombstones=True).collect()
+        assert sorted((r["path"], r["lsn"], r["op"] == "D", r["content"]) for r in want) == sorted(
+            (r["path"], r["lsn"], r["_deleted"], r["content"]) for r in got
+        ), v
+        assert {r["path"]: r["_version"] for r in got} == version, v
+        windows = None
+        for s in range(v):
+            w = table.read_changes(s, v).select(F.lit(s).alias("s"), "path", "lsn", "_commit_version")
+            windows = w if windows is None else windows.unionByName(w)
+        best = winners()
+        assert sorted(tuple(r) for r in windows.collect()) == sorted(
+            (s, p, best[p][0], version[p]) for s in range(v) for p in version if version[p] > s
+        ), v
+
+    lsn = 0
+    for n in range(9):
+        batch = []
+        for _ in range(60):
+            lsn += 2
+            path = hot if rng.random() < 0.35 else rng.choice(paths[1:])
+            batch.append(ev(lsn, rng.choice("IUUUD"), path))
+        if n:
+            best = winners()
+            for p in rng.sample(sorted(best), 6):
+                # late: an lsn below the key's stored row, so it loses
+                batch.append(ev(next(late_lsns), "U", p))
+                e = best[p]
+                # equal lsn: a U loses to a stored tombstone, a D beats a live row
+                batch.append(ev(e[0], "U" if e[1] == "D" else "D", p))
+            batch.append(batch[-1])  # an exact duplicate
+        before = winners()
+        res = table.merge(spark.createDataFrame(batch, schema), batch_id=n)
+        events.extend(batch)
+        for p, e in winners().items():
+            if before.get(p) != e:
+                version[p] = res.version
+        check(res.version)
+        if n == 5:
+            compacted = table.compact(1)
+            assert compacted.stats["compacted"] == 2
+            check(compacted.version)
+
+    assert sum(e[3] == hot for e in events) >= 0.3 * len(events)
+    mans = [table._manifest(v) for v in range(1, table.current_version() + 1)]
+    assert any(m["stats"].get("folded_buckets") for m in mans)
+    assert any(
+        len([f for f in fs if lake._commit_of(f) == m["version"]]) > 1
+        for m in mans for fs in m["buckets"].values()
+    ), "no sliced write"

@@ -249,7 +249,7 @@ def test_stop_during_fold_then_restart(spark, tmp_path, monkeypatch):
     folding = threading.Event()
     real_write = ParquetLakeTable._write_buckets
 
-    def blocked_write(self, df, version, n_buckets, slices=None):
+    def blocked_write(self, df, version, *args, **kwargs):
         if version == 2 and not folding.is_set():
             # batch 1's merge folds (every bucket it touches holds commit 1)
             # and its write has begun: its data dir holds a stray part file
@@ -260,7 +260,7 @@ def test_stop_during_fold_then_restart(spark, tmp_path, monkeypatch):
             folding.set()
             # a JVM call on the stream thread, so stop() interrupts it
             spark.sparkContext._jvm.java.lang.Thread.sleep(120_000)
-        return real_write(self, df, version, n_buckets, slices)
+        return real_write(self, df, version, *args, **kwargs)
 
     monkeypatch.setattr(lake, "_FOLD_AT", 1)
     monkeypatch.setattr(ParquetLakeTable, "_write_buckets", blocked_write)
