@@ -13,15 +13,17 @@ from __future__ import annotations
 import glob
 import hashlib
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from pocket_etl_spark.cdc.dedupe import OP_RANK_EXPR
 from pocket_etl_spark.cdc.evolution import EXTRAS_COL, PROMOTE_PREFIX, promote_extras
 from pocket_etl_spark.lake import MergeResult, ParquetLakeTable
 from pocket_etl_spark.profiling import Profiler
@@ -29,6 +31,12 @@ from pocket_etl_spark.schema import DlqPayload, check_dlq_payload, dlq_records, 
 
 # event-envelope columns that never reach the table
 DROP_COLS = ("ts", "extras")
+# The most invalid rows of one batch partition that the stats pass brings to
+# the driver as DLQ records; a batch with more has Spark write its DLQ.
+_DLQ_DRIVER_ROWS = 1000
+# A batch with more valid events than this collapses to each key's winner
+# before the merge (see apply_batch).
+_COLLAPSE_AT = 250_000
 
 
 @dataclass
@@ -41,24 +49,36 @@ class ApplyResult:
     timings: dict[str, float] = field(default_factory=dict)
 
 
-def _write_dlq(records: pa.Table, dlq_path: str, query_id: str, batch_id: int | None) -> None:
-    """Write a batch's DLQ records, already on the driver as an Arrow table
-    of ``DLQ_SCHEMA``, into ``dlq_path`` as the file
-    ``dlq-<hash(query_id)>-<batch_id>-0.parquet``, replacing the files an
-    earlier attempt of the batch left at that address, so a replayed batch
-    leaves each invalid row once. pyarrow writes a hidden ``_``-prefixed temp
-    file (readers of ``dlq_path`` skip it), the address's earlier files are
-    removed, and ``os.replace`` moves the new one in: no Spark job. A crash on
-    the way leaves the batch uncommitted, and its replay rewrites the
-    address. A batch without an id gets a fresh address."""
+def _write_dlq(
+    records: pa.Table | DataFrame, dlq_path: str, query_id: str, batch_id: int | None
+) -> None:
+    """Write a batch's DLQ records (``DLQ_SCHEMA``) into ``dlq_path`` as its
+    files ``dlq-<hash(query_id)>-<batch_id>-<n>.parquet``, replacing the
+    files an earlier attempt of the batch left at that address, so a replayed
+    batch leaves each invalid row once. An Arrow table (the records the stats
+    pass brought to the driver) is written by pyarrow as one hidden
+    ``_``-prefixed temp file (readers of ``dlq_path`` skip it), with no Spark
+    job; a DataFrame (a batch with more invalid rows than the driver takes)
+    is written by Spark into a hidden staging dir. The address's earlier
+    files are then removed and the new ones moved in. A crash on the way
+    leaves the batch uncommitted, and its replay rewrites the address. A
+    batch without an id gets a fresh address."""
     qh = hashlib.sha1(query_id.encode()).hexdigest()[:12]
     addr = f"dlq-{qh}-{uuid.uuid4().hex if batch_id is None else batch_id}"
-    os.makedirs(dlq_path, exist_ok=True)
     tmp = os.path.join(dlq_path, f"_{addr}.{uuid.uuid4().hex}")
-    pq.write_table(records, tmp)
+    if isinstance(records, DataFrame):
+        records.write.parquet(tmp)
+        new = sorted(glob.glob(os.path.join(tmp, "*.parquet")))
+    else:
+        os.makedirs(dlq_path, exist_ok=True)
+        pq.write_table(records, tmp)
+        new = [tmp]
     for f in glob.glob(os.path.join(dlq_path, f"{addr}-*.parquet")):
         os.remove(f)
-    os.replace(tmp, os.path.join(dlq_path, f"{addr}-0.parquet"))
+    for n, f in enumerate(new):
+        os.replace(f, os.path.join(dlq_path, f"{addr}-{n}.parquet"))
+    if isinstance(records, DataFrame):
+        shutil.rmtree(tmp)
 
 
 def apply_batch(
@@ -77,7 +97,17 @@ def apply_batch(
     and brings back the invalid rows as DLQ records) and the merge's write
     (its repartition's map stage, then the write). The driver holds only the
     batch's invalid rows, as DLQ records (an Arrow table), and writes them
-    itself; a batch with many invalid rows costs driver memory in proportion.
+    itself: at most ``_DLQ_DRIVER_ROWS`` of them per batch partition. When a
+    partition has more, the pass's records are dropped and Spark writes the
+    batch's DLQ from the cache (one more job), so a batch of any number of
+    invalid rows commits.
+
+    The merge's write tasks keep each key's winner, so a hot key's events
+    all reach one write task. A batch of more than ``_COLLAPSE_AT`` valid
+    events therefore collapses to each key's winner first: a
+    ``row_number() = 1`` that Spark plans as a map-side partial top-1 ahead
+    of one key exchange, so a hot key ships one row per partition (one more
+    stage in the write job).
 
     Phase timings are collected into a hierarchical Profiler tree (the
     reference's EtlProfilingScope.java:47-128 timer rollup) and exported
@@ -159,16 +189,27 @@ def apply_batch(
         error = "validation: null key/lsn or bad op"
         if dlq_payload == "redacted":
             error += " (payload redacted; apply_batch dlq_payload='full' opts in)"
+
         # envelope-decode residue (streaming/envelope.decode_kafka_envelope):
         # the raw undecodable payload rides into the DLQ with the bad rows.
-        bad = dlq_records(
-            cached.observe(observed, *aggs).filter(~valid).drop("_valid"),
-            batch_id, "apply", F.lit(error), dlq_payload, dlq_keys,
+        def bad(frame: DataFrame) -> DataFrame:
+            return dlq_records(
+                frame.filter(~valid).drop("_valid"),
+                batch_id, "apply", F.lit(error), dlq_payload, dlq_keys,
+            )
+
+        # monotonically_increasing_id() numbers a partition's rows in its
+        # low 33 bits
+        first = (
+            bad(cached.observe(observed, *aggs))
+            .withColumn("_i", F.monotonically_increasing_id() % (1 << 33))
+            .filter(F.col("_i") < _DLQ_DRIVER_ROWS)
+            .drop("_i")
         )
 
     try:
         with prof.scope("batch_stats"):
-            records = bad.toArrow()
+            records = first.toArrow()
             stats = observed.get
         touched = sorted(stats["buckets"])
         rows_in = int(stats["n"])
@@ -186,6 +227,8 @@ def apply_batch(
                     "dlq_path or repair them upstream."
                 )
             with prof.scope("dlq_write"):
+                if records.num_rows < rows_bad:
+                    records = bad(cached)
                 _write_dlq(records, dlq_path, query_id, batch_id)
 
         # Schema evolution: lift tunnel fields (extras map "new_col_*") to
@@ -195,9 +238,19 @@ def apply_batch(
         good = promote_extras(cached.filter(valid), keys=sorted(stats.get("promo") or []))
         payload = good.drop("_valid", "_raw_value", *DROP_COLS)
 
-        # The batch goes to the merge as is: its write tasks keep each key's
-        # winner, so a separate lww_dedupe pass would only add a shuffle.
-        # lww_dedupe remains the standalone operator for non-merge consumers.
+        # The merge's write tasks keep each key's winner, so a small batch
+        # goes to it as is: a collapse would only add a shuffle. A large one
+        # collapses first, or a hot key's events would all be sorted in one
+        # write task (see the docstring).
+        if rows_in - rows_bad > _COLLAPSE_AT:
+            latest = Window.partitionBy(*table.key_cols).orderBy(
+                F.desc(table.lsn_col), F.desc(OP_RANK_EXPR(table.op_col))
+            )
+            payload = (
+                payload.withColumn("_rn", F.row_number().over(latest))
+                .filter("_rn = 1")
+                .drop("_rn")
+            )
         with prof.scope("merge"):
             result = table.merge(
                 payload, batch_id=batch_id, query_id=query_id,

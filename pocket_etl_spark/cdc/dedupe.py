@@ -20,10 +20,14 @@ Scale design — the winner pick must collapse a hot key before the shuffle:
 - A ``row_number() ... = 1`` FILTER is the same map-side collapse in window form:
   Spark (3.5+) plans it as a partial top-1 (``WindowGroupLimit ... Partial``)
   before the key exchange, so each input partition again ships at most one row
-  per key. The lake merge (lake.py) needs neither: its write repartition already
-  sends all of a key's rows to one task (they share a bucket), so the write
-  tasks keep each key's row with the highest packed long, and the batch is
-  exchanged once.
+  per key.
+- The lake merge (lake.py) picks in its write tasks instead: its write
+  repartition already sends all of a key's rows to one task (they share a
+  bucket), so the write tasks keep each key's row with the highest packed long,
+  and the batch is exchanged once. That pick does NOT collapse a hot key before
+  the shuffle, so ``apply_batch`` first collapses a batch of more than
+  ``_COLLAPSE_AT`` events with the partial top-1 above: below it, a hot key
+  costs one write task at most that many rows.
 
 An explicit two-phase salted variant is provided for completeness and for plans where
 a window is genuinely required (e.g. top-N per key with N>1); the

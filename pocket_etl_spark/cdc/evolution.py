@@ -56,22 +56,18 @@ def conform_to(df: DataFrame, schema: T.StructType, keep_extra: list[str] | None
     """Project/cast ``df`` to ``schema``: missing columns become typed NULLs,
     conflicting types are cast (safe by construction — widen only widens).
     ``keep_extra`` columns (e.g. the op column) ride along untouched. A frame
-    whose columns already are ``schema``'s names and types, in order, then
-    the present ``keep_extra`` columns, comes back as it is (no projection
-    to analyze); only columns of another type are cast."""
+    that already is ``schema`` (names and types, in order) followed by its
+    present ``keep_extra`` columns comes back as it is."""
     have = set(df.columns)
     extras = [c for c in keep_extra or [] if c in have]
-    target = [(f.name, f.dataType) for f in schema.fields]
-    if [(f.name, f.dataType) for f in df.schema.fields] == target + [
-        (c, df.schema[c].dataType) for c in extras
-    ]:
+    if df.columns == schema.names + extras and all(
+        df.schema[f.name].dataType == f.dataType for f in schema.fields
+    ):
         return df
-    cols: list = []
+    cols = []
     for f in schema.fields:
-        if f.name not in have:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        elif df.schema[f.name].dataType != f.dataType:
+        if f.name in have:
             cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
         else:
-            cols.append(f.name)
+            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return df.select(*cols, *extras)

@@ -31,7 +31,8 @@ Scale design (the part that matters at 100 TB):
   their files to the touched buckets' file lists; no stored row is read in
   full or rewritten. The write tasks pick each key's winner after the
   write's one repartition (all of a key's rows share its bucket), so the
-  batch is exchanged once. Deciding "beats the stored state" reads a narrow scan of
+  batch is exchanged once; a hot key's rows all reach one write task, so
+  ``apply_batch`` collapses a large batch to its winners first. Deciding "beats the stored state" reads a narrow scan of
   the touched buckets (key columns, lsn, ``_deleted``). Its cost is O(batch)
   written, not O(table): a batch of n distinct keys touches all but a
   (1 - 1/num_buckets)^n share of the buckets, so a copy-on-write merge would
@@ -576,7 +577,10 @@ class ParquetLakeTable:
         there is no stored side and no join. ``_write_buckets`` then writes
         the rows as this commit's delta, stamped ``_version`` = the commit,
         and its write tasks keep each key's highest ``_ord`` after the write
-        repartition (exact duplicates keep one row); the files are added to
+        repartition (exact duplicates keep one row). Nothing collapses a hot
+        key before that exchange: all of its rows reach one write task, so a
+        caller with a large batch collapses it first (``apply_batch`` does
+        above ``_COLLAPSE_AT`` events). The files are added to
         the touched buckets' file lists with the write's highest lsn as their
         bound. Outside a fold, the table's payload is never read or rewritten.
 

@@ -169,7 +169,7 @@ def dlq_records(
         "ts": F.current_timestamp(),
     }
     return failed.select(
-        *[cols[f.name].cast(f.dataType.simpleString()).alias(f.name) for f in DLQ_SCHEMA.fields]
+        *[cols[f.name].cast(f.dataType).alias(f.name) for f in DLQ_SCHEMA.fields]
     )
 
 

@@ -298,3 +298,49 @@ def test_read_of_many_files_lists_them_on_the_driver(spark, tmp_path, monkeypatc
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_large_batch_collapses_a_hot_key_before_the_write_exchange(spark, tmp_path, monkeypatch):
+    """The merge's write tasks pick each key's winner, so all of a hot key's
+    rows reach one write task. ``apply_batch`` collapses a batch of more
+    than ``_COLLAPSE_AT`` valid events first: its key exchange is fed by a
+    map-side partial top-1, so a hot key ships one row per partition. A
+    batch at the threshold goes to the merge as is and is exchanged once,
+    by the write."""
+    from pyspark.sql import DataFrameWriter
+
+    from pocket_etl_spark.cdc import apply
+    from pocket_etl_spark.datagen import gen_change_events
+    from pocket_etl_spark.lake import ParquetLakeTable
+
+    plans = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans.append(plan_facts(self._df).text)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    ev = gen_change_events(spark, 2000, 200, seed=3, hot_key_fraction=0.5)
+    for i, at in enumerate([2000, 1999]):
+        monkeypatch.setattr(apply, "_COLLAPSE_AT", at)
+        table = ParquetLakeTable(spark, str(tmp_path / f"t{i}"), num_buckets=16)
+        apply.apply_batch(ev, table, batch_id=0)
+    small, large = plans
+
+    def payload_exchanges(text):
+        return {
+            i: d for i, (n, d) in _plan_blocks(text).items()
+            if n.endswith("Exchange")
+            and re.search(r"^Input \[\d+\]: \[.*\bcontent#", d, flags=re.MULTILINE)
+        }
+
+    [write] = payload_exchanges(small).values()
+    assert "REPARTITION_BY_NUM" in write, small
+    exchanges = payload_exchanges(large)
+    [batch] = [i for i, d in exchanges.items() if "REPARTITION_BY_NUM" not in d]
+    inner = exchanges[batch].split("hashpartitioning(", 1)[1].split(")", 1)[0]
+    assert re.findall(r"(\w+)#\d+", inner) == ["repo", "path"], exchanges[batch]
+    child = re.search(rf"Exchange \({batch}\)\n[ :|+-]*(\w+) \((\d+)\)", large)
+    assert child and child.group(1) == "WindowGroupLimit", large
+    assert "Partial" in _plan_blocks(large)[child.group(2)][1], large
