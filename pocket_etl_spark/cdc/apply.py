@@ -92,10 +92,13 @@ def apply_batch(
 ) -> ApplyResult:
     """Apply one micro-batch of change events to the lake table, exactly-once.
 
-    A steady batch runs three Spark jobs: one stats pass over the cached
+    A steady batch runs two Spark jobs: one stats pass over the cached
     batch (its aggregates are an ``Observation``; its action fills the cache
-    and brings back the invalid rows as DLQ records) and the merge's write
-    (its repartition's map stage, then the write). The driver holds only the
+    and brings back the invalid rows as DLQ records) and the merge's write.
+    The pass's valid-event count goes to the merge as ``batch_rows`` beside
+    the touched buckets and the lsn floor, so a steady batch of at most
+    ``lake._TASK_ROWS`` valid events is written by one task with no
+    exchange, as one part file. The driver holds only the
     batch's invalid rows, as DLQ records (an Arrow table), and writes them
     itself: at most ``_DLQ_DRIVER_ROWS`` of them per batch partition. When a
     partition has more, the pass's records are dropped and Spark writes the
@@ -254,7 +257,8 @@ def apply_batch(
         with prof.scope("merge"):
             result = table.merge(
                 payload, batch_id=batch_id, query_id=query_id,
-                touched_buckets=touched, lsn_floor=stats["min_lsn"], prof=prof,
+                touched_buckets=touched, lsn_floor=stats["min_lsn"],
+                batch_rows=rows_in - rows_bad, prof=prof,
             )
     finally:
         cached.unpersist()

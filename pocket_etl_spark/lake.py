@@ -31,9 +31,13 @@ Scale design (the part that matters at 100 TB):
   their files to the touched buckets' file lists; no stored row is read in
   full or rewritten. The write tasks pick each key's winner after the
   write's one repartition (all of a key's rows share its bucket), so the
-  batch is exchanged once; a hot key's rows all reach one write task, so
-  ``apply_batch`` collapses a large batch to its winners first. Deciding "beats the stored state" reads a narrow scan of
-  the touched buckets (key columns, lsn, ``_deleted``). Its cost is O(batch)
+  batch is exchanged at most once; a hot key's rows all reach one write
+  task, so ``apply_batch`` collapses a large batch to its winners first.
+  The write wave is sized by the rows as well as the cores: a batch of at
+  most ``_TASK_ROWS`` rows that needs no stored side and no fold is written
+  by one task, with no exchange at all, as one part file. Deciding "beats
+  the stored state" reads a narrow scan of the touched buckets (key
+  columns, lsn, ``_deleted``). Its cost is O(batch)
   written, not O(table): a batch of n distinct keys touches all but a
   (1 - 1/num_buckets)^n share of the buckets, so a copy-on-write merge would
   rewrite most of the table.
@@ -93,6 +97,13 @@ _DATA = "data"
 # A merge folds each touched bucket whose files would otherwise come from
 # more than this many commits.
 _FOLD_AT = 8
+# A write of a known row count runs one write task per this many rows (and
+# no more tasks than the bucket slices or the cores); see _write_buckets.
+# Measured at 4 cores (merge.write of a steady apply_batch, 32 buckets, 30%
+# hot key; one task vs the core-sized wave): a batch read in 1 partition (one
+# WAL file) 20k rows 0.15/0.20 s, 50k 0.21/0.23 s, 100k 0.32/0.31 s; read in
+# 4 partitions 20k 0.13/0.15 s, 50k 0.21/0.19 s, 100k 0.31/0.26 s.
+_TASK_ROWS = 50_000
 # One record per committed apply_batch (cdc/apply.py builds it).
 METRICS_SCHEMA = (
     "query_id string, batch_id long, version long, rows_in long, rows_bad long, "
@@ -270,13 +281,15 @@ class ParquetLakeTable:
         since: int = 0,
         schema: T.StructType | None = None,
         lsn_floor: int | None = None,
-    ) -> tuple[DataFrame, bool, int]:
+    ) -> tuple[DataFrame | None, bool, int]:
         """Every stored row of manifest ``man`` in the files that list a bucket
         of ``buckets`` (all buckets when None) and that a commit after
         ``since`` wrote, unresolved, as ``schema`` (default: the manifest's)
-        plus ``_deleted`` and ``_version``. Also returns whether a key may
-        have several rows — true when some bucket's scanned files come from
-        more than one commit (see ``_latest``) — and how many files it scans.
+        plus ``_deleted`` and ``_version``; None when no file qualifies (a
+        reader that needs a frame builds ``_empty``). Also returns whether a
+        key may have several rows — true when some bucket's scanned files
+        come from more than one commit (see ``_latest``) — and how many files
+        it scans.
 
         With ``lsn_floor`` (the merge's stored side) the scan returns only
         rows with ``lsn >= lsn_floor``: it lists only the files whose lsn
@@ -289,15 +302,6 @@ class ParquetLakeTable:
         the scan filter on its ``_bucket`` column against the file's live
         buckets (by ``_metadata.file_name``); a scan of files whose every
         bucket it wants applies no filter."""
-        schema = schema or T.StructType.fromJson(json.loads(man["schema"]))
-        stored = T.StructType(
-            schema.fields
-            + [
-                T.StructField("_deleted", T.BooleanType(), True),
-                # commit version that last changed the row (change-feed cursor)
-                T.StructField("_version", T.LongType(), True),
-            ]
-        )
         wanted = {str(b) for b in buckets} if buckets is not None else None
         bound = man.get("max_lsn", {})
         live: dict[str, set[int]] = {}  # file -> the buckets this scan takes from it
@@ -313,9 +317,12 @@ class ParquetLakeTable:
                 for f in fs:
                     live.setdefault(f, set()).add(int(b))
         if not live:
-            return self.spark.createDataFrame([], stored), False, 0
+            return None, False, 0
         df = self.spark.read.schema(
-            T.StructType(stored.fields + [T.StructField("_bucket", T.IntegerType())])
+            T.StructType(
+                self._stored_schema(man, schema).fields
+                + [T.StructField("_bucket", T.IntegerType())]
+            )
         ).parquet(*(os.path.join(self.path, f) for f in sorted(live)))
         mixed = {
             os.path.basename(f): sorted(bs)
@@ -331,6 +338,25 @@ class ParquetLakeTable:
         if lsn_floor is not None:
             df = df.filter(F.col(self.lsn_col) >= F.lit(lsn_floor))
         return df.drop("_bucket"), several, len(live)
+
+    def _stored_schema(
+        self, man: dict[str, Any], schema: T.StructType | None = None
+    ) -> T.StructType:
+        """A stored row of manifest ``man``: ``schema`` (default: the
+        manifest's) plus ``_deleted`` and ``_version``."""
+        schema = schema or T.StructType.fromJson(json.loads(man["schema"]))
+        return T.StructType(
+            schema.fields
+            + [
+                T.StructField("_deleted", T.BooleanType(), True),
+                # commit version that last changed the row (change-feed cursor)
+                T.StructField("_version", T.LongType(), True),
+            ]
+        )
+
+    def _empty(self, man: dict[str, Any]) -> DataFrame:
+        """No stored row of ``man``, as a frame of its stored schema."""
+        return self.spark.createDataFrame([], self._stored_schema(man))
 
     def _latest(self, df: DataFrame) -> DataFrame:
         """Each key's row with the highest ``_version``: its live row. Every
@@ -371,8 +397,11 @@ class ParquetLakeTable:
         view filters them out unless ``include_tombstones``."""
         v = self.current_version() if version is None else version
         self._check_readable(v)
-        df, several, _ = self._scan(self._manifest(v), buckets)
-        if several:
+        man = self._manifest(v)
+        df, several, _ = self._scan(man, buckets)
+        if df is None:
+            df = self._empty(man)
+        elif several:
             df = self._latest(df)
         if include_tombstones:
             return df
@@ -429,6 +458,8 @@ class ParquetLakeTable:
             ) from None
         self._check_readable(to_v)
         df, several, _ = self._scan(man, since=since_version)
+        if df is None:
+            df = self._empty(man)
         # Plain comparison, NOT coalesce(_version, 0): every row the table
         # stores carries a non-null _version (a delta and overwrite stamp,
         # fold and compact preserve), and a bare predicate reaches the parquet
@@ -465,6 +496,7 @@ class ParquetLakeTable:
         n_buckets: int,
         slices: int | None = None,
         order: tuple[str, ...] = (),
+        rows: int | None = None,
     ) -> tuple[dict[str, list[int]], int | None, int | None]:
         """Write ``df`` as snapshot dir ``data/v{version}``, ONE part file per
         write task — the one bucket writer of merge, overwrite and compact.
@@ -480,19 +512,25 @@ class ParquetLakeTable:
         With ``order``, each key keeps one row: its highest by the ``order``
         columns, descending in turn. The write tasks pick it themselves
         (``row_number() = 1`` over ``_bucket``, ``_slice`` and the keys,
-        after the write repartition): all of a key's rows share a bucket and
-        a slice, so one task holds them all and the pick needs no exchange of
-        its own. ``_ord`` (the merge's event order) is a pick-only column and
-        is never written. Without ``order`` every row is written.
+        after the write repartition or coalesce): all of a key's rows share
+        a bucket and a slice, so one task holds them all and the pick needs
+        no exchange of its own. ``_ord`` (the merge's event order) is a
+        pick-only column and is never written. Without ``order`` every row is written.
 
         The write runs in ONE task wave: write tasks = min(n_buckets x
-        slices, cores = ``defaultParallelism``), and each (bucket, slice)
-        hashes to exactly one task, which writes one file holding every
-        bucket it was given. Every write task has a fixed cost (~15-20 ms
-        measured on a 4-core host), and so does every file: without native
-        Hadoop each file or dir created forks a ``chmod``. A file per bucket
-        (32 files, dirs and ``.crc`` files for a 32-bucket commit) cost twice
-        the wall of a file per task.
+        slices, cores = ``defaultParallelism``, ceil(``rows`` /
+        ``_TASK_ROWS``)), the last term only when the caller knows ``rows``
+        (an upper bound on the rows written), and each (bucket, slice) hashes
+        to exactly one task, which writes one file holding every bucket it
+        was given. Every write task has a fixed cost (~15-20 ms measured on a
+        4-core host), and so does every file: without native Hadoop each
+        file or dir created forks a ``chmod``. A file per bucket (32 files,
+        dirs and ``.crc`` files for a 32-bucket commit) cost twice the wall
+        of a file per task. When one task does, the frame is coalesced to
+        one partition instead of repartitioned: a single partition satisfies
+        the pick's distribution, so the write plans no exchange at all and
+        writes one file holding every bucket. ``rows`` changes only the task
+        count, never the rows written.
 
         The write reports which task held which buckets, the lowest lsn of the
         rows stamped ``_version`` = ``version`` (a merge's own rows, not the
@@ -507,12 +545,15 @@ class ParquetLakeTable:
         if slices is None:
             slices = max(1, min(8, par // n_buckets))
         n_tasks = min(n_buckets * slices, par)
+        if rows is not None:
+            n_tasks = min(n_tasks, max(1, -(-rows // _TASK_ROWS)))
         rel_dir = os.path.join(_DATA, f"v{version:012d}")
         out_dir = os.path.join(self.path, rel_dir)
         parts = {"_bucket": self._bucket_expr()}
-        if slices > 1:
+        if slices > 1 and n_tasks > 1:
             parts["_slice"] = F.pmod(F.xxhash64(F.lit("_slice"), *self.key_cols), F.lit(slices))
-        df = df.withColumns(parts).repartition(n_tasks, *parts)
+        df = df.withColumns(parts)
+        df = df.coalesce(1) if n_tasks == 1 else df.repartition(n_tasks, *parts)
         if order:
             pick = Window.partitionBy(*parts, *self.key_cols).orderBy(*map(F.desc, order))
             df = df.withColumn("_rn", F.row_number().over(pick)).filter("_rn = 1")
@@ -550,6 +591,7 @@ class ParquetLakeTable:
         query_id: str = "default",
         touched_buckets: list[int] | None = None,
         lsn_floor: int | None = None,
+        batch_rows: int | None = None,
         prof: Profiler | None = None,
     ) -> MergeResult:
         """Keyed LWW MERGE of a change batch into the table, as an appended delta.
@@ -580,9 +622,16 @@ class ParquetLakeTable:
         repartition (exact duplicates keep one row). Nothing collapses a hot
         key before that exchange: all of its rows reach one write task, so a
         caller with a large batch collapses it first (``apply_batch`` does
-        above ``_COLLAPSE_AT`` events). The files are added to
-        the touched buckets' file lists with the write's highest lsn as their
-        bound. Outside a fold, the table's payload is never read or rewritten.
+        above ``_COLLAPSE_AT`` events). A batch of at most ``_TASK_ROWS``
+        rows with no stored side and no fold is written by one task with no
+        exchange, as one part file. A merge that folds keeps the core-sized
+        wave, as its write is fed by stored rows it has not counted; so does
+        one that scans a stored side, which one task would read and anti
+        join alone (a late 2k-event batch against 400k stored rows wrote in
+        0.34 s as one task, 0.30 s as a wave, 4 cores). The files are added
+        to the touched buckets' file lists with the write's highest lsn as
+        their bound. Outside a fold, the table's payload is never read or
+        rewritten.
 
         A merge is one commit. Each touched bucket whose files already span
         ``_FOLD_AT`` commits folds in it: the same write holds every stored
@@ -597,13 +646,17 @@ class ParquetLakeTable:
         files of the stored side) and ``buckets_folded``.
 
         ``touched_buckets`` is the caller's set of buckets the batch's keys
-        hash to (it skips the probe scan), and ``lsn_floor`` the lowest lsn of
+        hash to (it skips the probe scan), ``lsn_floor`` the lowest lsn of
         the batch's rows (without it, a merge given ``touched_buckets`` scans
-        every file of the touched buckets). Both must be right: a merge that
+        every file of the touched buckets) and ``batch_rows`` the batch's row
+        count, which sizes the write wave (without it, a merge given
+        ``touched_buckets`` writes with the core-sized wave). A wrong
+        ``batch_rows`` changes only the number of write tasks, never the
+        rows written. The first two must be right: a merge that
         writes a bucket outside ``touched_buckets``, or a row below
         ``lsn_floor``, raises ``ValueError`` before committing, because stored
         rows it had to compare were never read. Without ``touched_buckets``,
-        the probe finds both, and a batch holding an invalid row
+        the probe finds all three, and a batch holding an invalid row
         (``schema.valid_event``) raises ``ValueError`` before anything is
         written.
 
@@ -647,11 +700,12 @@ class ParquetLakeTable:
             # it into its single stats pass) hand it in and skip this probe scan,
             # which also counts the invalid rows merge has no DLQ for.
             if touched_buckets is not None:
-                touched, floor = sorted(touched_buckets), lsn_floor
+                touched, floor, n = sorted(touched_buckets), lsn_floor, batch_rows
             else:
                 ok = valid_event(self.key_cols, self.lsn_col, self.op_col)
-                buckets, n_bad, floor = batch.agg(
-                    F.collect_set(self._bucket_expr()), F.count_if(~ok), F.min(self.lsn_col)
+                buckets, n_bad, floor, n = batch.agg(
+                    F.collect_set(self._bucket_expr()), F.count_if(~ok),
+                    F.min(self.lsn_col), F.count(F.lit(1)),
                 ).first()
                 if n_bad:
                     raise ValueError(
@@ -728,7 +782,8 @@ class ParquetLakeTable:
 
         with prof.scope("write"):
             written, lo, hi = self._write_buckets(
-                delta, new_version, len(scope), order=("_version", "_ord")
+                delta, new_version, len(scope), order=("_version", "_ord"),
+                rows=None if redo or scanned else n,
             )
         stray = {b for bs in written.values() for b in bs} - set(scope)
         if stray:

@@ -222,10 +222,14 @@ def test_merge_into_sql_shape():
     assert "s.lsn = t.lsn AND (NOT t._deleted OR s.op = 'D')" in sql
 
 
-def test_hot_bucket_write_splits_into_file_slices(spark, tmp_table_path):
+def test_hot_bucket_write_splits_into_file_slices(spark, tmp_table_path, monkeypatch):
     """With one touched bucket, the merge must fan the rewrite out across
     several writer tasks (multiple part files in the bucket dir) while the
-    merged state stays correct — the hot-bucket write-parallelism fix."""
+    merged state stays correct — the hot-bucket write-parallelism fix.
+    ``_TASK_ROWS`` = 1 sizes this small batch's wave by the cores."""
+    from pocket_etl_spark import lake
+
+    monkeypatch.setattr(lake, "_TASK_ROWS", 1)
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=1)
     ev = _events(spark, n=2000, keys=400).drop("ts", "extras")
     res = table.merge(ev, batch_id=0)
@@ -317,11 +321,14 @@ def test_change_data_feed_incremental_consumption(spark, tmp_table_path):
     }
 
 
-def test_compaction_to_several_files_per_bucket(spark, tmp_table_path):
+def test_compaction_to_several_files_per_bucket(spark, tmp_table_path, monkeypatch):
     """compact(max_files_per_bucket=3) spreads a many-file bucket over at most
     3 key-salted slices (the merge's bucket writer), keeping every row —
     tombstones and _version stamps included — so the change feed stays
-    silent across it."""
+    silent across it. ``_TASK_ROWS`` = 1 makes the first merge sliced."""
+    from pocket_etl_spark import lake
+
+    monkeypatch.setattr(lake, "_TASK_ROWS", 1)
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=1)
     table.merge(_events(spark, n=1000, keys=100).drop("ts", "extras"), batch_id=0)
     v1 = table.current_version()
@@ -345,10 +352,14 @@ def test_compaction_to_several_files_per_bucket(spark, tmp_table_path):
     assert table.read_changes(v1).count() == 0
 
 
-def test_compaction_preserves_state_and_change_feed(spark, tmp_table_path):
+def test_compaction_preserves_state_and_change_feed(spark, tmp_table_path, monkeypatch):
     """compact() rewrites multi-file buckets into one file per bucket without
     changing any row: snapshot identical, and read_changes across the
-    compaction emits nothing (pointer moved, per-row stamps did not)."""
+    compaction emits nothing (pointer moved, per-row stamps did not).
+    ``_TASK_ROWS`` = 1 makes the first merge sliced."""
+    from pocket_etl_spark import lake
+
+    monkeypatch.setattr(lake, "_TASK_ROWS", 1)
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=1)
     ev = _events(spark, n=1000, keys=100).drop("ts", "extras")
     table.merge(ev, batch_id=0)
@@ -757,16 +768,24 @@ def test_type_change_rewrites_stored_files(spark, tmp_table_path):
     assert {r["path"] for r in table.read_changes(1).collect()} == {"p0", "p1"}
 
 
-def test_deltas_and_fold_match_lww(spark, tmp_table_path):
+@_pytest.mark.parametrize("task_rows", [None, 1], ids=["one-task", "core-wave"])
+def test_deltas_and_fold_match_lww(spark, tmp_table_path, monkeypatch, task_rows):
     """Merges append deltas and a fold rewrites a bucket once its files span
     more than ``_FOLD_AT`` commits. Through a dozen merges (late lower-LSN
     events, a delete then a re-insert, exact duplicates, an int -> double
     widening) every read must equal the LWW state of all events: the
     snapshot, the tombstone view, bucket-pruned reads and every change-feed
     window ``(s, v]`` of every commit. Every merge, the folding ones and the
-    one that widens a column included, is one commit."""
+    one that widens a column included, is one commit. It holds at the real
+    ``_TASK_ROWS``, where a merge with no stored side and no fold is written
+    by one task, and with ``_TASK_ROWS`` = 1, where every write is a
+    core-sized wave."""
+    from pocket_etl_spark import lake
     from pocket_etl_spark.cdc.dedupe import OP_RANK, lww_dedupe
     from pocket_etl_spark.lake import _FOLD_AT
+
+    if task_rows is not None:
+        monkeypatch.setattr(lake, "_TASK_ROWS", task_rows)
 
     keys = ["repo", "path"]
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=8)
@@ -984,22 +1003,28 @@ def test_lsn_bounds_prune_the_stored_side_exactly(spark, tmp_table_path, monkeyp
     check()
 
 
-def test_in_task_pick_matches_lww(spark, tmp_table_path, monkeypatch):
-    """The write tasks pick each key's row after the write repartition: the
-    merge's batch winner (by lsn and op rank) among the rows no stored row
-    beats, a fold's highest stamp, and ``compact(1)``'s highest stamp. Two
-    buckets at local[8] make every write sliced. Through batches where one
-    hot key takes over 30% of the events, with late lower-LSN events, equal-LSN
-    events against stored tombstones and live rows, deletes, folds
-    (``_FOLD_AT`` = 3) and a ``compact(1)``, after every commit the table
-    must hold ``lww_dedupe`` of all events, and every change-feed window
-    ``(s, v]`` must hold the keys whose winner last changed after ``s``."""
+@_pytest.mark.parametrize("task_rows", [None, 1], ids=["one-task", "core-wave"])
+def test_in_task_pick_matches_lww(spark, tmp_table_path, monkeypatch, task_rows):
+    """The write tasks pick each key's row: the merge's batch winner (by lsn
+    and op rank) among the rows no stored row beats, a fold's highest stamp,
+    and ``compact(1)``'s highest stamp. Two buckets at local[8] make every
+    core-sized write sliced: with ``_TASK_ROWS`` = 1 every write is; at the
+    real ``_TASK_ROWS`` a merge with no stored side and no fold (the first)
+    is written by one task with no exchange, and the rest are sliced. Through
+    batches where one hot key takes over 30% of the events, with late
+    lower-LSN events, equal-LSN events against stored tombstones and live
+    rows, deletes, folds (``_FOLD_AT`` = 3) and a ``compact(1)``, after every
+    commit the table must hold ``lww_dedupe`` of all events, and every
+    change-feed window ``(s, v]`` must hold the keys whose winner last
+    changed after ``s``."""
     import random
 
     from pocket_etl_spark import lake
     from pocket_etl_spark.cdc.dedupe import OP_RANK, lww_dedupe
 
     monkeypatch.setattr(lake, "_FOLD_AT", 3)
+    if task_rows is not None:
+        monkeypatch.setattr(lake, "_TASK_ROWS", task_rows)
     schema = "lsn long, op string, repo string, path string, content string"
     rng = random.Random(59)
     paths = [f"p{i:02d}" for i in range(30)]
@@ -1053,6 +1078,8 @@ def test_in_task_pick_matches_lww(spark, tmp_table_path, monkeypatch):
             batch.append(batch[-1])  # an exact duplicate
         before = winners()
         res = table.merge(spark.createDataFrame(batch, schema), batch_id=n)
+        if not res.stats["buckets_folded"] and not res.stats["stored_files_scanned"]:
+            assert (res.stats["files_written"] == 1) == (task_rows is None), res.stats
         events.extend(batch)
         for p, e in winners().items():
             if before.get(p) != e:

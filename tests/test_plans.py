@@ -111,12 +111,16 @@ def test_embedding_lsh_gated_plan_is_bucketed_not_all_pairs(spark):
     assert equi_joins(f_all) == 0, f_all.text[:3000]
 
 
-def test_hot_bucket_merge_write_has_slice_repartition(spark, tmp_path):
+def test_hot_bucket_merge_write_has_slice_repartition(spark, tmp_path, monkeypatch):
     """A merge whose batch touches one bucket must repartition the write on
-    (bucket, slice) — the hot-bucket rewrite stays core-parallel."""
+    (bucket, slice) — the hot-bucket rewrite stays core-parallel. (A batch
+    this small is written by one task; ``_TASK_ROWS`` = 1 sizes the wave by
+    the cores, as a batch of a few hundred thousand events would.)"""
+    from pocket_etl_spark import lake
     from pocket_etl_spark.datagen import gen_change_events
     from pocket_etl_spark.lake import ParquetLakeTable
 
+    monkeypatch.setattr(lake, "_TASK_ROWS", 1)
     table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=1)
     ev = gen_change_events(spark, 500, 50, seed=3).drop("ts", "extras")
     res = table.merge(ev, batch_id=0)
@@ -125,16 +129,19 @@ def test_hot_bucket_merge_write_has_slice_repartition(spark, tmp_path):
     assert len(parts) >= 2, parts
 
 
-def test_merge_writes_in_one_core_sized_task_wave(spark, tmp_path):
+def test_merge_writes_in_one_core_sized_task_wave(spark, tmp_path, monkeypatch):
     """A merge touching every bucket of a 32-bucket table writes its snapshot
     in one task wave: the final (write) stage runs at most defaultParallelism
     tasks, not one task per bucket, and each touched bucket is still exactly
-    one part file (a bucket hashes to one write task)."""
+    one part file (a bucket hashes to one write task). ``_TASK_ROWS`` = 1
+    puts this small batch in the core-sized regime."""
     import os
 
+    from pocket_etl_spark import lake
     from pocket_etl_spark.datagen import gen_change_events
     from pocket_etl_spark.lake import ParquetLakeTable
 
+    monkeypatch.setattr(lake, "_TASK_ROWS", 1)
     sc = spark.sparkContext
     table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=32)
     ev = gen_change_events(spark, 2000, 400, seed=3).drop("ts", "extras")
@@ -274,16 +281,54 @@ def test_merge_above_every_bound_reads_no_stored_file(spark, tmp_path, monkeypat
     assert not [n for n, _ in blocks.values() if "Join" in n], text
 
 
+@pytest.mark.parametrize("task_rows", [None, 1], ids=["one-task", "core-wave"])
+@pytest.mark.parametrize(
+    "num_buckets, write_cols",
+    [(4, ["_bucket", "_slice"]), (16, ["_bucket"])],
+    ids=["sliced", "unsliced"],
+)
+def test_merge_write_wave_is_sized_by_its_rows(
+    spark, tmp_path, monkeypatch, num_buckets, write_cols, task_rows
+):
+    """A merge writes its ~1k-row delta, below ``_TASK_ROWS``, in one task:
+    the frame is coalesced to one partition, which already satisfies the
+    pick's distribution, so the write plan has no exchange at all and the
+    commit writes one part file holding every bucket. Above ``_TASK_ROWS``
+    (monkeypatched to 1 here) the write keeps its repartition on ``_bucket``
+    (plus ``_slice`` when the buckets are fewer than the cores) and writes
+    more than one part file, at most one per core."""
+    from pocket_etl_spark import lake
+
+    if task_rows is not None:
+        monkeypatch.setattr(lake, "_TASK_ROWS", task_rows)
+    text, blocks, _ = _second_merge_plan(spark, tmp_path, monkeypatch, num_buckets, "lsn > 1000")
+    files = lake.ParquetLakeTable(spark, str(tmp_path / "t"))._manifest(2)["files"]
+    written = [f for f in files if lake._commit_of(f) == 2]
+    exchanges = [d for n, d in blocks.values() if n.endswith("Exchange")]
+    if task_rows is None:
+        assert exchanges == [], text
+        assert len(written) == 1, files
+        assert sorted(files[written[0]]) == list(range(num_buckets)), files
+    else:
+        [write] = exchanges
+        assert "REPARTITION_BY_NUM" in write, text
+        inner = write.split("hashpartitioning(", 1)[1].split(")", 1)[0]
+        assert re.findall(r"(\w+)#\d+", inner) == write_cols, write
+        assert 1 < len(written) <= spark.sparkContext.defaultParallelism, files
+
+
 def test_read_of_many_files_lists_them_on_the_driver(spark, tmp_path, monkeypatch):
     """A lake read hands Spark its explicit file list. Above
     ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths (32 by
     default) Spark lists them in a Spark job of one task per file; the
     session's threshold keeps a read of a few dozen files, like a fold's,
-    listing on the driver: planning the read runs no Spark job."""
+    listing on the driver: planning the read runs no Spark job.
+    (``_TASK_ROWS`` = 1 makes each small merge write a file per core.)"""
     from pocket_etl_spark import lake
     from pocket_etl_spark.datagen import gen_change_events
 
     monkeypatch.setattr(lake, "_FOLD_AT", 100)
+    monkeypatch.setattr(lake, "_TASK_ROWS", 1)
     table = lake.ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=16)
     ev = gen_change_events(spark, 1000, 400, seed=5).drop("ts", "extras")
     for i in range(5):
@@ -306,9 +351,11 @@ def test_large_batch_collapses_a_hot_key_before_the_write_exchange(spark, tmp_pa
     than ``_COLLAPSE_AT`` valid events first: its key exchange is fed by a
     map-side partial top-1, so a hot key ships one row per partition. A
     batch at the threshold goes to the merge as is and is exchanged once,
-    by the write."""
+    by the write. (``_COLLAPSE_AT`` is far above ``_TASK_ROWS``; with both
+    lowered, the 2,000-event batches are written by a core-sized wave.)"""
     from pyspark.sql import DataFrameWriter
 
+    from pocket_etl_spark import lake
     from pocket_etl_spark.cdc import apply
     from pocket_etl_spark.datagen import gen_change_events
     from pocket_etl_spark.lake import ParquetLakeTable
@@ -321,6 +368,7 @@ def test_large_batch_collapses_a_hot_key_before_the_write_exchange(spark, tmp_pa
         return parquet(self, path, *args, **kwargs)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    monkeypatch.setattr(lake, "_TASK_ROWS", 1)
     ev = gen_change_events(spark, 2000, 200, seed=3, hot_key_fraction=0.5)
     for i, at in enumerate([2000, 1999]):
         monkeypatch.setattr(apply, "_COLLAPSE_AT", at)
