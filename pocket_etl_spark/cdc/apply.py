@@ -19,13 +19,13 @@ import uuid
 from dataclasses import dataclass, field
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from pocket_etl_spark.cdc.dedupe import OP_RANK_EXPR
 from pocket_etl_spark.cdc.evolution import EXTRAS_COL, PROMOTE_PREFIX, promote_extras
-from pocket_etl_spark.lake import MergeResult, ParquetLakeTable
+from pocket_etl_spark import lake
+from pocket_etl_spark.lake import MergeResult, ParquetLakeTable, row_bytes, write_parquet_atomic
 from pocket_etl_spark.profiling import Profiler
 from pocket_etl_spark.schema import DlqPayload, check_dlq_payload, dlq_records, valid_event
 
@@ -56,29 +56,32 @@ def _write_dlq(
     files ``dlq-<hash(query_id)>-<batch_id>-<n>.parquet``, replacing the
     files an earlier attempt of the batch left at that address, so a replayed
     batch leaves each invalid row once. An Arrow table (the records the stats
-    pass brought to the driver) is written by pyarrow as one hidden
-    ``_``-prefixed temp file (readers of ``dlq_path`` skip it), with no Spark
-    job; a DataFrame (a batch with more invalid rows than the driver takes)
-    is written by Spark into a hidden staging dir. The address's earlier
-    files are then removed and the new ones moved in. A crash on the way
-    leaves the batch uncommitted, and its replay rewrites the address. A
-    batch without an id gets a fresh address."""
+    pass brought to the driver) is written by pyarrow, with no Spark job,
+    as file ``-0`` (``lake.write_parquet_atomic``: a hidden ``_``-prefixed
+    temp file that readers of ``dlq_path`` skip, then a rename); a DataFrame
+    (a batch with more invalid rows than the driver takes) is written by
+    Spark into a hidden staging dir and its files are moved in. The
+    address's earlier files that no new one replaced are then removed. A
+    crash on the way leaves the batch uncommitted, and its replay rewrites
+    the address. A batch without an id gets a fresh address."""
     qh = hashlib.sha1(query_id.encode()).hexdigest()[:12]
     addr = f"dlq-{qh}-{uuid.uuid4().hex if batch_id is None else batch_id}"
-    tmp = os.path.join(dlq_path, f"_{addr}.{uuid.uuid4().hex}")
+    base = os.path.join(dlq_path, addr)
+    stale = set(glob.glob(f"{base}-*.parquet"))
     if isinstance(records, DataFrame):
+        tmp = os.path.join(dlq_path, f"_{addr}.{uuid.uuid4().hex}")
         records.write.parquet(tmp)
-        new = sorted(glob.glob(os.path.join(tmp, "*.parquet")))
+        parts = sorted(glob.glob(os.path.join(tmp, "*.parquet")))
+        names = [f"{base}-{n}.parquet" for n in range(len(parts))]
+        for f, name in zip(parts, names):
+            os.replace(f, name)
+        shutil.rmtree(tmp)
     else:
         os.makedirs(dlq_path, exist_ok=True)
-        pq.write_table(records, tmp)
-        new = [tmp]
-    for f in glob.glob(os.path.join(dlq_path, f"{addr}-*.parquet")):
+        names = [f"{base}-0.parquet"]
+        write_parquet_atomic(records, names[0])
+    for f in stale.difference(names):
         os.remove(f)
-    for n, f in enumerate(new):
-        os.replace(f, os.path.join(dlq_path, f"{addr}-{n}.parquet"))
-    if isinstance(records, DataFrame):
-        shutil.rmtree(tmp)
 
 
 def apply_batch(
@@ -97,8 +100,11 @@ def apply_batch(
     and brings back the invalid rows as DLQ records) and the merge's write.
     The pass's valid-event count goes to the merge as ``batch_rows`` beside
     the touched buckets and the lsn floor, so a steady batch of at most
-    ``lake._TASK_ROWS`` valid events is written by one task with no
-    exchange, as one part file. The driver holds only the
+    ``lake._TASK_ROWS`` valid events is picked by one task with no
+    exchange, and the driver writes that task's rows as one part file. The
+    pass also sums the valid events' payload bytes (``lake.row_bytes``); a
+    batch of more than ``lake._DRIVER_BYTES`` goes to the merge without its
+    row count and is written by Spark. The driver also holds the
     batch's invalid rows, as DLQ records (an Arrow table), and writes them
     itself: at most ``_DLQ_DRIVER_ROWS`` of them per batch partition. When a
     partition has more, the pass's records are dropped and Spark writes the
@@ -171,8 +177,11 @@ def apply_batch(
         ).persist()
         # ONE stats pass (see the docstring) observes what the merge needs:
         # the touched hash buckets, the event and invalid-row counts, the
-        # valid LSN range (its low end is the merge's lsn floor) and the
-        # promotable tunnel keys.
+        # valid LSN range (its low end is the merge's lsn floor), the valid
+        # events' payload bytes and the promotable tunnel keys.
+        to_merge = [
+            f for f in events.schema.fields if f.name not in (*DROP_COLS, "_raw_value")
+        ]
         observed = Observation()
         aggs = [
             F.collect_set(F.when(valid, table._bucket_expr())).alias("buckets"),
@@ -180,6 +189,7 @@ def apply_batch(
             F.count(F.lit(1)).alias("n"),
             F.min(F.when(valid, F.col(table.lsn_col))).alias("min_lsn"),
             F.max(F.when(valid, F.col(table.lsn_col))).alias("max_lsn"),
+            F.sum(F.when(valid, row_bytes(to_merge))).alias("bytes"),
         ]
         if EXTRAS_COL in events.columns:
             promotable = F.filter(
@@ -254,11 +264,15 @@ def apply_batch(
                 .filter("_rn = 1")
                 .drop("_rn")
             )
+        # A batch of one write task comes to the driver to be written there,
+        # so the merge learns the row count only of a batch whose payload
+        # the driver can hold; a larger one is written by Spark's wave.
+        small = (stats["bytes"] or 0) <= lake._DRIVER_BYTES
         with prof.scope("merge"):
             result = table.merge(
                 payload, batch_id=batch_id, query_id=query_id,
                 touched_buckets=touched, lsn_floor=stats["min_lsn"],
-                batch_rows=rows_in - rows_bad, prof=prof,
+                batch_rows=rows_in - rows_bad if small else None, prof=prof,
             )
     finally:
         cached.unpersist()

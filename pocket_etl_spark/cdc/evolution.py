@@ -52,12 +52,28 @@ def unify_schemas(table_schema: T.StructType, batch_schema: T.StructType) -> T.S
     return T.StructType(fields)
 
 
+def as_nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every nested field, array element and map value nullable."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, as_nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(as_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(as_nullable(t.keyType), as_nullable(t.valueType), True)
+    return t
+
+
 def conform_to(df: DataFrame, schema: T.StructType, keep_extra: list[str] | None = None) -> DataFrame:
     """Project/cast ``df`` to ``schema``: missing columns become typed NULLs,
     conflicting types are cast (safe by construction — widen only widens).
-    ``keep_extra`` columns (e.g. the op column) ride along untouched. A frame
-    that already is ``schema`` (names and types, in order) followed by its
-    present ``keep_extra`` columns comes back as it is."""
+    A column whose type differs only in nested nullability is kept as it is:
+    Spark reads every nested field of a stored file as nullable, and it
+    refuses a cast to a non-null one. ``keep_extra`` columns (e.g. the op
+    column) ride along untouched. A frame that already is ``schema`` (names
+    and types, in order) followed by its present ``keep_extra`` columns comes
+    back as it is."""
     have = set(df.columns)
     extras = [c for c in keep_extra or [] if c in have]
     if df.columns == schema.names + extras and all(
@@ -67,7 +83,10 @@ def conform_to(df: DataFrame, schema: T.StructType, keep_extra: list[str] | None
     cols = []
     for f in schema.fields:
         if f.name in have:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
+            col = F.col(f.name)
+            if as_nullable(df.schema[f.name].dataType) != as_nullable(f.dataType):
+                col = col.cast(f.dataType)
+            cols.append(col.alias(f.name))
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return df.select(*cols, *extras)

@@ -34,10 +34,14 @@ Scale design (the part that matters at 100 TB):
   batch is exchanged at most once; a hot key's rows all reach one write
   task, so ``apply_batch`` collapses a large batch to its winners first.
   The write wave is sized by the rows as well as the cores: a batch of at
-  most ``_TASK_ROWS`` rows that needs no stored side and no fold is written
-  by one task, with no exchange at all, as one part file. Deciding "beats
-  the stored state" reads a narrow scan of the touched buckets (key
-  columns, lsn, ``_deleted``). Its cost is O(batch)
+  most ``_TASK_ROWS`` rows (and ``_DRIVER_BYTES`` bytes) that needs no
+  stored side and no fold is picked by one task, with no exchange at all,
+  and that task's rows come to the driver as Arrow, where pyarrow writes
+  them as the commit's one part file (the reference's one buffered writer
+  per part file, committed on close) instead of Spark's Hadoop committer
+  and its temp dirs, renames, checksum files and a forked ``chmod`` per
+  file. Deciding "beats the stored state" reads a narrow scan of the
+  touched buckets (key columns, lsn, ``_deleted``). Its cost is O(batch)
   written, not O(table): a batch of n distinct keys touches all but a
   (1 - 1/num_buckets)^n share of the buckets, so a copy-on-write merge would
   rewrite most of the table.
@@ -80,13 +84,16 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from pocket_etl_spark.cdc.dedupe import OP_RANK_EXPR, lww_dedupe
-from pocket_etl_spark.cdc.evolution import conform_to, unify_schemas
+from pocket_etl_spark.cdc.evolution import as_nullable, conform_to, unify_schemas
 from pocket_etl_spark.profiling import Profiler
 from pocket_etl_spark.schema import KEY_COLS, LSN_COL, OP_COL, TABLE_SCHEMA, valid_event
 
@@ -104,6 +111,12 @@ _FOLD_AT = 8
 # WAL file) 20k rows 0.15/0.20 s, 50k 0.21/0.23 s, 100k 0.32/0.31 s; read in
 # 4 partitions 20k 0.13/0.15 s, 50k 0.21/0.19 s, 100k 0.31/0.26 s.
 _TASK_ROWS = 50_000
+# A one-task write of a known row count is brought to the driver as Arrow and
+# written there by pyarrow; its caller hands the row count in only for a batch
+# of at most this many payload bytes (``row_bytes``), so the driver never
+# collects near ``spark.driver.maxResultSize`` (1 GiB). The reference buffers
+# 128 MiB per part file (S3FastLoader).
+_DRIVER_BYTES = 64 << 20
 # One record per committed apply_batch (cdc/apply.py builds it).
 METRICS_SCHEMA = (
     "query_id string, batch_id long, version long, rows_in long, rows_bad long, "
@@ -127,6 +140,36 @@ def write_json_atomic(path: str, obj: Any) -> None:
     with open(tmp, "w") as f:
         json.dump(obj, f)
     os.replace(tmp, path)
+
+
+def write_parquet_atomic(table: pa.Table, path: str) -> None:
+    """Write Arrow ``table`` as parquet file ``path`` via a hidden
+    ``_``-prefixed temp file in the same dir (Spark's file listing skips it)
+    + ``os.replace``, so ``path`` is absent or complete. A failed write
+    removes its temp file."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f"_{name}.{uuid.uuid4().hex}")
+    try:
+        pq.write_table(table, tmp)
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
+
+
+def row_bytes(fields: list[T.StructField]) -> Column:
+    """A row's payload bytes, estimated as the byte length of its string and
+    binary values and of the JSON of its nested ones (fixed-width values are
+    not counted): what ``_DRIVER_BYTES`` bounds."""
+    sizes = []
+    for f in fields:
+        name = "`" + f.name.replace("`", "``") + "`"
+        if isinstance(f.dataType, (T.StringType, T.BinaryType)):
+            sizes.append(f"coalesce(octet_length({name}), 0)")
+        elif isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
+            sizes.append(f"coalesce(octet_length(to_json({name})), 0)")
+    return F.expr(" + ".join(sizes) or "0")
 
 
 @dataclass
@@ -529,13 +572,18 @@ class ParquetLakeTable:
         of a file per task. When one task does, the frame is coalesced to
         one partition instead of repartitioned: a single partition satisfies
         the pick's distribution, so the write plans no exchange at all and
-        writes one file holding every bucket. ``rows`` changes only the task
-        count, never the rows written.
+        writes one file holding every bucket. When the caller knows ``rows``,
+        that one task's rows are brought to the driver as Arrow and written
+        there (``_write_on_driver``), not by Spark's Hadoop committer; the
+        caller keeps ``rows`` for writes the driver can hold (a merge hands
+        it in only for a batch of at most ``_DRIVER_BYTES``). ``rows`` changes
+        only the task count and the writer, never the rows written.
 
         The write reports which task held which buckets, the lowest lsn of the
         rows stamped ``_version`` = ``version`` (a merge's own rows, not the
         rows its fold carries forward) and the highest lsn of all rows,
-        through an ``Observation`` on the write itself (no extra job); a
+        through an ``Observation`` on the write itself (no extra job), or
+        read off the Arrow table on the driver; a
         task's ``part-NNNNN`` number is its partition id. Spark writes an
         empty file when task 0 gets no rows; a file holding no bucket is
         removed with its ``.crc``. Returns every file left (relative to the
@@ -557,9 +605,12 @@ class ParquetLakeTable:
         if order:
             pick = Window.partitionBy(*parts, *self.key_cols).orderBy(*map(F.desc, order))
             df = df.withColumn("_rn", F.row_number().over(pick)).filter("_rn = 1")
+        df = df.drop("_slice", "_rn", "_ord")
+        if rows is not None and n_tasks == 1:
+            return self._write_on_driver(df, version, rel_dir)
         # spark_partition_id() must be a projected column: inside observe()
         # it is never initialized
-        df = df.drop("_slice", "_rn", "_ord").withColumn("_task", F.spark_partition_id())
+        df = df.withColumn("_task", F.spark_partition_id())
         lsn = F.col(self.lsn_col) if self.lsn_col in df.columns else F.lit(None).cast("long")
         held = Observation()
         df.observe(
@@ -583,6 +634,42 @@ class ParquetLakeTable:
             with contextlib.suppress(FileNotFoundError):
                 os.remove(os.path.join(out_dir, f".{name}.crc"))
         return files, seen["lo"], seen["hi"]
+
+    def _write_on_driver(
+        self, df: DataFrame, version: int, rel_dir: str
+    ) -> tuple[dict[str, list[int]], int | None, int | None]:
+        """``_write_buckets`` of a one-task write of a known row count: the
+        one task's rows come to the driver with one ``toArrow()``, and pyarrow
+        writes them as the dir's one part file (``write_parquet_atomic``),
+        replacing whatever an earlier attempt of the commit left there.
+        Spark's Hadoop committer would add a ``_temporary`` dir, renames,
+        ``.crc`` and ``_SUCCESS`` files and a forked ``chmod`` per file and
+        dir. The buckets and lsns ``_write_buckets`` returns are read off
+        the Arrow table. Nested fields are made nullable first: Arrow refuses
+        a null struct whose fields Spark declares non-null."""
+        widened = {
+            f.name: F.col(f.name).cast(t)
+            for f in df.schema.fields
+            if (t := as_nullable(f.dataType)) != f.dataType
+        }
+        rows = df.withColumns(widened).toArrow()
+        out_dir = os.path.join(self.path, rel_dir)
+        shutil.rmtree(out_dir, ignore_errors=True)
+        os.makedirs(out_dir)
+        if not rows.num_rows:
+            return {}, None, None
+        rel = os.path.join(rel_dir, f"part-00000-{uuid.uuid4()}.parquet")
+        write_parquet_atomic(rows, os.path.join(self.path, rel))
+        buckets = sorted(pc.unique(rows["_bucket"]).to_pylist())
+        lo = hi = None
+        if self.lsn_col in rows.column_names:
+            hi = pc.max(rows[self.lsn_col]).as_py()
+            stamped = pc.equal(rows["_version"], version)
+            lo = pc.min(rows[self.lsn_col].filter(stamped)).as_py()
+        # the pool keeps freed buffers; hand them back to the OS
+        del rows
+        pa.default_memory_pool().release_unused()
+        return {rel: buckets}, lo, hi
 
     def merge(
         self,
@@ -623,8 +710,9 @@ class ParquetLakeTable:
         key before that exchange: all of its rows reach one write task, so a
         caller with a large batch collapses it first (``apply_batch`` does
         above ``_COLLAPSE_AT`` events). A batch of at most ``_TASK_ROWS``
-        rows with no stored side and no fold is written by one task with no
-        exchange, as one part file. A merge that folds keeps the core-sized
+        rows and ``_DRIVER_BYTES`` payload bytes with no stored side and no
+        fold is picked by one task with no exchange and written as one part
+        file by the driver, from Arrow. A merge that folds keeps the core-sized
         wave, as its write is fed by stored rows it has not counted; so does
         one that scans a stored side, which one task would read and anti
         join alone (a late 2k-event batch against 400k stored rows wrote in
@@ -651,14 +739,16 @@ class ParquetLakeTable:
         every file of the touched buckets) and ``batch_rows`` the batch's row
         count, which sizes the write wave (without it, a merge given
         ``touched_buckets`` writes with the core-sized wave). A wrong
-        ``batch_rows`` changes only the number of write tasks, never the
-        rows written. The first two must be right: a merge that
+        ``batch_rows`` changes only the number of write tasks and the writer,
+        never the rows written; a caller leaves it out for a batch of more
+        than ``_DRIVER_BYTES`` payload bytes (``row_bytes``), which the
+        driver would have to hold. The first two must be right: a merge that
         writes a bucket outside ``touched_buckets``, or a row below
         ``lsn_floor``, raises ``ValueError`` before committing, because stored
         rows it had to compare were never read. Without ``touched_buckets``,
-        the probe finds all three, and a batch holding an invalid row
-        (``schema.valid_event``) raises ``ValueError`` before anything is
-        written.
+        the probe finds all three and the payload bytes, and a batch
+        holding an invalid row (``schema.valid_event``) raises
+        ``ValueError`` before anything is written.
 
         ``prof`` (``apply_batch`` hands in its own) receives three scopes:
         ``plan`` (manifest read, schema unification, the touched-bucket probe
@@ -703,10 +793,13 @@ class ParquetLakeTable:
                 touched, floor, n = sorted(touched_buckets), lsn_floor, batch_rows
             else:
                 ok = valid_event(self.key_cols, self.lsn_col, self.op_col)
-                buckets, n_bad, floor, n = batch.agg(
+                buckets, n_bad, floor, n, size = batch.agg(
                     F.collect_set(self._bucket_expr()), F.count_if(~ok),
                     F.min(self.lsn_col), F.count(F.lit(1)),
+                    F.sum(row_bytes(batch.schema.fields)),
                 ).first()
+                if (size or 0) > _DRIVER_BYTES:
+                    n = None
                 if n_bad:
                     raise ValueError(
                         f"merge: {n_bad} rows are invalid (null key/lsn or unknown "

@@ -1097,3 +1097,91 @@ def test_in_task_pick_matches_lww(spark, tmp_table_path, monkeypatch, task_rows)
         len([f for f in fs if lake._commit_of(f) == m["version"]]) > 1
         for m in mans for fs in m["buckets"].values()
     ), "no sliced write"
+
+
+def test_driver_and_spark_written_files_round_trip_every_type(spark, tmp_table_path, monkeypatch):
+    """A steady merge's part file is written on the driver by pyarrow, every
+    other write by Spark, and one table holds both kinds of file. Through a
+    Spark-written first merge (``_TASK_ROWS`` = 1), driver-written deltas,
+    and an int -> long widening that rewrites every stored bucket (driver-
+    and Spark-written files alike) in Spark, a column of every type reads
+    back as it was merged: ``read()`` and every change-feed window ``(s, t]``
+    equal the LWW state. Some rows hold NULL in every column, and a struct
+    whose fields are declared non-null is NULL in some rows (a plain
+    ``toArrow()`` refuses it)."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pocket_etl_spark import lake
+
+    cols = (
+        "i int, l long, s short, b byte, f float, d double, z boolean, str string, "
+        "bin binary, dt date, ts timestamp, ntz timestamp_ntz, d1 decimal(10,2), "
+        "d2 decimal(38,10), arr array<int>, m map<string,bigint>, st struct<a:int,c:string>, "
+        "nn struct<a:int not null,c:string not null>, w {}"
+    )
+    keys = ("repo", "path")
+
+    def row(lsn, op, k, n):
+        x = 10 * k + n
+        vals = [
+            x, x * 2**33, x - 100, x % 100 - 50, x / 4, x / 3, x % 2 == 0, f"s{x}",
+            bytes([x % 256, 0, 255]), dt.date(1500 + x, 1 + x % 12, 1),
+            dt.datetime(1900, 1, 1) + dt.timedelta(seconds=x * 3601.5),
+            dt.datetime(2020, 2, 29) + dt.timedelta(microseconds=x),
+            Decimal(x) / 100, Decimal(x) + Decimal("0.0123456789"), [x, None], {f"k{x}": x},
+            (x, None), None if x % 3 == 0 else (x, f"c{x}"), x,
+        ]
+        if (k + n) % 7 == 0:
+            vals = [None] * len(vals)
+        return (lsn, op, "r", f"p{k:02d}", *vals)
+
+    base = spark.createDataFrame([], f"lsn long, repo string, path string, {cols.format('int')}")
+    table = lake.ParquetLakeTable(spark, tmp_table_path, num_buckets=8, schema=base.schema)
+    history = {}  # key -> [(version, op, row dict without op)]
+    # (batch, its events as (op, key), w's type, written by the driver)
+    plan = [
+        ([("I", k) for k in range(24)], "int", False),
+        ([("U", k) for k in range(12)], "int", True),
+        ([("D", 3)] + [("U", k) for k in range(12, 18)], "int", True),
+        ([("U", k) for k in range(5, 10)], "long", False),  # widens w: folds every bucket
+        ([("U", k) for k in (0, 1, 2, 4)] + [("I", 3)], "long", True),
+    ]
+    for n, (events, w, driver) in enumerate(plan):
+        rows = [row(100 * n + j, op, k, n) for j, (op, k) in enumerate(events)]
+        df = spark.createDataFrame(rows, f"lsn long, op string, repo string, path string, {cols.format(w)}")
+        with monkeypatch.context() as m:
+            if n == 0:
+                m.setattr(lake, "_TASK_ROWS", 1)
+            res = table.merge(df, batch_id=n)
+        version_dir = os.path.join(table.path, "data", f"v{res.version:012d}")
+        assert ("_SUCCESS" not in os.listdir(version_dir)) == driver, os.listdir(version_dir)
+        for r in df.collect():
+            d = r.asDict(recursive=True)
+            history.setdefault(tuple(d[c] for c in keys), []).append((res.version, d.pop("op"), d))
+
+    def state(s, t):
+        """Each key's last event committed in (s, t]."""
+        out = {}
+        for key, hist in history.items():
+            last = [h for h in hist if h[0] <= t]
+            if last and last[-1][0] > s:
+                out[key] = last[-1]
+        return out
+
+    def rows_of(df):
+        return sorted((r.asDict(recursive=True) for r in df.collect()), key=lambda d: (d["repo"], d["path"]))
+
+    v = table.current_version()
+    assert rows_of(table.read()) == sorted(
+        (d for _, op, d in state(0, v).values() if op != "D"), key=lambda d: (d["repo"], d["path"])
+    )
+    for t in range(1, v + 1):
+        for s in range(t):
+            want = [
+                {**d, "_change_type": "delete" if op == "D" else "upsert", "_commit_version": ver}
+                for ver, op, d in state(s, t).values()
+            ]
+            assert rows_of(table.read_changes(s, t)) == sorted(
+                want, key=lambda d: (d["repo"], d["path"])
+            ), (s, t)

@@ -199,26 +199,33 @@ def _plan_blocks(text):
 def _second_merge_plan(spark, tmp_path, monkeypatch, num_buckets, second, **gen):
     """Merge the events with ``lsn <= 1000`` into a new table, then the
     events matching ``second``, which must touch every bucket. Returns the
-    second merge's write plan: its text, its node blocks (``_plan_blocks``)
-    and the table's data dir."""
+    second merge's write plan, whether Spark writes it or the driver
+    collects it to write (a one-task write): its text, its node blocks
+    (``_plan_blocks``) and the table's data dir."""
     import os
 
     from pyspark.sql import DataFrameWriter
+    from pyspark.sql.classic.dataframe import DataFrame
 
     from pocket_etl_spark.datagen import gen_change_events
     from pocket_etl_spark.lake import ParquetLakeTable
 
     plans = []
-    parquet = DataFrameWriter.parquet
+    parquet, to_arrow = DataFrameWriter.parquet, DataFrame.toArrow
 
     def spy(self, path, *args, **kwargs):
         plans.append(plan_facts(self._df).text)
         return parquet(self, path, *args, **kwargs)
 
+    def arrow_spy(self):
+        plans.append(plan_facts(self).text)
+        return to_arrow(self)
+
     table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=num_buckets)
     ev = gen_change_events(spark, 2000, 200, seed=3, **gen).drop("ts", "extras")
     table.merge(ev.filter("lsn <= 1000"), batch_id=0)
     monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    monkeypatch.setattr(DataFrame, "toArrow", arrow_spy)
     res = table.merge(ev.filter(second), batch_id=1)
     assert res.touched_buckets == list(range(num_buckets))
     [text] = plans
