@@ -19,13 +19,11 @@ import uuid
 from dataclasses import dataclass, field
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from pocket_etl_spark.cdc.dedupe import OP_RANK_EXPR
 from pocket_etl_spark.cdc.evolution import EXTRAS_COL, PROMOTE_PREFIX, promote_extras
-from pocket_etl_spark import lake
-from pocket_etl_spark.lake import MergeResult, ParquetLakeTable, row_bytes, write_parquet_atomic
+from pocket_etl_spark.lake import MergeResult, ParquetLakeTable, write_parquet_atomic
 from pocket_etl_spark.profiling import Profiler
 from pocket_etl_spark.schema import DlqPayload, check_dlq_payload, dlq_records, valid_event
 
@@ -34,9 +32,6 @@ DROP_COLS = ("ts", "extras")
 # The most invalid rows of one batch partition that the stats pass brings to
 # the driver as DLQ records; a batch with more has Spark write its DLQ.
 _DLQ_DRIVER_ROWS = 1000
-# A batch with more valid events than this collapses to each key's winner
-# before the merge (see apply_batch).
-_COLLAPSE_AT = 250_000
 
 
 @dataclass
@@ -98,25 +93,15 @@ def apply_batch(
     A steady batch runs two Spark jobs: one stats pass over the cached
     batch (its aggregates are an ``Observation``; its action fills the cache
     and brings back the invalid rows as DLQ records) and the merge's write.
-    The pass's valid-event count goes to the merge as ``batch_rows`` beside
-    the touched buckets and the lsn floor, so a steady batch of at most
-    ``lake._TASK_ROWS`` valid events is picked by one task with no
-    exchange, and the driver writes that task's rows as one part file. The
-    pass also sums the valid events' payload bytes (``lake.row_bytes``); a
-    batch of more than ``lake._DRIVER_BYTES`` goes to the merge without its
-    row count and is written by Spark. The driver also holds the
+    The pass's aggregates include the table's ``batch_facts`` over the
+    valid events (touched buckets, rows, lowest lsn, payload bytes), which
+    go to the merge whole as its ``facts``: the merge sizes its write off
+    them and runs no probe of its own. The driver also holds the
     batch's invalid rows, as DLQ records (an Arrow table), and writes them
     itself: at most ``_DLQ_DRIVER_ROWS`` of them per batch partition. When a
     partition has more, the pass's records are dropped and Spark writes the
     batch's DLQ from the cache (one more job), so a batch of any number of
     invalid rows commits.
-
-    The merge's write tasks keep each key's winner, so a hot key's events
-    all reach one write task. A batch of more than ``_COLLAPSE_AT`` valid
-    events therefore collapses to each key's winner first: a
-    ``row_number() = 1`` that Spark plans as a map-side partial top-1 ahead
-    of one key exchange, so a hot key ships one row per partition (one more
-    stage in the write job).
 
     Phase timings are collected into a hierarchical Profiler tree (the
     reference's EtlProfilingScope.java:47-128 timer rollup) and exported
@@ -168,28 +153,24 @@ def apply_batch(
     # would diverge between reads. The persist MUST happen before the stats
     # pass below: if the stats pass ran against an unpersisted frame, a
     # non-deterministic upstream could hand the merge keys whose bucket never
-    # entered touched_buckets — the merge would then write a bucket the
+    # entered the facts' buckets — the merge would then write a bucket the
     # manifest loop never registers, silently dropping the update.
     with prof.scope("dlq_split"):
         valid = F.col("_valid")
         cached = events.withColumn(
             "_valid", valid_event(table.key_cols, table.lsn_col, table.op_col)
         ).persist()
-        # ONE stats pass (see the docstring) observes what the merge needs:
-        # the touched hash buckets, the event and invalid-row counts, the
-        # valid LSN range (its low end is the merge's lsn floor), the valid
-        # events' payload bytes and the promotable tunnel keys.
+        # ONE stats pass (see the docstring) observes the merge's facts, the
+        # invalid-row count, the highest valid lsn and the promotable tunnel
+        # keys.
         to_merge = [
             f for f in events.schema.fields if f.name not in (*DROP_COLS, "_raw_value")
         ]
         observed = Observation()
         aggs = [
-            F.collect_set(F.when(valid, table._bucket_expr())).alias("buckets"),
+            *table.batch_facts(valid, to_merge),
             F.count_if(~valid).alias("bad"),
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.when(valid, F.col(table.lsn_col))).alias("min_lsn"),
             F.max(F.when(valid, F.col(table.lsn_col))).alias("max_lsn"),
-            F.sum(F.when(valid, row_bytes(to_merge))).alias("bytes"),
         ]
         if EXTRAS_COL in events.columns:
             promotable = F.filter(
@@ -224,9 +205,8 @@ def apply_batch(
         with prof.scope("batch_stats"):
             records = first.toArrow()
             stats = observed.get
-        touched = sorted(stats["buckets"])
-        rows_in = int(stats["n"])
         rows_bad = int(stats["bad"])
+        rows_in = int(stats["rows"]) + rows_bad
 
         if rows_bad:
             # Same rule as redrive: an invalid row with nowhere to go must
@@ -250,29 +230,9 @@ def apply_batch(
         # schema-evolve into the table.
         good = promote_extras(cached.filter(valid), keys=sorted(stats.get("promo") or []))
         payload = good.drop("_valid", "_raw_value", *DROP_COLS)
-
-        # The merge's write tasks keep each key's winner, so a small batch
-        # goes to it as is: a collapse would only add a shuffle. A large one
-        # collapses first, or a hot key's events would all be sorted in one
-        # write task (see the docstring).
-        if rows_in - rows_bad > _COLLAPSE_AT:
-            latest = Window.partitionBy(*table.key_cols).orderBy(
-                F.desc(table.lsn_col), F.desc(OP_RANK_EXPR(table.op_col))
-            )
-            payload = (
-                payload.withColumn("_rn", F.row_number().over(latest))
-                .filter("_rn = 1")
-                .drop("_rn")
-            )
-        # A batch of one write task comes to the driver to be written there,
-        # so the merge learns the row count only of a batch whose payload
-        # the driver can hold; a larger one is written by Spark's wave.
-        small = (stats["bytes"] or 0) <= lake._DRIVER_BYTES
         with prof.scope("merge"):
             result = table.merge(
-                payload, batch_id=batch_id, query_id=query_id,
-                touched_buckets=touched, lsn_floor=stats["min_lsn"],
-                batch_rows=rows_in - rows_bad if small else None, prof=prof,
+                payload, batch_id=batch_id, query_id=query_id, facts=stats, prof=prof
             )
     finally:
         cached.unpersist()

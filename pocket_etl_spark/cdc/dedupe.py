@@ -25,9 +25,10 @@ Scale design — the winner pick must collapse a hot key before the shuffle:
   repartition already sends all of a key's rows to one task (they share a
   bucket), so the write tasks keep each key's row with the highest packed long,
   and the batch is exchanged once. That pick does NOT collapse a hot key before
-  the shuffle, so ``apply_batch`` first collapses a batch of more than
-  ``_COLLAPSE_AT`` events with the partial top-1 above: below it, a hot key
-  costs one write task at most that many rows.
+  the shuffle, so the merge first collapses a batch of more than
+  ``lake._COLLAPSE_AT`` events with the partial top-1 above (and its write
+  tasks then skip the pick, unless it folds): below it, a hot key costs one
+  write task at most that many rows.
 
 An explicit two-phase salted variant is provided for completeness and for plans where
 a window is genuinely required (e.g. top-N per key with N>1); the

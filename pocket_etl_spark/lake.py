@@ -32,15 +32,18 @@ Scale design (the part that matters at 100 TB):
   full or rewritten. The write tasks pick each key's winner after the
   write's one repartition (all of a key's rows share its bucket), so the
   batch is exchanged at most once; a hot key's rows all reach one write
-  task, so ``apply_batch`` collapses a large batch to its winners first.
-  The write wave is sized by the rows as well as the cores: a batch of at
-  most ``_TASK_ROWS`` rows (and ``_DRIVER_BYTES`` bytes) that needs no
-  stored side and no fold is picked by one task, with no exchange at all,
-  and that task's rows come to the driver as Arrow, where pyarrow writes
-  them as the commit's one part file (the reference's one buffered writer
-  per part file, committed on close) instead of Spark's Hadoop committer
-  and its temp dirs, renames, checksum files and a forked ``chmod`` per
-  file. Deciding "beats the stored state" reads a narrow scan of the
+  task, so a batch of more than ``_COLLAPSE_AT`` rows collapses to its
+  winners first. Every size decision reads off the batch's facts
+  (``batch_facts``: touched buckets, rows, lowest lsn, payload bytes),
+  which ``apply_batch`` aggregates in its stats pass and the merge's probe
+  otherwise does. The write wave is sized by the rows as well as the cores:
+  a batch of at most ``_TASK_ROWS`` rows (and ``_DRIVER_BYTES`` bytes)
+  that needs no stored side and no fold is picked by one task, with no
+  exchange at all, and that task's rows come to the driver as Arrow, where
+  pyarrow writes them as the commit's one part file (the reference's one
+  buffered writer per part file, committed on close) instead of Spark's
+  Hadoop committer and its temp dirs, renames, checksum files and a forked
+  ``chmod`` per file. Deciding "beats the stored state" reads a narrow scan of the
   touched buckets (key columns, lsn, ``_deleted``). Its cost is O(batch)
   written, not O(table): a batch of n distinct keys touches all but a
   (1 - 1/num_buckets)^n share of the buckets, so a copy-on-write merge would
@@ -81,6 +84,7 @@ import re as _re
 import shutil
 import time
 import uuid
+from collections.abc import Mapping
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -112,11 +116,14 @@ _FOLD_AT = 8
 # 4 partitions 20k 0.13/0.15 s, 50k 0.21/0.19 s, 100k 0.31/0.26 s.
 _TASK_ROWS = 50_000
 # A one-task write of a known row count is brought to the driver as Arrow and
-# written there by pyarrow; its caller hands the row count in only for a batch
-# of at most this many payload bytes (``row_bytes``), so the driver never
+# written there by pyarrow; a merge hands the row count in only for a batch
+# of at most this many payload bytes (``_row_bytes``), so the driver never
 # collects near ``spark.driver.maxResultSize`` (1 GiB). The reference buffers
 # 128 MiB per part file (S3FastLoader).
 _DRIVER_BYTES = 64 << 20
+# A merge of more than this many batch rows collapses the batch to each key's
+# winner before its write exchange (see merge).
+_COLLAPSE_AT = 250_000
 # One record per committed apply_batch (cdc/apply.py builds it).
 METRICS_SCHEMA = (
     "query_id string, batch_id long, version long, rows_in long, rows_bad long, "
@@ -158,7 +165,7 @@ def write_parquet_atomic(table: pa.Table, path: str) -> None:
         raise
 
 
-def row_bytes(fields: list[T.StructField]) -> Column:
+def _row_bytes(fields: list[T.StructField]) -> Column:
     """A row's payload bytes, estimated as the byte length of its string and
     binary values and of the JSON of its nested ones (fixed-width values are
     not counted): what ``_DRIVER_BYTES`` bounds."""
@@ -532,6 +539,18 @@ class ParquetLakeTable:
     def _bucket_expr(self):
         return F.pmod(F.xxhash64(*self.key_cols), F.lit(self.num_buckets)).cast("int")
 
+    def batch_facts(self, valid: Column, fields: list[T.StructField]) -> list[Column]:
+        """The aggregates ``merge`` reads its batch's facts off, over the rows
+        where ``valid`` holds: ``buckets`` (the buckets their keys hash to),
+        ``rows``, ``min_lsn`` and ``bytes`` (the payload bytes of ``fields``,
+        ``_row_bytes``)."""
+        return [
+            F.collect_set(F.when(valid, self._bucket_expr())).alias("buckets"),
+            F.count_if(valid).alias("rows"),
+            F.min(F.when(valid, F.col(self.lsn_col))).alias("min_lsn"),
+            F.sum(F.when(valid, _row_bytes(fields))).alias("bytes"),
+        ]
+
     def _write_buckets(
         self,
         df: DataFrame,
@@ -574,9 +593,8 @@ class ParquetLakeTable:
         the pick's distribution, so the write plans no exchange at all and
         writes one file holding every bucket. When the caller knows ``rows``,
         that one task's rows are brought to the driver as Arrow and written
-        there (``_write_on_driver``), not by Spark's Hadoop committer; the
-        caller keeps ``rows`` for writes the driver can hold (a merge hands
-        it in only for a batch of at most ``_DRIVER_BYTES``). ``rows`` changes
+        there (``_write_on_driver``), not by Spark's Hadoop committer, so
+        only a write the driver can hold is given ``rows``. ``rows`` changes
         only the task count and the writer, never the rows written.
 
         The write reports which task held which buckets, the lowest lsn of the
@@ -676,9 +694,7 @@ class ParquetLakeTable:
         updates: DataFrame,
         batch_id: int | None = None,
         query_id: str = "default",
-        touched_buckets: list[int] | None = None,
-        lsn_floor: int | None = None,
-        batch_rows: int | None = None,
+        facts: Mapping[str, Any] | None = None,
         prof: Profiler | None = None,
     ) -> MergeResult:
         """Keyed LWW MERGE of a change batch into the table, as an appended delta.
@@ -706,10 +722,14 @@ class ParquetLakeTable:
         there is no stored side and no join. ``_write_buckets`` then writes
         the rows as this commit's delta, stamped ``_version`` = the commit,
         and its write tasks keep each key's highest ``_ord`` after the write
-        repartition (exact duplicates keep one row). Nothing collapses a hot
-        key before that exchange: all of its rows reach one write task, so a
-        caller with a large batch collapses it first (``apply_batch`` does
-        above ``_COLLAPSE_AT`` events). A batch of at most ``_TASK_ROWS``
+        repartition (exact duplicates keep one row). That pick does not
+        collapse a hot key before the exchange: all of its rows reach one
+        write task. So a batch of more than ``_COLLAPSE_AT`` rows first
+        collapses to each key's highest ``_ord`` with a ``row_number() = 1``
+        that Spark plans as a map-side partial top-1 ahead of one key
+        exchange (a hot key ships one row per partition), and then, unless
+        it folds, is written with no pick: it holds one row per key, and the
+        anti join only removes rows. A batch of at most ``_TASK_ROWS``
         rows and ``_DRIVER_BYTES`` payload bytes with no stored side and no
         fold is picked by one task with no exchange and written as one part
         file by the driver, from Arrow. A merge that folds keeps the core-sized
@@ -733,26 +753,23 @@ class ParquetLakeTable:
         ``files_written`` (the commit's files), ``stored_files_scanned`` (the
         files of the stored side) and ``buckets_folded``.
 
-        ``touched_buckets`` is the caller's set of buckets the batch's keys
-        hash to (it skips the probe scan), ``lsn_floor`` the lowest lsn of
-        the batch's rows (without it, a merge given ``touched_buckets`` scans
-        every file of the touched buckets) and ``batch_rows`` the batch's row
-        count, which sizes the write wave (without it, a merge given
-        ``touched_buckets`` writes with the core-sized wave). A wrong
-        ``batch_rows`` changes only the number of write tasks and the writer,
-        never the rows written; a caller leaves it out for a batch of more
-        than ``_DRIVER_BYTES`` payload bytes (``row_bytes``), which the
-        driver would have to hold. The first two must be right: a merge that
-        writes a bucket outside ``touched_buckets``, or a row below
-        ``lsn_floor``, raises ``ValueError`` before committing, because stored
-        rows it had to compare were never read. Without ``touched_buckets``,
-        the probe finds all three and the payload bytes, and a batch
-        holding an invalid row (``schema.valid_event``) raises
-        ``ValueError`` before anything is written.
+        The merge decides every size off the batch's ``facts``, the
+        ``batch_facts`` aggregates over its valid rows: ``buckets`` (the
+        touched buckets), ``rows`` (the collapse and the write wave),
+        ``min_lsn`` (the stored side's floor) and ``bytes`` (the driver
+        bound). A caller that has them (``apply_batch``, from its stats pass)
+        hands them in whole, and the merge runs no probe; otherwise the
+        probe aggregates them, and a batch holding an invalid row
+        (``schema.valid_event``) raises ``ValueError`` before anything is
+        written. Wrong ``rows`` or ``bytes`` change only the write's task
+        count and writer, and whether it collapses first, never the rows
+        written. A merge that writes a bucket outside ``buckets``, or a row
+        below ``min_lsn``, raises ``ValueError`` before committing, because
+        stored rows it had to compare were never read.
 
         ``prof`` (``apply_batch`` hands in its own) receives three scopes:
-        ``plan`` (manifest read, schema unification, the touched-bucket probe
-        when no hint is given, building the plan; an empty batch commits its
+        ``plan`` (manifest read, schema unification, the probe when no
+        ``facts`` are given, building the plan; an empty batch commits its
         watermark here and stops), ``write`` (the one write action: stored
         scan, anti-join, the fold's read, each key's pick and the write run
         inside it) and ``commit`` (the manifest).
@@ -778,34 +795,25 @@ class ParquetLakeTable:
             new_schema = unify_schemas(table_schema, T.StructType(batch_payload_fields))
 
             batch = conform_to(updates, new_schema, keep_extra=[self.op_col])
-            # NOTE: with ``touched_buckets`` given, merge runs one action over
-            # ``updates`` (the write); without it, two (the touched-bucket probe
-            # and the write). Callers are expected to hand in a cached/cheap frame
-            # — apply_batch caches the validated batch; double-caching here
+            # NOTE: with ``facts`` given, merge runs one action over ``updates``
+            # (the write); without them, two (the probe and the write).
+            # Callers are expected to hand in a cached/cheap frame —
+            # apply_batch caches the validated batch; double-caching here
             # measurably thrashes the block manager, so merge itself does not
             # persist.
-
-            # Bucket pruning: only buckets containing updated keys participate.
-            # Callers that already computed the batch's bucket set (apply_batch folds
-            # it into its single stats pass) hand it in and skip this probe scan,
-            # which also counts the invalid rows merge has no DLQ for.
-            if touched_buckets is not None:
-                touched, floor, n = sorted(touched_buckets), lsn_floor, batch_rows
-            else:
+            if facts is None:
+                # The probe also counts the invalid rows merge has no DLQ for.
                 ok = valid_event(self.key_cols, self.lsn_col, self.op_col)
-                buckets, n_bad, floor, n, size = batch.agg(
-                    F.collect_set(self._bucket_expr()), F.count_if(~ok),
-                    F.min(self.lsn_col), F.count(F.lit(1)),
-                    F.sum(row_bytes(batch.schema.fields)),
-                ).first()
-                if (size or 0) > _DRIVER_BYTES:
-                    n = None
-                if n_bad:
+                facts = batch.agg(
+                    *self.batch_facts(ok, batch.schema.fields), F.count_if(~ok).alias("bad")
+                ).first().asDict()
+                if facts["bad"]:
                     raise ValueError(
-                        f"merge: {n_bad} rows are invalid (null key/lsn or unknown "
-                        "op); nothing was written (apply_batch DLQs them)."
+                        f"merge: {facts['bad']} rows are invalid (null key/lsn or "
+                        "unknown op); nothing was written (apply_batch DLQs them)."
                     )
-                touched = sorted(buckets)
+            # Bucket pruning: only buckets containing updated keys participate.
+            touched, floor, n = sorted(facts["buckets"]), facts["min_lsn"], facts["rows"]
             if not touched:
                 # Still advance the watermark so the empty batch is fenced on replay.
                 version = self._commit_next(man, batch_id=batch_id, query_id=query_id)
@@ -845,6 +853,16 @@ class ParquetLakeTable:
                 F.lit(new_version).cast("long").alias("_version"),
                 (packed + 1).alias("_ord"),
             )
+            # A large batch collapses to each key's winner before the write
+            # exchange, which would send all of a hot key's rows to one task.
+            collapse = n > _COLLAPSE_AT
+            if collapse:
+                first = Window.partitionBy(*self.key_cols).orderBy(F.desc("_ord"))
+                delta = (
+                    delta.withColumn("_rn", F.row_number().over(first))
+                    .filter("_rn = 1")
+                    .drop("_rn")
+                )
             # The schema is the merged one: an empty table's manifest schema
             # may lack the batch's key columns. (Catalyst keeps the join of an
             # empty stored side, exchanges included, so skip it here.)
@@ -875,8 +893,9 @@ class ParquetLakeTable:
 
         with prof.scope("write"):
             written, lo, hi = self._write_buckets(
-                delta, new_version, len(scope), order=("_version", "_ord"),
-                rows=None if redo or scanned else n,
+                delta, new_version, len(scope),
+                order=() if collapse and not redo else ("_version", "_ord"),
+                rows=None if redo or scanned or (facts["bytes"] or 0) > _DRIVER_BYTES else n,
             )
         stray = {b for bs in written.values() for b in bs} - set(scope)
         if stray:
@@ -884,14 +903,14 @@ class ParquetLakeTable:
                 f"merge: the batch has keys in buckets {sorted(stray)} "
                 "outside touched_buckets; their stored rows were never compared, "
                 "so committing could let a stale event win. Pass the complete "
-                "bucket set or touched_buckets=None."
+                "bucket set or facts=None."
             )
         if floor is not None and lo is not None and lo < floor:
             raise ValueError(
                 f"merge: the batch has a row at lsn {lo}, below lsn_floor={floor}; "
                 "stored rows below the floor were never compared, so committing "
                 "could let a stale event win. Pass the batch's lowest lsn or "
-                "lsn_floor=None."
+                "facts=None."
             )
         with prof.scope("commit"):
             self._commit_next(
@@ -909,21 +928,6 @@ class ParquetLakeTable:
         )
 
     # ---------- maintenance ----------
-
-    def _rewrite(
-        self, man: dict[str, Any], buckets: list[int], slices: int | None, **stats: Any
-    ) -> int:
-        """Rewrite ``buckets`` of snapshot ``man`` as their resolved rows in
-        one new commit: the body of ``compact``. The write tasks keep each
-        key's highest ``_version``. Row content, tombstones and
-        ``_version`` stamps are kept as they are, so the change feed emits
-        nothing for the commit. The buckets' rows left in older files shared
-        with other buckets become dead rows. Returns the new version."""
-        df, _, _ = self._scan(man, buckets)
-        written, _, hi = self._write_buckets(
-            df, man["version"] + 1, len(buckets), slices, order=("_version",)
-        )
-        return self._commit_next(man, written, replaced=buckets, max_lsn=hi, **stats)
 
     def overwrite(self, df: DataFrame) -> MergeResult:
         """CLOBBER strategy (full refresh) — the reference's deleteAndCopy
@@ -946,11 +950,14 @@ class ParquetLakeTable:
         hot-bucket write slicing leave a bucket in several part files;
         compaction rewrites any bucket that more than ``max_files_per_bucket``
         (>= 1) files list in the manifest into at most that many files of one
-        commit, resolved (``compact(1)`` folds every bucket with a delta).
+        commit, resolved: the write tasks keep each key's highest
+        ``_version`` (``compact(1)`` folds every bucket with a delta).
         Row content — including tombstones and the per-row ``_version``
         change-feed stamps — is preserved byte-for-byte, so ``read_changes``
         across a compaction emits NOTHING for compacted buckets (files moved,
-        stamps did not). Untouched buckets carry forward by reference."""
+        stamps did not). The buckets' rows left in older files shared with
+        other buckets become dead rows. Untouched buckets carry forward by
+        reference."""
         if max_files_per_bucket < 1:
             raise ValueError(
                 f"compact: max_files_per_bucket must be >= 1, got {max_files_per_bucket}"
@@ -962,8 +969,12 @@ class ParquetLakeTable:
         ]
         if not needs:
             return MergeResult(False, cur_version, None, [], {"compacted": 0})
-        new_version = self._rewrite(
-            man, needs, max_files_per_bucket, compacted_buckets=len(needs)
+        df, _, _ = self._scan(man, needs)
+        written, _, hi = self._write_buckets(
+            df, cur_version + 1, len(needs), max_files_per_bucket, order=("_version",)
+        )
+        new_version = self._commit_next(
+            man, written, replaced=needs, max_lsn=hi, compacted_buckets=len(needs)
         )
         return MergeResult(True, new_version, None, needs, {"compacted": len(needs)})
 

@@ -448,7 +448,7 @@ def test_steady_apply_batch_py4j_round_trips_are_bounded(
     spark, tmp_table_path, tmp_path, monkeypatch
 ):
     """Building a commit's plans costs py4j round trips, each a blocking
-    call into the JVM. A steady ``apply_batch`` makes 570 of them; the
+    call into the JVM. A steady ``apply_batch`` makes 567 of them; the
     ceiling leaves about 18% headroom. Object-release commands are not
     counted: Python's garbage collector sends them whenever it happens to
     run."""

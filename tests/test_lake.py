@@ -384,9 +384,10 @@ def test_compaction_preserves_state_and_change_feed(spark, tmp_table_path, monke
 
 
 def test_merge_refuses_incomplete_touched_buckets_hint(spark, tmp_table_path):
-    """A batch key in a bucket outside the ``touched_buckets`` hint must fail
-    the merge before it commits: that bucket's current rows were never read,
-    so committing would replace the bucket with the batch's rows alone."""
+    """A batch key in a bucket outside the buckets of the merge's ``facts``
+    must fail the merge before it commits: that bucket's current rows were
+    never read, so committing would replace the bucket with the batch's rows
+    alone."""
     import pytest
 
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
@@ -400,13 +401,14 @@ def test_merge_refuses_incomplete_touched_buckets_hint(spark, tmp_table_path):
         .withColumn("op", F.lit("I"))
         .withColumn("lsn", F.lit(10**9).cast("long"))
     )
+    facts = {"rows": 1, "min_lsn": 10**9, "bytes": 0}
     with pytest.raises(ValueError, match="outside touched_buckets"):
-        table.merge(late, batch_id=1, touched_buckets=[0, 1, 2])
+        table.merge(late, batch_id=1, facts={**facts, "buckets": [0, 1, 2]})
     assert table.current_version() == v0
     assert table.last_batch_id() == 0
     assert table.read().count() == before
     # the complete hint commits and keeps bucket 3's other rows
-    res = table.merge(late, batch_id=1, touched_buckets=[3])
+    res = table.merge(late, batch_id=1, facts={**facts, "buckets": [3]})
     assert res.committed
     assert before <= table.read().count() <= before + 1
 
@@ -583,7 +585,7 @@ def test_iceberg_maintenance_sql_statements():
 
 
 def test_merge_without_hint_rejects_invalid_rows(spark, tmp_table_path):
-    """A merge without a touched_buckets hint (LakeMergeLoader, a direct
+    """A merge without ``facts`` (LakeMergeLoader, a direct
     call) has no DLQ: a batch holding a null key, a NULL op or an unknown op
     raises before anything is written — none of those rows may vanish or land
     as a live row under a committed version."""
@@ -933,8 +935,8 @@ def test_lsn_bounds_prune_the_stored_side_exactly(spark, tmp_table_path, monkeyp
             for s in range(v) for p, lsn, d, _, c_v in want if c_v > s
         ), v
 
-    def merge(batch, batch_id, **hint):
-        res = table.merge(spark.createDataFrame(batch, cols), batch_id=batch_id, **hint)
+    def merge(batch, batch_id, facts=None):
+        res = table.merge(spark.createDataFrame(batch, cols), batch_id=batch_id, facts=facts)
         events.extend(batch)
         for e in batch:
             stamp[(e[3], e[0], e[1])] = res.version
@@ -970,10 +972,11 @@ def test_lsn_bounds_prune_the_stored_side_exactly(spark, tmp_table_path, monkeyp
         })
     }
     v, wm = table.current_version(), table.last_batch_id()
+    facts = {"buckets": hint["touched_buckets"], "rows": len(hinted), "bytes": 0}
     with pytest.raises(ValueError, match="below lsn_floor"):
-        table.merge(spark.createDataFrame(hinted, cols), batch_id=6, lsn_floor=131, **hint)
+        table.merge(spark.createDataFrame(hinted, cols), batch_id=6, facts={**facts, "min_lsn": 131})
     assert (table.current_version(), table.last_batch_id()) == (v, wm)
-    res = merge(hinted, 6, lsn_floor=130, **hint)
+    res = merge(hinted, 6, facts={**facts, "min_lsn": 130})
     assert res.stats["buckets_folded"] == len(hint["touched_buckets"])
     assert table.current_version() == res.version == v + 1
     monkeypatch.setattr(lake, "_FOLD_AT", 100)
@@ -998,7 +1001,7 @@ def test_lsn_bounds_prune_the_stored_side_exactly(spark, tmp_table_path, monkeyp
     v, wm = table.current_version(), table.last_batch_id()
     bad = spark.createDataFrame([ev(50, "I", "pnew"), ev(600, "U", paths[1])], cols)
     with pytest.raises(ValueError, match="below lsn_floor"):
-        table.merge(bad, batch_id=9, touched_buckets=list(range(4)), lsn_floor=600)
+        table.merge(bad, batch_id=9, facts={"buckets": list(range(4)), "rows": 2, "min_lsn": 600, "bytes": 0})
     assert (table.current_version(), table.last_batch_id()) == (v, wm)
     check()
 

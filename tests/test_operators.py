@@ -148,7 +148,7 @@ def test_ivf_indexed_matches_inmemory_and_prunes_partitions(spark, tmp_path):
         ivf_topk_indexed,
         ivf_write_index,
     )
-    from pocket_etl_spark.plans import plan_facts
+    from plans import plan_facts
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     centroids = e.filter("vec_id < 4")

@@ -8,7 +8,7 @@ import re
 
 import pytest
 
-from pocket_etl_spark.plans import assert_filters_pushed, assert_scan_pruned, plan_facts
+from plans import assert_filters_pushed, assert_scan_pruned, plan_facts
 from pocket_etl_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -352,18 +352,20 @@ def test_read_of_many_files_lists_them_on_the_driver(spark, tmp_path, monkeypatc
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
-def test_large_batch_collapses_a_hot_key_before_the_write_exchange(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("via", ["apply_batch", "merge"])
+def test_large_batch_collapses_a_hot_key_before_the_write_exchange(spark, tmp_path, monkeypatch, via):
     """The merge's write tasks pick each key's winner, so all of a hot key's
-    rows reach one write task. ``apply_batch`` collapses a batch of more
-    than ``_COLLAPSE_AT`` valid events first: its key exchange is fed by a
+    rows reach one write task. The merge collapses a batch of more than
+    ``_COLLAPSE_AT`` valid events first, whether ``apply_batch`` hands in
+    its facts or a direct merge probes them: its key exchange is fed by a
     map-side partial top-1, so a hot key ships one row per partition. A
-    batch at the threshold goes to the merge as is and is exchanged once,
-    by the write. (``_COLLAPSE_AT`` is far above ``_TASK_ROWS``; with both
-    lowered, the 2,000-event batches are written by a core-sized wave.)"""
+    batch at the threshold is exchanged once, by the write.
+    (``_COLLAPSE_AT`` is far above ``_TASK_ROWS``; with both lowered, the
+    2,000-event batches are written by a core-sized wave.)"""
     from pyspark.sql import DataFrameWriter
 
     from pocket_etl_spark import lake
-    from pocket_etl_spark.cdc import apply
+    from pocket_etl_spark.cdc.apply import apply_batch
     from pocket_etl_spark.datagen import gen_change_events
     from pocket_etl_spark.lake import ParquetLakeTable
 
@@ -378,9 +380,12 @@ def test_large_batch_collapses_a_hot_key_before_the_write_exchange(spark, tmp_pa
     monkeypatch.setattr(lake, "_TASK_ROWS", 1)
     ev = gen_change_events(spark, 2000, 200, seed=3, hot_key_fraction=0.5)
     for i, at in enumerate([2000, 1999]):
-        monkeypatch.setattr(apply, "_COLLAPSE_AT", at)
+        monkeypatch.setattr(lake, "_COLLAPSE_AT", at)
         table = ParquetLakeTable(spark, str(tmp_path / f"t{i}"), num_buckets=16)
-        apply.apply_batch(ev, table, batch_id=0)
+        if via == "merge":
+            table.merge(ev.drop("ts", "extras"), batch_id=0)
+        else:
+            apply_batch(ev, table, batch_id=0)
     small, large = plans
 
     def payload_exchanges(text):
@@ -399,3 +404,27 @@ def test_large_batch_collapses_a_hot_key_before_the_write_exchange(spark, tmp_pa
     child = re.search(rf"Exchange \({batch}\)\n[ :|+-]*(\w+) \((\d+)\)", large)
     assert child and child.group(1) == "WindowGroupLimit", large
     assert "Partial" in _plan_blocks(large)[child.group(2)][1], large
+
+
+@pytest.mark.parametrize("fold", [False, True], ids=["delta", "fold"])
+def test_collapsed_merge_writes_without_a_pick(spark, tmp_path, monkeypatch, fold):
+    """A batch of more than ``_COLLAPSE_AT`` rows holds one row per key once
+    collapsed, and the anti join only removes rows, so a merge that folds no
+    bucket writes it with no pick: its plan's one window is the collapse
+    over the keys, and none runs above the ``REPARTITION_BY_NUM`` write
+    exchange. A folding merge's write also holds the buckets' stored rows
+    and keeps the pick over ``_bucket`` and the keys."""
+    from pocket_etl_spark import lake
+
+    monkeypatch.setattr(lake, "_TASK_ROWS", 1)
+    monkeypatch.setattr(lake, "_COLLAPSE_AT", 1)
+    monkeypatch.setattr(lake, "_FOLD_AT", 1 if fold else 100)
+    text, blocks, _ = _second_merge_plan(spark, tmp_path, monkeypatch, 16, "lsn > 1000")
+    assert [d for n, d in blocks.values() if n.endswith("Exchange") and "REPARTITION_BY_NUM" in d], text
+    windows = []
+    for n, d in blocks.values():
+        if n == "Window":
+            args = re.search(r"^Arguments: (.*)$", d, flags=re.MULTILINE).group(1)
+            windows.append(re.findall(r"(\w+)#\d+", re.findall(r"\[([^\[\]]*)\]", args)[-2]))
+    pick = [["_bucket", "repo", "path"]] if fold else []
+    assert sorted(windows) == sorted([["repo", "path"]] + pick), text

@@ -47,7 +47,7 @@ def test_elapsed_times_ignore_wall_clock_steps(spark, tmp_path, monkeypatch):
     table = ParquetLakeTable(spark, str(tmp_path / "t"), num_buckets=4)
     # an empty batch commits watermark 0 without a Spark job, so the
     # apply_batch below takes its fenced early return
-    table.merge(events.limit(0), batch_id=0, touched_buckets=[])
+    table.merge(events.limit(0), batch_id=0, facts={"buckets": [], "rows": 0, "min_lsn": None, "bytes": 0})
 
     wall = [time.time()]
 
