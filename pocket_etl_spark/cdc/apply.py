@@ -25,13 +25,13 @@ from pyspark.sql import functions as F
 from pocket_etl_spark.cdc.evolution import EXTRAS_COL, PROMOTE_PREFIX, promote_extras
 from pocket_etl_spark.lake import MergeResult, ParquetLakeTable, write_parquet_atomic
 from pocket_etl_spark.profiling import Profiler
-from pocket_etl_spark.schema import DlqPayload, check_dlq_payload, dlq_records, valid_event
+from pocket_etl_spark.schema import LSN_COL, DlqPayload, check_dlq_payload, dlq_records, valid_event
 
 # event-envelope columns that never reach the table
 DROP_COLS = ("ts", "extras")
-# The most invalid rows of one batch partition that the stats pass brings to
-# the driver as DLQ records; a batch with more has Spark write its DLQ.
-_DLQ_DRIVER_ROWS = 1000
+# The most DLQ records of one partition that ``collect_dlq`` brings to the
+# driver; a surface with more has Spark write its DLQ (``write_dlq``).
+DLQ_DRIVER_ROWS = 1000
 
 
 @dataclass
@@ -44,21 +44,36 @@ class ApplyResult:
     timings: dict[str, float] = field(default_factory=dict)
 
 
-def _write_dlq(
+def collect_dlq(records: DataFrame) -> pa.Table:
+    """Run ``records`` (DLQ records, ``DLQ_SCHEMA``) as one action that
+    brings at most ``DLQ_DRIVER_ROWS`` of each partition to the driver as
+    Arrow. The caller counts the records in the same action (an
+    ``Observation``): when it holds fewer than that count, Spark writes the
+    DLQ instead (``write_dlq`` with a DataFrame)."""
+    # monotonically_increasing_id() numbers a partition's rows in its low 33 bits
+    return (
+        records.withColumn("_i", F.monotonically_increasing_id() % (1 << 33))
+        .filter(F.col("_i") < DLQ_DRIVER_ROWS)
+        .drop("_i")
+        .toArrow()
+    )
+
+
+def write_dlq(
     records: pa.Table | DataFrame, dlq_path: str, query_id: str, batch_id: int | None
 ) -> None:
-    """Write a batch's DLQ records (``DLQ_SCHEMA``) into ``dlq_path`` as its
-    files ``dlq-<hash(query_id)>-<batch_id>-<n>.parquet``, replacing the
-    files an earlier attempt of the batch left at that address, so a replayed
-    batch leaves each invalid row once. An Arrow table (the records the stats
-    pass brought to the driver) is written by pyarrow, with no Spark job,
-    as file ``-0`` (``lake.write_parquet_atomic``: a hidden ``_``-prefixed
-    temp file that readers of ``dlq_path`` skip, then a rename); a DataFrame
-    (a batch with more invalid rows than the driver takes) is written by
+    """Write DLQ records (``DLQ_SCHEMA``) into ``dlq_path`` as the files
+    ``dlq-<hash(query_id)>-<batch_id>-<n>.parquet``, replacing the files an
+    earlier attempt of the batch left at that address, so a replayed batch
+    leaves each invalid row once. An Arrow table
+    (the records ``collect_dlq`` brought to the driver) is written by
+    pyarrow, with no Spark job, as file ``-0`` (``lake.write_parquet_atomic``:
+    a hidden ``_``-prefixed temp file that readers of ``dlq_path`` skip, then
+    a rename); a DataFrame (more records than the driver takes) is written by
     Spark into a hidden staging dir and its files are moved in. The
     address's earlier files that no new one replaced are then removed. A
     crash on the way leaves the batch uncommitted, and its replay rewrites
-    the address. A batch without an id gets a fresh address."""
+    the address. A write without a batch id gets a fresh address."""
     qh = hashlib.sha1(query_id.encode()).hexdigest()[:12]
     addr = f"dlq-{qh}-{uuid.uuid4().hex if batch_id is None else batch_id}"
     base = os.path.join(dlq_path, addr)
@@ -96,12 +111,11 @@ def apply_batch(
     The pass's aggregates include the table's ``batch_facts`` over the
     valid events (touched buckets, rows, lowest lsn, payload bytes), which
     go to the merge whole as its ``facts``: the merge sizes its write off
-    them and runs no probe of its own. The driver also holds the
-    batch's invalid rows, as DLQ records (an Arrow table), and writes them
-    itself: at most ``_DLQ_DRIVER_ROWS`` of them per batch partition. When a
-    partition has more, the pass's records are dropped and Spark writes the
-    batch's DLQ from the cache (one more job), so a batch of any number of
-    invalid rows commits.
+    them and runs no probe of its own. The invalid rows come to the driver
+    (``collect_dlq``), and ``write_dlq`` writes them under the batch's own
+    address, so a replay of a batch that failed before its commit replaces
+    them; past the driver's bound Spark writes them from the cache (one more
+    job), so a batch of any number of invalid rows commits.
 
     Phase timings are collected into a hierarchical Profiler tree (the
     reference's EtlProfilingScope.java:47-128 timer rollup) and exported
@@ -118,10 +132,6 @@ def apply_batch(
     (files the merge's stored side read), min_lsn/max_lsn of
     the valid events, duration_sec, committed_at and the timings. Its counts come from the one stats pass,
     so the record costs no Spark job. A fenced replay writes none.
-
-    Invalid rows go to ``dlq_path`` under the batch's own file name
-    (``_write_dlq``), so a replay of a batch that failed before its commit
-    replaces its DLQ rows instead of adding a second copy.
 
     ``dlq_payload``/``dlq_keys`` are the DLQ payload policy of every surface
     (``schema.dlq_records``): the PII-safe ``"redacted"`` default carries the
@@ -157,9 +167,7 @@ def apply_batch(
     # manifest loop never registers, silently dropping the update.
     with prof.scope("dlq_split"):
         valid = F.col("_valid")
-        cached = events.withColumn(
-            "_valid", valid_event(table.key_cols, table.lsn_col, table.op_col)
-        ).persist()
+        cached = events.withColumn("_valid", valid_event(table.key_cols)).persist()
         # ONE stats pass (see the docstring) observes the merge's facts, the
         # invalid-row count, the highest valid lsn and the promotable tunnel
         # keys.
@@ -170,7 +178,7 @@ def apply_batch(
         aggs = [
             *table.batch_facts(valid, to_merge),
             F.count_if(~valid).alias("bad"),
-            F.max(F.when(valid, F.col(table.lsn_col))).alias("max_lsn"),
+            F.max(F.when(valid, F.col(LSN_COL))).alias("max_lsn"),
         ]
         if EXTRAS_COL in events.columns:
             promotable = F.filter(
@@ -192,18 +200,11 @@ def apply_batch(
                 batch_id, "apply", F.lit(error), dlq_payload, dlq_keys,
             )
 
-        # monotonically_increasing_id() numbers a partition's rows in its
-        # low 33 bits
-        first = (
-            bad(cached.observe(observed, *aggs))
-            .withColumn("_i", F.monotonically_increasing_id() % (1 << 33))
-            .filter(F.col("_i") < _DLQ_DRIVER_ROWS)
-            .drop("_i")
-        )
+        first = bad(cached.observe(observed, *aggs))
 
     try:
         with prof.scope("batch_stats"):
-            records = first.toArrow()
+            records = collect_dlq(first)
             stats = observed.get
         rows_bad = int(stats["bad"])
         rows_in = int(stats["rows"]) + rows_bad
@@ -222,7 +223,7 @@ def apply_batch(
             with prof.scope("dlq_write"):
                 if records.num_rows < rows_bad:
                     records = bad(cached)
-                _write_dlq(records, dlq_path, query_id, batch_id)
+                write_dlq(records, dlq_path, query_id, batch_id)
 
         # Schema evolution: lift tunnel fields (extras map "new_col_*") to
         # columns before the merge widens the table schema. The raw

@@ -9,12 +9,14 @@ DLQ payloads back into typed event rows, runs an optional caller-supplied
 query_id, so the re-drive is itself fenced, leaves its own metrics record,
 and can route still-bad rows to a fresh DLQ.
 
-One DLQ record schema (batch_id, stage, error, payload, ts) and one payload
-policy across surfaces: the streaming tail / apply DLQ (cdc/apply.apply_batch)
-and the fluent API's DLQ (etl.EtlStream.run, RowSinkLoader) all build it with
-schema.dlq_records, so this module consumes any of them. Fluent-API records
-carry a null batch_id (a fluent run is not a fenced micro-batch) — see the
-fencing note on ``redrive``.
+One DLQ record schema (batch_id, stage, error, payload, ts), one payload
+policy and one writer across surfaces: the streaming tail / apply DLQ
+(cdc/apply.apply_batch) and the fluent API's DLQ (etl.EtlStream.run,
+RowSinkLoader) all build it with schema.dlq_records and write it with
+cdc/apply.write_dlq, so this module consumes any of them. Apply files are
+``dlq-<hash(query_id)>-<batch_id>-<n>.parquet``; fluent ones are
+``dlq-<hash(stream name)>-<uuid>-<n>.parquet`` with a null batch_id (a fluent
+run is not a fenced micro-batch) — see the fencing note on ``redrive``.
 
 Requires full-record payloads (``apply_batch(dlq_payload="full")`` / fluent
 ``with_object_logger("full")``): the PII-safe default payload deliberately

@@ -30,7 +30,7 @@ lineage: build = logical plan, ``run()`` = action. Parity map (file:line into
 - withName / withThreads / withObjectLogger → query naming, repartition hint,
   DLQ payload formatter (EtlConsumerStage.java:58-85)
 - error routing: a recoverable per-record failure leaves the stream at the
-  stage that failed it (``_divert``) and the stream continues; later stages
+  stage that failed it (``_compile``) and the stream continues; later stages
   never see it; unrecoverable aborts (TransformerEtlConsumer.java:90-99,
   LoaderEtlConsumer.java:72-80,
   exception/UnrecoverableStreamFailureException.java:27-52,
@@ -40,25 +40,28 @@ lineage: build = logical plan, ``run()`` = action. Parity map (file:line into
 
 Scale notes: every stage stays declarative (Catalyst sees through the whole
 chain — pushdown/pruning cross stage boundaries); Python transforms are
-Arrow-vectorized ``mapInPandas`` only (never per-row Python); the per-record
-error channel costs nothing on clean batches (vectorized fast path, row-retry
-only inside a failing batch) beyond one persist per ``map_rows`` stage.
+Arrow-vectorized ``mapInPandas`` only (never per-row Python). The per-record
+error channel costs one persist per ``map_rows`` stage on a clean batch; a
+failing batch is retried by halves. A run's DLQ is one action on
+``apply_batch``'s pair (``_route_failed``), and a clean run writes no file.
 """
 
 from __future__ import annotations
 
 import traceback
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field, replace
 from functools import reduce
 from typing import Any
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pocket_etl_spark.schema import DlqPayload, check_dlq_payload, dlq_records
+from pocket_etl_spark.cdc.apply import collect_dlq, write_dlq
+from pocket_etl_spark.schema import DLQ_SCHEMA, DlqPayload, check_dlq_payload, dlq_records
 
 
 class UnrecoverableStreamFailure(Exception):
@@ -72,15 +75,42 @@ class UnrecoverableStreamFailure(Exception):
 _ERR_COL = "_etl_error"
 
 
-def _divert(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """``(cached, clean, failed)``: the one place a failed record leaves the
-    stream. ``clean`` (error column dropped) feeds the next stage; ``failed``
-    keeps the columns the record had when it failed. Both legs read the one
-    persisted ``cached`` frame (the caller unpersists it), so the stage runs
-    once and a record lands in exactly one leg."""
-    cached = df.persist()
-    err = F.col(_ERR_COL)
-    return cached, cached.filter(err.isNull()).drop(_ERR_COL), cached.filter(err.isNotNull())
+def _call(fn: Callable[[Any], Any], arg: Any) -> tuple[Any, str | None]:
+    """``(fn(arg), None)``, or ``(None, traceback)`` when ``fn`` fails with a
+    recoverable error; UnrecoverableStreamFailure propagates."""
+    try:
+        return fn(arg), None
+    except UnrecoverableStreamFailure:
+        raise
+    except Exception:
+        return None, traceback.format_exc(limit=1)
+
+
+def _route_failed(
+    stream: "EtlStream", cached: list[DataFrame], dlq_path: str | None
+) -> tuple[pa.Table, int]:
+    """The fluent DLQ channel, on ``apply_batch``'s pair: one action counts
+    the DLQ records of the ``cached`` frames' failed rows (an
+    ``Observation``) and brings them to the driver
+    (``cdc.apply.collect_dlq``), filling every cache. When a record failed,
+    ``cdc.apply.write_dlq`` writes them to ``dlq_path`` under a fresh
+    address; past the driver's bound Spark writes them from the caches.
+    Returns the collected records (past the bound, the first
+    ``DLQ_DRIVER_ROWS`` of each partition) and the count of all of them."""
+    dlq = reduce(DataFrame.unionByName, [
+        dlq_records(
+            c.filter(F.col(_ERR_COL).isNotNull()), None, stream._name, _ERR_COL,
+            stream._object_logger, stream._dlq_key_cols,
+        )
+        for c in cached
+    ])
+    counted = Observation()
+    records = collect_dlq(dlq.observe(counted, F.count(F.lit(1)).alias("n")))
+    n = counted.get["n"]
+    if n and dlq_path is not None:
+        # past the bound, Spark writes them all from the caches
+        write_dlq(records if records.num_rows == n else dlq, dlq_path, stream._name, None)
+    return records, n
 
 
 # ---------------------------------------------------------------------------
@@ -212,9 +242,11 @@ class RowSinkLoader(Loader):
     recoverable per-record error).
 
     ``write_fn(record: dict)`` runs once per record ON THE EXECUTORS
-    (partition-parallel, Arrow-batched transfer); a record whose write raises
-    is split off by ``_divert``, as in ``map_rows``, into the sink DLQ
-    (``dlq_path`` parquet + the returned counts). Raise
+    (partition-parallel, Arrow-batched transfer) in one action, the run's
+    DLQ channel (``_route_failed``), which also counts the returned
+    ``records_written``/``records_failed``; a record whose write raises goes
+    to the sink DLQ (``dlq_path``). The persisted sink output feeds a DLQ
+    past the driver's bound, so no record is written twice. Raise
     UnrecoverableStreamFailure inside ``write_fn`` to abort the run instead.
     The DLQ payload follows the stream's object-logger policy
     (``schema.dlq_records``): PII-safe redacted by default,
@@ -236,33 +268,16 @@ class RowSinkLoader(Loader):
 
         def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                statuses = []
-                for rec in pdf.to_dict("records"):
-                    try:
-                        fn(rec)
-                        statuses.append(None)
-                    except UnrecoverableStreamFailure:
-                        raise
-                    except Exception:
-                        statuses.append(traceback.format_exc(limit=1))
-                out = pdf.copy()
-                out[_ERR_COL] = pd.Series(statuses, index=pdf.index, dtype="object")
-                yield out
+                yield pdf.assign(**{_ERR_COL: [_call(fn, r)[1] for r in pdf.to_dict("records")]})
 
-        cached, written, failed = _divert(df.mapInPandas(sink, schema=out_schema))
+        cached = df.mapInPandas(sink, schema=out_schema).persist()
+        written = Observation()
+        observed = cached.observe(written, F.count_if(F.col(_ERR_COL).isNull()).alias("n"))
         try:
-            # the first count materializes the cache → every record written
-            # exactly once per run; the other reads are of the cached result
-            n_failed = failed.count()
-            n_written = written.count()
-            if n_failed and self.dlq_path is not None:
-                dlq_records(
-                    failed, None, stream._name, _ERR_COL,
-                    stream._object_logger, stream._dlq_key_cols,
-                ).write.mode("append").parquet(self.dlq_path)
+            _, n_failed = _route_failed(stream, [observed], self.dlq_path)
         finally:
             cached.unpersist()
-        return {"records_written": n_written, "records_failed": n_failed}
+        return {"records_written": written.get["n"], "records_failed": n_failed}
 
 
 @dataclass
@@ -412,12 +427,13 @@ class EtlStream:
         received (TransformerFanoutTest.java:47-70); 1→0 filter: return fewer.
 
         Error semantics (StreamFailureTest.java:50-190): if ``fn`` raises for a
-        batch, the engine retries the batch ROW BY ROW; a row whose singleton
-        retry still fails leaves the stream at this stage (``_divert``) for
-        the run's DLQ, with the exception text and the values it had then;
-        later stages never see it. Raise UnrecoverableStreamFailure to abort
-        the whole run instead. The vectorized fast path pays zero overhead
-        when no batch fails."""
+        batch, the engine retries its halves, down to single rows (at most
+        2·⌈log₂ b⌉+1 calls per isolated bad row in a batch of b); a row that
+        fails alone leaves the stream at this stage (``_compile``) for the
+        run's DLQ, with the exception text and the values it had then; later
+        stages never see it. ``fn``'s result for a row must not depend on the
+        other rows of its batch (Arrow's batch boundaries already impose
+        that). Raise UnrecoverableStreamFailure to abort the run instead."""
         self._check_open()
 
         def make(df: DataFrame) -> DataFrame:
@@ -430,29 +446,20 @@ class EtlStream:
             schema = schema.add(_ERR_COL, T.StringType())
             out_cols = [f.name for f in schema.fields]
 
+            def attempt(pdf: pd.DataFrame) -> list[pd.DataFrame]:
+                out, error = _call(fn, pdf.copy())
+                if error is None:
+                    out[_ERR_COL] = None
+                    return [out]
+                if len(pdf) > 1:
+                    half = len(pdf) // 2
+                    return attempt(pdf.iloc[:half]) + attempt(pdf.iloc[half:])
+                return [pdf.assign(**{_ERR_COL: error})]  # fails alone: leaves here
+
             def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 for pdf in batches:
-                    try:
-                        out = fn(pdf.copy())
-                        out[_ERR_COL] = None
-                    except UnrecoverableStreamFailure:
-                        raise
-                    except Exception:
-                        # vectorized batch failed → per-row retry, routing
-                        # failing rows to the DLQ (recoverable channel)
-                        parts = []
-                        for i in range(len(pdf)):
-                            row = pdf.iloc[i : i + 1].copy()
-                            try:
-                                good = fn(row.copy())
-                                good[_ERR_COL] = None
-                                parts.append(good)
-                            except UnrecoverableStreamFailure:
-                                raise
-                            except Exception:
-                                row[_ERR_COL] = traceback.format_exc(limit=1)
-                                parts.append(row)
-                        out = pd.concat(parts) if parts else pdf.iloc[0:0].copy()
+                    parts = attempt(pdf)
+                    out = parts[0] if len(parts) == 1 else pd.concat(parts)
                     for col in out_cols:
                         if col not in out.columns:
                             out[col] = None
@@ -532,18 +539,18 @@ class EtlStream:
 
     def _compile(
         self, spark: SparkSession
-    ) -> tuple[DataFrame, list[tuple[str, Observation]], list[DataFrame], list[DataFrame]]:
+    ) -> tuple[DataFrame, list[tuple[str, Observation]], list[DataFrame]]:
         """Compile the stage chain to a DataFrame (logical plan). The reference
         compiles sink-to-source into a consumer graph (EtlStageChain.java:53-69);
         here Catalyst owns physical planning. Returns ``(clean, observations,
-        failed, cached)``: the ``_divert`` legs of every stage (component
-        streams included) that emits the error column, and their caches."""
-        dfs, failed, cached = [], [], []
+        cached)``: the persisted output of every stage (component streams
+        included) that emits the error column, whose failed records
+        ``_route_failed`` takes."""
+        dfs, cached = [], []
         for src in self._sources:
             if isinstance(src, EtlStream):
-                cdf, _, legs, caches = src._compile(spark)
+                cdf, _, caches = src._compile(spark)
                 dfs.append(cdf)
-                failed += legs
                 cached += caches
             elif isinstance(src, DataFrame):
                 dfs.append(src)
@@ -567,47 +574,42 @@ class EtlStream:
                 df = df.observe(obs, F.count(F.lit(1)).alias("recordsProcessed"))
                 observations.append((st.name or f"{st.kind}_{i}", obs))
             if _ERR_COL in df.columns:
-                stage_cache, df, leg = _divert(df)
-                cached.append(stage_cache)
-                failed.append(leg)
-        return df, observations, failed, cached
+                # a failed record leaves the stream here, with the columns it
+                # had then: the next stage and the DLQ read one persisted frame,
+                # so the stage runs once and a record lands in exactly one leg
+                cached.append(df.persist())
+                df = cached[-1].filter(F.col(_ERR_COL).isNull()).drop(_ERR_COL)
+        return df, observations, cached
 
     def run(self, spark: SparkSession, dlq_path: str | None = None) -> RunResult:
-        """Execute: compile, write this run's DLQ, drive the sink, collect
-        metrics. The DLQ is the union of the failed legs, each record with the
-        columns it had at its failing stage; it is written once, before the
-        loader, and ``dlq_count`` is this run's count. Each split reads one
-        persisted frame, so (a) the upstream executes exactly once per run
-        and (b) a non-deterministic transform can never land a record in both
-        (or neither) leg."""
+        """Execute: compile, route this run's DLQ, drive the sink, collect
+        metrics. The DLQ is the union of the failed legs (``schema.dlq_records``
+        with a null batch id and the stream name as the stage), each record
+        with the columns it had at its failing stage. Before the loader, one
+        action (``_route_failed``) fills every stage cache and counts and
+        collects the DLQ; a run that failed a record writes it to ``dlq_path``
+        as ``dlq-<hash(name)>-<uuid>-<n>.parquet``. ``RunResult.dlq`` is a
+        frame over the collected records, so reading it runs no stage again;
+        past the driver's bound (``cdc.apply.DLQ_DRIVER_ROWS`` per partition)
+        it holds the first ones, and ``dlq_count`` and ``dlq_path`` all of
+        them. Each split reads one persisted frame, so the upstream executes
+        once and a record lands in exactly one leg."""
         if self._loader is None:
             raise ValueError("stream has no loader; terminate with .load(...)")
-        df, observations, failed, cached = self._compile(spark)
-        dlq_df = None
-        dlq_count = 0
+        df, observations, cached = self._compile(spark)
+        dlq, dlq_count = None, 0
         try:
             # before any loader side effect, even when no record fails
             check_dlq_payload(self._object_logger, self._dlq_key_cols, df.columns)
-            if failed:
-                # schema.dlq_records, as for the tail/apply DLQ, so redrive
-                # reads it too; batch_id is null (a fluent run is not a fenced
-                # micro-batch) and the stream name plays the stage
-                dlq_df = reduce(DataFrame.unionByName, [
-                    dlq_records(
-                        leg, None, self._name, _ERR_COL,
-                        self._object_logger, self._dlq_key_cols,
-                    )
-                    for leg in failed
-                ])
-                if dlq_path is not None:
-                    dlq_df.write.mode("append").parquet(dlq_path)
-                dlq_count = dlq_df.count()
+            if cached:
+                records, dlq_count = _route_failed(self, cached, dlq_path)
+                dlq = spark.createDataFrame(records, DLQ_SCHEMA)
             sink_result = self._loader.load(df, self)
         finally:
             for c in cached:
                 c.unpersist()
         metrics = {name: obs.get for name, obs in observations}
-        return RunResult(sink_result=sink_result, metrics=metrics, dlq=dlq_df, dlq_count=dlq_count)
+        return RunResult(sink_result=sink_result, metrics=metrics, dlq=dlq, dlq_count=dlq_count)
 
 
 # Convenience aliases mirroring the reference's static factory style

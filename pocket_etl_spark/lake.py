@@ -124,6 +124,8 @@ _DRIVER_BYTES = 64 << 20
 # A merge of more than this many batch rows collapses the batch to each key's
 # winner before its write exchange (see merge).
 _COLLAPSE_AT = 250_000
+# Both backends' merge refuses a batch holding an invalid row (schema.valid_event).
+_INVALID = "merge: {} rows are invalid (null key/lsn or unknown op); nothing was written"
 # One record per committed apply_batch (cdc/apply.py builds it).
 METRICS_SCHEMA = (
     "query_id string, batch_id long, version long, rows_in long, rows_bad long, "
@@ -196,16 +198,12 @@ class ParquetLakeTable:
         spark: SparkSession,
         path: str,
         key_cols: list[str] | None = None,
-        lsn_col: str = LSN_COL,
-        op_col: str = OP_COL,
         schema: T.StructType | None = None,
         num_buckets: int = 16,
     ) -> None:
         self.spark = spark
         self.path = path
         self.key_cols = list(key_cols or KEY_COLS)
-        self.lsn_col = lsn_col
-        self.op_col = op_col
         self.num_buckets = num_buckets
         self._base_schema = schema or TABLE_SCHEMA
         os.makedirs(os.path.join(path, _MANIFESTS), exist_ok=True)
@@ -386,7 +384,7 @@ class ParquetLakeTable:
                 keep |= (name == n) & F.col("_bucket").isin(bs)
             df = df.filter(keep)
         if lsn_floor is not None:
-            df = df.filter(F.col(self.lsn_col) >= F.lit(lsn_floor))
+            df = df.filter(F.col(LSN_COL) >= F.lit(lsn_floor))
         return df.drop("_bucket"), several, len(live)
 
     def _stored_schema(
@@ -547,7 +545,7 @@ class ParquetLakeTable:
         return [
             F.collect_set(F.when(valid, self._bucket_expr())).alias("buckets"),
             F.count_if(valid).alias("rows"),
-            F.min(F.when(valid, F.col(self.lsn_col))).alias("min_lsn"),
+            F.min(F.when(valid, F.col(LSN_COL))).alias("min_lsn"),
             F.sum(F.when(valid, _row_bytes(fields))).alias("bytes"),
         ]
 
@@ -629,7 +627,7 @@ class ParquetLakeTable:
         # spark_partition_id() must be a projected column: inside observe()
         # it is never initialized
         df = df.withColumn("_task", F.spark_partition_id())
-        lsn = F.col(self.lsn_col) if self.lsn_col in df.columns else F.lit(None).cast("long")
+        lsn = F.col(LSN_COL) if LSN_COL in df.columns else F.lit(None).cast("long")
         held = Observation()
         df.observe(
             held,
@@ -680,10 +678,10 @@ class ParquetLakeTable:
         write_parquet_atomic(rows, os.path.join(self.path, rel))
         buckets = sorted(pc.unique(rows["_bucket"]).to_pylist())
         lo = hi = None
-        if self.lsn_col in rows.column_names:
-            hi = pc.max(rows[self.lsn_col]).as_py()
+        if LSN_COL in rows.column_names:
+            hi = pc.max(rows[LSN_COL]).as_py()
             stamped = pc.equal(rows["_version"], version)
-            lo = pc.min(rows[self.lsn_col].filter(stamped)).as_py()
+            lo = pc.min(rows[LSN_COL].filter(stamped)).as_py()
         # the pool keeps freed buffers; hand them back to the OS
         del rows
         pa.default_memory_pool().release_unused()
@@ -789,12 +787,10 @@ class ParquetLakeTable:
 
             # Schema evolution: widen/extend the table schema from the batch's columns
             # (the envelope's tunnel fields already promoted upstream).
-            batch_payload_fields = [
-                f for f in updates.schema.fields if f.name not in (self.op_col,)
-            ]
-            new_schema = unify_schemas(table_schema, T.StructType(batch_payload_fields))
+            payload = T.StructType([f for f in updates.schema.fields if f.name != OP_COL])
+            new_schema = unify_schemas(table_schema, payload)
 
-            batch = conform_to(updates, new_schema, keep_extra=[self.op_col])
+            batch = conform_to(updates, new_schema, keep_extra=[OP_COL])
             # NOTE: with ``facts`` given, merge runs one action over ``updates``
             # (the write); without them, two (the probe and the write).
             # Callers are expected to hand in a cached/cheap frame —
@@ -803,15 +799,12 @@ class ParquetLakeTable:
             # persist.
             if facts is None:
                 # The probe also counts the invalid rows merge has no DLQ for.
-                ok = valid_event(self.key_cols, self.lsn_col, self.op_col)
+                ok = valid_event(self.key_cols)
                 facts = batch.agg(
                     *self.batch_facts(ok, batch.schema.fields), F.count_if(~ok).alias("bad")
                 ).first().asDict()
                 if facts["bad"]:
-                    raise ValueError(
-                        f"merge: {facts['bad']} rows are invalid (null key/lsn or "
-                        "unknown op); nothing was written (apply_batch DLQs them)."
-                    )
+                    raise ValueError(_INVALID.format(facts["bad"]))
             # Bucket pruning: only buckets containing updated keys participate.
             touched, floor, n = sorted(facts["buckets"]), facts["min_lsn"], facts["rows"]
             if not touched:
@@ -846,10 +839,10 @@ class ParquetLakeTable:
             # delete-then-insert merge.
             new_version = cur_version + 1
             data_cols = [f.name for f in new_schema.fields]
-            packed = F.col(self.lsn_col) * 8 + OP_RANK_EXPR(self.op_col) * 2
+            packed = F.col(LSN_COL) * 8 + OP_RANK_EXPR(OP_COL) * 2
             delta = batch.select(
                 *data_cols,
-                (F.col(self.op_col) == "D").alias("_deleted"),
+                (F.col(OP_COL) == "D").alias("_deleted"),
                 F.lit(new_version).cast("long").alias("_version"),
                 (packed + 1).alias("_ord"),
             )
@@ -874,7 +867,7 @@ class ParquetLakeTable:
                 stored = stored.select(
                     *[F.col(k).alias(f"_s_{k}") for k in self.key_cols],
                     (
-                        F.col(self.lsn_col) * 8
+                        F.col(LSN_COL) * 8
                         + F.when(F.coalesce(F.col("_deleted"), F.lit(False)), 6).otherwise(0)
                     ).alias("_sord"),
                 )
@@ -934,8 +927,8 @@ class ParquetLakeTable:
         (RedshiftJdbcClient.java:162-198) / truncate-on-empty (:205-219)."""
         man = self._manifest(self.current_version())
         new_version = man["version"] + 1
-        schema = T.StructType([f for f in df.schema.fields if f.name != self.op_col])
-        stamped = df.drop(self.op_col).withColumns(
+        schema = T.StructType([f for f in df.schema.fields if f.name != OP_COL])
+        stamped = df.drop(OP_COL).withColumns(
             {"_deleted": F.lit(False), "_version": F.lit(new_version)}
         )
         written, _, hi = self._write_buckets(stamped, new_version, self.num_buckets, 1)
@@ -1171,6 +1164,7 @@ class IcebergLakeTable:
       two replays the batch on restart, and the merge's LSN guard makes that
       replay a semantic no-op — the same exactly-once argument as the parquet
       backend's manifest watermark.
+    - a batch with invalid rows raises before it writes, as on the parquet backend;
     - schema evolution: new/widened batch columns become ``ALTER TABLE ADD
       COLUMNS`` / ``ALTER COLUMN TYPE`` before the merge (Iceberg metadata-only
       operations), mirroring unify_schemas on the parquet manifest.
@@ -1196,8 +1190,6 @@ class IcebergLakeTable:
         spark: SparkSession,
         table: str,
         key_cols: list[str] | None = None,
-        lsn_col: str = LSN_COL,
-        op_col: str = OP_COL,
         num_buckets: int = 16,
         table_format: str = "iceberg",
         catalog: str = "spark_catalog",
@@ -1205,8 +1197,6 @@ class IcebergLakeTable:
         self.spark = spark
         self.table = table
         self.key_cols = list(key_cols or KEY_COLS)
-        self.lsn_col = lsn_col
-        self.op_col = op_col
         self.num_buckets = num_buckets
         # ``table_format`` parameterizes the USING clause of ALL engine-created
         # tables — the first-merge bootstrap CREATE (unpartitioned for
@@ -1276,7 +1266,7 @@ class IcebergLakeTable:
         incoming = T.StructType(
             [
                 f for f in updates.schema.fields
-                if f.name not in (self.op_col, self.DELETED_COL, self.VERSION_COL)
+                if f.name not in (OP_COL, self.DELETED_COL, self.VERSION_COL)
             ]
         )
         for stmt in evolution_ddl(
@@ -1373,18 +1363,19 @@ class IcebergLakeTable:
             # same MergeResult shape as the parquet backend's fenced return:
             # version = the CURRENT committed version, not a sentinel.
             return MergeResult(False, self.current_version(), batch_id, [], {"fenced": True})
-        updates = lww_dedupe(
-            updates, self.key_cols, lsn_col=self.lsn_col, op_col=self.op_col
-        )
+        bad = updates.agg(F.count_if(~valid_event(self.key_cols))).first()[0]
+        if bad:
+            raise ValueError(_INVALID.format(bad))
+        updates = lww_dedupe(updates, self.key_cols)
         new_version = self.current_version() + 1
         if not self.spark.catalog.tableExists(self.table):
             # first batch bootstraps the table: the deduped batch IS the merge
             # result over an empty target (tombstones included). Bucketed on the
             # merge key so every later MERGE is storage-partition-join-able.
             initial = (
-                updates.withColumn(self.DELETED_COL, F.col(self.op_col) == "D")
+                updates.withColumn(self.DELETED_COL, F.col(OP_COL) == "D")
                 .withColumn(self.VERSION_COL, F.lit(new_version).cast("long"))
-                .drop(self.op_col)
+                .drop(OP_COL)
             )
             writer = initial.writeTo(self.table)
             if self.table_format == "iceberg":
@@ -1398,11 +1389,11 @@ class IcebergLakeTable:
             self._evolve_schema(updates)
             view = f"_updates_{uuid.uuid4().hex[:8]}"
             updates.createOrReplaceTempView(view)
-            data_cols = [f.name for f in updates.schema.fields if f.name != self.op_col]
+            data_cols = [f.name for f in updates.schema.fields if f.name != OP_COL]
             self.spark.sql(
                 merge_into_sql(
                     self.table, view, self.key_cols, data_cols,
-                    self.lsn_col, self.op_col, self.DELETED_COL,
+                    deleted_col=self.DELETED_COL,
                     version_col=self.VERSION_COL, version=new_version,
                 )
             )

@@ -60,7 +60,7 @@ TABLE_SCHEMA = T.StructType(
 )
 
 
-def valid_event(key_cols: Iterable[str], lsn_col: str, op_col: str) -> Column:
+def valid_event(key_cols: Iterable[str]) -> Column:
     """Validity of a change event: non-null key / lsn, known op. Invalid rows
     are the reference's recoverable-error channel (LogAsErrorEtlConsumer.java:
     34-92): ``cdc/apply.apply_batch`` routes them to its DLQ and
@@ -73,8 +73,8 @@ def valid_event(key_cols: Iterable[str], lsn_col: str, op_col: str) -> Column:
     key_ok = F.lit(True)
     for k in key_cols:
         key_ok = key_ok & F.col(k).isNotNull()
-    op = F.col(op_col)
-    return key_ok & F.col(lsn_col).isNotNull() & op.isNotNull() & op.isin(*OP_RANK)
+    op = F.col(OP_COL)
+    return key_ok & F.col(LSN_COL).isNotNull() & op.isNotNull() & op.isin(*OP_RANK)
 
 
 # DLQ table: per-record recoverable failures routed out of the stream

@@ -543,7 +543,7 @@ def test_all_invalid_batch_lands_in_dlq_once(spark, tmp_table_path, tmp_path):
 def test_invalid_rows_past_the_driver_bound_are_written_by_spark(
     spark, tmp_table_path, tmp_path, monkeypatch
 ):
-    """The stats pass brings at most ``_DLQ_DRIVER_ROWS`` invalid rows of a
+    """The stats pass brings at most ``DLQ_DRIVER_ROWS`` invalid rows of a
     batch partition to the driver. An all-invalid batch with more (the bound
     is lowered to 2 here) has Spark write its DLQ from the cache instead:
     each row lands once, under the batch's address, and the batch commits
@@ -556,15 +556,15 @@ def test_invalid_rows_past_the_driver_bound_are_written_by_spark(
     from pocket_etl_spark.cdc import apply
     from pocket_etl_spark.cdc.redrive import read_dlq
 
-    monkeypatch.setattr(apply, "_DLQ_DRIVER_ROWS", 2)
+    monkeypatch.setattr(apply, "DLQ_DRIVER_ROWS", 2)
     written = []
-    write_dlq = apply._write_dlq
+    write_dlq = apply.write_dlq
 
     def spy(records, *args):
         written.append(type(records).__name__)
         return write_dlq(records, *args)
 
-    monkeypatch.setattr(apply, "_write_dlq", spy)
+    monkeypatch.setattr(apply, "write_dlq", spy)
     events = gen_change_events(spark, n_events=600, n_keys=60, seed=59, partitions=4)
     table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
     dlq = str(tmp_path / "dlq")

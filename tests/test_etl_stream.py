@@ -565,3 +565,159 @@ def test_with_object_logger_rejects_unknown_string_mode(spark):
     # the two valid forms still construct
     s.with_object_logger("full")
     s.with_object_logger(lambda d: str(d))
+
+
+# --- One error channel: the fluent surfaces route failures through apply_batch's pair ---
+
+
+def _jobs_of(spark, group, run):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_clean_run_runs_two_jobs_and_writes_no_dlq_file(spark, tmp_path):
+    """A clean one-stage map_rows run: one action fills the stage cache and
+    counts (zero) failed records, the sink's write reads the cache, and no
+    DLQ file is left behind."""
+    out, dlq = str(tmp_path / "out"), str(tmp_path / "dlq")
+    stream = EtlStream.extract(_src(spark)).map_rows(lambda pdf: pdf).load(ParquetLoader(out))
+    res, jobs = _jobs_of(spark, f"clean-{tmp_path.name}", lambda: stream.run(spark, dlq_path=dlq))
+    assert jobs <= 2, jobs
+    assert res.dlq_count == 0 and res.dlq.count() == 0
+    assert not os.path.exists(dlq) or os.listdir(dlq) == []
+    assert spark.read.parquet(out).count() == 10
+
+
+def test_one_bad_row_costs_logarithmic_fn_calls(spark):
+    """A failing Arrow batch is split in halves until the bad row stands
+    alone: one bad row in a 10,000-row batch costs at most 2·⌈log₂ b⌉+1 = 29
+    calls, not one per row, and the output is the row-by-row one."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def fn(pdf):
+        calls.add(1)
+        if (pdf["id"] == 4321).any():
+            raise ValueError("bad 4321")
+        pdf["v"] = pdf["id"] * 2
+        return pdf
+
+    res = (
+        EtlStream.extract(spark.range(10_000).coalesce(1))
+        .map_rows(fn, adds={"v": "bigint"})
+        .load(MetricsLoader(("id", "v")))
+        .run(spark)
+    )
+    assert calls.value <= 29, calls.value
+    assert res.dlq_count == 1 and "bad 4321" in res.dlq.first()["error"]
+    assert res.sink_result == {
+        "recordsProcessed": 9_999,
+        "id": sum(range(10_000)) - 4321,
+        "v": 2 * (sum(range(10_000)) - 4321),
+    }
+
+
+def test_row_sink_loader_runs_one_job(spark, tmp_path):
+    """A RowSinkLoader run whose failures fit the driver bound is one Spark
+    job: write_fn runs, the counts are observed and the failed record comes
+    to the driver in the same action."""
+    dlq = str(tmp_path / "sink_dlq")
+
+    def put_item(rec):
+        if rec["score"] == 4:
+            raise ValueError("conditional check failed on 4")
+
+    stream = EtlStream.extract(_src(spark)).load(RowSinkLoader(put_item, dlq_path=dlq))
+    res, jobs = _jobs_of(spark, f"sink-{tmp_path.name}", lambda: stream.run(spark))
+    assert jobs == 1, jobs
+    assert res.sink_result == {"records_written": 9, "records_failed": 1}
+    [rec] = spark.read.parquet(dlq).collect()
+    assert "conditional check failed on 4" in rec["error"]
+
+
+def test_reading_run_dlq_runs_no_stage_again(spark):
+    """RunResult.dlq is a frame over the records the run collected: reading
+    it calls no stage function again, so it cannot disagree with the run."""
+    rows = spark.sparkContext.accumulator(0)
+
+    def fn(pdf):
+        rows.add(len(pdf))
+        if (pdf["id"] == 3).any():
+            raise ValueError("boom on 3")
+        return pdf
+
+    res = EtlStream.extract(_six_rows(spark)).map_rows(fn).load(BufferLoader()).run(spark)
+    seen = rows.value
+    [rec] = res.dlq.collect()
+    assert res.dlq_count == res.dlq.count() == 1 and "boom on 3" in rec["error"]
+    assert rows.value == seen
+
+
+def test_dlq_past_the_driver_bound_is_written_by_spark_from_the_caches(
+    spark, tmp_path, monkeypatch
+):
+    """With the driver bound lowered to one record, both fluent surfaces have
+    Spark write their DLQ from the stage cache: each failed record lands once,
+    the counts match the files, and the stage fn / write_fn ran once per
+    record."""
+    import json
+
+    from pocket_etl_spark import etl
+    from pocket_etl_spark.cdc import apply
+
+    monkeypatch.setattr(apply, "DLQ_DRIVER_ROWS", 1)
+    kinds = []
+    write_dlq = etl.write_dlq
+
+    def spy(records, *args):
+        kinds.append(type(records).__name__)
+        return write_dlq(records, *args)
+
+    monkeypatch.setattr(etl, "write_dlq", spy)
+    bad = {1, 4, 6, 9}
+    seen = spark.sparkContext.accumulator(0)
+
+    def fn(pdf):
+        if pdf["score"].isin(bad).any():
+            if len(pdf) == 1:
+                seen.add(1)  # a record that fails alone
+            raise ValueError("bad score")
+        seen.add(len(pdf))
+        return pdf
+
+    stream_dlq = str(tmp_path / "stream_dlq")
+    res = (
+        EtlStream.extract(_src(spark).repartition(1))
+        .map_rows(fn)
+        .with_object_logger("full")
+        .load(BufferLoader())
+        .run(spark, dlq_path=stream_dlq)
+    )
+    assert seen.value == 10
+    stored = [json.loads(r["payload"])["score"] for r in spark.read.parquet(stream_dlq).collect()]
+    assert sorted(stored) == sorted(bad) and res.dlq_count == len(stored)
+    assert res.dlq.count() == 1  # the driver took the bound's one record
+
+    puts = spark.sparkContext.accumulator(0)
+
+    def put_item(rec):
+        puts.add(1)
+        if rec["score"] in bad:
+            raise ValueError("conditional check failed")
+
+    sink_dlq = str(tmp_path / "sink_dlq")
+    out = (
+        EtlStream.extract(_src(spark).repartition(1))
+        .with_object_logger("full")
+        .load(RowSinkLoader(put_item, dlq_path=sink_dlq))
+        .run(spark)
+    )
+    assert puts.value == 10
+    stored = [json.loads(r["payload"])["score"] for r in spark.read.parquet(sink_dlq).collect()]
+    assert sorted(stored) == sorted(bad)
+    assert out.sink_result == {"records_written": 6, "records_failed": len(stored)}
+    assert kinds == ["DataFrame", "DataFrame"]

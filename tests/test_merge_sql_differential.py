@@ -484,3 +484,36 @@ def test_iceberg_backend_bootstrap_read_is_lazy(spark, monkeypatch):
     finally:
         spark.sql("DROP TABLE IF EXISTS boot_pq_fmt")
         spark.sql("DROP TABLE IF EXISTS boot_pq_fmt_watermarks")
+
+
+def test_iceberg_backend_refuses_invalid_rows(spark, tmp_path):
+    """Both backends refuse a batch holding invalid rows (null key, null lsn,
+    unknown op) before anything is written, with the same message: the
+    hermetic Iceberg bootstrap creates no table."""
+    import pytest
+
+    from pocket_etl_spark.lake import IcebergLakeTable
+
+    events = gen_change_events(spark, n_events=40, n_keys=8, seed=23).drop("ts", "extras")
+    bad = spark.createDataFrame(
+        [
+            (900, "U", "r", None, "c", "py", "x"),
+            (None, "U", "r", "p1", "c", "py", "x"),
+            (901, None, "r", "p2", "c", "py", "x"),
+        ],
+        SCHEMA,
+    )
+    batch = events.unionByName(bad)
+    pq = ParquetLakeTable(spark, str(tmp_path / "pq"), num_buckets=4)
+    with pytest.raises(ValueError, match="merge: 3 rows are invalid") as pq_err:
+        pq.merge(batch, batch_id=0)
+    t = IcebergLakeTable(spark, "invalid_pq_fmt", table_format="parquet")
+    try:
+        with pytest.raises(ValueError, match="merge: 3 rows are invalid") as ice_err:
+            t.merge(batch, batch_id=0)
+        assert str(ice_err.value) == str(pq_err.value)
+        assert not spark.catalog.tableExists("invalid_pq_fmt")
+        assert t.last_batch_id() == -1
+    finally:
+        spark.sql("DROP TABLE IF EXISTS invalid_pq_fmt")
+        spark.sql("DROP TABLE IF EXISTS invalid_pq_fmt_watermarks")

@@ -1,6 +1,8 @@
 """Stateful-streaming sessionization: the applyInPandasWithState operator must
 agree with its declarative batch twin on closed sessions."""
 
+import time
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -44,8 +46,14 @@ def test_stream_sessionize_matches_batch(spark, tmp_path):
         .start()
     )
     try:
-        # idle-timeout flush needs a few empty micro-batches after the data batch
-        q.awaitTermination(40)
+        # the idle-timeout flush needs a few empty micro-batches after the data
+        # batch; stop once all three sessions arrived and no trigger is running,
+        # so the stop never cancels a micro-batch's job
+        deadline = time.monotonic() + 60
+        while time.monotonic() < deadline and not (
+            sum(map(len, out_rows)) >= 3 and not q.status["isTriggerActive"]
+        ):
+            time.sleep(0.1)
     finally:
         q.stop()
     got = (
