@@ -17,6 +17,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
@@ -44,19 +45,25 @@ class ApplyResult:
     timings: dict[str, float] = field(default_factory=dict)
 
 
-def collect_dlq(records: DataFrame) -> pa.Table:
+def collect_dlq(records: DataFrame, batch_id: int | None) -> pa.Table:
     """Run ``records`` (DLQ records, ``DLQ_SCHEMA``) as one action that
     brings at most ``DLQ_DRIVER_ROWS`` of each partition to the driver as
-    Arrow. The caller counts the records in the same action (an
-    ``Observation``): when it holds fewer than that count, Spark writes the
-    DLQ instead (``write_dlq`` with a DataFrame)."""
+    Arrow, and set their ``batch_id`` and ``ts`` (now) there, outside the
+    plan (see ``schema.dlq_records``). The caller counts the records in the
+    same action (an ``Observation``): when it holds fewer than that count,
+    Spark writes the DLQ instead (``write_dlq`` with a DataFrame)."""
     # monotonically_increasing_id() numbers a partition's rows in its low 33 bits
-    return (
+    table = (
         records.withColumn("_i", F.monotonically_increasing_id() % (1 << 33))
         .filter(F.col("_i") < DLQ_DRIVER_ROWS)
         .drop("_i")
         .toArrow()
     )
+    for name, value in (("batch_id", batch_id), ("ts", datetime.now(timezone.utc))):
+        i = table.schema.get_field_index(name)
+        stamp = pa.repeat(pa.scalar(value, table.schema.field(i).type), table.num_rows)
+        table = table.set_column(i, name, stamp)
+    return table
 
 
 def write_dlq(
@@ -66,11 +73,13 @@ def write_dlq(
     ``dlq-<hash(query_id)>-<batch_id>-<n>.parquet``, replacing the files an
     earlier attempt of the batch left at that address, so a replayed batch
     leaves each invalid row once. An Arrow table
-    (the records ``collect_dlq`` brought to the driver) is written by
-    pyarrow, with no Spark job, as file ``-0`` (``lake.write_parquet_atomic``:
-    a hidden ``_``-prefixed temp file that readers of ``dlq_path`` skip, then
-    a rename); a DataFrame (more records than the driver takes) is written by
-    Spark into a hidden staging dir and its files are moved in. The
+    (the records ``collect_dlq`` brought to the driver and stamped) is
+    written by pyarrow, with no Spark job, as file ``-0``
+    (``lake.write_parquet_atomic``: a hidden ``_``-prefixed temp file that
+    readers of ``dlq_path`` skip, then a rename); a DataFrame (more records
+    than the driver takes) gets its ``batch_id`` and ``ts`` as literals,
+    since a Spark write compiles its plan anyway, and is written by Spark
+    into a hidden staging dir whose files are moved in. The
     address's earlier files that no new one replaced are then removed. A
     crash on the way leaves the batch uncommitted, and its replay rewrites
     the address. A write without a batch id gets a fresh address."""
@@ -80,7 +89,8 @@ def write_dlq(
     stale = set(glob.glob(f"{base}-*.parquet"))
     if isinstance(records, DataFrame):
         tmp = os.path.join(dlq_path, f"_{addr}.{uuid.uuid4().hex}")
-        records.write.parquet(tmp)
+        stamps = {"batch_id": F.lit(batch_id).cast("long"), "ts": F.current_timestamp()}
+        records.withColumns(stamps).write.parquet(tmp)
         parts = sorted(glob.glob(os.path.join(tmp, "*.parquet")))
         names = [f"{base}-{n}.parquet" for n in range(len(parts))]
         for f, name in zip(parts, names):
@@ -197,14 +207,14 @@ def apply_batch(
         def bad(frame: DataFrame) -> DataFrame:
             return dlq_records(
                 frame.filter(~valid).drop("_valid"),
-                batch_id, "apply", F.lit(error), dlq_payload, dlq_keys,
+                "apply", F.lit(error), dlq_payload, dlq_keys,
             )
 
         first = bad(cached.observe(observed, *aggs))
 
     try:
         with prof.scope("batch_stats"):
-            records = collect_dlq(first)
+            records = collect_dlq(first, batch_id)
             stats = observed.get
         rows_bad = int(stats["bad"])
         rows_in = int(stats["rows"]) + rows_bad

@@ -99,13 +99,13 @@ def _route_failed(
     ``DLQ_DRIVER_ROWS`` of each partition) and the count of all of them."""
     dlq = reduce(DataFrame.unionByName, [
         dlq_records(
-            c.filter(F.col(_ERR_COL).isNotNull()), None, stream._name, _ERR_COL,
+            c.filter(F.col(_ERR_COL).isNotNull()), stream._name, _ERR_COL,
             stream._object_logger, stream._dlq_key_cols,
         )
         for c in cached
     ])
     counted = Observation()
-    records = collect_dlq(dlq.observe(counted, F.count(F.lit(1)).alias("n")))
+    records = collect_dlq(dlq.observe(counted, F.count(F.lit(1)).alias("n")), None)
     n = counted.get["n"]
     if n and dlq_path is not None:
         # past the bound, Spark writes them all from the caches

@@ -44,10 +44,18 @@ Scale design (the part that matters at 100 TB):
   buffered writer per part file, committed on close) instead of Spark's
   Hadoop committer and its temp dirs, renames, checksum files and a forked
   ``chmod`` per file. Deciding "beats the stored state" reads a narrow scan of the
-  touched buckets (key columns, lsn, ``_deleted``). Its cost is O(batch)
-  written, not O(table): a batch of n distinct keys touches all but a
-  (1 - 1/num_buckets)^n share of the buckets, so a copy-on-write merge would
-  rewrite most of the table.
+  touched buckets (key columns, lsn, ``_deleted``). A delta's cost is
+  O(batch) written, not O(table): a batch of n distinct keys touches all but
+  a (1 - 1/num_buckets)^n share of the buckets, so a copy-on-write merge
+  would rewrite most of the table. The fold below is the exception: every
+  ``_FOLD_AT`` commits of a bucket, a merge rewrites the whole bucket, so a
+  steady stream that touches every bucket rewrites the table once per
+  ``_FOLD_AT`` commits.
+- The rows a commit writes are stamped ``_version`` = the commit where they
+  leave Spark, and only a fold's plan carries the stamp: whole-stage codegen
+  writes literals into its generated Java and caches compiled classes by
+  that source, so a steady commit compiles nothing after the first commit
+  of a schema.
 - The manifest records an upper bound on each file's lsn values (``max_lsn``,
   file → bound; a file it does not list is unbounded). A stored row whose lsn
   is below the batch's lowest lsn can never beat one of its winners, so the
@@ -569,6 +577,12 @@ class ParquetLakeTable:
         into ``min(8, cores // n_buckets)`` slices so the rewrite stays
         core-parallel (the cap bounds file counts).
 
+        A frame without a ``_version`` column is stamped ``_version`` =
+        ``version`` after the pick, where its rows leave Spark: as an Arrow
+        column on the driver (``_write_on_driver``), so a steady commit's
+        plans hold no per-commit literal (see the module docstring), else as
+        a literal in the plan Spark writes, which compiles anyway.
+
         With ``order``, each key keeps one row: its highest by the ``order``
         columns, descending in turn. The write tasks pick it themselves
         (``row_number() = 1`` over ``_bucket``, ``_slice`` and the keys,
@@ -624,6 +638,8 @@ class ParquetLakeTable:
         df = df.drop("_slice", "_rn", "_ord")
         if rows is not None and n_tasks == 1:
             return self._write_on_driver(df, version, rel_dir)
+        if "_version" not in df.columns:
+            df = df.withColumn("_version", F.lit(version).cast("long"))
         # spark_partition_id() must be a projected column: inside observe()
         # it is never initialized
         df = df.withColumn("_task", F.spark_partition_id())
@@ -660,7 +676,8 @@ class ParquetLakeTable:
         replacing whatever an earlier attempt of the commit left there.
         Spark's Hadoop committer would add a ``_temporary`` dir, renames,
         ``.crc`` and ``_SUCCESS`` files and a forked ``chmod`` per file and
-        dir. The buckets and lsns ``_write_buckets`` returns are read off
+        dir. A frame without ``_version`` is stamped here, on the Arrow
+        table. The buckets and lsns ``_write_buckets`` returns are read off
         the Arrow table. Nested fields are made nullable first: Arrow refuses
         a null struct whose fields Spark declares non-null."""
         widened = {
@@ -674,6 +691,9 @@ class ParquetLakeTable:
         os.makedirs(out_dir)
         if not rows.num_rows:
             return {}, None, None
+        if "_version" not in rows.column_names:
+            stamp = pa.repeat(pa.scalar(version, pa.int64()), rows.num_rows)
+            rows = rows.append_column("_version", stamp)
         rel = os.path.join(rel_dir, f"part-00000-{uuid.uuid4()}.parquet")
         write_parquet_atomic(rows, os.path.join(self.path, rel))
         buckets = sorted(pc.unique(rows["_bucket"]).to_pylist())
@@ -718,9 +738,12 @@ class ParquetLakeTable:
         can beat one: the scan reads only files whose lsn bound reaches the
         floor (``_scan``). When none does, as on a WAL of increasing lsns,
         there is no stored side and no join. ``_write_buckets`` then writes
-        the rows as this commit's delta, stamped ``_version`` = the commit,
-        and its write tasks keep each key's highest ``_ord`` after the write
-        repartition (exact duplicates keep one row). That pick does not
+        the rows as this commit's delta, and its write tasks keep each key's
+        highest ``_ord`` after the write repartition (exact duplicates keep
+        one row). Unless it folds, the delta carries no ``_version``:
+        ``_write_buckets`` stamps it with the commit where the rows leave
+        Spark, so a steady commit reuses the classes Spark's codegen
+        compiled for the commit before. That pick does not
         collapse a hot key before the exchange: all of its rows reach one
         write task. So a batch of more than ``_COLLAPSE_AT`` rows first
         collapses to each key's highest ``_ord`` with a ``row_number() = 1``
@@ -742,9 +765,10 @@ class ParquetLakeTable:
         A merge is one commit. Each touched bucket whose files already span
         ``_FOLD_AT`` commits folds in it: the same write holds every stored
         row of the bucket (read in the manifest's types and cast to the new
-        ones) and its delta rows, and the write tasks resolve them to each
-        key's highest ``_version`` (a delta row, when the key has one), with
-        no exchange of their own; the commit replaces the bucket's file list. A batch that changes a column's type folds every
+        ones) and its delta rows, stamped ``_version`` = the commit in the
+        plan, and the write tasks resolve them to each key's highest
+        ``(_version, _ord)`` (a delta row, when the key has one), with no
+        exchange of their own; the commit replaces the bucket's file list. A batch that changes a column's type folds every
         stored bucket that way, since parquet cannot read a stored file in
         every new type; its stored side then covers all of them. ``stats``
         reports ``buckets_rewritten`` (the touched buckets),
@@ -840,10 +864,13 @@ class ParquetLakeTable:
             new_version = cur_version + 1
             data_cols = [f.name for f in new_schema.fields]
             packed = F.col(LSN_COL) * 8 + OP_RANK_EXPR(OP_COL) * 2
+            # Only a fold's pick compares stamps; any other delta is stamped
+            # by the write, so its plans hold no per-commit literal.
+            stamp = [F.lit(new_version).cast("long").alias("_version")] if redo else []
             delta = batch.select(
                 *data_cols,
                 (F.col(OP_COL) == "D").alias("_deleted"),
-                F.lit(new_version).cast("long").alias("_version"),
+                *stamp,
                 (packed + 1).alias("_ord"),
             )
             # A large batch collapses to each key's winner before the write
@@ -887,7 +914,7 @@ class ParquetLakeTable:
         with prof.scope("write"):
             written, lo, hi = self._write_buckets(
                 delta, new_version, len(scope),
-                order=() if collapse and not redo else ("_version", "_ord"),
+                order=("_version", "_ord") if redo else () if collapse else ("_ord",),
                 rows=None if redo or scanned or (facts["bytes"] or 0) > _DRIVER_BYTES else n,
             )
         stray = {b for bs in written.values() for b in bs} - set(scope)

@@ -123,7 +123,6 @@ def is_redacted_payload(payload: Column) -> Column:
 
 def dlq_records(
     failed: DataFrame,
-    batch_id: int | None,
     stage: str | None,
     error: Column | str,
     mode: DlqPayload = "redacted",
@@ -132,8 +131,13 @@ def dlq_records(
     """Project failed rows onto DLQ_SCHEMA — the one record builder behind
     every DLQ writer (tail/apply ``apply_batch``, fluent ``EtlStream.run``,
     ``RowSinkLoader``), so cdc/redrive.read_dlq consumes any of them and no
-    surface can drift from the schema or the payload policy. ``ts`` is the
-    write time.
+    surface can drift from the schema or the payload policy. ``batch_id``
+    and ``ts`` (the write time) are left NULL: ``cdc.apply.collect_dlq`` sets
+    them on the records it brings to the driver, and ``cdc.apply.write_dlq``
+    on the ones Spark writes. Whole-stage codegen writes literals into its
+    generated Java and caches compiled classes by that source, so a
+    per-batch value here (a batch id, or ``current_timestamp()``, which the
+    optimizer folds into one) would compile new classes on every batch.
 
     ``error`` is a Column, or the name of the column of ``failed`` holding the
     per-row error; the other columns are the data columns. The payload follows
@@ -162,11 +166,11 @@ def dlq_records(
     else:
         payload = F.udf(lambda r: mode(r.asDict()), T.StringType())(F.struct(*data_cols))
     cols = {
-        "batch_id": F.lit(batch_id),
+        "batch_id": F.lit(None),
         "stage": F.lit(stage),
         "error": F.col(error_col) if error_col else error,
         "payload": payload,
-        "ts": F.current_timestamp(),
+        "ts": F.lit(None),
     }
     return failed.select(
         *[cols[f.name].cast(f.dataType).alias(f.name) for f in DLQ_SCHEMA.fields]

@@ -20,7 +20,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass
@@ -72,6 +72,17 @@ def plan_facts(df: DataFrame) -> PlanFacts:
         read_schemas=schemas,
         codegen_stages=len(set(re.findall(r"WholeStageCodegen \((\d+)\)", text))),
     )
+
+
+def compiled_classes(spark: SparkSession) -> int:
+    """How many classes Spark's code generators have compiled in this JVM
+    (``CodegenMetrics``' compile-time histogram counts every compile). A
+    plan whose generated Java is already in the codegen cache compiles none,
+    so the difference around an action pins "no compile" beside its plan
+    shape. Whole-stage codegen writes literals into that Java: a per-batch
+    value in a plan compiles new classes on every batch."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def assert_scan_pruned(facts: PlanFacts, forbidden_cols: set[str]) -> None:

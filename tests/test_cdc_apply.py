@@ -448,7 +448,7 @@ def test_steady_apply_batch_py4j_round_trips_are_bounded(
     spark, tmp_table_path, tmp_path, monkeypatch
 ):
     """Building a commit's plans costs py4j round trips, each a blocking
-    call into the JVM. A steady ``apply_batch`` makes 567 of them; the
+    call into the JVM. A steady ``apply_batch`` makes 557 of them; the
     ceiling leaves about 18% headroom. Object-release commands are not
     counted: Python's garbage collector sends them whenever it happens to
     run."""
@@ -468,7 +468,95 @@ def test_steady_apply_batch_py4j_round_trips_are_bounded(
     res = apply_batch(steady, table, batch_id=1, dlq_path=dlq)
     monkeypatch.undo()
     assert res.merge.committed and res.rows_bad == 10
-    assert len(calls) <= 675, len(calls)
+    assert len(calls) <= 657, len(calls)
+
+
+def test_steady_apply_batch_compiles_no_code(spark, tmp_table_path, tmp_path):
+    """Whole-stage codegen writes literals into the Java it generates and
+    caches the compiled classes by that source. A steady commit's plans
+    hold no per-batch value: the delta's ``_version`` and the DLQ records'
+    ``batch_id`` and ``ts`` are set where the rows leave Spark. So the third
+    steady ``apply_batch`` of a schema (WAL files in, invalid rows, a
+    tunnel field) compiles no class, and nor does a direct merge written on
+    the driver after one like it."""
+    from plans import compiled_classes
+    from pyspark.sql import functions as F
+
+    from pocket_etl_spark.datagen import with_schema_evolution
+
+    events = with_schema_evolution(
+        gen_change_events(spark, n_events=2000, n_keys=200, seed=73, hot_key_fraction=0.3),
+        from_lsn=1,
+    ).withColumn(
+        "op", F.when(F.pmod(F.col("lsn"), F.lit(100)) == 0, F.lit(None)).otherwise(F.col("op"))
+    )
+    wal = []
+    for n, (lo, hi) in enumerate([(0, 800), *((800 + 200 * i, 1000 + 200 * i) for i in range(6))]):
+        batch = events.filter(f"lsn > {lo} and lsn <= {hi}")
+        if n > 3:  # direct merges: no invalid rows, no envelope columns
+            batch = batch.filter("op is not null").drop("ts", "extras")
+        batch.write.parquet(str(tmp_path / f"wal{n}"))
+        wal.append(str(tmp_path / f"wal{n}"))
+    dlq = str(tmp_path / "dlq")
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=32)
+    for n in range(4):
+        before = compiled_classes(spark)
+        res = apply_batch(spark.read.parquet(wal[n]), table, batch_id=n, dlq_path=dlq)
+        assert res.rows_bad and res.merge.stats["files_written"] == 1, res.merge.stats
+    assert compiled_classes(spark) - before == 0
+    for n in range(4, 7):
+        before = compiled_classes(spark)
+        res = table.merge(spark.read.parquet(wal[n]), batch_id=n)
+        assert res.stats["files_written"] == 1 and not res.stats["buckets_folded"], res.stats
+        assert not res.stats["stored_files_scanned"], res.stats
+    assert compiled_classes(spark) - before == 0
+
+
+@pytest.mark.parametrize("bound", [None, 2], ids=["driver", "spark"])
+def test_dlq_records_carry_their_batch_id_and_write_time(
+    spark, tmp_table_path, tmp_path, monkeypatch, bound
+):
+    """``schema.dlq_records`` leaves ``batch_id`` and ``ts`` out of the
+    plan; they are set on the records the driver collects, or by Spark's
+    write past ``DLQ_DRIVER_ROWS`` (lowered to 2 here). Either way each
+    batch's DLQ rows carry its batch id and a ``ts`` inside the call's
+    wall-clock window."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    from pocket_etl_spark.cdc import apply
+
+    if bound is not None:
+        monkeypatch.setattr(apply, "DLQ_DRIVER_ROWS", bound)
+    kinds = []
+    write_dlq = apply.write_dlq
+
+    def spy(records, *args):
+        kinds.append(type(records).__name__)
+        return write_dlq(records, *args)
+
+    monkeypatch.setattr(apply, "write_dlq", spy)
+    events = gen_change_events(spark, n_events=400, n_keys=40, seed=79, partitions=4)
+    poisoned = events.withColumn(
+        "op", F.when(F.pmod(F.col("lsn"), F.lit(8)) == 0, F.lit(None)).otherwise(F.col("op"))
+    )
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
+    dlq = str(tmp_path / "dlq")
+    window = {}
+    for batch_id, (lo, hi) in [(3, (0, 200)), (7, (200, 400))]:
+        start = time.time()
+        res = apply_batch(
+            poisoned.filter(f"lsn > {lo} and lsn <= {hi}"), table, batch_id=batch_id, dlq_path=dlq
+        )
+        window[batch_id] = (int(start * 1000) * 1000, int(time.time() * 1e6) + 1)
+        assert res.merge.committed and res.rows_bad == 25
+    assert kinds == ["Table" if bound is None else "DataFrame"] * 2
+    rows = spark.read.parquet(dlq).select("batch_id", F.unix_micros("ts").alias("us")).collect()
+    assert sorted(r["batch_id"] for r in rows) == [3] * 25 + [7] * 25
+    for r in rows:
+        lo, hi = window[r["batch_id"]]
+        assert lo <= r["us"] <= hi, (r, lo, hi)
 
 
 @pytest.mark.parametrize("payload", ["redacted", "full", "callable"])

@@ -721,3 +721,39 @@ def test_dlq_past_the_driver_bound_is_written_by_spark_from_the_caches(
     assert sorted(stored) == sorted(bad)
     assert out.sink_result == {"records_written": 6, "records_failed": len(stored)}
     assert kinds == ["DataFrame", "DataFrame"]
+
+
+@pytest.mark.parametrize("bound", [None, 1], ids=["driver", "spark"])
+def test_fluent_dlq_records_have_a_null_batch_id_and_their_write_time(
+    spark, tmp_path, monkeypatch, bound
+):
+    """A fluent run's DLQ records, in ``RunResult.dlq`` and in its files,
+    keep a NULL batch id (no replay cursor) and get a ``ts`` inside the
+    run's wall-clock window, whether the driver writes them or Spark does
+    past ``DLQ_DRIVER_ROWS`` (lowered to 1 here)."""
+    import time
+
+    from pocket_etl_spark.cdc import apply
+
+    if bound is not None:
+        monkeypatch.setattr(apply, "DLQ_DRIVER_ROWS", bound)
+
+    def fn(pdf):
+        if pdf["score"].isin([2, 5]).any():
+            raise ValueError("bad score")
+        return pdf
+
+    dlq = str(tmp_path / "dlq")
+    start = time.time()
+    res = (
+        EtlStream.extract(_src(spark).repartition(1))
+        .map_rows(fn)
+        .load(BufferLoader())
+        .run(spark, dlq_path=dlq)
+    )
+    lo, hi = int(start * 1000) * 1000, int(time.time() * 1e6) + 1
+    assert res.dlq_count == 2
+    for frame, n in [(res.dlq, 2 if bound is None else 1), (spark.read.parquet(dlq), 2)]:
+        rows = frame.select("batch_id", F.unix_micros("ts").alias("us")).collect()
+        assert len(rows) == n and all(r["batch_id"] is None for r in rows), rows
+        assert all(lo <= r["us"] <= hi for r in rows), (rows, lo, hi)

@@ -1102,6 +1102,67 @@ def test_in_task_pick_matches_lww(spark, tmp_table_path, monkeypatch, task_rows)
     ), "no sliced write"
 
 
+@_pytest.mark.parametrize("task_rows", [None, 1], ids=["one-task", "core-wave"])
+def test_written_rows_carry_their_commit_stamp(spark, tmp_table_path, monkeypatch, task_rows):
+    """Only a fold's plan carries the commit's ``_version``: any other delta
+    is stamped where its rows leave Spark, on the driver's Arrow table or in
+    Spark's write. Through a driver-written delta (at the real
+    ``_TASK_ROWS``), a delta with a stored side (written by Spark), a
+    delete and a fold (``_FOLD_AT`` = 3), the rows a commit's files hold
+    that carry its version are exactly the keys whose live row it wrote, a
+    fold's carried-forward rows keep their older stamps, and every
+    change-feed window ``(s, v]`` holds the keys whose live row a commit
+    after ``s`` wrote."""
+    import pyarrow.parquet as pq
+
+    from pocket_etl_spark import lake
+
+    monkeypatch.setattr(lake, "_FOLD_AT", 3)
+    if task_rows is not None:
+        monkeypatch.setattr(lake, "_TASK_ROWS", task_rows)
+    cols = "lsn long, op string, repo string, path string, content string"
+    table = ParquetLakeTable(spark, tmp_table_path, num_buckets=4)
+    paths = [f"p{i:02d}" for i in range(20)]
+    live = {}  # path -> (lsn, deleted, the commit that wrote its live row)
+
+    def ev(lsn, op, path):
+        return (lsn, op, "r", path, None if op == "D" else f"{path}@{lsn}")
+
+    def merge(batch, n):
+        res = table.merge(spark.createDataFrame(batch, cols), batch_id=n)
+        v = res.version
+        for lsn, op, _, p, _ in sorted(batch):
+            if p not in live or lsn > live[p][0]:
+                live[p] = (lsn, op == "D", v)
+        files = [f for f in table._manifest(v)["files"] if lake._commit_of(f) == v]
+        rows = [
+            r for f in files
+            for r in pq.read_table(os.path.join(table.path, f), columns=["path", "_version"]).to_pylist()
+        ]
+        assert {r["path"] for r in rows if r["_version"] == v} == {p for p, s in live.items() if s[2] == v}
+        older = [r for r in rows if r["_version"] != v]
+        assert all(r["_version"] < v for r in older), older
+        assert not older or res.stats["buckets_folded"], older
+        windows = None
+        for s in range(v):
+            w = table.read_changes(s, v).select(F.lit(s).alias("s"), "path", "lsn", "_change_type", "_commit_version")
+            windows = w if windows is None else windows.unionByName(w)
+        assert sorted(tuple(r) for r in windows.collect()) == sorted(
+            (s, p, lsn, "delete" if d else "upsert", c) for s in range(v) for p, (lsn, d, c) in live.items() if c > s
+        ), v
+        return res
+
+    merge([ev(10 + i, "I", p) for i, p in enumerate(paths)], 0)
+    res = merge([ev(100 + i, "U", p) for i, p in enumerate(paths[:10])], 1)
+    assert res.stats["stored_files_scanned"] == 0 and not res.stats["buckets_folded"]
+    assert (res.stats["files_written"] == 1) == (task_rows is None), res.stats
+    # late events: p00 loses to its stored row, p10..p14 beat theirs
+    res = merge([ev(5, "U", paths[0])] + [ev(50 + i, "U", p) for i, p in enumerate(paths[10:15])], 2)
+    assert res.stats["stored_files_scanned"] > 0 and not res.stats["buckets_folded"], res.stats
+    res = merge([ev(200 + i, "U", p) for i, p in enumerate(paths)] + [ev(300, "D", paths[3])], 3)
+    assert res.stats["buckets_folded"] > 0, res.stats
+
+
 def test_driver_and_spark_written_files_round_trip_every_type(spark, tmp_table_path, monkeypatch):
     """A steady merge's part file is written on the driver by pyarrow, every
     other write by Spark, and one table holds both kinds of file. Through a
